@@ -59,14 +59,20 @@ served index instead of being returned forever).
 
 from __future__ import annotations
 
+import glob
 import json
 import os
+import shutil
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .operators.kmeans import DeterministicKMeans, fit_deterministic_kmeans
+from .operators.kmeans import (
+    DeterministicKMeans,
+    fit_deterministic_kmeans,
+    write_json_atomic,
+)
 from .operators.similarity import (
     brute_force_topk,
     fit_ivfpq_quantizers,
@@ -91,12 +97,11 @@ def _config_path(out_dir: str) -> str:
 def _save_quantizers(out_dir: str, coarse, models, config: dict) -> None:
     os.makedirs(out_dir, exist_ok=True)
     coarse.save(os.path.join(out_dir, "coarse.json"))
-    with open(os.path.join(out_dir, "pq_codebooks.json"), "w") as fh:
-        json.dump(
-            {"q": models[0].q, "books": [mod.centers_q for mod in models]}, fh
-        )
-    with open(_config_path(out_dir), "w") as fh:
-        json.dump(config, fh)
+    write_json_atomic(
+        os.path.join(out_dir, "pq_codebooks.json"),
+        {"q": models[0].q, "books": [mod.centers_q for mod in models]},
+    )
+    write_json_atomic(_config_path(out_dir), config)
 
 
 def _bump_epoch_inplace(out_dir: str) -> int:
@@ -110,8 +115,7 @@ def _bump_epoch_inplace(out_dir: str) -> int:
     with open(_config_path(out_dir)) as fh:
         config = json.load(fh)
     config["epoch"] = int(config.get("epoch", 0)) + 1
-    with open(_config_path(out_dir), "w") as fh:
-        json.dump(config, fh)
+    write_json_atomic(_config_path(out_dir), config)
     return int(config["epoch"])
 
 
@@ -126,6 +130,24 @@ def load_ann_quantizers(out_dir: str):
     return coarse, models, config
 
 
+def _swap_files(df: DataFrame, tmp: str, dest: str, old: list[str]) -> int:
+    """Replace the PINNED files ``old`` with ``df``'s rows in directory
+    ``dest``, move-in-first: write ``df`` to ``tmp``, move the new files
+    into ``dest``, only then remove ``old``. A crash at any point leaves
+    every row readable (at worst twice, which the loaders' dedup
+    collapses), and a file another writer adds to ``dest`` meanwhile
+    is never touched. Returns the number of files moved in."""
+    shutil.rmtree(tmp, ignore_errors=True)
+    df.write.mode("overwrite").parquet(tmp)
+    new = sorted(glob.glob(os.path.join(tmp, "*.parquet")))
+    for p in new:
+        shutil.move(p, dest)
+    for p in old:
+        os.remove(p)
+    shutil.rmtree(tmp, ignore_errors=True)
+    return len(new)
+
+
 def _tombstones_dir(out_dir: str) -> str:
     return os.path.join(out_dir, "tombstones")
 
@@ -134,8 +156,6 @@ def load_tombstones(spark: SparkSession, out_dir: str) -> DataFrame | None:
     """The deduped tombstoned candidate ids, or None when no deletes
     are pending. Kilobytes-per-million-ids parquet — the serving path
     broadcasts it into a left_anti join."""
-    import glob
-
     d = _tombstones_dir(out_dir)
     if not glob.glob(os.path.join(d, "*.parquet")):
         return None
@@ -224,9 +244,6 @@ def purge_deleted(
     keeps its stricter quiesced-writers contract.
 
     Returns {cell: n_rows_purged}."""
-    import glob
-    import shutil
-
     d = _tombstones_dir(out_dir)
     old_t = sorted(glob.glob(os.path.join(d, "*.parquet")))
     if not old_t:
@@ -265,13 +282,10 @@ def purge_deleted(
         kept = rows.join(
             F.broadcast(tomb), "candidate_id", "left_anti"
         ).localCheckpoint(eager=True)
-        shutil.rmtree(tmp, ignore_errors=True)
-        kept.repartition(target_files).write.mode("overwrite").parquet(tmp)
-        for p in sorted(glob.glob(os.path.join(tmp, "*.parquet"))):
-            shutil.move(p, os.path.join(index_dir, f"cell={c}"))
-        for p in old:
-            os.remove(p)
-        shutil.rmtree(tmp, ignore_errors=True)
+        _swap_files(
+            kept.repartition(target_files), tmp,
+            os.path.join(index_dir, f"cell={c}"), old,
+        )
         result[c] = n_rows - kept.count()
     if clear_tombstones:
         shutil.rmtree(_tombstones_dir(out_dir), ignore_errors=True)
@@ -281,13 +295,7 @@ def purge_deleted(
         # appended file is neither folded nor removed here)
         if len(old_t) > 1:
             compact = tomb.localCheckpoint(eager=True)
-            shutil.rmtree(tmp, ignore_errors=True)
-            compact.coalesce(1).write.mode("overwrite").parquet(tmp)
-            for p in sorted(glob.glob(os.path.join(tmp, "*.parquet"))):
-                shutil.move(p, d)
-            for p in old_t:
-                os.remove(p)
-            shutil.rmtree(tmp, ignore_errors=True)
+            _swap_files(compact.coalesce(1), tmp, d, old_t)
     return result
 
 
@@ -447,8 +455,6 @@ def run_ann_index_build(
     # crash mid-rebuild must leave deleted ids still hidden (the
     # purge_deleted crash discipline — over-hiding is recoverable by
     # re-running the rebuild; resurrecting deleted rows is not).
-    import shutil
-
     shutil.rmtree(_tombstones_dir(out_dir), ignore_errors=True)
 
     spark = candidates.sparkSession
@@ -520,6 +526,58 @@ def ann_index_search(
     )
 
 
+def _live_members(
+    spark: SparkSession,
+    candidates: DataFrame,
+    out_dir: str,
+    cells: list[int],
+    id_col: str,
+    caller: str,
+) -> DataFrame:
+    """The ``candidates`` rows of the live members of ``cells`` — the
+    bounded member read of a destructive cell rewrite.
+
+    - The cell filter hits the partition column, so the scan statically
+      prunes to those cells' directories (dedup within a cell is exact
+      under the append-only contract — replays are byte-identical).
+    - Tombstoned members are NOT members (r14): the rewrite re-encodes
+      survivors only, so it doubles as a physical purge of the cells,
+      and the coverage guard doesn't demand raw vectors for ids the
+      corpus already dropped.
+    - Coverage guard (ADVICE r12): the rewrite deletes the cells' ONLY
+      persisted rows, so every member id must be present in
+      ``candidates`` (e.g. the base-build corpus WITHOUT streamed
+      appends would silently shrink the index) — count the uncovered
+      ids and refuse before any destructive step. Bounded work: the
+      anti-join's left side is the named cells' ids."""
+    member_ids = (
+        spark.read.parquet(os.path.join(out_dir, "index"))
+        .where(F.col("cell").isin(*cells))
+        .select("candidate_id")
+        .dropDuplicates(["candidate_id"])
+    )
+    tomb = load_tombstones(spark, out_dir)
+    if tomb is not None:
+        member_ids = member_ids.join(
+            F.broadcast(tomb), "candidate_id", "left_anti"
+        )
+    missing = member_ids.join(
+        candidates.select(F.col(id_col).alias("candidate_id")),
+        "candidate_id",
+        "left_anti",
+    ).count()
+    if missing:
+        raise ValueError(
+            f"{caller}: {missing} member id(s) of cell(s) "
+            f"{', '.join(map(str, cells))} are missing from `candidates` — "
+            "refusing to rewrite (their rows would be silently lost). Pass "
+            "the FULL corpus, including any streamed appends."
+        )
+    return candidates.join(
+        member_ids.withColumnRenamed("candidate_id", id_col), id_col, "left_semi"
+    )
+
+
 def rebalance_cell(
     spark: SparkSession,
     candidates: DataFrame,
@@ -560,8 +618,6 @@ def rebalance_cell(
     Returns (manifest_before, manifest_after, audit) — the before/after
     per-cell counts are the measured balance record.
     """
-    import shutil
-
     coarse, models, config = load_ann_quantizers(out_dir)
     index_dir = os.path.join(out_dir, "index")
     # manifest pass reads only (candidate_id, cell) — the per-cell
@@ -577,45 +633,8 @@ def rebalance_cell(
             raise ValueError("rebalance_cell: empty index")
         cell = int(top["cell"])
 
-    # bounded member read: the cell filter hits the partition column,
-    # so the scan statically prunes to the ONE hot-cell directory
-    # (dedup within one cell is exact under the append-only contract —
-    # replays are byte-identical)
-    member_ids = (
-        spark.read.parquet(index_dir)
-        .where(F.col("cell") == cell)
-        .select("candidate_id")
-        .dropDuplicates(["candidate_id"])
-    )
-    # tombstoned members are NOT members (r14): the rewrite re-encodes
-    # survivors only — so a rebalance doubles as a physical purge of
-    # the hot cell, and the coverage guard below doesn't demand raw
-    # vectors for ids the corpus already dropped
-    tomb = load_tombstones(spark, out_dir)
-    if tomb is not None:
-        member_ids = member_ids.join(
-            F.broadcast(tomb), "candidate_id", "left_anti"
-        )
-    # coverage guard (ADVICE r12): the rewrite below deletes the hot
-    # cell's ONLY persisted rows, so every member id must be present in
-    # `candidates` (e.g. the base-build corpus WITHOUT streamed appends
-    # would silently shrink the index) — count the uncovered ids and
-    # refuse before any destructive step. Bounded work: the anti-join's
-    # left side is the one hot cell's ids.
-    missing = member_ids.join(
-        candidates.select(F.col(id_col).alias("candidate_id")),
-        "candidate_id",
-        "left_anti",
-    ).count()
-    if missing:
-        raise ValueError(
-            f"rebalance_cell: {missing} member id(s) of cell={cell} are "
-            "missing from `candidates` — refusing to rewrite the cell "
-            "(their rows would be silently lost). Pass the FULL corpus, "
-            "including any streamed appends."
-        )
-    members = candidates.join(
-        member_ids.withColumnRenamed("candidate_id", id_col), id_col, "left_semi"
+    members = _live_members(
+        spark, candidates, out_dir, [cell], id_col, "rebalance_cell"
     )
     sub = fit_deterministic_kmeans(
         members, k=2, n_iters=4, id_col=id_col, vec_col=vec_col
@@ -710,8 +729,6 @@ def merge_cells(
 
     Returns (manifest_before, manifest_after, audit).
     """
-    import shutil
-
     coarse, models, config = load_ann_quantizers(out_dir)
     n_cells = len(coarse.centers_q)
     if n_cells < 2:
@@ -736,33 +753,8 @@ def merge_cells(
         )
     keep, drop = min(cell_a, cell_b), max(cell_a, cell_b)
 
-    # bounded member read: statically pruned to the two directories;
-    # tombstoned ids are not members (r14 deletion contract)
-    member_ids = (
-        spark.read.parquet(index_dir)
-        .where(F.col("cell").isin(keep, drop))
-        .select("candidate_id")
-        .dropDuplicates(["candidate_id"])
-    )
-    tomb = load_tombstones(spark, out_dir)
-    if tomb is not None:
-        member_ids = member_ids.join(
-            F.broadcast(tomb), "candidate_id", "left_anti"
-        )
-    missing = member_ids.join(
-        candidates.select(F.col(id_col).alias("candidate_id")),
-        "candidate_id",
-        "left_anti",
-    ).count()
-    if missing:
-        raise ValueError(
-            f"merge_cells: {missing} member id(s) of cells ({keep}, {drop}) "
-            "are missing from `candidates` — refusing to rewrite (their "
-            "rows would be silently lost). Pass the FULL corpus, including "
-            "any streamed appends."
-        )
-    members = candidates.join(
-        member_ids.withColumnRenamed("candidate_id", id_col), id_col, "left_semi"
+    members = _live_members(
+        spark, candidates, out_dir, [keep, drop], id_col, "merge_cells"
     )
 
     # weighted-mean merged centroid, exact int math on the grid
@@ -1003,8 +995,6 @@ def compact_cell_partitions(
     deterministic-dedup-read contract, so they share the compactor).
     Raw read per targeted cell — the stored multiset is preserved
     byte-for-byte, including rows a loader's dedup would collapse."""
-    import glob
-    import shutil
 
     def cell_files(c: int) -> list[str]:
         return sorted(
@@ -1027,14 +1017,9 @@ def compact_cell_partitions(
             .where(F.col("cell") == c)
             .drop("cell")
         )
-        shutil.rmtree(tmp_dir, ignore_errors=True)
-        rows.repartition(target_files).write.mode("overwrite").parquet(tmp_dir)
-        moved = 0
-        for p in sorted(glob.glob(os.path.join(tmp_dir, "*.parquet"))):
-            shutil.move(p, os.path.join(data_dir, f"cell={c}"))
-            moved += 1
-        for p in old:
-            os.remove(p)
-        shutil.rmtree(tmp_dir, ignore_errors=True)
+        moved = _swap_files(
+            rows.repartition(target_files), tmp_dir,
+            os.path.join(data_dir, f"cell={c}"), old,
+        )
         result[c] = (len(old), moved)
     return result

@@ -126,46 +126,13 @@ def lloyd_recompute(
     )
 
 
-def assign_expr_sql(xq_col: str, centers_q: list[list[int]]) -> str:
-    """SQL text for the IN-ROW nearest-center cell: an array_min over
-    k (dist, cid) structs with the centers as integer literals.
-
-    The corpus-scale assignment form — zero shuffle, zero join: each
-    row folds over k constant arrays inside whole-stage codegen (the
-    lsh_bucket_sql discipline: one parsed string, because k×dim
-    constants through the Column API cost thousands of py4j round
-    trips). Exact int64 arithmetic and the same (dist, cid) min as
-    :func:`assign_cells` — ``test_kmeans_operator`` asserts the two
-    forms agree row-for-row."""
-    # ONE transform over a single k×d literal array-of-arrays, not k
-    # copies of the fold: with k separate named_structs the generated
-    # code repeats the 64-term zip_with k times (measured 3× slower on
-    # the sf0.1 corpus assignment — the expression blows past codegen
-    # method limits); with transform the lambda body compiles once and
-    # the centers ride as one constant. (cid, c) index comes from
-    # transform's 2-arg lambda.
-    centers_2d = (
-        "array("
-        + ",".join(
-            "array(" + ",".join(str(v) + "L" for v in c) + ")" for c in centers_q
-        )
-        + ")"
-    )
-    return (
-        f"array_min(transform({centers_2d}, (c, i) -> "
-        f"named_struct('dist', aggregate(zip_with({xq_col}, c, "
-        "(a, b) -> (a - b) * (a - b)), 0L, (acc, d) -> acc + d), "
-        "'cid', i))).cid"
-    )
-
-
 class DeterministicKMeans:
     """A fitted deterministic quantizer: k centers on the 1/q grid.
 
     Pure data (k×dim int64 + the grid) — session-independent, unlike
-    a Spark ML KMeansModel (a handle into its JVM), and persistable
-    as a kilobyte of JSON. API mirrors the slice of KMeansModel the
-    IVF path used: ``clusterCenters()`` plus assignment."""
+    a fitted Spark ML model (a handle into its JVM), and persisted as
+    a kilobyte of JSON by :meth:`save` / :meth:`load`. The IVF path
+    reads ``clusterCenters()`` and assigns with :meth:`with_cell`."""
 
     def __init__(self, centers_q: list[list[int]], q: int = GRID_Q):
         self.centers_q = [list(map(int, c)) for c in centers_q]
@@ -183,45 +150,27 @@ class DeterministicKMeans:
         df: DataFrame,
         vec_col: str = "embedding",
         out_col: str = "cell",
-        engine: str = "arrow",
     ) -> DataFrame:
         """Append the nearest-center cell column IN-ROW (zero shuffle,
         zero join — the scale path for corpus assignment and for
         incremental index updates: new vectors meet the persisted
         centers with no refit and no wide stage).
 
-        Two engines, equality-tested against each other:
-
-        - ``arrow`` (default): quantize JVM-side (so the HALF_UP grid
-          round is identical), then a vectorized ``pandas_udf`` does
-          the exact-int64 argmin in one numpy batch op. 4× faster than
-          the SQL form at sf0.1 (0.24 s vs 1.0 s for the corpus pass):
-          Spark higher-order functions run interpreted, so the k×d
-          fold costs ~0.5 ms/row in the JVM but microseconds in Arrow
-          batches. ArrowEvalPython is narrow — the no-Exchange/no-Join
-          plan guarantee holds for both engines (plan-tested).
-        - ``sql``: the pure-JVM twin (one transform over the k×d
-          literal, exact int64) — zero Python-worker dependency; used
-          by the differential-facing paths and as the fallback.
-        """
+        Quantizes JVM-side (so the HALF_UP grid round is identical),
+        then :func:`inrow_assign` does the exact-int64 argmin in Arrow
+        batches. Arrow, not a SQL fold over the k×d literal: Spark
+        higher-order functions run interpreted, so the fold measured
+        4× slower at sf0.1 (1.0 s vs 0.24 s for the corpus pass).
+        ``out_col`` is cast to ``int`` so index schemas and ``cell=``
+        partition directories keep their type."""
         xq = df.withColumn("_xq", quantize_vec(F.col(vec_col), self.q))
-        if engine == "arrow":
-            import numpy as np
-
-            centers = np.array(self.centers_q, dtype=np.int64)
-
-            @F.pandas_udf("int")
-            def _cell(batch: pd.Series) -> pd.Series:
-                x = np.array(batch.tolist(), dtype=np.int64)
-                d2 = ((x[:, None, :] - centers[None, :, :]) ** 2).sum(axis=2)
-                return pd.Series(d2.argmin(axis=1).astype("int32"))
-
-            out = xq.withColumn(out_col, _cell("_xq"))
-        else:
-            out = xq.withColumn(
-                out_col, F.expr(assign_expr_sql("_xq", self.centers_q))
+        return (
+            inrow_assign(
+                xq, list(enumerate(self.centers_q)), xq_col="_xq", cell_col=out_col
             )
-        return out.drop("_xq")
+            .withColumn(out_col, F.col(out_col).cast("int"))
+            .drop("_xq")
+        )
 
     def assign(
         self,
@@ -238,14 +187,34 @@ class DeterministicKMeans:
         )
 
     def save(self, path: str) -> None:
-        with open(path, "w") as fh:
-            json.dump({"q": self.q, "centers_q": self.centers_q}, fh)
+        write_json_atomic(path, {"q": self.q, "centers_q": self.centers_q})
 
     @classmethod
     def load(cls, path: str) -> "DeterministicKMeans":
         with open(path) as fh:
             doc = json.load(fh)
         return cls(doc["centers_q"], q=doc["q"])
+
+
+def write_json_atomic(path: str, doc) -> None:
+    """Write ``doc`` as JSON to ``path`` through a sibling temp file and
+    ``os.replace``: a reader (or a crash mid-dump) sees the old file or
+    the new one, never a truncated one."""
+    tmp = path + ".tmp"
+    try:
+        with open(tmp, "w") as fh:
+            json.dump(doc, fh)
+        os.replace(tmp, path)
+    finally:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+
+
+def _sqdist(x, centers):
+    """Exact int64 squared distances of grid rows ``x`` (n×d) to grid
+    ``centers`` (k×d) as an n×k matrix — the one numpy nearest-center
+    kernel (:func:`inrow_assign` and :func:`_fit_local`)."""
+    return ((x[:, None, :] - centers[None, :, :]) ** 2).sum(axis=2)
 
 
 def inrow_assign(
@@ -261,8 +230,8 @@ def inrow_assign(
     need not be dense — the SemDeDup family seeds cells with vec_ids).
     Appends ``cell_col`` (and optionally the exact int64 squared
     distance) with NO join and NO shuffle: one narrow ArrowEvalPython
-    projection — the ``with_cell`` arrow engine generalized to
-    explicit cids + a distance output. Bit-identical to
+    projection (``DeterministicKMeans.with_cell`` is this call with
+    dense cids). Bit-identical to
     :func:`assign_cells` over a (cid, cq) frame of the same centers:
     exact int64 arithmetic, ties to the smaller cid (numpy argmin
     takes the FIRST extremum; centers arrive cid-ascending) —
@@ -284,8 +253,7 @@ def inrow_assign(
             if not len(batch):
                 return pd.Series(np.array([], dtype=np.int64))
             x = np.array(batch.tolist(), dtype=np.int64)
-            d2 = ((x[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
-            return pd.Series(cids[d2.argmin(axis=1)])
+            return pd.Series(cids[_sqdist(x, cent).argmin(axis=1)])
 
         return frame.withColumn(cell_col, _cell(xq_col))
 
@@ -298,8 +266,7 @@ def inrow_assign(
                     "d": pd.Series(dtype="int64"),
                 }
             )
-        x = np.array(batch.tolist(), dtype=np.int64)
-        d2 = ((x[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
+        d2 = _sqdist(np.array(batch.tolist(), dtype=np.int64), cent)
         a = d2.argmin(axis=1)
         return pd.DataFrame(
             {"c": cids[a], "d": d2[np.arange(len(a)), a]}
@@ -391,14 +358,13 @@ def _fit_local(ids_xq, k: int, n_iters: int, init: str, q: int) -> Deterministic
         centers = X[:k].copy()
     else:
         centers = X[:1].copy()
-        mind = ((X - centers[0]) ** 2).sum(axis=1)
+        mind = _sqdist(X, centers)[:, 0]
         while centers.shape[0] < k:
             nxt = X[int(mind.argmax())]
             centers = np.vstack([centers, nxt])
-            mind = np.minimum(mind, ((X - nxt) ** 2).sum(axis=1))
+            mind = np.minimum(mind, _sqdist(X, centers[-1:])[:, 0])
     for _ in range(n_iters):
-        d2 = ((X[:, None, :] - centers[None, :, :]) ** 2).sum(axis=2)
-        a = d2.argmin(axis=1)
+        a = _sqdist(X, centers).argmin(axis=1)
         for cid in range(centers.shape[0]):
             members = X[a == cid]
             if members.shape[0]:
@@ -512,13 +478,3 @@ def fit_deterministic_kmeans(
         centers = [new.get(i, centers[i]) for i in range(k)]
 
     return DeterministicKMeans(centers, q=q)
-
-
-def load_quantizer(path: str):
-    """Load a persisted quantizer: JSON (DeterministicKMeans) or a
-    legacy Spark ML KMeansModel directory."""
-    if os.path.isdir(path):
-        from pyspark.ml.clustering import KMeansModel
-
-        return KMeansModel.load(path)
-    return DeterministicKMeans.load(path)

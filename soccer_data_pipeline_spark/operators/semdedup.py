@@ -68,8 +68,8 @@ def semdedup_assign(
     r14 broadcast-join + groupBy chain cost ~18 sequential jobs per
     call at sf0.1 (profiled: 6.1 s construction vs 0.8 s execution on
     the registered query); this is 3 jobs for bit-identical output
-    (the in-row argmin is the equality-tested ``with_cell`` arrow
-    engine generalized to explicit cids)."""
+    (``inrow_assign`` is the one in-row argmin kernel, the same one
+    ``DeterministicKMeans.with_cell`` runs with dense cids)."""
     e = emb.select(
         F.col(id_col).alias("vec_id"),
         quantize_vec(F.col(vec_col), GRID_Q).alias("xq"),

@@ -228,14 +228,14 @@ def ivf_topk(
        data (k×dim grid ints), session-independent, and byte-stable
        per (corpus, config);
     2. assign every candidate to its nearest centroid IN-ROW (zero
-       shuffle — centers ride the plan as integer literals);
+       shuffle — ``DeterministicKMeans.with_cell``);
     3. per query, rank centroids and probe the top ``n_probe`` cells
        via an equi-join on cell id — work scales with corpus/n_centroids
        × n_probe, never |Q|·|C|.
 
-    Returns (results_df, model) so the quantizer can be reused.
-    ``model`` accepts a DeterministicKMeans (ours) or a legacy Spark
-    ML KMeansModel (duck-typed on ``clusterCenters``/``transform``).
+    Returns (results_df, model) so the quantizer can be reused; persist
+    it with ``model.save(path)`` and pass ``DeterministicKMeans.load(path)``
+    back as ``model`` to skip the fit in a later session.
     """
     from .kmeans import fit_deterministic_kmeans
 
@@ -265,30 +265,23 @@ def ivf_index(
     """Build — or incrementally EXTEND — the IVF index frame:
     (candidate_id, cv, cn, cell).
 
-    Assignment is an in-row fold over the persisted centers (plan
-    literals — zero shuffle, zero join), so this one function is both
-    the initial build and the incremental-maintenance primitive: a
+    Assignment is in-row against the persisted centers
+    (``DeterministicKMeans.with_cell`` — zero shuffle, zero join), so
+    this one function is both the initial build and the
+    incremental-maintenance primitive: a
     batch of NEW embeddings indexes with ``ivf_index(batch, model)``
     — one narrow pass — and unions onto the stored index (it is just
     rows). No refit, no rescan of the existing corpus; the quantizer
     stays the persisted index-build artifact (the FAISS `add` contract
     vs `train`)."""
-    from .kmeans import DeterministicKMeans
     from .skew import spread_for_compute
 
     cand = spread_for_compute(candidates).select(
         F.col(id_col).alias("candidate_id"), _as_double(F.col(vec_col)).alias("cv")
     ).withColumn("cn", _norm(F.col("cv")))
-    if isinstance(model, DeterministicKMeans):
-        return model.with_cell(cand, vec_col="cv").select(
-            "candidate_id", "cv", "cn", "cell"
-        )
-    # legacy Spark ML KMeansModel (pre-r11 persisted quantizers)
-    from pyspark.ml.functions import array_to_vector
-
-    return model.transform(
-        cand.withColumn("features", array_to_vector("cv"))
-    ).select("candidate_id", "cv", "cn", F.col("prediction").alias("cell"))
+    return model.with_cell(cand, vec_col="cv").select(
+        "candidate_id", "cv", "cn", "cell"
+    )
 
 
 def _probe_cells(q: DataFrame, model, n_probe: int) -> DataFrame:
@@ -379,39 +372,6 @@ def ivf_search(
         sims.withColumn("rn", F.row_number().over(w).cast("long"))
         .where(F.col("rn") <= k)
     )
-
-
-def save_ivf_quantizer(model, path: str) -> None:
-    """Persist the IVF coarse quantizer to ``path``.
-
-    A DeterministicKMeans saves as a kilobyte of JSON (k×dim grid
-    ints + the grid — byte-stable, diffable between index builds); a
-    legacy Spark ML KMeansModel falls back to the ML writer format
-    (centroid parquet + metadata directory).
-
-    The production pattern for repeated ANN serving: the quantizer is
-    an index-build artifact — fit once per (corpus snapshot, config)
-    next to the corpus build job, persisted alongside the corpus, then
-    loaded by every query session instead of refit (the in-process
-    cache in ``plans/llm_queries.py`` dies with its SparkSession; this
-    survives app restarts). Centroid assignment of the corpus can be
-    persisted too (it is just a column — see ``ivf_incremental``'s
-    index round-trip test), leaving queries with only the probe join."""
-    from .kmeans import DeterministicKMeans
-
-    if isinstance(model, DeterministicKMeans):
-        model.save(path)
-    else:
-        model.write().overwrite().save(path)
-
-
-def load_ivf_quantizer(path: str):
-    """Load a quantizer saved by :func:`save_ivf_quantizer` (JSON →
-    DeterministicKMeans; directory → legacy Spark ML KMeansModel);
-    pass it to ``ivf_topk(model=...)`` to skip the fit."""
-    from .kmeans import load_quantizer
-
-    return load_quantizer(path)
 
 
 def banded_candidate_pairs(
@@ -736,10 +696,8 @@ def _centers_2d_sql(centers: list[list[float]]) -> str:
 
 
 def _coarse_centers_sql(model) -> str:
-    """The coarse quantizer's k×d centers as one SQL literal — the one
-    place the defensive float cast lives (legacy ML models return numpy
-    scalars from clusterCenters())."""
-    return _centers_2d_sql([list(map(float, c)) for c in model.clusterCenters()])
+    """The coarse quantizer's k×d centers as one SQL literal."""
+    return _centers_2d_sql(model.clusterCenters())
 
 
 def _rhat_sql(codebooks) -> str:
@@ -947,18 +905,9 @@ def fit_pq_codebooks(
     the fit runs). ``residual=True`` trains on the coarse residuals
     (x − centroid[cell]) — codebooks must model what they will
     encode."""
-    from .kmeans import DeterministicKMeans, fit_deterministic_kmeans
+    from .kmeans import fit_deterministic_kmeans
 
     if residual:
-        if not isinstance(coarse, DeterministicKMeans):
-            # the legacy Spark-ML KMeansModel path (supported for raw
-            # encoding via transform()) has no with_cell/grid-center
-            # contract; failing loudly beats an AttributeError mid-plan
-            raise ValueError(
-                "residual encoding requires a DeterministicKMeans coarse "
-                "quantizer (legacy Spark-ML KMeansModel quantizers only "
-                "support residual=False)"
-            )
         # one narrow with_cell + zip_with pass over the training sample
         centers = _coarse_centers_sql(coarse)
         cand = coarse.with_cell(cand, vec_col="cv").select(
@@ -1055,14 +1004,6 @@ def ivfpq_index(
     ``chat_norm`` stores ‖chat‖ so search normalizes the same way;
     everything stays a per-row fold over persisted constants (the
     ``add`` contract is unchanged)."""
-    from .kmeans import DeterministicKMeans
-
-    if residual and not isinstance(coarse, DeterministicKMeans):
-        raise ValueError(
-            "residual encoding requires a DeterministicKMeans coarse "
-            "quantizer (legacy Spark-ML KMeansModel quantizers only "
-            "support residual=False)"
-        )
     from .skew import spread_for_compute
 
     codebooks = _pq_codebooks(models)

@@ -1129,12 +1129,11 @@ def similarity_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # refit cost). r11: the trainer is the deterministic grid-exact
     # Lloyd operator (operators/kmeans.py — the code path the
     # kmeans_fixed_assign differential hash-checks), so the model is
-    # pure Python data (k×dim grid ints): session-INDEPENDENT — the
-    # r4-era per-app pruning died with the JVM-bound KMeansModel, and
-    # the cache key no longer needs the applicationId. Across processes
-    # the production pattern is save_ivf_quantizer/load_ivf_quantizer
-    # (JSON) — persist next to the corpus build and load instead of
-    # refit; this in-process dict is only the warm fast path.
+    # pure Python data (k×dim grid ints): session-INDEPENDENT, so the
+    # cache key needs no applicationId. Across processes the quantizer
+    # persists as JSON (``model.save`` / ``DeterministicKMeans.load``,
+    # what index_pipeline's artifacts use) — load it instead of refit;
+    # this in-process dict is only the warm fast path.
     cache_key = (sf_dir, 16, 42)
     prefit = _IVF_QUANTIZERS.get(cache_key)
 

@@ -53,6 +53,7 @@ from .operators.kmeans import (
     inrow_assign,
     quantize_vec,
     two_iter_lloyd_centers,
+    write_json_atomic,
 )
 from .operators.semdedup import (
     SEMDEDUP_TAU,
@@ -128,8 +129,7 @@ def fit_semdedup_base(
             stale = json.load(fh)
         epoch = int(stale.get("epoch", 0)) + 1
         stale["epoch"] = epoch
-        with open(_config_path(out_dir), "w") as fh:
-            json.dump(stale, fh)
+        write_json_atomic(_config_path(out_dir), stale)
     import shutil
 
     shutil.rmtree(_actions_dir(out_dir), ignore_errors=True)
@@ -137,16 +137,14 @@ def fit_semdedup_base(
         _base_dir(out_dir)
     )
     os.makedirs(out_dir, exist_ok=True)
-    with open(_centroids_path(out_dir), "w") as fh:
-        json.dump({"q": GRID_Q, "centers": centers}, fh)
+    write_json_atomic(_centroids_path(out_dir), {"q": GRID_Q, "centers": centers})
     config = {
         "tau": tau,
         "k": k,
         "dim": len(centers[0][1]),
         "epoch": epoch,
     }
-    with open(_config_path(out_dir), "w") as fh:
-        json.dump(config, fh)
+    write_json_atomic(_config_path(out_dir), config)
     return config
 
 

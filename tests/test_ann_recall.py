@@ -45,14 +45,11 @@ def test_multiprobe_radius_monotone(spark):
 
 
 def test_ivf_quantizer_persist_reload(spark, tmp_path):
-    """The quantizer survives a session restart: saved in Spark ML
-    writer format, reloaded, and the probe results are identical to
-    the in-memory model's (same centers -> same cells -> same top-k)."""
-    from soccer_data_pipeline_spark.operators.similarity import (
-        ivf_topk,
-        load_ivf_quantizer,
-        save_ivf_quantizer,
-    )
+    """The quantizer survives a session restart: saved as JSON,
+    reloaded, and the probe results are identical to the in-memory
+    model's (same centers -> same cells -> same top-k)."""
+    from soccer_data_pipeline_spark.operators.kmeans import DeterministicKMeans
+    from soccer_data_pipeline_spark.operators.similarity import ivf_topk
     from soccer_data_pipeline_spark.sources import load_table
 
     sf = "/root/testdata/sf0.001"
@@ -62,9 +59,9 @@ def test_ivf_quantizer_persist_reload(spark, tmp_path):
     out1, model = ivf_topk(q, c, k=3, n_centroids=4, n_probe=2)
     r1 = {(r.query_id, r.rn): r.candidate_id for r in out1.collect()}
 
-    path = str(tmp_path / "ivf_quantizer")
-    save_ivf_quantizer(model, path)
-    loaded = load_ivf_quantizer(path)
+    path = str(tmp_path / "ivf_quantizer.json")
+    model.save(path)
+    loaded = DeterministicKMeans.load(path)
     assert [list(x) for x in loaded.clusterCenters()] == [
         list(x) for x in model.clusterCenters()
     ]
@@ -111,13 +108,14 @@ def test_ivf_incremental_store_roundtrip(spark, tmp_path):
     LOADED artifacts, and search over (loaded index) union (new
     assignments) equals the in-memory path — the across-app-restart
     maintenance story (no refit, no base rescan)."""
+    from soccer_data_pipeline_spark.operators.kmeans import (
+        DeterministicKMeans,
+        fit_deterministic_kmeans,
+    )
     from soccer_data_pipeline_spark.operators.similarity import (
         ivf_index,
         ivf_search,
-        load_ivf_quantizer,
-        save_ivf_quantizer,
     )
-    from soccer_data_pipeline_spark.operators.kmeans import fit_deterministic_kmeans
 
     emb = load_table(spark, SF_DIR, "embeddings")
     q = emb.where(F.col("vec_id") < 10)
@@ -128,10 +126,10 @@ def test_ivf_incremental_store_roundtrip(spark, tmp_path):
 
     qpath = str(tmp_path / "quantizer.json")
     ipath = str(tmp_path / "index.parquet")
-    save_ivf_quantizer(model, qpath)
+    model.save(qpath)
     ivf_index(base, model).write.parquet(ipath)
 
-    loaded_model = load_ivf_quantizer(qpath)
+    loaded_model = DeterministicKMeans.load(qpath)
     assert loaded_model.centers_q == model.centers_q
     loaded_index = spark.read.parquet(ipath)
     incr = ivf_search(

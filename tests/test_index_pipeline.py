@@ -249,32 +249,38 @@ def test_fit_pq_codebooks_batched_equals_per_subspace(spark):
         assert batched[s].q == reference[s].q
 
 
-def test_residual_requires_deterministic_kmeans(spark):
-    """ADVICE r11: a legacy (non-DeterministicKMeans) coarse quantizer
-    on the residual paths raises a descriptive ValueError up front, not
-    an AttributeError mid-plan."""
+def test_epoch_bump_failure_keeps_old_config(tmp_path, monkeypatch):
+    """The JSON artifacts are replaced atomically, never truncated in
+    place: a failure mid-dump while bumping the epoch leaves the
+    previous config.json loadable (and no temp file behind)."""
+    import json
+
     import pytest
 
-    from soccer_data_pipeline_spark.operators.similarity import (
-        fit_pq_codebooks,
+    from soccer_data_pipeline_spark import index_pipeline as ip
+    from soccer_data_pipeline_spark.operators.kmeans import DeterministicKMeans
+
+    out = str(tmp_path / "idx")
+    config = {"epoch": 3, "residual": True}
+    ip._save_quantizers(
+        out,
+        DeterministicKMeans([[0, 0], [5, 5]]),
+        [DeterministicKMeans([[0], [1]])],
+        config,
     )
 
-    _, c = _sides(spark)
-    cand = c.select("vec_id", F.col("embedding"))
+    def failing_dump(*args, **kwargs):
+        raise OSError("disk full")
 
-    class FakeLegacyModel:  # stands in for a pre-r11 Spark-ML KMeansModel
-        pass
+    monkeypatch.setattr(json, "dump", failing_dump)
+    with pytest.raises(OSError, match="disk full"):
+        ip._bump_epoch_inplace(out)
+    monkeypatch.undo()
 
-    with pytest.raises(ValueError, match="residual encoding requires"):
-        fit_pq_codebooks(
-            cand.select(
-                F.col("vec_id").alias("candidate_id"),
-                F.col("embedding").cast("array<double>").alias("cv"),
-            ),
-            FakeLegacyModel(), m=16, n_codes=8, sub=4, residual=True,
-        )
-    with pytest.raises(ValueError, match="residual encoding requires"):
-        ivfpq_index(c, FakeLegacyModel(), models=[], residual=True)
+    assert load_ann_quantizers(out)[2] == config
+    assert sorted(os.listdir(out)) == [
+        "coarse.json", "config.json", "pq_codebooks.json"
+    ]
 
 
 def test_streaming_rejects_mis_dimensioned_batch(spark, tmp_path):

@@ -2,7 +2,7 @@
 under the IVF coarse quantizer and the code path hash-checked by the
 ``kmeans_fixed_assign`` differential (VERDICT r10 #3: load-bearing).
 
-Covers: the two assignment forms agree (in-row literal fold vs
+Covers: the two assignment forms agree (in-row Arrow kernel vs
 broadcast-frame struct-min), the trainer reproduces the registered
 differential's final assignment under the differential's seeding,
 byte-stable refits, JSON persistence round-trip, and the IVF path's
@@ -29,7 +29,7 @@ def _emb(spark):
 
 
 def test_inrow_assign_matches_broadcast_form(spark):
-    """with_cell (zero-shuffle literal fold — the corpus-scale form)
+    """with_cell (zero-shuffle Arrow kernel — the corpus-scale form)
     and assign_cells (broadcast k-row frame + struct-min groupBy — the
     fit/differential form) are the same exact int64 argmin."""
     emb = _emb(spark)
@@ -101,39 +101,20 @@ def test_empty_cluster_keeps_previous_center(spark):
 
 
 def test_inrow_assign_plan_has_no_shuffle(spark):
-    """The corpus assignment (with_cell) must be narrow under BOTH
-    engines: no Exchange, no Join — the Arrow form adds only an
-    ArrowEvalPython (batch-local), the SQL form only codegen."""
+    """The corpus assignment (with_cell) must be narrow: no Exchange,
+    no Join — the Arrow kernel adds only an ArrowEvalPython
+    (batch-local). Its cell column stays IntegerType, so index schemas
+    and partition directories keep their type."""
+    from pyspark.sql.types import IntegerType
+
     emb = _emb(spark)
     model = fit_deterministic_kmeans(emb, k=4, n_iters=1)
-    for engine in ("arrow", "sql"):
-        plan = (
-            model.with_cell(emb.select("vec_id", "embedding"), engine=engine)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        assert "Exchange" not in plan, (engine, plan)
-        assert "Join" not in plan, (engine, plan)
-
-
-def test_arrow_assign_equals_sql_assign(spark):
-    """The vectorized Arrow assignment (production default) and the
-    pure-JVM SQL twin are the same exact-int64 argmin: quantization
-    happens JVM-side in both, numpy argmin-first == (dist, cid)
-    struct-min tie-break."""
-    emb = _emb(spark)
-    model = fit_deterministic_kmeans(emb, k=8, n_iters=2)
-    base = emb.select("vec_id", "embedding")
-    a = {
-        (r.vec_id, r.cell)
-        for r in model.with_cell(base, engine="arrow").collect()
-    }
-    b = {
-        (r.vec_id, r.cell)
-        for r in model.with_cell(base, engine="sql").collect()
-    }
-    assert a == b
+    out = model.with_cell(emb.select("vec_id", "embedding"))
+    assert out.schema["cell"].dataType == IntegerType()
+    assert out.columns == ["vec_id", "embedding", "cell"]
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan
+    assert "Join" not in plan, plan
 
 
 def test_local_fit_equals_distributed_fit(spark):
