@@ -14,7 +14,10 @@ for 100 TB scale:
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window
@@ -344,24 +347,33 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register(
-    "embedding_topk_cosine",
-    oracle="""
+def _exact_topk_sql(c_where: str = "vec_id >= 10") -> str:
+    """The exact cosine top-5 oracle CTE (``topk``): queries vec_id < 10
+    against the candidates selected by ``c_where``."""
+    return f"""
 WITH q AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings WHERE vec_id < 10),
-c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings WHERE vec_id >= 10),
+c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings WHERE {c_where}),
 sims AS (
   SELECT q.vec_id AS query_id, c.vec_id AS candidate_id,
          ROUND(LIST_DOT_PRODUCT(q.v, c.v) /
                (SQRT(LIST_DOT_PRODUCT(q.v, q.v)) * SQRT(LIST_DOT_PRODUCT(c.v, c.v))), 6) AS cosine
   FROM q CROSS JOIN c
+),
+topk AS (
+  SELECT * FROM (
+    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cosine DESC, candidate_id) AS rn
+    FROM sims
+  ) WHERE rn <= 5
 )
-SELECT query_id, candidate_id, cosine, rn
-FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cosine DESC, candidate_id) AS rn
-  FROM sims
-)
-WHERE rn <= 5
-""",
+"""
+
+
+_EXACT_TOPK_SQL = _exact_topk_sql()
+
+
+@register(
+    "embedding_topk_cosine",
+    oracle=_EXACT_TOPK_SQL + "SELECT query_id, candidate_id, cosine, rn FROM topk\n",
     doc="[beyond-ref] brute-force cosine top-k similarity search baseline (SURVEY §2.10)",
 )
 def embedding_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1015,65 +1027,141 @@ def embedding_near_dup_banded(
 # corpus/sf means re-tune n_planes/radius, not an engine bug).
 # ---------------------------------------------------------------------------
 
-# quantizer cache for the IVF query — see similarity_ivf_recall
-_IVF_QUANTIZERS: dict = {}
-
-# codebook cache for the PQ query — see similarity_pq_recall
-_PQ_CODEBOOKS: dict = {}
-
-# probe-ladder rung cache (r15): sf_dir → candidate corpus < 1024 rows.
-# The rung is BUILD-TIME configuration — production stamps n_probe next
-# to the persisted quantizers (it is an index-config property of the
-# corpus, not a per-query derivation) — so it caches under exactly the
-# _IVF_QUANTIZERS contract: a pure function of the corpus, recomputed
-# once per process, never a query result. Before this every serving
-# query paid a corpus count job per TIMED run for a constant the build
-# already knew (~0.2 s × 6 queries of pure scheduling at sf0.1).
-_PROBE_SMALL: dict = {}
+# The ANN family's one run cache: BUILD-TIME configuration a session
+# reuses, never a query result — fitted quantizers and codebooks (pure
+# Python grid ints, session-independent), probe-ladder rungs, and
+# persisted build dirs. Keyed (family, sf_dir, *config); the key space
+# is one entry per family per sf, so it needs no bound.
+_RUNS: dict = {}
 
 
 def _probe_small(sf_dir: str, c: DataFrame) -> bool:
-    small = _PROBE_SMALL.get(sf_dir)
-    if small is None:
-        small = bool(c.count() < 1024)
-        _PROBE_SMALL[sf_dir] = small
-    return small
+    """The probe-ladder rung: candidate corpus < 1024 rows. Production
+    stamps n_probe next to the persisted quantizers (an index-config
+    property of the corpus), so it caches as build config; uncached,
+    every serving query paid a corpus count job per timed run (~0.2 s ×
+    6 queries of pure scheduling at sf0.1)."""
+    key = ("probe_small", sf_dir)
+    if key not in _RUNS:
+        _RUNS[key] = bool(c.count() < 1024)
+    return _RUNS[key]
 
-_EXACT_TOPK_SQL = """
-WITH q AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings WHERE vec_id < 10),
-c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings WHERE vec_id >= 10),
-sims AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS candidate_id,
-         ROUND(LIST_DOT_PRODUCT(q.v, c.v) /
-               (SQRT(LIST_DOT_PRODUCT(q.v, q.v)) * SQRT(LIST_DOT_PRODUCT(c.v, c.v))), 6) AS cosine
-  FROM q CROSS JOIN c
-),
-topk AS (
-  SELECT * FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cosine DESC, candidate_id) AS rn
-    FROM sims
-  ) WHERE rn <= 5
-)
-"""
+
+def _build_dir_once(key, build, *required):
+    """``(out_dir, payload)`` of a persisted build, run once per key:
+    repeat calls serve from the same artifacts (the production
+    build-once/serve-many contract).
+
+    ``build(out_dir)`` fills a fresh temp dir and returns the payload. A
+    cached dir missing any ``required`` subdir (e.g. its tombstones were
+    removed) is deleted and rebuilt, never served. Each dir is removed
+    at interpreter exit."""
+    hit = _RUNS.get(key)
+    if hit is not None:
+        if all(os.path.isdir(os.path.join(hit[0], r)) for r in required):
+            return hit
+        shutil.rmtree(hit[0], ignore_errors=True)
+    out_dir = tempfile.mkdtemp(prefix=f"spark_graft_{key[0]}_")
+    atexit.register(shutil.rmtree, out_dir, ignore_errors=True)
+    _RUNS[key] = hit = (out_dir, build(out_dir))
+    return hit
+
+
+def _build_ann_index(c: DataFrame, out_dir: str):
+    """The served-index config: 16 cells / m=16 / 16 codes / residual /
+    seed 42 — ``similarity_ivfpq_residual``'s, so its recall carries over."""
+    from ..index_pipeline import run_ann_index_build
+
+    return run_ann_index_build(
+        c, out_dir, n_centroids=16, m=16, n_codes=16, residual=True, seed=42
+    )
+
+
+def _ann_sides(spark: SparkSession, sf_dir: str):
+    """(queries, candidates): vec_id < 10 against the rest."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    return emb.where(F.col("vec_id") < 10), emb.where(F.col("vec_id") >= 10)
+
+
+def _hits(exact: DataFrame, approx: DataFrame) -> DataFrame:
+    """exact top-k LEFT JOIN approx top-k on (query_id, candidate_id),
+    with a 0/1 ``hit`` flag per exact row."""
+    return exact.join(
+        approx.select("query_id", "candidate_id").withColumn("hit", F.lit(1)),
+        ["query_id", "candidate_id"],
+        "left",
+    ).withColumn("hit", F.coalesce(F.col("hit"), F.lit(0)))
+
+
+def _recall_per_query(j: DataFrame, floor: float = 0.8) -> DataFrame:
+    return j.groupBy("query_id").agg(
+        F.count("*").alias("n_exact"),
+        (F.sum("hit") >= floor * F.count("*")).alias("recall_ok"),
+    )
 
 
 def _ann_recall_frame(spark, sf_dir, approx_fn):
-    """exact top-k LEFT JOIN approx top-k on (query_id, candidate_id);
-    per-(query,candidate) hit flags feed the recall aggregates."""
+    """Hit flags of ``approx_fn(q, c)`` against the exact top-5."""
     from ..operators.similarity import brute_force_topk
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.where(F.col("vec_id") < 10)
-    c = emb.where(F.col("vec_id") >= 10)
+    q, c = _ann_sides(spark, sf_dir)
     exact = brute_force_topk(q, c, k=5).select("query_id", "candidate_id")
-    approx = (
-        approx_fn(q, c)
-        .select("query_id", "candidate_id")
-        .withColumn("hit", F.lit(1))
-    )
-    return exact.join(approx, ["query_id", "candidate_id"], "left").withColumn(
-        "hit", F.coalesce(F.col("hit"), F.lit(0))
-    )
+    return _hits(exact, approx_fn(q, c))
+
+
+def _served_recall(spark, q, c, out_dir, n_probe, exact_c, *legs):
+    """Serve top-5 from the persisted index at ``out_dir`` and audit it
+    against the exact top-5 over ``exact_c``; returns
+    ``(served, per_q, *leg_results)``.
+
+    ``served`` is consumed twice (the recall hits and the caller's
+    gate); the plain lazy form re-ran the whole disk search per consumer
+    (r15: two full probe→ADC→re-rank executions). It is ≤ |Q|·k rows by
+    construction, so persist() computes it once (BlockManager
+    getOrElseUpdate dedups the partitions across the InMemoryTableScan
+    consumers — guide §5; r15 A/B materialize-once: 0.71× for
+    similarity_index_served, 5.9 → 5.1 s for ann_index_deletes).
+    persist, not localCheckpoint: InMemoryRelation keeps the child plan,
+    so the final plan still SHOWS the persisted-index FileScan,
+    PartitionFilters and tombstone anti-join (the disk-serving contract
+    stays plan-testable; a checkpoint would hide it behind an opaque
+    LogicalRDD).
+
+    r16 (VERDICT r15 #1/#5): the served search, the exact brute-force
+    audit and the caller's ``legs`` (thunks: the in-memory twin, the
+    balance gates) are independent by data and each ends in a bounded
+    list, so they materialize on CONCURRENT driver threads (guide §2.6):
+    the served persist fills via one full-column noop scan (keeping the
+    FileScan visible), the audit eagerly checkpoints, and so should the
+    legs (blocks GC-owned; the caller's unit-of-work boundary reclaims
+    them). Wall cost is max(leg), not Σ(legs). Local A/B, min-of-side at
+    sf0.1: similarity_index_served 0.76× (three legs incl. the heavy
+    in-memory encode); ann_index_rebalance 3.48 → 3.31 s (0.95×);
+    ann_index_deletes a tie, 4.11 → 4.16 s — its two legs each saturate
+    all 32 cores, so the overlap only recovers driver-side gaps. Kept
+    for the structure, which pays once legs stop saturating the cluster
+    (the 100 TB shape: bounded query batch, pruned probes).
+    """
+    from ..index_pipeline import ann_index_search
+    from ..operators.cache import run_concurrently
+    from ..operators.similarity import brute_force_topk
+
+    served = ann_index_search(
+        q, c, out_dir, k=5, shortlist=200, n_probe=n_probe
+    ).persist()
+
+    def _serve_leg():
+        served.write.format("noop").mode("overwrite").save()
+
+    def _exact_leg():
+        return (
+            brute_force_topk(q, exact_c, k=5)
+            .select("query_id", "candidate_id")
+            .localCheckpoint(eager=True)
+        )
+
+    _, exact, *rest = run_concurrently(_serve_leg, _exact_leg, *legs, spark=spark)
+    return (served, _recall_per_query(_hits(exact, served)), *rest)
 
 
 @register(
@@ -1133,22 +1221,17 @@ def similarity_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cache key needs no applicationId. Across processes the quantizer
     # persists as JSON (``model.save`` / ``DeterministicKMeans.load``,
     # what index_pipeline's artifacts use) — load it instead of refit;
-    # this in-process dict is only the warm fast path.
-    cache_key = (sf_dir, 16, 42)
-    prefit = _IVF_QUANTIZERS.get(cache_key)
+    # this in-process cache is only the warm fast path.
+    key = ("ivf", sf_dir, 16, 42)
+    prefit = _RUNS.get(key)
 
     def _ivf(q, c):
-        out, model = ivf_topk(
+        out, _RUNS[key] = ivf_topk(
             q, c, k=5, n_centroids=16, n_probe=12, seed=42, model=prefit
         )
-        _IVF_QUANTIZERS[cache_key] = model
         return out
 
-    j = _ann_recall_frame(spark, sf_dir, _ivf)
-    return j.groupBy("query_id").agg(
-        F.count("*").alias("n_exact"),
-        (F.sum("hit") >= 0.8 * F.count("*")).alias("recall_ok"),
-    )
+    return _recall_per_query(_ann_recall_frame(spark, sf_dir, _ivf))
 
 
 @register(
@@ -1202,8 +1285,8 @@ def similarity_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import ivf_index, ivf_search
     from ..operators.kmeans import fit_deterministic_kmeans
 
-    cache_key = (sf_dir, "incr", 16, 42)
-    prefit = _IVF_QUANTIZERS.get(cache_key)
+    key = ("ivf_incr", sf_dir, 16, 42)
+    prefit = _RUNS.get(key)
 
     def _incr(q, c):
         base = c.where(F.col("vec_id") % 10 != 7)
@@ -1211,7 +1294,7 @@ def similarity_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         model = prefit or fit_deterministic_kmeans(
             base, k=16, n_iters=4, sample_rows=256 * 16, seed=42
         )
-        _IVF_QUANTIZERS[cache_key] = model
+        _RUNS[key] = model
         index = ivf_index(base, model).unionByName(ivf_index(new, model))
         # probe ladder (the bitext discipline): below 1024 candidates
         # probe ALL 16 cells — near-brute-force is simply correct at
@@ -1278,14 +1361,13 @@ def similarity_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators.similarity import ivfpq_topk
 
-    ckey = (sf_dir, "ivfpq-coarse", 16, 42)
-    mkey = (sf_dir, "ivfpq-books", 16, 16, 42)
-    coarse = _IVF_QUANTIZERS.get(ckey)
-    models = _PQ_CODEBOOKS.get(mkey)
+    ckey = ("ivfpq_coarse", sf_dir, 16, 42)
+    mkey = ("ivfpq_books", sf_dir, 16, 16, 42)
+    coarse, models = _RUNS.get(ckey), _RUNS.get(mkey)
 
     def _ivfpq(q, c):
         n_probe = 16 if _probe_small(sf_dir, c) else 12
-        out, co, mo = ivfpq_topk(
+        out, _RUNS[ckey], _RUNS[mkey] = ivfpq_topk(
             q,
             c,
             k=5,
@@ -1298,15 +1380,9 @@ def similarity_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             coarse=coarse,
             models=models,
         )
-        _IVF_QUANTIZERS[ckey] = co
-        _PQ_CODEBOOKS[mkey] = mo
         return out
 
-    j = _ann_recall_frame(spark, sf_dir, _ivfpq)
-    return j.groupBy("query_id").agg(
-        F.count("*").alias("n_exact"),
-        (F.sum("hit") >= 0.8 * F.count("*")).alias("recall_ok"),
-    )
+    return _recall_per_query(_ann_recall_frame(spark, sf_dir, _ivfpq))
 
 
 @register(
@@ -1351,14 +1427,13 @@ def similarity_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators.similarity import ivfpq_topk
 
-    ckey = (sf_dir, "ivfpq-coarse", 16, 42)
-    mkey = (sf_dir, "ivfpq-res-books", 16, 16, 42)
-    coarse = _IVF_QUANTIZERS.get(ckey)
-    models = _PQ_CODEBOOKS.get(mkey)
+    ckey = ("ivfpq_coarse", sf_dir, 16, 42)
+    mkey = ("ivfpq_res_books", sf_dir, 16, 16, 42)
+    coarse, models = _RUNS.get(ckey), _RUNS.get(mkey)
 
     def _ivfpq_res(q, c):
         n_probe = 16 if _probe_small(sf_dir, c) else 12
-        out, co, mo = ivfpq_topk(
+        out, _RUNS[ckey], _RUNS[mkey] = ivfpq_topk(
             q,
             c,
             k=5,
@@ -1372,15 +1447,9 @@ def similarity_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
             models=models,
             residual=True,
         )
-        _IVF_QUANTIZERS[ckey] = co
-        _PQ_CODEBOOKS[mkey] = mo
         return out
 
-    j = _ann_recall_frame(spark, sf_dir, _ivfpq_res)
-    return j.groupBy("query_id").agg(
-        F.count("*").alias("n_exact"),
-        (F.sum("hit") >= 0.8 * F.count("*")).alias("recall_ok"),
-    )
+    return _recall_per_query(_ann_recall_frame(spark, sf_dir, _ivfpq_res))
 
 
 @register(
@@ -1407,28 +1476,16 @@ def similarity_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators.similarity import pq_rerank_topk
 
-    cache_key = (sf_dir, 16, 16, 42)
-    prefit = _PQ_CODEBOOKS.get(cache_key)
+    key = ("pq_books", sf_dir, 16, 16, 42)
+    prefit = _RUNS.get(key)
 
     def _pq(q, c):
-        out, models = pq_rerank_topk(
+        out, _RUNS[key] = pq_rerank_topk(
             q, c, k=5, shortlist=200, m=16, n_codes=16, seed=42, models=prefit
         )
-        _PQ_CODEBOOKS[cache_key] = models
         return out
 
-    j = _ann_recall_frame(spark, sf_dir, _pq)
-    return j.groupBy("query_id").agg(
-        F.count("*").alias("n_exact"),
-        (F.sum("hit") >= 0.6 * F.count("*")).alias("recall_ok"),
-    )
-
-
-# persisted-index build cache for similarity_index_served: sf_dir →
-# (out_dir, coarse, models). Built ONCE per (process, corpus) into a
-# temp directory; repeat calls (and bench repeats) serve from the same
-# persisted artifacts — the production build-once/serve-many contract.
-_ANN_INDEX_BUILDS: dict = {}
+    return _recall_per_query(_ann_recall_frame(spark, sf_dir, _pq), floor=0.6)
 
 
 @register(
@@ -1453,8 +1510,8 @@ def similarity_index_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     #1): ``run_ann_index_build`` once per (process, corpus) into a
     temp directory, then EVERY search in this plan reads the index
     parquet and the kilobyte JSON quantizers from disk through
-    ``ann_index_search`` — the `_IVF_QUANTIZERS` process-dict warm path
-    plays no part. Config matches ``similarity_ivfpq_residual``
+    ``ann_index_search`` — the ``_RUNS`` quantizer entries play no
+    part. Config matches ``similarity_ivfpq_residual``
     (16 cells / m=16 / 16 codes / residual / seed 42, probe ladder,
     shortlist 200), so the measured recall provenance carries over
     (min-per-query 1.0/1.0/0.80 at sf0.001/0.01/0.1).
@@ -1474,58 +1531,14 @@ def similarity_index_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     8-byte codes, shortlist-only exact re-rank); the build runs once
     per corpus and amortizes across queries exactly as in production.
     """
-    import tempfile
-
-    from ..index_pipeline import ann_index_search, run_ann_index_build
     from ..operators.similarity import ivfpq_index, ivfpq_search
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.where(F.col("vec_id") < 10)
-    c = emb.where(F.col("vec_id") >= 10)
+    q, c = _ann_sides(spark, sf_dir)
     n_probe = 16 if _probe_small(sf_dir, c) else 12
-
-    cached = _ANN_INDEX_BUILDS.get(sf_dir)
-    if cached is None or not os.path.isdir(os.path.join(cached[0], "index")):
-        out_dir = tempfile.mkdtemp(prefix="spark_graft_ann_index_")
-        built = run_ann_index_build(
-            c, out_dir, n_centroids=16, m=16, n_codes=16, residual=True,
-            seed=42,
-        )
-        cached = (out_dir, built.coarse, built.models)
-        _ANN_INDEX_BUILDS[sf_dir] = cached
-    out_dir, coarse, models = cached
-
-    # served is consumed TWICE (row-identity gate + recall frame); the
-    # plain lazy form re-ran the whole disk search per consumer (r15
-    # bench: two full probe→ADC→re-rank executions). It is ≤ |Q|·k rows
-    # by construction; persist() computes it once (BlockManager
-    # getOrElseUpdate dedups the partitions across the two
-    # InMemoryTableScan consumers — guide §5 reuse-vs-recompute; r15
-    # A/B: materialize-once 0.71×). persist, not localCheckpoint:
-    # InMemoryRelation keeps the child plan, so the served plan still
-    # SHOWS the persisted-index FileScan + PartitionFilters (the
-    # disk-serving contract stays plan-testable; a checkpoint would
-    # hide it behind an opaque LogicalRDD).
-    #
-    # r16 (VERDICT r15 #1/#5): the three corpus-sized pipelines — the
-    # disk-served search, the in-memory twin, and the exact brute-force
-    # audit — are independent by data and each ends in a ≤ |Q|·k list,
-    # so they materialize on CONCURRENT driver threads (guide §2.6):
-    # the served persist fills via one full-column noop scan in its
-    # thread (keeping the FileScan visible as above), the twin and the
-    # exact leg eagerly checkpoint (bounded lists; blocks GC-owned, the
-    # caller's unit-of-work boundary reclaims them). Wall cost is
-    # max(leg), not Σ(legs); the gates fold over the bounded lists.
-    from ..operators.cache import run_concurrently
-    from ..operators.similarity import brute_force_topk
-
-    served = ann_index_search(
-        q, c, out_dir, k=5, shortlist=200, n_probe=n_probe
-    ).persist()
-
-    def _serve_leg():
-        served.write.format("noop").mode("overwrite").save()
-        return served
+    out_dir, built = _build_dir_once(
+        ("ann_index", sf_dir), lambda d: _build_ann_index(c, d), "index"
+    )
+    coarse, models = built.coarse, built.models
 
     def _mem_leg():
         return ivfpq_search(
@@ -1533,17 +1546,8 @@ def similarity_index_served(spark: SparkSession, sf_dir: str) -> DataFrame:
             models, k=5, shortlist=200, n_probe=n_probe, residual=True,
         ).localCheckpoint(eager=True)
 
-    def _exact_leg():
-        # the _ann_recall_frame exact side (brute_force_topk over the
-        # same q/c split), checkpointed so the audit overlaps the serve
-        return (
-            brute_force_topk(q, c, k=5)
-            .select("query_id", "candidate_id")
-            .localCheckpoint(eager=True)
-        )
-
-    _, mem, exact = run_concurrently(
-        _serve_leg, _mem_leg, _exact_leg, spark=spark
+    served, per_q, mem = _served_recall(
+        spark, q, c, out_dir, n_probe, c, _mem_leg
     )
     match_gate = (
         served.select("query_id", "rn", F.col("candidate_id").alias("s_cand"))
@@ -1561,27 +1565,7 @@ def similarity_index_served(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("served_matches_memory")
         )
     )
-
-    j = exact.join(
-        served.select("query_id", "candidate_id").withColumn("hit", F.lit(1)),
-        ["query_id", "candidate_id"],
-        "left",
-    ).withColumn("hit", F.coalesce(F.col("hit"), F.lit(0)))
-    per_q = j.groupBy("query_id").agg(
-        F.count("*").alias("n_exact"),
-        (F.sum("hit") >= 0.8 * F.count("*")).alias("recall_ok"),
-    )
     return per_q.crossJoin(F.broadcast(match_gate))
-
-
-# rebalance run cache: sf_dir → (out_dir, hot_cell, before_counts).
-# A SEPARATE index from _ANN_INDEX_BUILDS: rebalance MUTATES quantizers
-# and layout, and similarity_index_served's row-identity gate compares
-# disk against an in-memory encode under the BUILD's quantizers — one
-# shared directory would corrupt that contract. The rebalance runs
-# exactly once per (process, corpus); repeat calls re-read the manifests
-# and re-serve from the rewritten artifacts (all deterministic).
-_ANN_REBALANCE_RUNS: dict = {}
 
 
 @register(
@@ -1636,29 +1620,18 @@ def ann_index_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     whose index scan statically prunes to the probed cells. The gates
     fold to one broadcast row.
     """
-    import tempfile
-
     from ..index_pipeline import (
-        ann_index_search,
         load_ann_index,
         load_ann_quantizers,
         merge_cells,
         rebalance_cell,
-        run_ann_index_build,
     )
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.where(F.col("vec_id") < 10)
-    c = emb.where(F.col("vec_id") >= 10)
+    q, c = _ann_sides(spark, sf_dir)
     small = _probe_small(sf_dir, c)
 
-    cached = _ANN_REBALANCE_RUNS.get(sf_dir)
-    if cached is None or not os.path.isdir(os.path.join(cached[0], "index")):
-        out_dir = tempfile.mkdtemp(prefix="spark_graft_ann_rebalance_")
-        run_ann_index_build(
-            c, out_dir, n_centroids=16, m=16, n_codes=16, residual=True,
-            seed=42,
-        )
+    def _build(out_dir):
+        _build_ann_index(c, out_dir)
         before, _after, _ = rebalance_cell(spark, c, out_dir)
         b = {int(r["cell"]): int(r["n_vectors"]) for r in before.collect()}
         hot = max(b, key=lambda x: (b[x], -x))
@@ -1668,9 +1641,14 @@ def ann_index_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
             and int(split_config.get("epoch", 0)) == 1
         )
         merge_cells(spark, c, out_dir)
-        cached = (out_dir, hot, b, grew)
-        _ANN_REBALANCE_RUNS[sf_dir] = cached
-    out_dir, hot, b, grew = cached
+        return hot, b, grew
+
+    # its own index, not similarity_index_served's: rebalance MUTATES the
+    # quantizers and layout, and that query's row-identity gate compares
+    # disk against an in-memory encode under the BUILD's quantizers.
+    out_dir, (hot, b, grew) = _build_dir_once(
+        ("ann_rebalance", sf_dir), _build, "index"
+    )
 
     _, _, config = load_ann_quantizers(out_dir)
     n_cells = int(config["n_centroids"])
@@ -1678,32 +1656,6 @@ def ann_index_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fraction the pre-rebalance ladder held (split 16->17, merge back
     # to 16)
     n_probe = n_cells if small else 12
-    # r16 (VERDICT r15 #1): three independent pipelines — the served
-    # search over the rewritten artifacts, the exact brute-force audit,
-    # and the index-sized manifest/balance gates — materialize on
-    # concurrent driver threads (the similarity_index_served pattern:
-    # persist + noop fill keeps the rewritten-index FileScan visible in
-    # the final plan; the audit and the 1-row gates checkpoint).
-    # Honest local A/B: marginal at sf0.1 (3.48 → 3.31 s min-of-side,
-    # 0.95× — the saturating-legs caveat noted at ann_index_deletes
-    # applies); kept for the same Σ(legs) → max(leg) structure.
-    from ..operators.cache import run_concurrently
-    from ..operators.similarity import brute_force_topk
-
-    served = ann_index_search(
-        q, c, out_dir, k=5, shortlist=200, n_probe=n_probe
-    ).persist()
-
-    def _serve_leg():
-        served.write.format("noop").mode("overwrite").save()
-        return served
-
-    def _exact_leg():
-        return (
-            brute_force_topk(q, c, k=5)
-            .select("query_id", "candidate_id")
-            .localCheckpoint(eager=True)
-        )
 
     def _gates_leg():
         manifest_after = load_ann_index(spark, out_dir).groupBy("cell").agg(
@@ -1726,46 +1678,16 @@ def ann_index_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("quantizer_remerged"),
         ).localCheckpoint(eager=True)
 
-    _, exact, gates = run_concurrently(
-        _serve_leg, _exact_leg, _gates_leg, spark=spark
-    )
-    hits = exact.join(
-        served.select("query_id", "candidate_id").withColumn("hit", F.lit(1)),
-        ["query_id", "candidate_id"],
-        "left",
-    ).withColumn("hit", F.coalesce(F.col("hit"), F.lit(0)))
-    per_q = hits.groupBy("query_id").agg(
-        F.count("*").alias("n_exact"),
-        (F.sum("hit") >= 0.8 * F.count("*")).alias("recall_ok"),
+    _, per_q, gates = _served_recall(
+        spark, q, c, out_dir, n_probe, c, _gates_leg
     )
     return per_q.crossJoin(F.broadcast(gates))
 
 
-# deletion run cache: sf_dir → out_dir of an index built over the FULL
-# candidate side with the vec_id % 7 == 3 slice tombstoned. Separate
-# from the build/rebalance caches — those directories' contents must
-# stay exactly what their gates expect.
-_ANN_DELETE_RUNS: dict = {}
-
-
 @register(
     "ann_index_deletes",
-    oracle="""
-WITH q AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings WHERE vec_id < 10),
-c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-      WHERE vec_id >= 10 AND vec_id % 7 <> 3),
-sims AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS candidate_id,
-         ROUND(LIST_DOT_PRODUCT(q.v, c.v) /
-               (SQRT(LIST_DOT_PRODUCT(q.v, q.v)) * SQRT(LIST_DOT_PRODUCT(c.v, c.v))), 6) AS cosine
-  FROM q CROSS JOIN c
-),
-topk AS (
-  SELECT * FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cosine DESC, candidate_id) AS rn
-    FROM sims
-  ) WHERE rn <= 5
-)
+    oracle=_exact_topk_sql("vec_id >= 10 AND vec_id % 7 <> 3")
+    + """
 SELECT query_id, CAST(COUNT(*) AS BIGINT) AS n_exact,
        TRUE AS recall_ok, TRUE AS deleted_absent, TRUE AS tombstones_match
 FROM topk
@@ -1811,78 +1733,26 @@ def ann_index_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     a kilobyte tombstone frame; the exact audit side is the bounded
     10-query brute-force the whole ANN family uses.
     """
-    import tempfile
+    from ..index_pipeline import delete_ids, load_tombstones
 
-    from ..index_pipeline import (
-        ann_index_search,
-        delete_ids,
-        load_tombstones,
-        run_ann_index_build,
-    )
-    from ..operators.similarity import brute_force_topk
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.where(F.col("vec_id") < 10)
-    c = emb.where(F.col("vec_id") >= 10)
-    survivors = c.where(F.col("vec_id") % 7 != 3)
+    q, c = _ann_sides(spark, sf_dir)
     n_probe = 16 if _probe_small(sf_dir, c) else 12
 
-    cached = _ANN_DELETE_RUNS.get(sf_dir)
-    if (
-        cached is None
-        or not os.path.isdir(os.path.join(cached, "index"))
-        # validity covers the tombstone store too (ADVICE r14): a run
-        # dir whose tombstones were removed must rebuild, not serve
-        or not os.path.isdir(os.path.join(cached, "tombstones"))
-    ):
-        out_dir = tempfile.mkdtemp(prefix="spark_graft_ann_delete_")
-        run_ann_index_build(
-            c, out_dir, n_centroids=16, m=16, n_codes=16, residual=True,
-            seed=42,
-        )
+    def _build(out_dir):
+        _build_ann_index(c, out_dir)
         delete_ids(
             spark, out_dir, c.where(F.col("vec_id") % 7 == 3).select("vec_id")
         )
-        _ANN_DELETE_RUNS[sf_dir] = out_dir
-        cached = out_dir
-    out_dir = cached
 
-    # consumed twice (deleted_absent gate + recall hits): persist
-    # shares the ≤ |Q|·k-row search result across both consumers
-    # (guide §5; r15 A/B: materialize-once 5.9 s → 5.1 s). persist,
-    # not localCheckpoint, so the plan keeps the index FileScan +
-    # anti-join visible to the plan-shape tests.
-    #
-    # r16 (VERDICT r15 #1): the served search and the exact survivor
-    # audit are independent corpus-sized pipelines ending in bounded
-    # lists — materialize them on concurrent driver threads (the
-    # similarity_index_served pattern: noop fills the persist in one
-    # thread, the audit checkpoints in the other; blocks GC-owned).
-    # Honest local A/B: a TIE at sf0.1 (4.11 → 4.16 s min-of-side,
-    # 1.01×) — unlike index_served (0.76×, three legs incl. the heavy
-    # in-memory encode), both legs here saturate all 32 cores, so the
-    # overlap only recovers driver-side gaps. Kept for the structure:
-    # the sequential driver-job chain becomes max(leg) instead of
-    # Σ(legs), which pays exactly when legs stop saturating the
-    # cluster (the 100 TB shape: bounded query batch, pruned probes).
-    from ..operators.cache import run_concurrently
-
-    served = ann_index_search(
-        q, c, out_dir, k=5, shortlist=200, n_probe=n_probe
-    ).persist()
-
-    def _serve_leg():
-        served.write.format("noop").mode("overwrite").save()
-        return served
-
-    def _exact_leg():
-        return (
-            brute_force_topk(q, survivors, k=5)
-            .select("query_id", "candidate_id")
-            .localCheckpoint(eager=True)
-        )
-
-    _, exact = run_concurrently(_serve_leg, _exact_leg, spark=spark)
+    # its own index: the build/rebalance dirs must stay exactly what their
+    # gates expect. A dir whose tombstones were removed must rebuild, not
+    # serve (ADVICE r14).
+    out_dir, _ = _build_dir_once(
+        ("ann_delete", sf_dir), _build, "index", "tombstones"
+    )
+    served, per_q = _served_recall(
+        spark, q, c, out_dir, n_probe, c.where(F.col("vec_id") % 7 != 3)
+    )
     deleted_absent = served.agg(
         (
             F.sum(F.when(F.col("candidate_id") % 7 == 3, 1).otherwise(0)) == 0
@@ -1908,16 +1778,6 @@ def ann_index_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             == 0
         ).alias("tombstones_match")
-    )
-
-    hits = exact.join(
-        served.select("query_id", "candidate_id").withColumn("hit", F.lit(1)),
-        ["query_id", "candidate_id"],
-        "left",
-    ).withColumn("hit", F.coalesce(F.col("hit"), F.lit(0)))
-    per_q = hits.groupBy("query_id").agg(
-        F.count("*").alias("n_exact"),
-        (F.sum("hit") >= 0.8 * F.count("*")).alias("recall_ok"),
     )
     return per_q.crossJoin(F.broadcast(deleted_absent)).crossJoin(
         F.broadcast(tomb_gate)
@@ -7219,12 +7079,6 @@ def semantic_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     return semdedup_incremental_actions(base, new, tau=_SEMDEDUP_TAU)
 
 
-# persisted-artifact build cache for semantic_dedup_served: sf_dir →
-# out_dir. Built ONCE per (process, corpus) — the production
-# fit-once/serve-many contract, as _ANN_INDEX_BUILDS does for the index.
-_SEMDEDUP_SERVE_RUNS: dict = {}
-
-
 @register(
     "semantic_dedup_served",
     oracle=_SEMDEDUP_INC_CTES
@@ -7263,8 +7117,6 @@ def semantic_dedup_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     directories of the base store (static prune); pair work is
     (new × pruned-base) ∪ (new × new) within cells.
     """
-    import tempfile
-
     from ..operators.semdedup import semdedup_incremental_actions
     from ..semdedup_pipeline import (
         fit_semdedup_base,
@@ -7275,13 +7127,11 @@ def semantic_dedup_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = emb.where(F.col("vec_id") % 3 != 0)
     new = emb.where(F.col("vec_id") % 3 == 0)
 
-    cached = _SEMDEDUP_SERVE_RUNS.get(sf_dir)
-    if cached is None or not os.path.isdir(os.path.join(cached, "base")):
-        out_dir = tempfile.mkdtemp(prefix="spark_graft_semdedup_")
-        fit_semdedup_base(base, out_dir, tau=_SEMDEDUP_TAU)
-        _SEMDEDUP_SERVE_RUNS[sf_dir] = out_dir
-        cached = out_dir
-    out_dir = cached
+    out_dir, _ = _build_dir_once(
+        ("semdedup", sf_dir),
+        lambda d: fit_semdedup_base(base, d, tau=_SEMDEDUP_TAU),
+        "base",
+    )
 
     # Sharing the twice-consumed serve result was A/B-measured four
     # ways (r15): plain lazy min 9.08 s, eager localCheckpoint 8.79 s

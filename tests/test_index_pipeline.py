@@ -319,10 +319,65 @@ def test_registered_query_serves_from_persisted_index(spark):
     rows = out.collect()
     assert rows and all(r.recall_ok and r.served_matches_memory for r in rows)
 
-    out_dir = llm_queries._ANN_INDEX_BUILDS[SF][0]
+    out_dir = llm_queries._RUNS[("ann_index", SF)][0]
     assert os.path.isdir(os.path.join(out_dir, "index"))
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert out_dir in plan, "plan does not scan the persisted index dir"
+
+
+def test_build_dir_once_reuses_until_a_required_subdir_is_missing(monkeypatch):
+    """The plan layer's build-dir cache, without Spark: a repeat call
+    returns the same dir and does not build again; a dir missing a
+    required subdir (ADVICE r14: tombstones removed ⇒ rebuild) is
+    dropped and built again into a new dir."""
+    import shutil
+
+    from soccer_data_pipeline_spark.plans import llm_queries
+
+    monkeypatch.setattr(llm_queries, "_RUNS", {})
+    built = []
+
+    def build(out_dir):
+        built.append(out_dir)
+        for sub in ("index", "tombstones"):
+            os.makedirs(os.path.join(out_dir, sub))
+        return len(built)
+
+    key = ("test_run", SF)
+    first = llm_queries._build_dir_once(key, build, "index", "tombstones")
+    assert llm_queries._build_dir_once(key, build, "index", "tombstones") == first
+    assert built == [first[0]] and first[1] == 1
+
+    shutil.rmtree(os.path.join(first[0], "tombstones"))
+    second = llm_queries._build_dir_once(key, build, "index", "tombstones")
+    assert second[0] != first[0] and second[1] == 2
+    assert built == [first[0], second[0]]
+    assert not os.path.exists(first[0])
+    shutil.rmtree(second[0])
+
+
+def test_build_dirs_removed_at_process_exit():
+    """A build dir the plan layer creates does not outlive its process."""
+    import subprocess
+    import sys
+
+    code = (
+        "import os\n"
+        "from soccer_data_pipeline_spark.plans import llm_queries as m\n"
+        "def build(d):\n"
+        "    os.makedirs(os.path.join(d, 'index'))\n"
+        "    open(os.path.join(d, 'index', 'x'), 'w').close()\n"
+        "d = m._build_dir_once(('exit_test', 'sf'), build, 'index')[0]\n"
+        "print(os.path.isfile(os.path.join(d, 'index', 'x')), d)\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=repo, capture_output=True,
+        text=True, check=True,
+    )
+    existed, out_dir = out.stdout.split()
+    assert existed == "True"
+    assert not os.path.exists(out_dir)
 
 
 def test_loader_dedup_is_deterministic_on_changed_rows(spark, tmp_path):

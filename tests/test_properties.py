@@ -38,12 +38,6 @@ def test_winner_points_invariants(spark, scores):
     doc = {"name": "L", "season": "2020", "matches": matches}
     import tempfile, os
 
-    d = tempfile.mkdtemp()
-    sub = os.path.join(d, "2020")
-    os.makedirs(sub, exist_ok=True)
-    with open(os.path.join(sub, "xx.1.json"), "w") as fh:
-        json.dump(doc, fh)
-
     from soccer_data_pipeline_spark.sources.json_source import (
         read_matches_raw,
         split_quarantine,
@@ -53,8 +47,13 @@ def test_winner_points_invariants(spark, scores):
         normalize_matches,
     )
 
-    valid, _ = split_quarantine(read_matches_raw(spark, d))
-    rows = normalize_matches(explode_matches(valid)).collect()
+    with tempfile.TemporaryDirectory() as d:
+        sub = os.path.join(d, "2020")
+        os.makedirs(sub, exist_ok=True)
+        with open(os.path.join(sub, "xx.1.json"), "w") as fh:
+            json.dump(doc, fh)
+        valid, _ = split_quarantine(read_matches_raw(spark, d))
+        rows = normalize_matches(explode_matches(valid)).collect()
     assert len(rows) == len(scores)
     for r in rows:
         if r.winner is None:
