@@ -130,6 +130,17 @@ def load_ann_quantizers(out_dir: str):
     return coarse, models, config
 
 
+def _move_in(src: str, dest: str, old: list[str]) -> int:
+    """Move ``src``'s parquet files into ``dest``, only then remove the
+    PINNED files ``old``. Returns the number of files moved in."""
+    new = sorted(glob.glob(os.path.join(src, "*.parquet")))
+    for p in new:
+        shutil.move(p, dest)
+    for p in old:
+        os.remove(p)
+    return len(new)
+
+
 def _swap_files(df: DataFrame, tmp: str, dest: str, old: list[str]) -> int:
     """Replace the PINNED files ``old`` with ``df``'s rows in directory
     ``dest``, move-in-first: write ``df`` to ``tmp``, move the new files
@@ -139,13 +150,40 @@ def _swap_files(df: DataFrame, tmp: str, dest: str, old: list[str]) -> int:
     is never touched. Returns the number of files moved in."""
     shutil.rmtree(tmp, ignore_errors=True)
     df.write.mode("overwrite").parquet(tmp)
-    new = sorted(glob.glob(os.path.join(tmp, "*.parquet")))
-    for p in new:
-        shutil.move(p, dest)
-    for p in old:
-        os.remove(p)
+    n = _move_in(tmp, dest, old)
     shutil.rmtree(tmp, ignore_errors=True)
-    return len(new)
+    return n
+
+
+def _cell_files(data_dir: str, c: int) -> list[str]:
+    return sorted(glob.glob(os.path.join(data_dir, f"cell={c}", "*.parquet")))
+
+
+def _swap_cells(
+    df: DataFrame, tmp: str, data_dir: str, old_by_cell: dict[int, list[str]]
+) -> dict[int, int]:
+    """The ``cell=``-partitioned twin of ``_swap_files``: ONE
+    ``partitionBy("cell")`` write (one file per cell), then per cell
+    ``_move_in``. Every new file exists before anything moves, so the
+    move-in-first argument holds across all cells. A cell left without
+    rows gets one zero-row file (one more write for all such cells): a
+    store with no file left has no schema. Returns {cell: n_moved}."""
+    if not old_by_cell:
+        return {}
+    shutil.rmtree(tmp, ignore_errors=True)
+    df.repartition("cell").write.partitionBy("cell").parquet(tmp)
+    src = {c: os.path.join(tmp, f"cell={c}") for c in sorted(old_by_cell)}
+    empty = [d for d in src.values() if not os.path.isdir(d)]
+    if empty:
+        df.drop("cell").limit(0).write.parquet(empty[0])
+        for d in empty[1:]:
+            shutil.copytree(empty[0], d)
+    moved = {
+        c: _move_in(d, os.path.join(data_dir, f"cell={c}"), old_by_cell[c])
+        for c, d in src.items()
+    }
+    shutil.rmtree(tmp, ignore_errors=True)
+    return moved
 
 
 def _tombstones_dir(out_dir: str) -> str:
@@ -194,11 +232,11 @@ def delete_ids(spark: SparkSession, out_dir: str, ids) -> int:
         df = ids.select(
             F.col(ids.columns[0]).cast("long").alias("candidate_id")
         ).dropDuplicates(["candidate_id"])
-    else:
-        df = spark.createDataFrame(
-            [(int(i),) for i in ids], "candidate_id bigint"
-        ).dropDuplicates(["candidate_id"])
-    n = df.count()
+        n = df.count()
+    else:  # deduped on the driver: one write job, none for no ids
+        uniq = sorted({int(i) for i in ids})
+        df = spark.createDataFrame([(i,) for i in uniq], "candidate_id bigint")
+        n = len(uniq)
     if n:
         df.coalesce(1).write.mode("append").parquet(_tombstones_dir(out_dir))
     return n
@@ -207,17 +245,16 @@ def delete_ids(spark: SparkSession, out_dir: str, ids) -> int:
 def purge_deleted(
     spark: SparkSession,
     out_dir: str,
-    target_files: int = 1,
     clear_tombstones: bool = False,
 ) -> dict[int, int]:
     """Physically reclaim tombstoned rows (the deletion path's
     compaction twin): rewrite ONLY the cells that hold tombstoned rows
-    — one column-pruned scan finds the affected cells, then each
-    rewrite statically prunes to that cell's partition directory and
-    drops the tombstoned ids; untouched cells are never read or
-    written. A mid-rewrite crash is safe at any point: duplicates
-    collapse via the loader's dedup (compaction's crash-ordering
-    argument) and the tombstones are still in force.
+    — one semi-join scan counts the purged rows per cell, then ONE
+    ``_swap_cells`` write statically pruned to those cells drops the
+    tombstoned ids (Spark jobs constant in the cell count); untouched
+    cells are never read or written. A crash at any point is safe:
+    duplicates collapse via the loader's dedup (compaction's
+    crash-ordering argument) and the tombstones are still in force.
 
     The tombstone store is PRESERVED by default — compacted to one
     deduped file, not cleared — because ``delete_ids``'s contract is
@@ -234,8 +271,8 @@ def purge_deleted(
     reader-race scope — don't race reads against the file removals.
 
     Concurrency: the tombstone FILE LIST is pinned once, up front, and
-    every read below — the per-cell anti-joins AND the end-of-purge
-    store compaction — uses exactly those files; only they are removed.
+    every read below — the anti-join AND the end-of-purge store
+    compaction — uses exactly those files; only they are removed.
     A tombstone appended by a concurrent ``run_streaming_index_deletes``
     between the pin and the removals therefore survives untouched (it
     stays in force on every read path and is folded by the NEXT purge)
@@ -248,55 +285,34 @@ def purge_deleted(
     old_t = sorted(glob.glob(os.path.join(d, "*.parquet")))
     if not old_t:
         return {}
-    tomb = (
-        spark.read.parquet(*old_t)
-        .select("candidate_id")
-        .dropDuplicates(["candidate_id"])
-    )
+    tomb = spark.read.parquet(*old_t).select("candidate_id").dropDuplicates()
     index_dir = os.path.join(out_dir, "index")
-    affected = sorted(
-        int(r["cell"])
+    result = {
+        int(r["cell"]): int(r["count"])
         for r in spark.read.parquet(index_dir)
         .join(F.broadcast(tomb), "candidate_id", "left_semi")
-        .select("cell")
-        .distinct()
+        .groupBy("cell")
+        .count()
         .collect()
-    )
-    result: dict[int, int] = {}
+    }
     tmp = os.path.join(out_dir, "_purge_tmp")
-    for c in affected:
-        old = sorted(
-            glob.glob(os.path.join(index_dir, f"cell={c}", "*.parquet"))
-        )
-        # raw read (NOT the deduped loader): preserve the stored
-        # multiset of SURVIVING rows byte-for-byte, drop only
-        # tombstoned ids. Materialized ONCE (the rebalance/merge
-        # re_encoded discipline): the write and the count both read
-        # the checkpoint, and the file list is pinned before removal.
-        rows = (
-            spark.read.parquet(index_dir)
-            .where(F.col("cell") == c)
-            .drop("cell")
-        )
-        n_rows = rows.count()
-        kept = rows.join(
-            F.broadcast(tomb), "candidate_id", "left_anti"
-        ).localCheckpoint(eager=True)
-        _swap_files(
-            kept.repartition(target_files), tmp,
-            os.path.join(index_dir, f"cell={c}"), old,
-        )
-        result[c] = n_rows - kept.count()
+    old_by_cell = {c: _cell_files(index_dir, c) for c in result}
+    # raw read (NOT the deduped loader), listed after the pin: the
+    # stored multiset of SURVIVING rows is preserved byte-for-byte
+    kept = (
+        spark.read.parquet(index_dir)
+        .where(F.col("cell").isin(sorted(result)))
+        .join(F.broadcast(tomb), "candidate_id", "left_anti")
+    )
+    _swap_cells(kept, tmp, index_dir, old_by_cell)
     if clear_tombstones:
-        shutil.rmtree(_tombstones_dir(out_dir), ignore_errors=True)
-    else:
+        shutil.rmtree(d, ignore_errors=True)
+    elif len(old_t) > 1:
         # compact the store: one deduped file replaces the PINNED
         # append pile (old_t from function entry — a concurrently
         # appended file is neither folded nor removed here)
-        if len(old_t) > 1:
-            compact = tomb.localCheckpoint(eager=True)
-            _swap_files(compact.coalesce(1), tmp, d, old_t)
-    return result
+        _swap_files(tomb.coalesce(1), tmp, d, old_t)
+    return dict(sorted(result.items()))
 
 
 def load_ann_index(
@@ -934,7 +950,6 @@ def compact_index_cells(
     out_dir: str,
     cells: list[int] | None = None,
     min_files: int = 2,
-    target_files: int = 1,
 ) -> dict[int, tuple[int, int]]:
     """Index lifecycle: small-file compaction (r13 — the gap streaming
     appends open: every microbatch lands one-plus parquet files PER
@@ -942,19 +957,18 @@ def compact_index_cells(
     hundreds of file opens; at 100 TB the file count, not the byte
     count, becomes the scan bottleneck).
 
-    Per target cell (default: every cell with more than ``min_files``
-    files), rewrite that cell's rows into ``target_files`` files.
-    Bounded IO like the rebalance: each cell's read statically prunes
-    to its one partition directory and nothing outside the targeted
-    cells is read or written. Quantizers, cells, and codes are
-    UNTOUCHED — compaction is a layout-only rewrite, so the epoch does
-    NOT advance (a concurrent stream keeps appending validly; its new
+    Every target cell (default: every cell with more than ``min_files``
+    files) is rewritten to one file, all in ONE write whose read
+    statically prunes to the targeted cells; nothing outside them is
+    read or written. Quantizers, cells, and codes are UNTOUCHED —
+    compaction is a layout-only rewrite, so the epoch does NOT
+    advance (a concurrent stream keeps appending validly; its new
     files simply become the next compaction's input).
 
     Crash-safe ordering without a transaction log: the compacted files
-    are MOVED IN first (fresh part-UUID names cannot collide), the old
-    files are deleted after — a crash between the two steps leaves
-    duplicate byte-identical rows, which ``load_ann_index``'s
+    are written, then MOVED IN (fresh part-UUID names cannot collide),
+    and the old files are deleted after — a crash between the steps
+    leaves duplicate byte-identical rows, which ``load_ann_index``'s
     deterministic dedup collapses (the same at-least-once-write +
     idempotent-read pairing the streaming appends rely on).
 
@@ -972,12 +986,8 @@ def compact_index_cells(
     Returns {cell: (n_files_before, n_files_after)}.
     """
     return compact_cell_partitions(
-        spark,
-        os.path.join(out_dir, "index"),
-        os.path.join(out_dir, "_compact_tmp"),
-        cells=cells,
-        min_files=min_files,
-        target_files=target_files,
+        spark, os.path.join(out_dir, "index"),
+        os.path.join(out_dir, "_compact_tmp"), cells, min_files,
     )
 
 
@@ -987,39 +997,26 @@ def compact_cell_partitions(
     tmp_dir: str,
     cells: list[int] | None = None,
     min_files: int = 2,
-    target_files: int = 1,
 ) -> dict[int, tuple[int, int]]:
     """The shared small-file compaction over any ``cell=``-partitioned
     parquet store (the ANN index and the semdedup pipeline's base
     store share the layout AND the at-least-once-write +
     deterministic-dedup-read contract, so they share the compactor).
-    Raw read per targeted cell — the stored multiset is preserved
-    byte-for-byte, including rows a loader's dedup would collapse."""
-
-    def cell_files(c: int) -> list[str]:
-        return sorted(
-            glob.glob(os.path.join(data_dir, f"cell={c}", "*.parquet"))
-        )
-
+    One raw read of the targeted cells, one ``_swap_cells`` write — the
+    stored multiset is preserved byte-for-byte, including rows a
+    loader's dedup would collapse."""
     if cells is None:
         cells = sorted(
             int(d.split("=", 1)[1])
             for d in os.listdir(data_dir)
             if d.startswith("cell=")
         )
-    result: dict[int, tuple[int, int]] = {}
-    for c in cells:
-        old = cell_files(c)
-        if len(old) <= min_files:
-            continue
-        rows = (
-            spark.read.parquet(data_dir)
-            .where(F.col("cell") == c)
-            .drop("cell")
-        )
-        moved = _swap_files(
-            rows.repartition(target_files), tmp_dir,
-            os.path.join(data_dir, f"cell={c}"), old,
-        )
-        result[c] = (len(old), moved)
-    return result
+    files = {int(c): _cell_files(data_dir, c) for c in cells}
+    old_by_cell = {c: f for c, f in files.items() if len(f) > min_files}
+    if not old_by_cell:
+        return {}
+    rows = spark.read.parquet(data_dir).where(
+        F.col("cell").isin(sorted(old_by_cell))
+    )
+    moved = _swap_cells(rows, tmp_dir, data_dir, old_by_cell)
+    return {c: (len(old), moved[c]) for c, old in old_by_cell.items()}

@@ -324,7 +324,6 @@ def compact_semdedup_base(
     out_dir: str,
     cells: list[int] | None = None,
     min_files: int = 2,
-    target_files: int = 1,
 ) -> dict[int, tuple[int, int]]:
     """Small-file compaction for the base store (r14): every streamed
     microbatch appends one-plus parquet files per touched cell, so a
@@ -346,7 +345,6 @@ def compact_semdedup_base(
         os.path.join(out_dir, "_compact_tmp"),
         cells=cells,
         min_files=min_files,
-        target_files=target_files,
     )
 
 

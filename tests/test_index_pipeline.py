@@ -621,6 +621,16 @@ def test_compact_index_cells_bounded_and_lossless(spark, tmp_path):
         map(tuple, ann_index_search(q, c, out_dir, k=5, n_probe=4).collect())
     )
 
+    # several cells in one call: each folds to one file
+    a, b = fragmented[1:3]
+    assert compact_index_cells(spark, out_dir, cells=[a, b]) == {
+        a: (counts_before[a], 1),
+        b: (counts_before[b], 1),
+    }
+    assert rows_before == sorted(
+        map(tuple, load_ann_index(spark, out_dir).collect())
+    )
+
     # default sweep compacts every remaining fragmented cell
     swept = compact_index_cells(spark, out_dir, min_files=1)
     assert all(after == 1 for _, after in swept.values())
@@ -819,6 +829,195 @@ def test_purge_deleted_bounded_rewrite_preserves_tombstones(spark, tmp_path):
     # explicit opt-in clears the store; then purge is a no-op
     purge_deleted(spark, out_dir, clear_tombstones=True)
     assert purge_deleted(spark, out_dir) == {}
+
+
+def _one_id_per_cell(spark, out_dir, n_cells):
+    """The smallest candidate id of each of the first ``n_cells`` cells."""
+    raw = spark.read.parquet(os.path.join(out_dir, "index"))
+    return [
+        int(r.candidate_id)
+        for r in raw.groupBy("cell")
+        .agg(F.min("candidate_id").alias("candidate_id"))
+        .orderBy("cell")
+        .limit(n_cells)
+        .collect()
+    ]
+
+
+def _jobs_submitted(spark, group, fn):
+    """Run ``fn`` under job group ``group``; return the number of Spark
+    jobs it submitted."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_purge_job_count_is_constant_in_affected_cells(spark, tmp_path):
+    """purge_deleted rewrites every affected cell in one partitioned
+    write, so the Spark jobs it submits do not grow with the number of
+    cells holding tombstoned rows (a per-cell rewrite loop added about
+    ten jobs per cell)."""
+    import shutil
+
+    from soccer_data_pipeline_spark.index_pipeline import (
+        delete_ids,
+        purge_deleted,
+    )
+
+    _, c = _sides(spark)
+    base = str(tmp_path / "base")
+    run_ann_index_build(c, base, n_centroids=8, m=16, n_codes=8)
+    jobs, purged = {}, {}
+    for n_cells in (2, 6):
+        out_dir = str(tmp_path / f"ann{n_cells}")
+        shutil.copytree(base, out_dir)
+        delete_ids(spark, out_dir, _one_id_per_cell(spark, out_dir, n_cells))
+        jobs[n_cells] = _jobs_submitted(
+            spark, f"purge-{n_cells}-cells",
+            lambda: purged.update({n_cells: purge_deleted(spark, out_dir)}),
+        )
+    assert [len(purged[n]) for n in (2, 6)] == [2, 6]
+    assert jobs[2] == jobs[6], jobs
+
+
+def test_purge_of_every_row_leaves_a_readable_empty_index(spark, tmp_path):
+    """Purging every row keeps one zero-row file per cell: a store with
+    no parquet file left has no schema, so every later read (and the
+    next purge) would fail instead of seeing an empty index."""
+    import glob
+
+    from soccer_data_pipeline_spark.index_pipeline import (
+        delete_ids,
+        purge_deleted,
+    )
+
+    _, c = _sides(spark)
+    out_dir = str(tmp_path / "ann")
+    run_ann_index_build(c, out_dir, n_centroids=4, m=16, n_codes=8)
+    delete_ids(spark, out_dir, [int(r.vec_id) for r in c.collect()])
+    assert sum(purge_deleted(spark, out_dir).values()) == c.count()
+    cell_dirs = glob.glob(os.path.join(out_dir, "index", "cell=*"))
+    assert len(cell_dirs) == 4
+    assert all(
+        len(glob.glob(os.path.join(d, "*.parquet"))) == 1 for d in cell_dirs
+    )
+    assert spark.read.parquet(os.path.join(out_dir, "index")).count() == 0
+    assert load_ann_index(spark, out_dir).count() == 0
+    assert purge_deleted(spark, out_dir) == {}
+
+
+def _failing_second_remove(monkeypatch, under):
+    """Make ``os.remove`` (as ``index_pipeline`` calls it) raise on its
+    second call for a path below ``under``; other paths pass through."""
+    from soccer_data_pipeline_spark import index_pipeline
+
+    real = os.remove
+    calls = []
+
+    def remove(path, *a, **kw):
+        if str(path).startswith(under):
+            calls.append(path)
+            if len(calls) == 2:
+                raise OSError("injected crash")
+        return real(path, *a, **kw)
+
+    monkeypatch.setattr(index_pipeline.os, "remove", remove)
+    return calls
+
+
+def test_purge_crash_mid_swap_serves_survivors_and_converges(
+    spark, tmp_path, monkeypatch
+):
+    """A purge over several cells that dies between moving new files in
+    and removing old ones still serves no tombstoned id and every
+    surviving id exactly once; a second purge leaves no tombstoned row
+    in the raw parquet."""
+    import pytest
+
+    from soccer_data_pipeline_spark.index_pipeline import (
+        delete_ids,
+        purge_deleted,
+    )
+
+    _, c = _sides(spark)
+    out_dir = str(tmp_path / "ann")
+    run_ann_index_build(c, out_dir, n_centroids=8, m=16, n_codes=8)
+    doomed = _one_id_per_cell(spark, out_dir, 3)
+    delete_ids(spark, out_dir, doomed[:2])
+    delete_ids(spark, out_dir, doomed[2:])
+    survivors = sorted(
+        int(r.vec_id) for r in c.where(~F.col("vec_id").isin(doomed)).collect()
+    )
+
+    def served_ids():
+        served = load_ann_index(spark, out_dir).select("candidate_id")
+        return sorted(int(r.candidate_id) for r in served.collect())
+
+    def raw_doomed():
+        return (
+            spark.read.parquet(os.path.join(out_dir, "index"))
+            .where(F.col("candidate_id").isin(doomed))
+            .count()
+        )
+
+    calls = _failing_second_remove(monkeypatch, out_dir)
+    with pytest.raises(OSError, match="injected crash"):
+        purge_deleted(spark, out_dir)
+    monkeypatch.undo()
+    assert len(calls) == 2
+    assert raw_doomed() > 0  # the crash left the rewrite half done
+    assert served_ids() == survivors
+
+    purge_deleted(spark, out_dir)
+    assert raw_doomed() == 0
+    assert served_ids() == survivors
+
+
+def test_compact_crash_mid_swap_keeps_loader_rows(
+    spark, tmp_path, monkeypatch
+):
+    """A compaction over several cells that dies between moving the
+    compacted files in and removing the old ones changes no loader row;
+    re-running it finishes the job with the same rows."""
+    import glob
+
+    import pytest
+
+    from soccer_data_pipeline_spark.index_pipeline import compact_index_cells
+
+    _, c = _sides(spark)
+    out_dir = str(tmp_path / "ann")
+    built = run_ann_index_build(
+        c.where(F.col("vec_id") % 2 == 0), out_dir,
+        n_centroids=4, m=16, n_codes=8,
+    )
+    ivfpq_index(
+        c.where(F.col("vec_id") % 2 == 1), built.coarse, built.models
+    ).write.mode("append").partitionBy("cell").parquet(
+        os.path.join(out_dir, "index")
+    )
+
+    def rows():
+        return sorted(map(tuple, load_ann_index(spark, out_dir).collect()))
+
+    rows_before = rows()
+    calls = _failing_second_remove(monkeypatch, out_dir)
+    with pytest.raises(OSError, match="injected crash"):
+        compact_index_cells(spark, out_dir, min_files=1)
+    monkeypatch.undo()
+    assert len(calls) == 2
+    assert rows() == rows_before
+
+    assert compact_index_cells(spark, out_dir, min_files=1)
+    assert all(
+        len(glob.glob(os.path.join(d, "*.parquet"))) == 1
+        for d in glob.glob(os.path.join(out_dir, "index", "cell=*"))
+    )
+    assert rows() == rows_before
 
 
 def test_rebuild_clears_tombstones_and_rebalance_skips_deleted(spark, tmp_path):
