@@ -211,10 +211,94 @@ def write_json_atomic(path: str, doc) -> None:
 
 
 def _sqdist(x, centers):
-    """Exact int64 squared distances of grid rows ``x`` (n×d) to grid
-    ``centers`` (k×d) as an n×k matrix — the one numpy nearest-center
-    kernel (:func:`inrow_assign` and :func:`_fit_local`)."""
-    return ((x[:, None, :] - centers[None, :, :]) ** 2).sum(axis=2)
+    """Squared distances of rows ``x`` (n×d) to ``centers`` (k×d) as an
+    n×k matrix — the one numpy nearest-center kernel
+    (:func:`inrow_assign`, :func:`_fit_local` and, once per subspace,
+    :func:`pq_encode`).
+
+    Invariant: the sum folds LEFT TO RIGHT over the d dims, one
+    ``acc + (x_j - c_j)²`` at a time — the order of the SQL
+    ``aggregate(zip_with(...), 0D, ...)`` fold, so float64 distances
+    (and hence argmins) are bit-identical to it. A pairwise
+    ``.sum(axis=...)`` is not: it changes the last bit on most float
+    rows. On int64 grid vectors every order is exact."""
+    acc = (x[:, :1] - centers[:, 0]) ** 2
+    for j in range(1, x.shape[1]):
+        acc += (x[:, j, None] - centers[None, :, j]) ** 2
+    return acc
+
+
+def pq_encode(
+    frame: DataFrame,
+    codebooks: list[list[list[float]]],
+    vec_col: str,
+    centers: list[list[float]] | None = None,
+) -> DataFrame:
+    """Product-quantization encode, in-row: append ``code0..code{m-1}``
+    (int, the nearest codeword per contiguous subspace of ``vec_col``)
+    and ``chat_norm`` (double, the norm of the reconstruction).
+
+    One narrow ArrowEvalPython projection; the m codebooks (and the
+    coarse ``centers``) are numpy constants in the UDF closure, so the
+    plan carries no literal and the corpus streams through untouched.
+    Every code is :func:`_sqdist` per subspace + ``argmin`` — ties go
+    to the smaller code (numpy takes the FIRST minimum).
+
+    - ``centers=None`` (raw): encodes ``x``; ``chat_norm`` is the sqrt
+      of the left fold over s of each chosen codeword's ‖·‖².
+    - ``centers`` given (residual, FAISS IndexIVFPQ): reads the
+      ``cell`` column, encodes ``x − centers[cell]`` and stores
+      ‖centers[cell] + decode(codes)‖ folded left over the d dims.
+
+    All folds run left to right, so codes and ``chat_norm`` equal the
+    SQL-fold evaluation of the same arithmetic bit for bit."""
+    import numpy as np
+
+    books = [np.array(b, dtype=np.float64) for b in codebooks]
+    m, sub = len(books), books[0].shape[1]
+    cent = None if centers is None else np.array(centers, dtype=np.float64)
+    names = [f"code{s}" for s in range(m)]
+    schema = ", ".join(f"{n} int" for n in names) + ", chat_norm double"
+
+    def sqnorm(a):  # ‖a_i‖² = squared distance to the origin, same fold
+        return _sqdist(a, np.zeros((1, a.shape[1])))[:, 0]
+
+    book_sq = [sqnorm(b) for b in books]
+
+    @F.pandas_udf(schema)
+    def _pq_encode(v: pd.Series, cell: pd.Series) -> pd.DataFrame:
+        if not len(v):
+            return pd.DataFrame(
+                {
+                    **{n: pd.Series(dtype="int32") for n in names},
+                    "chat_norm": pd.Series(dtype="float64"),
+                }
+            )
+        x = np.array(v.tolist(), dtype=np.float64)
+        if cent is not None:
+            base = cent[cell.to_numpy()]
+            x = x - base
+        codes = [
+            _sqdist(x[:, s * sub : (s + 1) * sub], books[s]).argmin(axis=1)
+            for s in range(m)
+        ]
+        if cent is None:
+            n2 = book_sq[0][codes[0]]
+            for s in range(1, m):
+                n2 = n2 + book_sq[s][codes[s]]
+        else:
+            decoded = np.concatenate([books[s][codes[s]] for s in range(m)], axis=1)
+            n2 = sqnorm(base + decoded)
+        out = {n: c.astype(np.int32) for n, c in zip(names, codes)}
+        out["chat_norm"] = np.sqrt(n2)
+        return pd.DataFrame(out)
+
+    # raw mode reads no cell: a constant stands in for the column
+    cell = F.col("cell") if cent is not None else F.lit(0)
+    out = frame.withColumn("_pq", _pq_encode(vec_col, cell))
+    return out.select(
+        *frame.columns, *[F.col(f"_pq.{n}").alias(n) for n in [*names, "chat_norm"]]
+    )
 
 
 def inrow_assign(

@@ -208,7 +208,6 @@ def ivf_topk(
     vec_col: str = "embedding",
     seed: int = 42,
     model=None,
-    fit_sample_rows: int | None = None,
 ):
     """IVF (inverted-file) ANN: k-means coarse quantizer → candidates
     are searched only in the query's ``n_probe`` nearest cells.
@@ -246,7 +245,7 @@ def ivf_topk(
             n_iters=4,
             id_col=id_col,
             vec_col=vec_col,
-            sample_rows=fit_sample_rows or 256 * n_centroids,
+            sample_rows=256 * n_centroids,
             seed=seed,
         )
     index = ivf_index(candidates, model, id_col=id_col, vec_col=vec_col)
@@ -608,53 +607,6 @@ def _pq_codebooks(models) -> list[list[list[float]]]:
     return [[list(map(float, c)) for c in mod.clusterCenters()] for mod in models]
 
 
-def _with_pq_codes(cand_sub: DataFrame, codebooks) -> DataFrame:
-    """Append ``code0..m-1`` + ``chat_norm`` to a frame carrying the
-    ``s0..s{m-1}`` subspace slices: nearest codebook centroid per
-    subspace via the argmin-over-constant-array expression, plus the
-    reconstruction norm looked up from constants. Narrow per-row work
-    against persisted codebooks — the PQ ``add`` step, which makes it
-    the INCREMENTAL encode path too (a new batch encodes without
-    refitting or rescanning the existing corpus)."""
-    m = len(codebooks)
-    # ALL m code columns land in ONE projection (r16 planning hygiene,
-    # guide §7.3 "very large plans ... spend minutes in planning"):
-    # the old per-subspace withColumn loop re-analyzed a growing plan m
-    # times (~0.87 s of pure driver time per encode construction at
-    # m=16); withColumns adds every column in a single analysis pass.
-    # The argmin is likewise ONE parsed SQL string per subspace — the
-    # same expression the Column-API array_sort built (comparator
-    # CASE = the when/when/otherwise chain), minus the py4j tree.
-    code_cols = {}
-    for s in range(m):
-        cells = (
-            "array("
-            + ",".join(
-                "named_struct('j', {j}, 'd2', aggregate(zip_with(s{s}, {arr}, "
-                "(a, b) -> (a - b) * (a - b)), 0D, (acc, x) -> acc + x))".format(
-                    s=s, j=j, arr="array(" + ",".join(_lit_d(x) for x in c) + ")"
-                )
-                for j, c in enumerate(codebooks[s])
-            )
-            + ")"
-        )
-        code_cols[f"code{s}"] = F.expr(
-            f"array_sort({cells}, (a, b) -> case when a.d2 < b.d2 then -1 "
-            "when a.d2 > b.d2 then 1 else 0 end)[0].j"
-        )
-    enc = cand_sub.withColumns(code_cols)
-    # reconstruction norm via ONE parsed expression (constants inlined
-    # as SQL text — the Column-API form costs hundreds of py4j round
-    # trips per plan construction; same lesson as ivf_topk's cell rank)
-    norm_expr = " + ".join(
-        "element_at(array({arr}), code{s} + 1)".format(
-            s=s, arr=",".join(_lit_d(sum(x * x for x in c)) for c in codebooks[s])
-        )
-        for s in range(m)
-    )
-    return enc.withColumn("chat_norm", F.expr(f"sqrt({norm_expr})"))
-
-
 def _with_pq_luts(q: DataFrame, codebooks, sub: int) -> DataFrame:
     """Append per-QUERY ADC lookup tables: dot(q_s, centroid_{s,j})
     for every j — evaluated once per query row, never per pair. One
@@ -671,8 +623,9 @@ def _with_pq_luts(q: DataFrame, codebooks, sub: int) -> DataFrame:
             for c in book
         )
         lut_cols[f"lut{s}"] = F.expr(f"array({entries})")
-    # one projection / one analysis pass for all m LUT columns (r16
-    # planning hygiene — see _with_pq_codes)
+    # all m LUT columns land in ONE projection (r16 planning hygiene,
+    # guide §7.3): a per-subspace withColumn loop re-analyzes a growing
+    # literal-heavy plan m times
     return q.withColumns(lut_cols)
 
 
@@ -682,34 +635,29 @@ def _adc_dot_expr(m: int):
     return F.expr(" + ".join(f"element_at(lut{s}, code{s} + 1)" for s in range(m)))
 
 
-def _centers_2d_sql(centers: list[list[float]]) -> str:
-    """SQL literal for a k×d float matrix (one parsed string — the
-    lsh_bucket_sql / _probe_cells discipline: k×d constants through
-    the Column API cost ~1k py4j round trips per plan)."""
+def _coarse_centers_sql(model) -> str:
+    """The coarse quantizer's k×d centers as one SQL literal (one
+    parsed string — the lsh_bucket_sql / _probe_cells discipline: k×d
+    constants through the Column API cost ~1k py4j round trips per
+    plan)."""
     return (
         "array("
         + ",".join(
-            "array(" + ",".join(_lit_d(x) for x in c) + ")" for c in centers
+            "array(" + ",".join(_lit_d(x) for x in c) + ")"
+            for c in model.clusterCenters()
         )
         + ")"
     )
 
 
-def _coarse_centers_sql(model) -> str:
-    """The coarse quantizer's k×d centers as one SQL literal."""
-    return _centers_2d_sql(model.clusterCenters())
-
-
-def _rhat_sql(codebooks) -> str:
-    """SQL text reconstructing the PQ-decoded vector from the row's
-    ``code0..m-1``: per subspace, select the codeword from the constant
-    codebook, then flatten back to full dimension — m element_at calls
-    over constants, no join."""
-    parts = [
-        f"element_at({_centers_2d_sql(book)}, code{s} + 1)"
-        for s, book in enumerate(codebooks)
-    ]
-    return "flatten(array(" + ",".join(parts) + "))"
+def _subspace_dim(dim: int, m: int) -> int:
+    """Dims per PQ subspace. A raise, not an assert: under ``python -O``
+    a dim not divisible by m would silently drop the trailing dims from
+    every code."""
+    sub = dim // m
+    if sub * m != dim:
+        raise ValueError(f"dim {dim} not divisible by m={m}")
+    return sub
 
 
 def pq_topk(
@@ -722,7 +670,6 @@ def pq_topk(
     vec_col: str = "embedding",
     seed: int = 42,
     models: list | None = None,
-    fit_sample_rows: int | None = None,
 ):
     """Product-quantization ANN (asymmetric distance computation):
     the embedding-COMPRESSION scale path — candidates are stored as
@@ -740,8 +687,9 @@ def pq_topk(
        corpus+config); pass ``models`` back in to skip refits;
     2. ENCODE (once per corpus build): each candidate → its nearest
        centroid id per subspace, plus the reconstruction norm
-       ‖ĉ‖² = Σ_s ‖centroid_{s,code_s}‖² looked up from constants —
-       a narrow pass; only (id, m codes, norm) ever shuffles;
+       ‖ĉ‖² = Σ_s ‖centroid_{s,code_s}‖² — one Arrow projection
+       (``kmeans.pq_encode``) against the codebooks held as constants;
+       a narrow pass, and only (id, m codes, norm) ever shuffles;
     3. QUERY (per query row, not per pair): a lookup table per
        subspace — dot(q_s, centroid_{s,j}) for all j — so the pair
        join evaluates approx_dot = Σ_s LUT_s[code_s]: m element_at
@@ -752,14 +700,15 @@ def pq_topk(
     the probed cells) — here it runs flat so the recall gate measures
     PQ alone. Returns (results_df, models).
     """
-    from .kmeans import fit_deterministic_kmeans
+    from .kmeans import pq_encode
+    from .skew import spread_for_compute
 
     if models is not None:
         # prefit models carry the dimension (m subspaces of `sub` dims
         # each) — no eager probe job against the candidate frame
         # (ADVICE r6: first() cost a driver job per call AND raised
         # TypeError on an empty frame).
-        dim_probe = len(models[0].clusterCenters()[0]) * m
+        sub = len(models[0].clusterCenters()[0])
     else:
         probe = candidates.select(_as_double(F.col(vec_col)).alias("v")).first()
         if probe is None:
@@ -767,41 +716,16 @@ def pq_topk(
                 "pq_topk: candidate frame is empty — cannot fit PQ "
                 "codebooks; pass prefit `models` or a non-empty corpus"
             )
-        dim_probe = len(probe["v"])
-    sub = dim_probe // m
-    assert sub * m == dim_probe, f"dim {dim_probe} not divisible by m={m}"
-
-    from .skew import spread_for_compute
+        sub = _subspace_dim(len(probe["v"]), m)
 
     cand = spread_for_compute(candidates).select(
         F.col(id_col).alias("candidate_id"), _as_double(F.col(vec_col)).alias("cv")
     )
-    subcols = [F.slice(F.col("cv"), s * sub + 1, sub).alias(f"s{s}") for s in range(m)]
-    cand_sub = cand.select("candidate_id", "cv", *subcols)
-
     if models is None:
-        target = fit_sample_rows or 256 * n_codes
-        n_cand = cand.count()
-        base = cand_sub
-        if n_cand > target:
-            base = cand_sub.sample(fraction=min(1.0, 1.2 * target / n_cand), seed=seed)
-        base = base.localCheckpoint(eager=True)  # one sample, m fits
-        # r11: deterministic Lloyd per subspace (the IVF trainer swap
-        # applied to the codebooks) — base is already the bounded
-        # sample, so each fit runs sample-free on it
-        models = [
-            fit_deterministic_kmeans(
-                base.select("candidate_id", f"s{s}"),
-                k=n_codes,
-                n_iters=4,
-                id_col="candidate_id",
-                vec_col=f"s{s}",
-            )
-            for s in range(m)
-        ]
+        models = fit_pq_codebooks(cand, None, m, n_codes, sub, seed)
 
     codebooks = _pq_codebooks(models)
-    encoded = _with_pq_codes(cand_sub, codebooks).select(
+    encoded = pq_encode(cand, codebooks, "cv").select(
         "candidate_id", *[f"code{s}" for s in range(m)], "chat_norm"
     )
 
@@ -992,7 +916,10 @@ def ivfpq_index(
     codes are per-row functions of PERSISTED constants (the coarse
     centers JSON + the m codebooks), so one narrow pass indexes a new
     batch with no refit and no rescan — the FAISS IndexIVFPQ ``add``
-    contract, same as :func:`ivf_index`.
+    contract, same as :func:`ivf_index`. The encode is one Arrow
+    projection (``kmeans.pq_encode``) against those persisted
+    constants, after the in-row cell assignment: no literal in the
+    plan, no join, no shuffle.
 
     ``residual=True`` is the true FAISS IndexIVFPQ encoding: PQ codes
     quantize the RESIDUAL (x − centroid[cell]) instead of x itself.
@@ -1002,55 +929,24 @@ def ivfpq_index(
     detail — measurably tighter ADC estimates at identical footprint.
     The reconstruction is chat = centroid[cell] + decode(codes), and
     ``chat_norm`` stores ‖chat‖ so search normalizes the same way;
-    everything stays a per-row fold over persisted constants (the
+    everything stays a per-row function of persisted constants (the
     ``add`` contract is unchanged)."""
+    from .kmeans import pq_encode
     from .skew import spread_for_compute
 
     codebooks = _pq_codebooks(models)
-    m = len(codebooks)
-    sub = len(codebooks[0][0])
     cand = spread_for_compute(candidates).select(
         F.col(id_col).alias("candidate_id"), _as_double(F.col(vec_col)).alias("cv")
     )
-    if residual:
-        centers = _coarse_centers_sql(coarse)
-        with_cell = coarse.with_cell(cand, vec_col="cv")
-        rv = with_cell.withColumn(
-            "rv",
-            F.expr(
-                f"zip_with(cv, element_at({centers}, cell + 1), (a, b) -> a - b)"
-            ),
-        )
-        subcols = [
-            F.slice(F.col("rv"), s * sub + 1, sub).alias(f"s{s}") for s in range(m)
-        ]
-        enc = _with_pq_codes(
-            rv.select("candidate_id", "cell", *subcols), codebooks
-        )
-        # overwrite _with_pq_codes' norm (that is ‖rhat‖): the served
-        # reconstruction is centroid + rhat, so store ‖chat‖
-        enc = (
-            enc.withColumn(
-                "_chat",
-                F.expr(
-                    f"zip_with(element_at({centers}, cell + 1), "
-                    f"{_rhat_sql(codebooks)}, (a, b) -> a + b)"
-                ),
-            )
-            .withColumn("chat_norm", _norm(F.col("_chat")))
-            .drop("_chat")
-        )
-        return enc.select(
-            "candidate_id", "cell", *[f"code{s}" for s in range(m)], "chat_norm"
-        )
-    subcols = [
-        F.slice(F.col("cv"), s * sub + 1, sub).alias(f"s{s}") for s in range(m)
-    ]
-    cand_sub = coarse.with_cell(
-        cand.select("candidate_id", "cv", *subcols), vec_col="cv"
+    enc = pq_encode(
+        coarse.with_cell(cand, vec_col="cv"),
+        codebooks,
+        "cv",
+        centers=coarse.clusterCenters() if residual else None,
     )
-    return _with_pq_codes(cand_sub, codebooks).select(
-        "candidate_id", "cell", *[f"code{s}" for s in range(m)], "chat_norm"
+    return enc.select(
+        "candidate_id", "cell", *[f"code{s}" for s in range(len(codebooks))],
+        "chat_norm",
     )
 
 
@@ -1154,7 +1050,6 @@ def fit_ivfpq_quantizers(
     vec_col: str = "embedding",
     coarse=None,
     models: list | None = None,
-    fit_sample_rows: int | None = None,
 ):
     """Fit whichever IVF×PQ quantizers are missing — THE single home
     for the fit hyperparameters (n_iters=4, 256·k coarse sample,
@@ -1169,9 +1064,7 @@ def fit_ivfpq_quantizers(
     elif coarse is not None:
         # the coarse centers already carry the dimensionality — skip
         # the one-row probe job (r16: construction-job collapse)
-        dim = len(coarse.clusterCenters()[0])
-        sub = dim // m
-        assert sub * m == dim, f"dim {dim} not divisible by m={m}"
+        sub = _subspace_dim(len(coarse.clusterCenters()[0]), m)
     else:
         probe = candidates.select(_as_double(F.col(vec_col)).alias("v")).first()
         if probe is None:
@@ -1179,9 +1072,7 @@ def fit_ivfpq_quantizers(
                 "fit_ivfpq_quantizers: candidate frame is empty — pass "
                 "prefit models or a non-empty corpus"
             )
-        dim = len(probe["v"])
-        sub = dim // m
-        assert sub * m == dim, f"dim {dim} not divisible by m={m}"
+        sub = _subspace_dim(len(probe["v"]), m)
     if coarse is None:
         coarse = fit_deterministic_kmeans(
             candidates,
@@ -1189,7 +1080,7 @@ def fit_ivfpq_quantizers(
             n_iters=4,
             id_col=id_col,
             vec_col=vec_col,
-            sample_rows=fit_sample_rows or 256 * n_centroids,
+            sample_rows=256 * n_centroids,
             seed=seed,
         )
     if models is None:
@@ -1217,7 +1108,6 @@ def ivfpq_topk(
     seed: int = 42,
     coarse=None,
     models: list | None = None,
-    fit_sample_rows: int | None = None,
     residual: bool = False,
 ):
     """The composed IVF×PQ path the flat-PQ docstring promised
@@ -1243,7 +1133,6 @@ def ivfpq_topk(
         vec_col=vec_col,
         coarse=coarse,
         models=models,
-        fit_sample_rows=fit_sample_rows,
     )
     index = ivfpq_index(
         candidates, coarse, models, id_col=id_col, vec_col=vec_col, residual=residual

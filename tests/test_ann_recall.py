@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from soccer_data_pipeline_spark.plans import QUERIES
@@ -291,3 +292,47 @@ def test_ivfpq_residual_roundtrip_and_gates(spark):
     )
     key = lambda rs: {(r.query_id, r.rn): r.candidate_id for r in rs}  # noqa: E731
     assert key(incr.collect()) == key(full.collect())
+
+
+def test_ivfpq_encode_plan_holds_no_codebook_literals(spark):
+    """The PQ encode is ONE Arrow projection against codebooks held as
+    constants in its closure: the analyzed plan of ivfpq_index carries
+    no array_sort argmin and no literal codebook or centroid value, and
+    the optimized plan evaluates the encode UDF in exactly one
+    ArrowEvalPython — raw and residual alike."""
+    from soccer_data_pipeline_spark.operators.similarity import (
+        fit_ivfpq_quantizers,
+        ivfpq_index,
+    )
+
+    c = load_table(spark, SF_DIR, "embeddings")
+    coarse, models = fit_ivfpq_quantizers(
+        c, n_centroids=8, m=16, n_codes=8, residual=True
+    )
+    values = {x for mod in [coarse, *models] for cw in mod.clusterCenters() for x in cw}
+    literals = [repr(x) for x in values if x != int(x)]
+    assert literals
+    for residual in (True, False):
+        qe = ivfpq_index(c, coarse, models, residual=residual)._jdf.queryExecution()
+        analyzed = qe.analyzed().toString()
+        assert "array_sort" not in analyzed, residual
+        assert not [x for x in literals if x in analyzed], residual
+        evals = [
+            line
+            for line in qe.optimizedPlan().toString().splitlines()
+            if "ArrowEvalPython" in line
+        ]
+        assert sum(line.count("_pq_encode(") for line in evals) == 1, evals
+
+
+def test_ivfpq_rejects_dim_not_divisible_by_m(spark):
+    """A dimension not divisible by m raises ValueError, not an assert
+    (which ``python -O`` strips, silently dropping the trailing dims
+    from every code)."""
+    from soccer_data_pipeline_spark.operators.similarity import (
+        fit_ivfpq_quantizers,
+    )
+
+    c = load_table(spark, SF_DIR, "embeddings")
+    with pytest.raises(ValueError, match="not divisible by m=7"):
+        fit_ivfpq_quantizers(c, m=7)

@@ -5,8 +5,9 @@ under the IVF coarse quantizer and the code path hash-checked by the
 Covers: the two assignment forms agree (in-row Arrow kernel vs
 broadcast-frame struct-min), the trainer reproduces the registered
 differential's final assignment under the differential's seeding,
-byte-stable refits, JSON persistence round-trip, and the IVF path's
-behavior under the swapped trainer.
+byte-stable refits, JSON persistence round-trip, the IVF path's
+behavior under the swapped trainer, and the Arrow PQ encode kernel
+against a pure-Python left-fold reference.
 """
 
 from __future__ import annotations
@@ -222,3 +223,86 @@ def test_semdedup_invariants(spark):
         assert len(members) >= 2, (cid, "singleton cluster")
         assert all(m.cluster_size == len(members) for m in members), cid
         assert cid == min(m.vec_id for m in members), (cid, "not min-label")
+
+
+def _pq_reference(x, books, centers=None, cell=None):
+    """Pure-Python PQ encode of one row: explicit left folds (the SQL
+    ``aggregate`` order) and first-minimum ties — the independent
+    reference for :func:`pq_encode`."""
+    import math
+
+    sub = len(books[0][0])
+    r = x if centers is None else [a - b for a, b in zip(x, centers[cell])]
+    codes = []
+    for s, book in enumerate(books):
+        best, best_d = None, None
+        for j, cw in enumerate(book):
+            d = 0.0
+            for i in range(sub):
+                d = d + (r[s * sub + i] - cw[i]) * (r[s * sub + i] - cw[i])
+            if best_d is None or d < best_d:
+                best, best_d = j, d
+        codes.append(best)
+    n2 = 0.0
+    if centers is None:
+        for s, j in enumerate(codes):
+            w = 0.0
+            for v in books[s][j]:
+                w = w + v * v
+            n2 = n2 + w
+    else:
+        for s, j in enumerate(codes):
+            for i in range(sub):
+                v = centers[cell][s * sub + i] + books[s][j][i]
+                n2 = n2 + v * v
+    return codes, math.sqrt(n2)
+
+
+def test_pq_encode_matches_pure_python_reference(spark):
+    """pq_encode (the one Arrow PQ kernel under ivfpq_index and pq_topk)
+    equals a per-row pure-Python left-fold reference BIT FOR BIT (==,
+    not a tolerance) in raw and residual mode — codes, chat_norm and
+    ties to the smaller code (a duplicated codeword) — and keeps its
+    schema on an empty frame and a 1-row frame."""
+    import random
+
+    from soccer_data_pipeline_spark.operators.kmeans import pq_encode
+
+    rng = random.Random(7)
+    m, sub, n_codes, k = 2, 8, 5, 3
+    books = [
+        [[round(rng.uniform(-1, 1), 4) for _ in range(sub)] for _ in range(n_codes)]
+        for _ in range(m)
+    ]
+    books[0][3] = list(books[0][1])  # duplicate codeword → ties to code 1
+    centers = [
+        [round(rng.uniform(-1, 1), 4) for _ in range(m * sub)] for _ in range(k)
+    ]
+    rows = [
+        (i, [rng.uniform(-1, 1) for _ in range(m * sub)], i % k) for i in range(200)
+    ]
+    frame = spark.createDataFrame(rows, "vec_id long, v array<double>, cell int")
+    code_cols = [f"code{s}" for s in range(m)]
+    vecs = {i: (v, c) for i, v, c in rows}
+
+    for cent in (None, centers):
+        out = pq_encode(frame, books, "v", centers=cent)
+        assert out.columns == ["vec_id", "v", "cell", *code_cols, "chat_norm"]
+        got = out.collect()
+        assert len(got) == len(rows)
+        for r in got:
+            v, cell = vecs[r.vec_id]
+            codes, norm = _pq_reference(v, books, cent, cell)
+            assert [r[c] for c in code_cols] == codes, (r.vec_id, cent is None)
+            assert r.chat_norm == norm, (r.vec_id, r.chat_norm, norm)
+        # the tie was exercised and went to the smaller code
+        code0 = {r.code0 for r in got}
+        assert 1 in code0 and 3 not in code0
+
+        one = pq_encode(frame.where("vec_id = 7"), books, "v", centers=cent)
+        v, cell = vecs[7]
+        assert [
+            ([r[c] for c in code_cols], r.chat_norm) for r in one.collect()
+        ] == [_pq_reference(v, books, cent, cell)]
+        empty = pq_encode(frame.where("vec_id < 0"), books, "v", centers=cent)
+        assert empty.schema == out.schema and empty.collect() == []
