@@ -33,11 +33,13 @@ argument ``streaming/incremental.py`` documents for its MERGE path).
 At 100 TB: the index is (corpus/8-byte-codes)-sized parquet
 PARTITIONED BY CELL on disk (r12 — every write path partitionBy's);
 serving prunes STATICALLY (r13, ADVICE r12): ``ann_index_search``
-resolves the query batch's probed cells driver-side (a bounded list of
-ints — ``probe_cell_ids``) and filters the RAW read before the
-loader's dedup, so the cell predicate lands in the scan's
-PartitionFilters and the ADC stage reads only the probed cells'
-directories (with n_probe=12 of k cells, 12/k of the index files).
+collects the bounded query batch once, ranks its probed cells on the
+driver with no Spark job (``probe_cell_ids`` — a bounded list of ints)
+and filters the RAW read before the loader's dedup, so the cell
+predicate lands in the scan's PartitionFilters and the ADC stage reads
+only the probed cells' directories (with n_probe=12 of k cells, 12/k
+of the index files). Every read of ``index/`` carries the schema its
+``config.json`` implies, so none runs a schema-inference job.
 The quantizers stay kilobytes; batch adds are one narrow pass over
 the batch alone. Concurrency contract: ONE writer — ``config.json``
 carries an index EPOCH that every quantizer-changing rewrite bumps
@@ -75,9 +77,11 @@ from .operators.kmeans import (
 )
 from .operators.similarity import (
     brute_force_topk,
+    collect_queries,
     fit_ivfpq_quantizers,
     ivfpq_index,
     ivfpq_search,
+    probe_cell_ids,
 )
 
 
@@ -128,6 +132,22 @@ def load_ann_quantizers(out_dir: str):
     with open(_config_path(out_dir)) as fh:
         config = json.load(fh)
     return coarse, models, config
+
+
+def _index_schema(out_dir: str) -> str:
+    """The schema of ``index/`` rows, m taken from the index's own
+    ``config.json``: a read given it runs no schema-inference job."""
+    with open(_config_path(out_dir)) as fh:
+        m = int(json.load(fh)["m"])
+    codes = ", ".join(f"code{s} int" for s in range(m))
+    return f"candidate_id bigint, {codes}, chat_norm double, cell int"
+
+
+def _read_index(spark: SparkSession, out_dir: str) -> DataFrame:
+    """Every stored row of ``index/`` (no dedup, no tombstone filter)."""
+    return spark.read.schema(_index_schema(out_dir)).parquet(
+        os.path.join(out_dir, "index")
+    )
 
 
 def _move_in(src: str, dest: str, old: list[str]) -> int:
@@ -190,6 +210,9 @@ def _tombstones_dir(out_dir: str) -> str:
     return os.path.join(out_dir, "tombstones")
 
 
+_TOMBSTONE_SCHEMA = "candidate_id bigint"
+
+
 def load_tombstones(spark: SparkSession, out_dir: str) -> DataFrame | None:
     """The deduped tombstoned candidate ids, or None when no deletes
     are pending. Kilobytes-per-million-ids parquet — the serving path
@@ -198,8 +221,8 @@ def load_tombstones(spark: SparkSession, out_dir: str) -> DataFrame | None:
     if not glob.glob(os.path.join(d, "*.parquet")):
         return None
     return (
-        spark.read.parquet(d)
-        .select("candidate_id")
+        spark.read.schema(_TOMBSTONE_SCHEMA)
+        .parquet(d)
         .dropDuplicates(["candidate_id"])
     )
 
@@ -285,11 +308,11 @@ def purge_deleted(
     old_t = sorted(glob.glob(os.path.join(d, "*.parquet")))
     if not old_t:
         return {}
-    tomb = spark.read.parquet(*old_t).select("candidate_id").dropDuplicates()
+    tomb = spark.read.schema(_TOMBSTONE_SCHEMA).parquet(*old_t).dropDuplicates()
     index_dir = os.path.join(out_dir, "index")
     result = {
         int(r["cell"]): int(r["count"])
-        for r in spark.read.parquet(index_dir)
+        for r in _read_index(spark, out_dir)
         .join(F.broadcast(tomb), "candidate_id", "left_semi")
         .groupBy("cell")
         .count()
@@ -300,7 +323,7 @@ def purge_deleted(
     # raw read (NOT the deduped loader), listed after the pin: the
     # stored multiset of SURVIVING rows is preserved byte-for-byte
     kept = (
-        spark.read.parquet(index_dir)
+        _read_index(spark, out_dir)
         .where(F.col("cell").isin(sorted(result)))
         .join(F.broadcast(tomb), "candidate_id", "left_anti")
     )
@@ -343,7 +366,7 @@ def load_ann_index(
     directories. Exact under the append contract: every copy of an id
     shares a cell (byte-identical replays), so filtering copies before
     the dedup keeps the same one row per surviving id."""
-    df = spark.read.parquet(os.path.join(out_dir, "index"))
+    df = _read_index(spark, out_dir)
     if cells is not None:
         df = df.where(F.col("cell").isin([int(c) for c in cells]))
     # deletion contract (r14): tombstoned ids vanish from every read —
@@ -514,21 +537,21 @@ def ann_index_search(
     stores codes, not vectors — the re-rank reads shortlist·|Q| raw
     vectors from the corpus, exactly like ``ivfpq_search``).
 
-    The index read is statically pruned to the query batch's probed
-    cells (r13): ``probe_cell_ids`` resolves them driver-side (one
-    bounded job over the query batch — a few ints, never data), and
-    the loader applies the literal IN filter below its dedup, so the
-    scan's PartitionFilters carry the cell predicate and only
+    ``queries`` is a BOUNDED batch: it is collected to the driver once
+    (one job moving |Q|·d doubles), so keep |Q| in the thousands at
+    most. From that batch the probed cells are ranked on the driver
+    with no Spark job (``probe_cell_ids`` — a few ints), and
+    ``ivfpq_search`` builds its query side from the same batch with no
+    second collect. The index read is statically pruned to those cells
+    (r13): the loader applies the literal IN filter below its dedup, so
+    the scan's PartitionFilters carry the cell predicate and only
     len(cells)/k of the index files are read."""
-    from .operators.similarity import probe_cell_ids
-
     spark = queries.sparkSession
     coarse, models, config = load_ann_quantizers(out_dir)
-    cells = probe_cell_ids(
-        queries, coarse, n_probe, id_col=id_col, vec_col=vec_col
-    )
+    batch = collect_queries(queries, id_col, vec_col)
+    cells = probe_cell_ids(batch, coarse, n_probe)
     return ivfpq_search(
-        queries,
+        batch,
         load_ann_index(spark, out_dir, cells=cells),
         corpus,
         coarse,
@@ -567,7 +590,7 @@ def _live_members(
       ids and refuse before any destructive step. Bounded work: the
       anti-join's left side is the named cells' ids."""
     member_ids = (
-        spark.read.parquet(os.path.join(out_dir, "index"))
+        _read_index(spark, out_dir)
         .where(F.col("cell").isin(*cells))
         .select("candidate_id")
         .dropDuplicates(["candidate_id"])
@@ -988,6 +1011,7 @@ def compact_index_cells(
     return compact_cell_partitions(
         spark, os.path.join(out_dir, "index"),
         os.path.join(out_dir, "_compact_tmp"), cells, min_files,
+        schema=_index_schema(out_dir),
     )
 
 
@@ -997,14 +1021,16 @@ def compact_cell_partitions(
     tmp_dir: str,
     cells: list[int] | None = None,
     min_files: int = 2,
+    schema: str | None = None,
 ) -> dict[int, tuple[int, int]]:
     """The shared small-file compaction over any ``cell=``-partitioned
     parquet store (the ANN index and the semdedup pipeline's base
     store share the layout AND the at-least-once-write +
     deterministic-dedup-read contract, so they share the compactor).
-    One raw read of the targeted cells, one ``_swap_cells`` write — the
-    stored multiset is preserved byte-for-byte, including rows a
-    loader's dedup would collapse."""
+    One raw read of the targeted cells (given ``schema``, with no
+    inference job), one ``_swap_cells`` write — the stored multiset is
+    preserved byte-for-byte, including rows a loader's dedup would
+    collapse."""
     if cells is None:
         cells = sorted(
             int(d.split("=", 1)[1])
@@ -1015,7 +1041,8 @@ def compact_cell_partitions(
     old_by_cell = {c: f for c, f in files.items() if len(f) > min_files}
     if not old_by_cell:
         return {}
-    rows = spark.read.parquet(data_dir).where(
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    rows = reader.parquet(data_dir).where(
         F.col("cell").isin(sorted(old_by_cell))
     )
     moved = _swap_cells(rows, tmp_dir, data_dir, old_by_cell)

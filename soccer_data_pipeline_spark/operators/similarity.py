@@ -16,13 +16,23 @@ Two tiers:
   seeded-deterministic, so results are reproducible run-to-run.
 
 Dot products use ``zip_with`` + ``aggregate`` — JVM codegen, no Python.
+The IVF and PQ searches collect their bounded query batch once
+(:class:`QueryBatch`) and compute the query side (norms, probed cells,
+ADC lookup tables, residual terms) on the driver with numpy folds in
+the same left-to-right order, bit for bit; Spark sees that state as
+one small local relation, never as plan literals.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from dataclasses import dataclass
+
+import numpy as np
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType, LongType
 
 
 def _as_double(col):
@@ -45,8 +55,48 @@ def _norm(col):
     return F.sqrt(_dot(col, col))
 
 
+def _vectors(
+    df: DataFrame, id_col: str, vec_col: str, side: str = "c", norm: bool = True
+) -> DataFrame:
+    """(candidate_id, cv[, cn]), or for ``side="q"`` (query_id, qv[, qn]):
+    ``vec_col`` as doubles and its norm."""
+    key, v = ("query_id" if side == "q" else "candidate_id"), f"{side}v"
+    out = df.select(F.col(id_col).alias(key), _as_double(F.col(vec_col)).alias(v))
+    return out.withColumn(f"{side}n", _norm(F.col(v))) if norm else out
+
+
 def _pair_cosine(qv, cv, qn, cn):
     return F.round(_dot(qv, cv) / (qn * cn), 6)
+
+
+def _top_k(sims: DataFrame, k: int, score: str = "cosine") -> DataFrame:
+    """The ``k`` best rows per query by ``score``, ties to the smaller
+    candidate id, ranked in a long ``rn``."""
+    w = Window.partitionBy("query_id").orderBy(F.desc(score), F.asc("candidate_id"))
+    return sims.withColumn("rn", F.row_number().over(w).cast("long")).where(
+        F.col("rn") <= k
+    )
+
+
+def _exact_rerank(
+    short: DataFrame, corpus: DataFrame, q: DataFrame, k: int, id_col: str, vec_col: str
+) -> DataFrame:
+    """Exact-cosine top-k of a (query_id, candidate_id) shortlist: only
+    the shortlisted rows join back to their full vectors in ``corpus``;
+    ``q`` is the (query_id, qv, qn) query side, broadcast."""
+    rer = (
+        short.select("query_id", "candidate_id")
+        .join(_vectors(corpus, id_col, vec_col), "candidate_id")
+        .join(F.broadcast(q), "query_id")
+        .select(
+            "query_id",
+            "candidate_id",
+            _pair_cosine(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")).alias(
+                "cosine"
+            ),
+        )
+    )
+    return _top_k(rer, k)
 
 
 def brute_force_topk(
@@ -59,15 +109,11 @@ def brute_force_topk(
     """Exact cosine top-k per query vector (the recall=1.0 baseline)."""
     from .skew import spread_for_compute
 
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
-    ).withColumn("qn", _norm(F.col("qv")))
+    q = _vectors(queries, id_col, vec_col, "q")
     # the |C|·|Q| interpreted-HOF cosine work runs in the candidate
     # scan's stage — spread it (guide §2.5; single-row-group scans
     # otherwise serialize it on 1 task)
-    c = spread_for_compute(candidates).select(
-        F.col(id_col).alias("candidate_id"), _as_double(F.col(vec_col)).alias("cv")
-    ).withColumn("cn", _norm(F.col("cv")))
+    c = _vectors(spread_for_compute(candidates), id_col, vec_col)
     sims = c.join(F.broadcast(q), how="cross").select(
         "query_id",
         "candidate_id",
@@ -154,21 +200,11 @@ def ann_lsh_cosine(
     """
     radius = 1 if multiprobe is True else int(multiprobe)
     planes = _hyperplanes(dim, n_planes)
-    q = (
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            _as_double(F.col(vec_col)).alias("qv"),
-        )
-        .withColumn("qn", _norm(F.col("qv")))
-        .withColumn("bucket", lsh_bucket("qv", planes))
+    q = _vectors(queries, id_col, vec_col, "q").withColumn(
+        "bucket", lsh_bucket("qv", planes)
     )
-    c = (
-        candidates.select(
-            F.col(id_col).alias("candidate_id"),
-            _as_double(F.col(vec_col)).alias("cv"),
-        )
-        .withColumn("cn", _norm(F.col("cv")))
-        .withColumn("bucket", lsh_bucket("cv", planes))
+    c = _vectors(candidates, id_col, vec_col).withColumn(
+        "bucket", lsh_bucket("cv", planes)
     )
 
     if radius > 0:
@@ -198,6 +234,122 @@ def ann_lsh_cosine(
     )
 
 
+def _fold_dot(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Σ_t a[..., t]·b[..., t] of broadcastable arrays, folded left to
+    right from 0.0 — ``_dot``'s order, so the doubles equal the SQL
+    fold's bit for bit (a pairwise ``.sum()`` changes the last bit)."""
+    acc = np.zeros(np.broadcast_shapes(a.shape[:-1], b.shape[:-1]))
+    for t in range(a.shape[-1]):
+        acc = acc + a[..., t] * b[..., t]
+    return acc
+
+
+@dataclass(frozen=True, eq=False)
+class QueryBatch:
+    """A bounded query batch on the driver: ``ids`` (Spark type
+    ``id_type``), ``qv`` (vectors as doubles) and ``qn`` (``_norm``'s fold)."""
+
+    ids: list
+    id_type: DataType
+    qv: np.ndarray
+    qn: np.ndarray
+
+    @classmethod
+    def of(cls, ids, vectors, id_type: DataType = LongType()) -> QueryBatch:
+        qv = np.array(vectors, dtype=np.float64)
+        if not len(qv):
+            qv = np.zeros((0, 0))
+        return cls(list(ids), id_type, qv, np.sqrt(_fold_dot(qv, qv)))
+
+    def vectors(self, d: int) -> np.ndarray:
+        """``qv`` as an n×d matrix (an empty batch has no width of its own)."""
+        return self.qv.reshape(len(self.ids), d)
+
+
+def collect_queries(
+    queries: DataFrame | QueryBatch,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> QueryBatch:
+    """Collect a bounded query frame to the driver: one job moving
+    |Q|·d doubles, so a search that probes and then scans collects once.
+    A :class:`QueryBatch` passes through."""
+    if isinstance(queries, QueryBatch):
+        return queries
+    rows = queries.select(id_col, _as_double(F.col(vec_col))).collect()
+    ids = queries.schema[id_col].dataType
+    return QueryBatch.of([r[0] for r in rows], [r[1] for r in rows], ids)
+
+
+def _query_arrays(
+    batch: QueryBatch,
+    centers=None,
+    n_probe: int = 0,
+    codebooks=None,
+    residual: bool = False,
+) -> dict[str, np.ndarray]:
+    """The per-query terms of a search as numpy columns: ``query`` (the
+    batch row) per query or, with ``centers``, per (query, probed cell)
+    nearest first, with ``cell`` and, if ``residual``, ``qc`` =
+    q·centers[cell]; with ``codebooks``, the ADC lookup tables
+    ``lut_s[j]`` = q_s·codebooks[s][j]. Every dot is a :func:`_fold_dot`;
+    the probe distance is ``kmeans._sqdist``'s fold, and the stable sort
+    sends a tie to the smaller cell, as Spark's stable ``array_sort`` did."""
+    from .kmeans import _sqdist
+
+    query = np.arange(len(batch.ids))
+    out = {}
+    if centers is not None:
+        cent = np.array(centers, dtype=np.float64)
+        qv = batch.vectors(cent.shape[1])
+        probe = np.argsort(_sqdist(qv, cent), axis=1, kind="stable")[:, :n_probe]
+        query = np.repeat(query, probe.shape[1])
+        out["cell"] = probe.ravel().astype(np.int32)
+        if residual:
+            qc = _fold_dot(qv[:, None, :], cent[None, :, :])
+            out["qc"] = qc[query, out["cell"]]
+    if codebooks is not None:
+        books = [np.array(b, dtype=np.float64) for b in codebooks]
+        sub = books[0].shape[1]
+        qv = batch.vectors(sub * len(books))
+        for s, book in enumerate(books):
+            lut = _fold_dot(qv[:, None, s * sub : (s + 1) * sub], book[None, :, :])
+            out[f"lut{s}"] = lut[query]
+    return {"query": query, **out}
+
+
+def _arrow_column(a: np.ndarray):
+    """A 1-D array as an Arrow column; the rows of a 2-D one as lists."""
+    if a.ndim == 1:
+        return pa.array(a)
+    offsets = np.arange(len(a) + 1, dtype=np.int32) * a.shape[1]
+    return pa.ListArray.from_arrays(pa.array(offsets), pa.array(np.ravel(a)))
+
+
+def _query_state(
+    spark: SparkSession, batch: QueryBatch, *args, **kwargs
+) -> DataFrame:
+    """:func:`_query_arrays` as ONE local relation (``query_id``, ``qv``,
+    ``qn``, then its columns past ``query``): Spark builds and broadcasts
+    it with no job, and the plan holds no centroid or codebook value.
+    Size: |Q|·n_probe rows of d + m·n_codes doubles (10 queries × 12
+    probes at d=64, m=16, 16 codes: ~300 KB)."""
+    cols = _query_arrays(batch, *args, **kwargs)
+    query = cols.pop("query")
+    table = pa.table(
+        {
+            "query_id": pa.array([batch.ids[i] for i in query]),
+            "qv": _arrow_column(batch.qv[query]),
+            "qn": _arrow_column(batch.qn[query]),
+            **{c: _arrow_column(a) for c, a in cols.items()},
+        }
+    )
+    ddl = {"query_id": batch.id_type.simpleString(), "cell": "int"}
+    ddl.update(qn="double", qc="double")
+    schema = (f"{c} {ddl.get(c, 'array<double>')}" for c in table.column_names)
+    return spark.createDataFrame(table, ", ".join(schema))
+
+
 def ivf_topk(
     queries: DataFrame,
     candidates: DataFrame,
@@ -220,17 +372,16 @@ def ivf_topk(
        a sample); a full-corpus fit at 100 TB is both unaffordable and
        unnecessary. This is the only iterative step, run once per
        corpus build, not per query — pass the returned ``model`` back
-       in to skip it. r11: the trainer is the deterministic
-       grid-exact Lloyd operator (operators/kmeans.py — the same code
-       path the ``kmeans_fixed_assign`` differential hash-checks),
-       replacing the opaque Spark ML fit: the quantizer is now pure
-       data (k×dim grid ints), session-independent, and byte-stable
-       per (corpus, config);
+       in to skip it. The trainer is the deterministic grid-exact
+       Lloyd operator (operators/kmeans.py, hash-checked by
+       ``kmeans_fixed_assign``): the quantizer is pure data (k×dim
+       grid ints), byte-stable per (corpus, config);
     2. assign every candidate to its nearest centroid IN-ROW (zero
        shuffle — ``DeterministicKMeans.with_cell``);
-    3. per query, rank centroids and probe the top ``n_probe`` cells
-       via an equi-join on cell id — work scales with corpus/n_centroids
-       × n_probe, never |Q|·|C|.
+    3. per query of the bounded batch (collected once, ranked on the
+       driver), probe the top ``n_probe`` cells via an equi-join on
+       cell id — work scales with corpus/n_centroids × n_probe, never
+       |Q|·|C|.
 
     Returns (results_df, model) so the quantizer can be reused; persist
     it with ``model.save(path)`` and pass ``DeterministicKMeans.load(path)``
@@ -275,74 +426,31 @@ def ivf_index(
     vs `train`)."""
     from .skew import spread_for_compute
 
-    cand = spread_for_compute(candidates).select(
-        F.col(id_col).alias("candidate_id"), _as_double(F.col(vec_col)).alias("cv")
-    ).withColumn("cn", _norm(F.col("cv")))
+    cand = _vectors(spread_for_compute(candidates), id_col, vec_col)
     return model.with_cell(cand, vec_col="cv").select(
         "candidate_id", "cv", "cn", "cell"
     )
 
 
-def _probe_cells(q: DataFrame, model, n_probe: int) -> DataFrame:
-    """Per-query probe routing: rank the k cells by distance to the
-    query against the centroid constants and explode the top
-    ``n_probe`` — (query_id, qv, qn, cell) rows ready for the cell
-    equi-join. One parsed SQL string (see lsh_bucket_sql): centroid
-    constants via the Column API cost ~1k py4j round trips per
-    construction. r11: ONE transform over a single k×d literal
-    array-of-arrays instead of k copies of the fold — same op tree
-    per element (bit-identical dist2), but the lambda body
-    parses/analyzes once: measured ~2× faster plan construction on
-    the k=16 config."""
-    centers_2d = _coarse_centers_sql(model)
-    cell_arrays = F.expr(
-        f"transform({centers_2d}, (cv, i) -> "
-        "named_struct('cell', i, 'dist2', "
-        "aggregate(zip_with(qv, cv, (a, b) -> (a - b) * (a - b)), "
-        "0D, (acc, x) -> acc + x)))"
-    )
-    return (
-        q.withColumn(
-            "probe",
-            F.slice(
-                F.array_sort(
-                    cell_arrays,
-                    lambda a, b: F.when(a.dist2 < b.dist2, -1)
-                    .when(a.dist2 > b.dist2, 1)
-                    .otherwise(0),
-                ),
-                1,
-                n_probe,
-            ),
-        )
-        .withColumn("cell", F.explode(F.col("probe.cell")))
-        .drop("probe")
-    )
-
-
 def probe_cell_ids(
-    queries: DataFrame,
+    queries: DataFrame | QueryBatch,
     model,
     n_probe: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> list[int]:
-    """Distinct probed cell ids for a bounded query batch, as a
-    driver-side sorted list — the STATIC partition-pruning input for a
-    cell-partitioned index scan (``index_pipeline.load_ann_index``'s
-    ``cells`` filter). One bounded job over the query batch; the result
-    is at most min(|Q| · n_probe, k) ints, and k (the coarse quantizer
-    size) is itself a driver-held constant — so at any corpus scale
-    this collect moves a few ints, never data."""
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
-    ).withColumn("qn", _norm(F.col("qv")))
-    rows = _probe_cells(q, model, n_probe).select("cell").distinct().collect()
-    return sorted(int(r["cell"]) for r in rows)
+    """Distinct probed cell ids of a bounded query batch, sorted — the
+    STATIC partition-pruning input of ``index_pipeline.load_ann_index``'s
+    ``cells`` filter, at most min(|Q|·n_probe, k) ints. A
+    :class:`QueryBatch` costs no Spark job (numpy folds over the batch
+    and the k centers); a DataFrame is collected first."""
+    batch = collect_queries(queries, id_col, vec_col)
+    cells = _query_arrays(batch, model.clusterCenters(), n_probe)["cell"]
+    return sorted({int(c) for c in cells})
 
 
 def ivf_search(
-    queries: DataFrame,
+    queries: DataFrame | QueryBatch,
     index: DataFrame,
     model,
     k: int = 5,
@@ -350,57 +458,35 @@ def ivf_search(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Query-time half of the IVF path: rank cells per query against
-    the (broadcastable, k-sized) centroid constants, probe the top
-    ``n_probe`` cells via an equi-join on cell id, exact-cosine rank
-    within the probed shortlist. ``index`` is any frame produced by
-    :func:`ivf_index` — freshly built, loaded from parquet, or a
-    union of both (the incremental path)."""
-    assigned = index
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
-    ).withColumn("qn", _norm(F.col("qv")))
-    probed = _probe_cells(q, model, n_probe)
-    sims = probed.join(assigned, "cell").select(
+    """Query-time half of the IVF path: rank the k cells per query on
+    the driver, probe the top ``n_probe`` cells via an equi-join on cell
+    id, exact-cosine rank within the probed shortlist. ``queries`` is a
+    bounded batch (a :class:`QueryBatch` or a DataFrame collected once
+    here); ``index`` is any frame produced by :func:`ivf_index` —
+    freshly built, loaded from parquet, or a union of both (the
+    incremental path)."""
+    batch = collect_queries(queries, id_col, vec_col)
+    probed = _query_state(index.sparkSession, batch, model.clusterCenters(), n_probe)
+    sims = probed.join(index, "cell").select(
         "query_id",
         "candidate_id",
         _pair_cosine(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")).alias("cosine"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("candidate_id"))
-    return (
-        sims.withColumn("rn", F.row_number().over(w).cast("long"))
-        .where(F.col("rn") <= k)
-    )
+    return _top_k(sims, k)
 
 
-def banded_candidate_pairs(
+def _band_coded(
     df: DataFrame,
-    n_planes: int = 36,
-    band_width: int = 3,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str | None = "label",
-    max_bucket_size: int | None = None,
+    n_planes: int,
+    band_width: int,
+    dim: int,
+    id_col: str,
+    vec_col: str,
+    label_col: str | None,
+    max_bucket_size: int | None,
 ) -> DataFrame:
-    """Candidate near-dup pairs from banded sign-LSH blocking (no cosine).
-
-    The MinHash-LSH banding scheme applied to random-hyperplane sign
-    bits: ``n_planes`` sign bits split into ``n_planes // band_width``
-    bands; two vectors become a candidate pair iff they agree on ALL
-    bits of at least one band (within the same ``label_col`` block when
-    given). Per-band bucket size — not label size — bounds the pair
-    space: at production scale ``band_width`` grows ~log2(n) to keep
-    buckets small, and ``max_bucket_size`` drops degenerate hot buckets
-    outright (same contract as dedup.minhash_near_dup_pairs).
-
-    Returns (vec_a, vec_b, label, av, an, bv, bn) — ids plus both
-    vectors/norms so callers can verify cosine without a second scan;
-    recall-gate callers that only intersect on ids (an exact pair found
-    here always passes the downstream cosine verify — same operands,
-    same threshold) can drop the vector columns and skip the dot
-    products entirely.
-    """
+    """(vid, lbl, v, n, band, code): one row per vector and sign-LSH
+    band, repartitioned on the band-join keys, hot buckets dropped."""
     if n_planes % band_width != 0:
         raise ValueError("n_planes must be a multiple of band_width")
     planes = _hyperplanes(dim, n_planes)
@@ -441,6 +527,8 @@ def banded_candidate_pairs(
     coded = coded.repartition("lbl", "band", "code")
 
     if max_bucket_size is not None:
+        # cap on the FULL bucket population — an incremental run sees
+        # the same hot buckets whichever batch is looking
         hot = (
             coded.groupBy("lbl", "band", "code")
             .agg(F.count("*").alias("_m"))
@@ -448,7 +536,40 @@ def banded_candidate_pairs(
             .select("lbl", "band", "code")
         )
         coded = coded.join(F.broadcast(hot), ["lbl", "band", "code"], "left_anti")
+    return coded
 
+
+def banded_candidate_pairs(
+    df: DataFrame,
+    n_planes: int = 36,
+    band_width: int = 3,
+    dim: int = 64,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    label_col: str | None = "label",
+    max_bucket_size: int | None = None,
+) -> DataFrame:
+    """Candidate near-dup pairs from banded sign-LSH blocking (no cosine).
+
+    The MinHash-LSH banding scheme applied to random-hyperplane sign
+    bits: ``n_planes`` sign bits split into ``n_planes // band_width``
+    bands; two vectors become a candidate pair iff they agree on ALL
+    bits of at least one band (within the same ``label_col`` block when
+    given). Per-band bucket size — not label size — bounds the pair
+    space: at production scale ``band_width`` grows ~log2(n) to keep
+    buckets small, and ``max_bucket_size`` drops degenerate hot buckets
+    outright (same contract as dedup.minhash_near_dup_pairs).
+
+    Returns (vec_a, vec_b, label, av, an, bv, bn) — ids plus both
+    vectors/norms so callers can verify cosine without a second scan;
+    recall-gate callers that only intersect on ids (an exact pair found
+    here always passes the downstream cosine verify — same operands,
+    same threshold) can drop the vector columns and skip the dot
+    products entirely.
+    """
+    coded = _band_coded(
+        df, n_planes, band_width, dim, id_col, vec_col, label_col, max_bucket_size
+    )
     a = coded.alias("a")
     b = coded.alias("b")
     pairs = (
@@ -496,38 +617,9 @@ def banded_incremental_candidates(
     Returns the same (vec_a, vec_b, label, av, an, bv, bn) contract as
     ``banded_candidate_pairs`` with (least, greatest)-normalized ids.
     """
-    if n_planes % band_width != 0:
-        raise ValueError("n_planes must be a multiple of band_width")
-    planes = _hyperplanes(dim, n_planes)
-    n_bands = n_planes // band_width
-
-    base = df.select(
-        F.col(id_col).alias("vid"),
-        *([F.col(label_col).alias("lbl")] if label_col else [F.lit(0).alias("lbl")]),
-        _as_double(F.col(vec_col)).alias("v"),
-    ).withColumn("n", _norm(F.col("v")))
-    band_codes = F.expr(
-        "array("
-        + ",".join(
-            lsh_bucket_sql("v", planes[b * band_width : (b + 1) * band_width])
-            for b in range(n_bands)
-        )
-        + ")"
+    coded = _band_coded(
+        df, n_planes, band_width, dim, id_col, vec_col, label_col, max_bucket_size
     )
-    coded = base.select(
-        "vid", "lbl", "v", "n", F.posexplode(band_codes).alias("band", "code")
-    )
-    coded = coded.repartition("lbl", "band", "code")
-    if max_bucket_size is not None:
-        # cap on the FULL bucket population — identical semantics to the
-        # full run regardless of which batch is looking
-        hot = (
-            coded.groupBy("lbl", "band", "code")
-            .agg(F.count("*").alias("_m"))
-            .where(F.col("_m") > max_bucket_size)
-            .select("lbl", "band", "code")
-        )
-        coded = coded.join(F.broadcast(hot), ["lbl", "band", "code"], "left_anti")
     new_side = coded.join(
         new_ids.select(F.col(new_ids.columns[0]).alias("vid")), "vid", "left_semi"
     ).alias("a")
@@ -607,28 +699,6 @@ def _pq_codebooks(models) -> list[list[list[float]]]:
     return [[list(map(float, c)) for c in mod.clusterCenters()] for mod in models]
 
 
-def _with_pq_luts(q: DataFrame, codebooks, sub: int) -> DataFrame:
-    """Append per-QUERY ADC lookup tables: dot(q_s, centroid_{s,j})
-    for every j — evaluated once per query row, never per pair. One
-    parsed SQL expression per subspace (m exprs total), not m·n_codes
-    Column-API dot products: the Column form measured ~10 s of pure
-    plan construction per bench run at m=16."""
-    lut_cols = {}
-    for s, book in enumerate(codebooks):
-        entries = ",".join(
-            "aggregate(zip_with(slice(qv, {o}, {w}), array({arr}), "
-            "(a, b) -> a * b), 0D, (acc, x) -> acc + x)".format(
-                o=s * sub + 1, w=sub, arr=",".join(_lit_d(x) for x in c)
-            )
-            for c in book
-        )
-        lut_cols[f"lut{s}"] = F.expr(f"array({entries})")
-    # all m LUT columns land in ONE projection (r16 planning hygiene,
-    # guide §7.3): a per-subspace withColumn loop re-analyzes a growing
-    # literal-heavy plan m times
-    return q.withColumns(lut_cols)
-
-
 def _adc_dot_expr(m: int):
     """Σ_s LUT_s[code_s]: m element_at calls per pair, independent of
     the raw dimension."""
@@ -637,9 +707,8 @@ def _adc_dot_expr(m: int):
 
 def _coarse_centers_sql(model) -> str:
     """The coarse quantizer's k×d centers as one SQL literal (one
-    parsed string — the lsh_bucket_sql / _probe_cells discipline: k×d
-    constants through the Column API cost ~1k py4j round trips per
-    plan)."""
+    parsed string — the lsh_bucket_sql discipline: k×d constants
+    through the Column API cost ~1k py4j round trips per plan)."""
     return (
         "array("
         + ",".join(
@@ -648,6 +717,18 @@ def _coarse_centers_sql(model) -> str:
         )
         + ")"
     )
+
+
+def _first_dim(candidates: DataFrame, vec_col: str, caller: str) -> int:
+    """The vector length of the first candidate: one driver job, so
+    callers holding fitted quantizers read the dimension from those."""
+    probe = candidates.select(_as_double(F.col(vec_col)).alias("v")).first()
+    if probe is None:
+        raise ValueError(
+            f"{caller}: candidate frame is empty — cannot fit PQ codebooks; "
+            "pass prefit models or a non-empty corpus"
+        )
+    return len(probe["v"])
 
 
 def _subspace_dim(dim: int, m: int) -> int:
@@ -661,7 +742,7 @@ def _subspace_dim(dim: int, m: int) -> int:
 
 
 def pq_topk(
-    queries: DataFrame,
+    queries: DataFrame | QueryBatch,
     candidates: DataFrame,
     k: int = 5,
     m: int = 4,
@@ -691,9 +772,10 @@ def pq_topk(
        (``kmeans.pq_encode``) against the codebooks held as constants;
        a narrow pass, and only (id, m codes, norm) ever shuffles;
     3. QUERY (per query row, not per pair): a lookup table per
-       subspace — dot(q_s, centroid_{s,j}) for all j — so the pair
-       join evaluates approx_dot = Σ_s LUT_s[code_s]: m element_at
-       calls per pair, independent of D;
+       subspace — dot(q_s, centroid_{s,j}) for all j, computed on the
+       driver over the collected bounded batch — so the pair join
+       evaluates approx_dot = Σ_s LUT_s[code_s]: m element_at calls per
+       pair, independent of D;
     4. rank by approximate cosine (approx_dot / (‖q‖·‖ĉ‖)).
 
     At 100 TB this composes with IVF (probe cells first, ADC inside
@@ -704,23 +786,12 @@ def pq_topk(
     from .skew import spread_for_compute
 
     if models is not None:
-        # prefit models carry the dimension (m subspaces of `sub` dims
-        # each) — no eager probe job against the candidate frame
-        # (ADVICE r6: first() cost a driver job per call AND raised
-        # TypeError on an empty frame).
+        # prefit models carry the dimension: no probe job (ADVICE r6)
         sub = len(models[0].clusterCenters()[0])
     else:
-        probe = candidates.select(_as_double(F.col(vec_col)).alias("v")).first()
-        if probe is None:
-            raise ValueError(
-                "pq_topk: candidate frame is empty — cannot fit PQ "
-                "codebooks; pass prefit `models` or a non-empty corpus"
-            )
-        sub = _subspace_dim(len(probe["v"]), m)
+        sub = _subspace_dim(_first_dim(candidates, vec_col, "pq_topk"), m)
 
-    cand = spread_for_compute(candidates).select(
-        F.col(id_col).alias("candidate_id"), _as_double(F.col(vec_col)).alias("cv")
-    )
+    cand = _vectors(spread_for_compute(candidates), id_col, vec_col, norm=False)
     if models is None:
         models = fit_pq_codebooks(cand, None, m, n_codes, sub, seed)
 
@@ -729,12 +800,10 @@ def pq_topk(
         "candidate_id", *[f"code{s}" for s in range(m)], "chat_norm"
     )
 
-    q = _with_pq_luts(
-        queries.select(
-            F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
-        ).withColumn("qn", _norm(F.col("qv"))),
-        codebooks,
-        sub,
+    q = _query_state(
+        candidates.sparkSession,
+        collect_queries(queries, id_col, vec_col),
+        codebooks=codebooks,
     )
     approx_dot = _adc_dot_expr(m)
     sims = q.crossJoin(F.broadcast(encoded)).select(
@@ -742,13 +811,7 @@ def pq_topk(
         "candidate_id",
         (approx_dot / (F.col("qn") * F.col("chat_norm"))).alias("approx_cosine"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("approx_cosine"), F.asc("candidate_id")
-    )
-    out = sims.withColumn("rn", F.row_number().over(w).cast("long")).where(
-        F.col("rn") <= k
-    )
-    return out, models
+    return _top_k(sims, k, "approx_cosine"), models
 
 
 def pq_rerank_topk(
@@ -776,8 +839,9 @@ def pq_rerank_topk(
     compression): 1.0 @sf0.001, 1.0 @sf0.01, macro 0.98 / min-query
     0.8 @sf0.1.
     """
+    batch = collect_queries(queries, id_col, vec_col)
     short, models = pq_topk(
-        queries,
+        batch,
         candidates,
         k=shortlist,
         m=m,
@@ -787,29 +851,8 @@ def pq_rerank_topk(
         seed=seed,
         models=models,
     )
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
-    ).withColumn("qn", _norm(F.col("qv")))
-    c = candidates.select(
-        F.col(id_col).alias("candidate_id"), _as_double(F.col(vec_col)).alias("cv")
-    ).withColumn("cn", _norm(F.col("cv")))
-    rer = (
-        short.select("query_id", "candidate_id")
-        .join(c, "candidate_id")
-        .join(F.broadcast(q), "query_id")
-        .select(
-            "query_id",
-            "candidate_id",
-            _pair_cosine(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")).alias(
-                "cosine"
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("candidate_id"))
-    out = rer.withColumn("rn", F.row_number().over(w).cast("long")).where(
-        F.col("rn") <= k
-    )
-    return out, models
+    q = _query_state(candidates.sparkSession, batch)
+    return _exact_rerank(short, candidates, q, k, id_col, vec_col), models
 
 
 def fit_pq_codebooks(
@@ -855,17 +898,11 @@ def fit_pq_codebooks(
         est = n_cand
     if est <= 65536:
         # ONE bounded collect feeds all m driver-local fits (r16,
-        # VERDICT r15 #3): per-subspace fit_deterministic_kmeans calls
-        # each paid their own count + collect over the same sample —
-        # 2m+1 sequential driver jobs for m repeats of identical
-        # milliseconds-of-arithmetic input prep. The quantization is
-        # the same JVM-side HALF_UP grid round, the sample is the same
-        # seeded Bernoulli over the same lineage, and _fit_local is the
-        # exact arithmetic the per-subspace path already dispatched to
-        # under the same ≤65536-row bound (its local_cap default) — so
-        # the codebooks are bit-identical with 2 jobs total; the
-        # eager-checkpoint staging of the sample is subsumed by the
-        # collect. Oversized configs keep the distributed loop.
+        # VERDICT r15 #3) instead of a count + collect per subspace:
+        # the same HALF_UP grid round, the same seeded sample and the
+        # arithmetic the per-subspace path dispatches to under the same
+        # ≤65536-row bound, so the codebooks are bit-identical with 2
+        # jobs. Oversized configs keep the distributed loop.
         from .kmeans import GRID_Q, _fit_local, quantize_vec
 
         rows = base.select(
@@ -935,9 +972,7 @@ def ivfpq_index(
     from .skew import spread_for_compute
 
     codebooks = _pq_codebooks(models)
-    cand = spread_for_compute(candidates).select(
-        F.col(id_col).alias("candidate_id"), _as_double(F.col(vec_col)).alias("cv")
-    )
+    cand = _vectors(spread_for_compute(candidates), id_col, vec_col, norm=False)
     enc = pq_encode(
         coarse.with_cell(cand, vec_col="cv"),
         codebooks,
@@ -951,7 +986,7 @@ def ivfpq_index(
 
 
 def ivfpq_search(
-    queries: DataFrame,
+    queries: DataFrame | QueryBatch,
     index: DataFrame,
     corpus: DataFrame,
     coarse,
@@ -964,42 +999,39 @@ def ivfpq_search(
     residual: bool = False,
 ) -> DataFrame:
     """Query-time half of IVF×PQ (the FAISS IndexIVFPQ serving shape,
-    on Spark): route each query to its ``n_probe`` nearest cells
-    (centroid constants, bounded), ADC-scan ONLY the probed cells'
-    codes (m table lookups per scanned code — work tracks
-    corpus/n_centroids × n_probe, never |Q|·|C|, and the scan touches
-    8-byte codes, not vectors), shortlist per query, then exact-cosine
-    re-rank of the shortlist against the full vectors read from
-    ``corpus``. The only stage that touches uncompressed embeddings is
-    the shortlist·|Q| re-rank join.
+    on Spark): route each query to its ``n_probe`` nearest cells,
+    ADC-scan ONLY the probed cells' codes (m table lookups per scanned
+    code — work tracks corpus/n_centroids × n_probe, never |Q|·|C|, and
+    the scan touches 8-byte codes, not vectors), shortlist per query,
+    then exact-cosine re-rank of the shortlist against the full vectors
+    read from ``corpus``. The only stage that touches uncompressed
+    embeddings is the shortlist·|Q| re-rank join.
+
+    ``queries`` is a BOUNDED batch — a :class:`QueryBatch` or a
+    DataFrame collected once here: the driver holds its |Q|·d doubles
+    and computes the probe ranking, the m lookup tables and the norms
+    (:func:`_query_state`), so keep |Q| in the thousands at most. The
+    plan carries no codebook or centroid value.
 
     ``residual=True`` decodes an index built with residual encoding:
     dot(q, chat) = dot(q, centroid[cell]) + dot(q, rhat). The first
-    term is per-(query, probed-cell) — |Q|·n_probe folds over the
-    centroid constants, computed once on the probed frame before the
-    cell join; the second is the usual per-code ADC lookup (the LUTs
-    are against the residual codebooks, same m element_at per pair)."""
+    term ``qc`` is per (query, probed cell) — |Q|·n_probe folds on the
+    driver; the second is the usual per-code ADC lookup (the LUTs are
+    against the residual codebooks, same m element_at per pair)."""
+    batch = collect_queries(queries, id_col, vec_col)
+    spark = index.sparkSession
     codebooks = _pq_codebooks(models)
-    m = len(codebooks)
-    sub = len(codebooks[0][0])
-    q = _with_pq_luts(
-        queries.select(
-            F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
-        ).withColumn("qn", _norm(F.col("qv"))),
-        codebooks,
-        sub,
+    probed = _query_state(
+        spark, batch, coarse.clusterCenters(), n_probe, codebooks, residual
     )
-    probed = _probe_cells(q, coarse, n_probe)
-    adc = _adc_dot_expr(m)
+    # ADC as element_at over LUT arrays held as data. Raced against an
+    # Arrow kernel with the |Q|×m×n_codes LUTs in its closure (10k×64-d,
+    # 16 cells, 10-query batches, 13 interleaved pairs, 4 cores): median
+    # search CPU, Python workers included, 4.28 s here vs 4.42 s, wall
+    # 1.50 vs 1.63 s (the kernel's driver + JVM CPU alone read 3.15 vs
+    # 3.39 s, with ~1.2 s moved into Python workers).
+    adc = _adc_dot_expr(len(codebooks))
     if residual:
-        centers = _coarse_centers_sql(coarse)
-        probed = probed.withColumn(
-            "qc",
-            F.expr(
-                f"aggregate(zip_with(qv, element_at({centers}, cell + 1), "
-                "(a, b) -> a * b), 0D, (acc, x) -> acc + x)"
-            ),
-        )
         adc = F.col("qc") + adc
     sims = probed.join(index, "cell").select(
         "query_id",
@@ -1008,35 +1040,9 @@ def ivfpq_search(
             "approx_cosine"
         ),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("approx_cosine"), F.asc("candidate_id")
-    )
-    short = (
-        sims.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= shortlist)
-        .select("query_id", "candidate_id")
-    )
-    c = corpus.select(
-        F.col(id_col).alias("candidate_id"), _as_double(F.col(vec_col)).alias("cv")
-    ).withColumn("cn", _norm(F.col("cv")))
-    qq = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
-    ).withColumn("qn", _norm(F.col("qv")))
-    rer = (
-        short.join(c, "candidate_id")
-        .join(F.broadcast(qq), "query_id")
-        .select(
-            "query_id",
-            "candidate_id",
-            _pair_cosine(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")).alias(
-                "cosine"
-            ),
-        )
-    )
-    w2 = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("candidate_id"))
-    return rer.withColumn("rn", F.row_number().over(w2).cast("long")).where(
-        F.col("rn") <= k
-    )
+    short = _top_k(sims, shortlist, "approx_cosine")
+    q = _query_state(spark, batch)
+    return _exact_rerank(short, corpus, q, k, id_col, vec_col)
 
 
 def fit_ivfpq_quantizers(
@@ -1066,13 +1072,7 @@ def fit_ivfpq_quantizers(
         # the one-row probe job (r16: construction-job collapse)
         sub = _subspace_dim(len(coarse.clusterCenters()[0]), m)
     else:
-        probe = candidates.select(_as_double(F.col(vec_col)).alias("v")).first()
-        if probe is None:
-            raise ValueError(
-                "fit_ivfpq_quantizers: candidate frame is empty — pass "
-                "prefit models or a non-empty corpus"
-            )
-        sub = _subspace_dim(len(probe["v"]), m)
+        sub = _subspace_dim(_first_dim(candidates, vec_col, "fit_ivfpq_quantizers"), m)
     if coarse is None:
         coarse = fit_deterministic_kmeans(
             candidates,
@@ -1084,9 +1084,7 @@ def fit_ivfpq_quantizers(
             seed=seed,
         )
     if models is None:
-        cand = candidates.select(
-            F.col(id_col).alias("candidate_id"), _as_double(F.col(vec_col)).alias("cv")
-        )
+        cand = _vectors(candidates, id_col, vec_col, norm=False)
         models = fit_pq_codebooks(
             cand, coarse, m=m, n_codes=n_codes, sub=sub, seed=seed,
             residual=residual,

@@ -7,6 +7,7 @@ of an oracle hash diff, and that LSH multiprobe radius is monotone
 
 from __future__ import annotations
 
+import math
 import os
 
 import pytest
@@ -336,3 +337,145 @@ def test_ivfpq_rejects_dim_not_divisible_by_m(spark):
     c = load_table(spark, SF_DIR, "embeddings")
     with pytest.raises(ValueError, match="not divisible by m=7"):
         fit_ivfpq_quantizers(c, m=7)
+
+
+def _fold(xs) -> float:
+    """Left fold from 0.0: the order of the SQL aggregate(zip_with) fold."""
+    acc = 0.0
+    for x in xs:
+        acc = acc + x
+    return acc
+
+
+def _query_reference(q, centers, n_probe, books, residual):
+    """Per-query search terms, one plain-Python left fold each: the probe
+    order (stable, so a tie goes to the smaller cell), and per probed
+    cell ``qc``, plus ``qn`` and the m lookup tables."""
+    sub = len(books[0][0])
+    d2 = [_fold((a - b) * (a - b) for a, b in zip(q, c)) for c in centers]
+    probe = sorted(range(len(centers)), key=lambda j: d2[j])[:n_probe]
+    luts = [
+        [_fold(q[s * sub + t] * cw[t] for t in range(sub)) for cw in book]
+        for s, book in enumerate(books)
+    ]
+    return {
+        "qn": math.sqrt(_fold(x * x for x in q)),
+        "cell": probe,
+        "qc": [_fold(a * b for a, b in zip(q, centers[c])) for c in probe]
+        if residual else None,
+        "luts": luts,
+    }
+
+
+def _order_decided_by_fold(rng, q, d):
+    """Two centers the probe distance to ``q`` ranks one way under the
+    left fold and the other way (or tied) under numpy's pairwise
+    ``.sum()``: the same offsets from ``q``, permuted. The one the fold
+    puts farther takes the SMALLER cell id, so a tie goes to it."""
+    import numpy as np
+
+    qa = np.array(q)
+    while True:
+        p = [rng.uniform(-1, 1) for _ in range(d)]
+        perm = p[:]
+        rng.shuffle(perm)
+        a = [x + y for x, y in zip(q, p)]
+        b = [x + y for x, y in zip(q, perm)]
+        fa = _fold((x - y) * (x - y) for x, y in zip(q, a))
+        fb = _fold((x - y) * (x - y) for x, y in zip(q, b))
+        pa_ = float(((qa - np.array(a)) ** 2).sum())
+        pb = float(((qa - np.array(b)) ** 2).sum())
+        if fa != fb and (fa < fb) != (pa_ < pb):
+            return (b, a) if fa < fb else (a, b)
+
+
+def test_query_state_matches_pure_python_reference():
+    """The driver-side query state of an IVF×PQ search (``qn``, the probe
+    order, ``qc`` and the m ADC lookup tables) equals a plain-Python
+    left-fold reference BIT FOR BIT (==, not a tolerance), raw and
+    residual: these doubles are what the SQL folds computed before, so
+    served results stay identical. Cases: a duplicated center (a tie
+    goes to the smaller cell), a pair of centers whose order only the
+    fold order decides, a 1-query batch and an empty batch. No Spark."""
+    import random
+
+    from soccer_data_pipeline_spark.operators.similarity import (
+        QueryBatch,
+        _query_arrays,
+    )
+
+    rng = random.Random(11)
+    m, sub, n_codes, k, n_probe = 4, 8, 6, 9, 3
+    d = m * sub
+    queries = [[rng.uniform(-1, 1) for _ in range(d)] for _ in range(40)]
+    centers = [[rng.uniform(-1, 1) for _ in range(d)] for _ in range(k)]
+    centers[0], centers[1] = _order_decided_by_fold(rng, queries[0], d)
+    centers[2] = list(queries[1])
+    centers[6] = list(queries[1])  # the same distance as cell 2 to every query
+    books = [
+        [[rng.uniform(-1, 1) for _ in range(sub)] for _ in range(n_codes)]
+        for _ in range(m)
+    ]
+
+    for residual in (False, True):
+        for qs in (queries, queries[:1], []):
+            batch = QueryBatch.of(range(len(qs)), qs)
+            got = _query_arrays(batch, centers, n_probe, books, residual)
+            assert set(got) == {
+                "query", "cell", *(["qc"] if residual else []),
+                *[f"lut{s}" for s in range(m)],
+            }
+            assert len(got["query"]) == len(qs) * n_probe
+            for i, q in enumerate(qs):
+                ref = _query_reference(q, centers, n_probe, books, residual)
+                rows = slice(i * n_probe, (i + 1) * n_probe)
+                assert list(got["query"][rows]) == [i] * n_probe
+                assert batch.qn[i] == ref["qn"], i
+                assert list(got["cell"][rows]) == ref["cell"], (i, residual)
+                if residual:
+                    assert list(got["qc"][rows]) == ref["qc"], i
+                for s in range(m):
+                    for r in range(rows.start, rows.stop):
+                        assert list(got[f"lut{s}"][r]) == ref["luts"][s], (i, s)
+    # the fold alone put cell 1 first for query 0, and the tie between
+    # the duplicated cells 2 and 6 went to cell 2
+    one = _query_arrays(QueryBatch.of([0, 1], queries[:2]), centers, 1)
+    assert list(one["cell"]) == [1, 2]
+
+
+def test_ivfpq_search_plan_holds_no_centroid_or_codebook_literals(spark, tmp_path):
+    """The query side of an IVF×PQ search (probe ranking, lookup tables,
+    residual term) is built on the driver and handed to Spark as a local
+    relation: the analyzed plans of ``ann_index_search`` and of
+    ``ivfpq_search`` (raw and residual) carry no coarse-center or
+    codebook value and no ``array_sort`` probe ranking."""
+    from soccer_data_pipeline_spark.index_pipeline import (
+        ann_index_search,
+        run_ann_index_build,
+    )
+    from soccer_data_pipeline_spark.operators.similarity import (
+        ivfpq_index,
+        ivfpq_search,
+    )
+
+    emb = load_table(spark, SF_DIR, "embeddings")
+    q = emb.where(F.col("vec_id") < 10)
+    c = emb.where(F.col("vec_id") >= 10)
+    out_dir = str(tmp_path / "ann")
+    built = run_ann_index_build(c, out_dir, n_centroids=8, m=16, n_codes=8)
+    coarse, models = built.coarse, built.models
+    values = {x for mod in [coarse, *models] for cw in mod.clusterCenters() for x in cw}
+    literals = [repr(x) for x in values if x != int(x)]
+    assert literals
+    frames = [ann_index_search(q, c, out_dir, k=5, shortlist=50, n_probe=4)]
+    for residual in (True, False):
+        frames.append(
+            ivfpq_search(
+                q, ivfpq_index(c, coarse, models, residual=residual), c, coarse,
+                models, k=5, shortlist=50, n_probe=4, residual=residual,
+            )
+        )
+    for i, df in enumerate(frames):
+        analyzed = df._jdf.queryExecution().analyzed().toString()
+        assert "array_sort" not in analyzed, i
+        assert not [x for x in literals if x in analyzed], i

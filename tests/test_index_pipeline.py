@@ -884,6 +884,76 @@ def test_purge_job_count_is_constant_in_affected_cells(spark, tmp_path):
     assert jobs[2] == jobs[6], jobs
 
 
+def test_served_search_collects_the_batch_once_and_probes_with_no_job(
+    spark, tmp_path
+):
+    """A served search collects its query batch once and ranks the probed
+    cells on the driver: ``probe_cell_ids`` on a collected batch submits
+    no Spark job, and one ``ann_index_search(...).collect()`` with
+    tombstones pending submits 9 jobs. Before the query side became a
+    local relation it submitted 12: two for the probe's distinct
+    collect and one schema-inference job each for the index and
+    tombstone reads, where now one collect of the batch serves both the
+    probe and the search."""
+    from soccer_data_pipeline_spark.index_pipeline import delete_ids
+    from soccer_data_pipeline_spark.operators.similarity import (
+        collect_queries,
+        probe_cell_ids,
+    )
+
+    q, c = _sides(spark)
+    out_dir = str(tmp_path / "ann")
+    built = run_ann_index_build(c, out_dir, n_centroids=8, m=16, n_codes=8,
+                                residual=True)
+    delete_ids(spark, out_dir, [10, 11])
+    batch = collect_queries(q)
+    cells = []
+    assert _jobs_submitted(
+        spark, "probe-batch",
+        lambda: cells.extend(probe_cell_ids(batch, built.coarse, 4)),
+    ) == 0
+    assert cells == probe_cell_ids(q, built.coarse, 4)
+    assert _jobs_submitted(
+        spark, "served-search",
+        lambda: ann_index_search(q, c, out_dir, k=5, shortlist=50,
+                                 n_probe=4).collect(),
+    ) == 9
+
+
+def test_empty_query_batch_serves_an_empty_frame(spark, tmp_path):
+    """A 0-row query batch returns a 0-row frame with the schema of a
+    non-empty search, through ``ann_index_search`` and ``ivfpq_search``."""
+    q, c = _sides(spark)
+    out_dir = str(tmp_path / "ann")
+    built = run_ann_index_build(c, out_dir, n_centroids=8, m=16, n_codes=8,
+                                residual=True)
+    full = ann_index_search(q, c, out_dir, k=5, shortlist=50, n_probe=4)
+    none = q.where(F.lit(False))
+    for df in (
+        ann_index_search(none, c, out_dir, k=5, shortlist=50, n_probe=4),
+        ivfpq_search(none, built.index, c, built.coarse, built.models,
+                     k=5, shortlist=50, n_probe=4, residual=True),
+    ):
+        assert df.schema == full.schema
+        assert df.collect() == []
+
+
+def test_n_probe_above_k_probes_every_cell(spark, tmp_path):
+    """``n_probe`` larger than the k cells probes all k (the old SQL
+    ``slice`` semantics): the probe list is every cell and the served
+    rows equal an ``n_probe = k`` search."""
+    from soccer_data_pipeline_spark.operators.similarity import probe_cell_ids
+
+    q, c = _sides(spark)
+    out_dir = str(tmp_path / "ann")
+    built = run_ann_index_build(c, out_dir, n_centroids=8, m=16, n_codes=8,
+                                residual=True)
+    assert probe_cell_ids(q, built.coarse, 50) == list(range(8))
+    rows = lambda n: sorted(map(tuple, ann_index_search(  # noqa: E731
+        q, c, out_dir, k=5, shortlist=50, n_probe=n).collect()))
+    assert rows(50) == rows(8)
+
+
 def test_purge_of_every_row_leaves_a_readable_empty_index(spark, tmp_path):
     """Purging every row keeps one zero-row file per cell: a store with
     no parquet file left has no schema, so every later read (and the
