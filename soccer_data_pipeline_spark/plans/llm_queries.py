@@ -1031,7 +1031,9 @@ def embedding_near_dup_banded(
 # reuses, never a query result — fitted quantizers and codebooks (pure
 # Python grid ints, session-independent), probe-ladder rungs, and
 # persisted build dirs. Keyed (family, sf_dir, *config); the key space
-# is one entry per family per sf, so it needs no bound.
+# is one entry per family per sf, so it needs no bound. (Star-table
+# schemas have their own catalog, ``sources.parquet_source._SCHEMAS``:
+# metadata only, never a plan or a row.)
 _RUNS: dict = {}
 
 

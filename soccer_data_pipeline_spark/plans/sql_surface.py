@@ -69,7 +69,7 @@ GROUP BY l.l_orderkey, CAST(EXTRACT(YEAR FROM o.o_orderdate) AS INT), o.o_orderp
 
 def _sql_query(sql_text: str):
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        register_views(spark, sf_dir)
+        register_views(spark, sf_dir, sql_text)
         return spark.sql(sql_text)
 
     return run

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..sources import load_table
+from ..sources import load_table, register_views
 from .registry import register
 
 # Money/measure columns in the star schema are 2-decimal. Aggregating them
@@ -928,32 +928,25 @@ def string_agg_regions(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register(
-    "subquery_shapes",
-    oracle="""
-SELECT c_mktsegment, COUNT(*) AS n_rich_active
-FROM customer c
-WHERE c.c_acctbal > (SELECT AVG(c_acctbal) FROM customer)
-  AND EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-GROUP BY c_mktsegment
-""",
-    doc="scalar subquery + EXISTS (rewritten to semi join by Catalyst)",
-)
-def subquery_shapes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources import register_views
-
-    register_views(spark, sf_dir)
-    # identical text both engines (AVG of doubles: single global agg is
-    # sequential-deterministic in neither engine — go through cents)
-    return spark.sql(
-        """
+# identical text both engines (AVG of doubles: single global agg is
+# sequential-deterministic in neither engine — go through cents)
+_SUBQUERY_SHAPES_SQL = """
 SELECT c_mktsegment, COUNT(*) AS n_rich_active
 FROM customer c
 WHERE c.c_acctbal > (SELECT AVG(c_acctbal) FROM customer)
   AND EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
 GROUP BY c_mktsegment
 """
-    )
+
+
+@register(
+    "subquery_shapes",
+    oracle=_SUBQUERY_SHAPES_SQL,
+    doc="scalar subquery + EXISTS (rewritten to semi join by Catalyst)",
+)
+def subquery_shapes(spark: SparkSession, sf_dir: str) -> DataFrame:
+    register_views(spark, sf_dir, _SUBQUERY_SHAPES_SQL)
+    return spark.sql(_SUBQUERY_SHAPES_SQL)
 
 
 # ---------------------------------------------------------------------------

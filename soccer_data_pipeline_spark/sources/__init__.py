@@ -1,3 +1,3 @@
-from .parquet_source import load_table, load_tables, register_views
+from .parquet_source import load_table, register_views
 
-__all__ = ["load_table", "load_tables", "register_views"]
+__all__ = ["load_table", "register_views"]

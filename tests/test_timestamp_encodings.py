@@ -80,3 +80,24 @@ def test_star_tables_have_no_ntz_columns(spark):
         df = load_table(spark, "/root/testdata/sf0.001", name)
         ntz = [c for c, t in df.dtypes if t == "timestamp_ntz"]
         assert not ntz, f"{name} leaked NTZ columns: {ntz}"
+
+
+def test_star_table_reads_do_not_depend_on_an_earlier_events_read(spark):
+    """``load_table`` pins the nanos conf for every table, so what it
+    returns for ``orders`` and ``lineitem`` is the same whether or not
+    the session has read ``events`` yet (the conf used to be set by the
+    first ``events`` read and never reset)."""
+    from .conftest import SF_DIR_001 as sf
+
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
+
+    def snapshot():
+        out = {}
+        for name in ("orders", "lineitem"):
+            df = load_table(spark, sf, name)
+            out[name] = (df.dtypes, sorted(map(tuple, df.collect()), key=repr))
+        return out
+
+    before = snapshot()
+    load_table(spark, sf, "events").limit(1).collect()
+    assert snapshot() == before

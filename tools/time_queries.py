@@ -2,7 +2,8 @@
 """Time registered queries exactly the way bench.py does (fresh session,
 warm lineitem + heavy warmup, then per query: 1 warmup + N timed cold
 runs of construction+noop). Prints one JSON line with min/median per
-query. Intended to be run in a FRESH interpreter per invocation so A/B
+query, and the min of its construction and of its execution apart.
+Intended to be run in a FRESH interpreter per invocation so A/B
 comparisons interleave old/new code without JIT/warm-cache bleed:
 
     PYTHONPATH=/tmp/r15_old  python tools/time_queries.py q1 q2   # side A
@@ -57,18 +58,27 @@ def main() -> None:
         spec = QUERIES[name]
         spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         release_session_blocks(spark, gc=True)
-        samples = []
+        samples, construct, execute = [], [], []
         for _ in range(n_runs):
             release_session_blocks(spark)
             t0 = time.perf_counter()
-            spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            samples.append(time.perf_counter() - t0)
+            df = spec.fn(spark, sf_dir)
+            t1 = time.perf_counter()
+            df.write.format("noop").mode("overwrite").save()
+            t2 = time.perf_counter()
+            samples.append(t2 - t0)
+            construct.append(t1 - t0)
+            execute.append(t2 - t1)
             release_session_blocks(spark, gc=True)
         samples.sort()
         out[name] = {
             "min": round(samples[0], 3),
             "med": round(samples[len(samples) // 2], 3),
             "all": [round(s, 3) for s in samples],
+            # the two layers of a run: query body (planning plus its
+            # eager jobs) and the noop write of the returned plan
+            "construct_min": round(min(construct), 3),
+            "execute_min": round(min(execute), 3),
         }
     print(json.dumps({"src": REPO, "sf_dir": sf_dir, "queries": out}))
     spark.stop()
