@@ -1,12 +1,18 @@
 """Cache ownership contract for operators (VERDICT r2 #4 / ADVICE r2).
 
 Some operators must cache an intermediate because the plan consumes it
-several times (candidate-pair tables, semi-joined shingle tables). A
-bare ``.cache()`` is *catalog-owned*: it stays in the block manager
-until someone calls ``unpersist()``/``clearCache()``, so a long-lived
-session accumulates executor memory pressure query after query (the r2
-bench measured ~40% slowdown on heavy composites by query 40 and worked
-around it with per-query ``clearCache()``).
+several times: the DF-capped shingle table under ``dedup.ngram_jaccard``
+and ``dedup.shingle_containment`` (three consumers), and the edge and
+label checkpoints of the connected-components rounds (``graph.py``).
+Others own nothing and only materialize their small result once:
+``dedup.verify_jaccard``, whose MinHash-LSH pipeline reads every
+intermediate exactly once, and the supplier edge set of
+``plans/analytics_queries.py``. A bare ``.cache()`` is *catalog-owned*:
+it stays in the block manager until someone calls
+``unpersist()``/``clearCache()``, so a long-lived session accumulates
+executor memory pressure query after query (the r2 bench measured ~40%
+slowdown on heavy composites by query 40 and worked around it with
+per-query ``clearCache()``).
 
 The contract here gives every operator-internal cache an owner:
 
@@ -19,8 +25,8 @@ The contract here gives every operator-internal cache an owner:
   the DataFrame — so nothing outlives its user.
 
 Operators whose result is corpus-sized must NOT use this helper (a
-checkpoint would materialize the corpus); none of the current cache
-users are in that class — their results are near-dup pair lists.
+checkpoint would materialize the corpus); none of the current users
+are in that class — their results are pair lists and label tables.
 """
 
 from __future__ import annotations

@@ -4,9 +4,9 @@ Four tiers, all pure DataFrame plans (no Python in the hot path):
 
 - exact: content-hash groupBy (see plans/star_queries.dedup_exact) —
   one shuffle on a 128-bit key.
-- MinHash + LSH: shingle → k seeded MinHashes → b bands → bucket join.
-  Candidate pairs are generated ONLY within LSH buckets, so the pair
-  space is bucket-local — never an O(n²) cross join. This is the
+- MinHash + LSH: shingle → k seeded MinHashes → b bands → one group-by
+  per bucket. Candidate pairs are generated ONLY within LSH buckets, so
+  the pair space is bucket-local — never an O(n²) cross join. This is the
   canonical near-dup path for web-scale corpora (cf. Broder '97
   resemblance sketches; Spark's own ml.feature.MinHashLSH uses the
   same band trick).
@@ -22,7 +22,7 @@ driver's differential check covers these operators too.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 HEX_LEN = 12  # 48-bit hashes: plenty for min-ranking, no bigint overflow
@@ -42,6 +42,16 @@ def tokenize(docs: DataFrame, text_col: str = "text") -> DataFrame:
     ).where(F.col("token") != "")
 
 
+def _shingle_array(n: int):
+    """The distinct word n-grams of the ``toks`` array column, as one
+    array expression (see the PLAN TRAP in :func:`shingles`)."""
+    idx = F.sequence(F.lit(0), F.size("toks") - n)
+    gram = lambda i: F.concat_ws(  # noqa: E731
+        " ", *[F.element_at(F.col("toks"), i + j + 1) for j in range(n)]
+    )
+    return F.array_distinct(F.transform(idx, gram))
+
+
 def shingles(docs: DataFrame, n: int = 3, text_col: str = "text") -> DataFrame:
     """doc_id → distinct word n-gram shingles, fully narrow.
 
@@ -59,20 +69,13 @@ def shingles(docs: DataFrame, n: int = 3, text_col: str = "text") -> DataFrame:
     and the rule leaves it alone.
     """
     toks = F.filter(F.split(text_col, " "), lambda x: x != "")
-    idx = F.sequence(F.lit(0), F.size("toks") - n)
-    gram = lambda i: F.concat_ws(  # noqa: E731
-        " ", *[F.element_at(F.col("toks"), i + j + 1) for j in range(n)]
-    )
     from .skew import spread_for_compute
 
     return (
         spread_for_compute(docs)
         .select("doc_id", toks.alias("toks"))
         .where(F.size("toks") >= n)
-        .select(
-            "doc_id",
-            F.explode(F.array_distinct(F.transform(idx, gram))).alias("shingle"),
-        )
+        .select("doc_id", F.explode(_shingle_array(n)).alias("shingle"))
     )
 
 
@@ -109,57 +112,88 @@ def minhash_signatures(shingled: DataFrame, k: int = 16) -> DataFrame:
     return with_h.groupBy("doc_id").agg(*aggs)
 
 
+def _bucket_pairs(
+    signatures: DataFrame,
+    bands: int,
+    rows_per_band: int,
+    max_bucket_size: int | None,
+    new_ids: DataFrame | None = None,
+) -> DataFrame:
+    """(doc_a, doc_b), doc_a < doc_b, for every pair sharing an LSH
+    bucket — one row per shared band, so callers dedup.
+
+    Bands are unpivoted map-side (stack) and hashed; ONE exchange on
+    the bucket key (band_id, band_key) then serves the cap count, the
+    per-bucket member list and the pair generation: the pairs of a
+    bucket are produced in-row by higher-order functions and exploded,
+    so the signature table is read exactly once — no self-join, no
+    hot-bucket aggregate, no broadcast anti-join.
+
+    ``max_bucket_size`` is the 100 TB guard: a bucket of size s emits
+    s² pairs, so one boilerplate bucket with 10⁶ docs would emit 10¹²
+    pairs. Buckets larger than the cap are dropped entirely BEFORE any
+    member list is collected (an over-capacity bucket carries no
+    near-dup *signal* — it is boilerplate by construction — and its
+    members keep their chance to pair through their other bands). The
+    size is a window count over the same (band_id, band_key)
+    partitioning the group-by reuses, so the cap adds no exchange and
+    a collected list never holds more than ``max_bucket_size`` ids.
+
+    ``new_ids`` (a 1-column doc_id frame) keeps only pairs with at
+    least one new side; buckets holding no new doc emit nothing. The
+    cap still counts the FULL bucket population, so an incremental run
+    drops exactly the buckets the full run drops.
+    """
+    if new_ids is None:
+        flagged = signatures.withColumn("_new", F.lit(True))
+    else:
+        flag = new_ids.select("doc_id", F.lit(True).alias("_new")).distinct()
+        flagged = signatures.join(flag, "doc_id", "left")
+    stack_args = []
+    for b in range(bands):
+        cols = ", ".join(f"h{b * rows_per_band + j}" for j in range(rows_per_band))
+        stack_args.append(f"{b}, md5(concat_ws(',', {cols}))")
+    banded = flagged.selectExpr(
+        "doc_id",
+        "coalesce(_new, false) AS _new",
+        f"stack({bands}, {', '.join(stack_args)}) AS (band_id, band_key)",
+    )
+    bucket = ["band_id", "band_key"]
+    if max_bucket_size is not None:
+        size = F.count("*").over(Window.partitionBy(*bucket))
+        banded = banded.withColumn("_sz", size).where(F.col("_sz") <= max_bucket_size)
+    m = F.col("m")
+    pairs = F.flatten(
+        F.transform(
+            m,
+            lambda x: F.transform(
+                F.filter(
+                    m,
+                    lambda y: (y["doc_id"] > x["doc_id"]) & (x["_new"] | y["_new"]),
+                ),
+                lambda y: F.struct(
+                    x["doc_id"].alias("doc_a"), y["doc_id"].alias("doc_b")
+                ),
+            ),
+        )
+    )
+    return (
+        banded.groupBy(*bucket)
+        .agg(F.collect_list(F.struct("doc_id", "_new")).alias("m"))
+        .where(F.exists(m, lambda d: d["_new"]))
+        .select(F.inline(pairs))
+    )
+
+
 def lsh_candidate_pairs(
     signatures: DataFrame,
     bands: int = 4,
     rows_per_band: int = 4,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
-    """(doc_a, doc_b) candidate pairs sharing ≥1 LSH band.
-
-    Bands are unpivoted map-side (stack), hashed, and self-joined on
-    (band_id, band_key): the join key space is the bucket, so skew is
-    bounded by bucket size.
-
-    ``max_bucket_size`` is the 100 TB guard: a bucket of size s emits
-    s² pairs, so one boilerplate bucket with 10⁶ docs would emit 10¹²
-    pairs in a single join key. Buckets larger than the cap are dropped
-    entirely BEFORE the self-join (an over-capacity bucket carries no
-    near-dup *signal* — it is boilerplate by construction — and its
-    members keep their chance to pair through their other bands). The
-    hot-bucket list is aggregated first and applied as a broadcast
-    anti-join, so the cap itself adds no extra shuffle of the big side.
-    """
-    k = bands * rows_per_band
-    stack_args = []
-    for b in range(bands):
-        cols = ", ".join(f"h{b * rows_per_band + j}" for j in range(rows_per_band))
-        stack_args.append(f"{b}, md5(concat_ws(',', {cols}))")
-    banded = signatures.selectExpr(
-        "doc_id",
-        f"stack({bands}, {', '.join(stack_args)}) AS (band_id, band_key)",
-    )
-    if max_bucket_size is not None:
-        hot = (
-            banded.groupBy("band_id", "band_key")
-            .agg(F.count("*").alias("_sz"))
-            .where(F.col("_sz") > max_bucket_size)
-            .select("band_id", "band_key")
-        )
-        banded = banded.join(F.broadcast(hot), ["band_id", "band_key"], "left_anti")
-    a, b_ = banded.alias("a"), banded.alias("b")
-    return (
-        a.join(
-            b_,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
+    """Distinct (doc_a, doc_b) candidate pairs sharing ≥1 LSH band;
+    ``max_bucket_size`` caps bucket fan-out (see ``_bucket_pairs``)."""
+    return _bucket_pairs(signatures, bands, rows_per_band, max_bucket_size).distinct()
 
 
 def lsh_incremental_candidates(
@@ -169,51 +203,16 @@ def lsh_incremental_candidates(
     rows_per_band: int = 4,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
-    """Candidate pairs touching at least one NEW doc — the daily-batch
-    dedup shape. The band join is new-side × full-side instead of the
-    full self-join, so candidate cost scales with |batch| × bucket
-    size, not corpus²: existing-vs-existing pairs (already resolved by
-    previous runs) are never generated.
-
-    The hot-bucket cap is evaluated on the FULL bucket population
-    (identical semantics to the full run — an over-capacity bucket is
-    boilerplate regardless of which run looks at it). ``new_ids`` is a
-    1-column (doc_id) frame; output pairs are (least, greatest)
-    normalized so a new-new pair meeting from both directions
-    deduplicates.
-    """
-    k = bands * rows_per_band
-    stack_args = []
-    for b in range(bands):
-        cols = ", ".join(f"h{b * rows_per_band + j}" for j in range(rows_per_band))
-        stack_args.append(f"{b}, md5(concat_ws(',', {cols}))")
-    banded = signatures.selectExpr(
-        "doc_id",
-        f"stack({bands}, {', '.join(stack_args)}) AS (band_id, band_key)",
-    )
-    if max_bucket_size is not None:
-        hot = (
-            banded.groupBy("band_id", "band_key")
-            .agg(F.count("*").alias("_sz"))
-            .where(F.col("_sz") > max_bucket_size)
-            .select("band_id", "band_key")
-        )
-        banded = banded.join(F.broadcast(hot), ["band_id", "band_key"], "left_anti")
-    new_side = banded.join(new_ids, "doc_id", "left_semi").alias("a")
-    full_side = banded.alias("b")
-    return (
-        new_side.join(
-            full_side,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") != F.col("b.doc_id")),
-        )
-        .select(
-            F.least(F.col("a.doc_id"), F.col("b.doc_id")).alias("doc_a"),
-            F.greatest(F.col("a.doc_id"), F.col("b.doc_id")).alias("doc_b"),
-        )
-        .distinct()
-    )
+    """Distinct candidate pairs touching at least one NEW doc — the
+    daily-batch dedup shape: existing-vs-existing pairs (already
+    resolved by previous runs) are never generated, and buckets without
+    a new member emit nothing. The hot-bucket cap is evaluated on the
+    FULL bucket population (identical semantics to the full run).
+    ``new_ids`` is a 1-column (doc_id) frame; output pairs are
+    doc_a < doc_b."""
+    return _bucket_pairs(
+        signatures, bands, rows_per_band, max_bucket_size, new_ids
+    ).distinct()
 
 
 def minhash_incremental_pairs(
@@ -234,29 +233,12 @@ def minhash_incremental_pairs(
     store written by the previous run (they are just a table —
     ``minhash_signatures`` output through the S6 parquet sink) and
     only the batch is shingled, making the whole run
-    O(batch + touched buckets). Same boundaries as
-    ``minhash_near_dup_pairs``: operator-owned sigs cache, eager
-    checkpoint under the candidate table, blocks released before
-    return.
-    """
-    from .cache import checkpoint_owned, unpersist_ids
-
-    spark = docs.sparkSession
-    sigs = minhash_signatures(shingles(docs, n=n), k=k).cache()
+    O(batch + touched buckets). Same read-once plan as
+    ``minhash_near_dup_pairs``."""
+    sigs = minhash_signatures(shingles(docs, n=n), k=k)
     new_ids = docs.where(is_new).select("doc_id")
-    cands = lsh_incremental_candidates(
-        sigs,
-        new_ids,
-        bands=bands,
-        rows_per_band=k // bands,
-        max_bucket_size=max_bucket_size,
-    )
-    # exact block ownership (r16, thread-safe — see checkpoint_owned)
-    cands, cand_blocks = checkpoint_owned(cands)
-    out = verify_jaccard(cands, docs, threshold=threshold, n=n)
-    sigs.unpersist()
-    unpersist_ids(spark, cand_blocks)
-    return out
+    cands = _bucket_pairs(sigs, bands, k // bands, max_bucket_size, new_ids)
+    return verify_jaccard(cands, docs, threshold=threshold, n=n)
 
 
 def verify_jaccard(
@@ -266,50 +248,48 @@ def verify_jaccard(
     n: int = 3,
     text_col: str = "text",
 ) -> DataFrame:
-    """Exact Jaccard on candidate pairs only (LSH prunes the rest).
+    """Exact Jaccard on candidate pairs only (LSH prunes the rest),
+    materialized once and returned GC-owned (operators/cache.py).
 
-    Takes the raw docs: the candidate-doc semi-join runs on one row per
-    doc BEFORE any shingling, so only candidate docs (≪ corpus) are
-    ever parsed/exploded on the verify path — the doc_id semi-join
-    pushes into the scan.
+    Per-document shape, every input read once: each candidate pair
+    explodes to its two ends, ``groupBy(doc_id)`` gathers the distinct
+    pairs each doc is in, ONE join with ``docs`` fetches only the
+    candidate docs' text (AQE broadcasts the small per-doc side), each
+    doc's shingle array is parsed once and rides back out to its pairs,
+    and ``groupBy(doc_a, doc_b)`` brings a pair's two arrays together
+    for the in-row ``array_intersect``. That final group-by also
+    dedups pairs that share several bands, so ``candidates`` may hold
+    duplicates. A pair whose end has no shingles (fewer than ``n``
+    tokens) or no doc is dropped, as an inner join would.
     """
     from .cache import materialize_owned
 
-    cand_docs = (
-        candidates.select(F.col("doc_a").alias("doc_id"))
-        .union(candidates.select("doc_b"))
-        .distinct()
+    per_doc = (
+        candidates.select(
+            F.explode(F.array("doc_a", "doc_b")).alias("doc_id"),
+            F.struct("doc_a", "doc_b").alias("pr"),
+        )
+        .groupBy("doc_id")
+        .agg(F.collect_set("pr").alias("prs"))
     )
-    # Shingle ARRAYS for candidate docs only (semi-join before any
-    # parsing), kept un-exploded: Jaccard is then pair-local —
-    # array_intersect on the two shingle sets per candidate pair — with
-    # no shingle-key self-join, no co-count aggregation, and no count
-    # re-joins (the r3 formulation spent ~6 extra stages on those).
-    # The table is candidate-docs-only (near-dup candidates ≪ corpus,
-    # small by construction), consumed twice (both join sides) →
-    # operator-owned cache, released via materialize_owned.
     toks = F.filter(F.split(text_col, " "), lambda x: x != "")
-    idx = F.sequence(F.lit(0), F.size("toks") - n)
-    gram = lambda i: F.concat_ws(  # noqa: E731
-        " ", *[F.element_at(F.col("toks"), i + j + 1) for j in range(n)]
-    )
-    arrs = (
-        docs.join(cand_docs, "doc_id", "left_semi")
-        .select("doc_id", toks.alias("toks"))
+    ends = (
+        docs.join(per_doc, "doc_id")
+        .select("doc_id", "prs", toks.alias("toks"))
         .where(F.size("toks") >= n)
-        .select("doc_id", F.array_distinct(F.transform(idx, gram)).alias("sh"))
-        .cache()
+        .select("doc_id", "prs", _shingle_array(n).alias("sh"))
+        .select("doc_id", "sh", F.inline("prs"))
     )
-    a = arrs.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("_sha"))
-    b = arrs.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("_shb"))
     jac = F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
-    # (r15: a stream-side spread of `candidates` was A/B-measured here
-    # and LOST — dedup_minhash_lsh_pairs 2.5 → 3.0 s min-of-side, both
-    # rounds: the verify joins are NOT broadcast-pinned, so the extra
-    # exchange buys no stage width. Left plain.)
     out = (
-        candidates.join(a, "doc_a")
-        .join(b, "doc_b")
+        ends.groupBy("doc_a", "doc_b")
+        .agg(
+            # doc_a < doc_b, so the smaller end's array is doc_a's
+            F.min_by("sh", "doc_id").alias("_sha"),
+            F.max_by("sh", "doc_id").alias("_shb"),
+            F.count("*").alias("_ends"),
+        )
+        .where(F.col("_ends") == 2)
         .select(
             "doc_a",
             "doc_b",
@@ -319,9 +299,8 @@ def verify_jaccard(
         )
         .withColumn("jaccard", jac)
         .where(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "n_common", "n_a", "n_b", "jaccard")
     )
-    return materialize_owned(out, arrs)
+    return materialize_owned(out)
 
 
 def minhash_near_dup_pairs(
@@ -331,64 +310,36 @@ def minhash_near_dup_pairs(
     bands: int = 4,
     threshold: float = 0.5,
     max_bucket_size: int | None = None,
-    reuse_candidates: bool = True,
 ) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline: shingle → sign → band →
-    candidates → exact verify. ``max_bucket_size`` caps LSH bucket
-    fan-out (see lsh_candidate_pairs).
+    candidates → exact verify, as ONE plan materialized once.
+    ``max_bucket_size`` caps LSH bucket fan-out (see ``_bucket_pairs``).
 
-    ``reuse_candidates`` puts a materialization boundary under the
-    candidate-PAIR table (tiny: one row per near-dup candidate, orders
-    of magnitude smaller than the corpus): verify_jaccard consumes it
-    three times (two semi-join sides + the final inner join), and the
-    plan audit shows NO exchange reuse across those consumers (AQE
-    compiles each subtree independently), so without the boundary the
-    banded self-join — the pipeline's one corpus-sized shuffle —
-    re-executes once per consumer. The boundary is an eager
-    ``localCheckpoint``, not ``.cache()``: stage-timed at sf0.1 with
-    the registered-query config (VERDICT r4 #1; medians of 5),
-    checkpoint 2.87 s vs cache 3.61 s vs no boundary 4.16 s for the
-    full pipeline — the CacheManager's plan-matching/serving overhead
-    costs more than the checkpoint's plain block scan, and both beat
-    re-running the band join. Do NOT checkpoint the shingle table
-    itself — it is corpus-sized (measured OOM at default heap).
-
-    Block ownership: verify_jaccard materializes its result eagerly
-    (materialize_owned), so by the time it returns the candidate
-    checkpoint has served all three consumers and its blocks are
-    released here by id — no block-manager residue outlives this call
-    (operators/cache.py contract).
+    Read-once shape: every intermediate has exactly one consumer, so
+    nothing is cached or checkpointed between the steps. The signature
+    table feeds one bucket exchange (cap count, member list and in-row
+    pair generation together), the candidate pairs feed one per-doc
+    group-by, and each candidate doc's shingle array is parsed once
+    (``verify_jaccard``). The earlier shape read the signatures four
+    times and the candidates three times, so it needed an operator
+    cache under the one and an eager checkpoint under the other. On a
+    4-core host at sf0.01 that plan ran 21 Spark jobs and this one runs
+    8, and the perfbench ``query_mix`` pass (one such query among seven)
+    went from 4.25 to 3.42 s of operation CPU (medians of 6 alternating
+    pairs). The only materialization is the result itself
+    (``materialize_owned``): a GC-owned checkpoint, no block-manager
+    residue besides it.
 
     Shuffle budget (the 100 TB shape): shingling is narrow
     (array_distinct replaces the r1-r3 corpus-wide distinct shuffle of
     full shingle strings), the signature agg shuffles one row per doc
-    (map-side combine), and the banded self-join runs exactly ONCE.
-    Verify shingles candidate docs only."""
-    from .cache import checkpoint_owned, unpersist_ids
-
-    # The signature table is doc-count-sized (17 longs/doc — corpus row
-    # count, NOT corpus bytes) and lsh_candidate_pairs consumes it four
-    # times (hot-bucket agg, anti-join probe, both self-join sides).
-    # Without a materialization boundary each consumer re-runs the full
-    # parse→shingle→hash pipeline; the r1-r3 plan got that boundary by
-    # accident from its distinct-shuffle (ReuseExchange), the narrow
-    # shingle form needs it explicitly. Operator-owned, released below.
-    sigs = minhash_signatures(shingles(docs, n=n), k=k).cache()
-    cands = lsh_candidate_pairs(
-        sigs, bands=bands, rows_per_band=k // bands, max_bucket_size=max_bucket_size
-    )
-    spark = docs.sparkSession
-    cand_blocks: set[int] = set()
-    if reuse_candidates:
-        # exact block ownership (r16): the checkpoint's own RDD id, not
-        # a global pre/post diff — safe under concurrent driver threads
-        # (operators/cache.checkpoint_owned). The sigs cache the
-        # checkpoint job materializes is released by sigs.unpersist().
-        cands, cand_blocks = checkpoint_owned(cands)
-    out = verify_jaccard(cands, docs, threshold=threshold, n=n)
-    sigs.unpersist()
-    unpersist_ids(spark, cand_blocks)
-    return out
+    (map-side combine), the bucket exchange shuffles one row per
+    (doc, band), and verify shingles candidate docs only. Do NOT
+    checkpoint the shingle table — it is corpus-sized (measured OOM at
+    default heap)."""
+    sigs = minhash_signatures(shingles(docs, n=n), k=k)
+    cands = _bucket_pairs(sigs, bands, k // bands, max_bucket_size)
+    return verify_jaccard(cands, docs, threshold=threshold, n=n)
 
 
 def _shingle_pair_counts(
@@ -411,16 +362,12 @@ def _shingle_pair_counts(
     with_toks = spread_for_compute(docs).select(
         "doc_id", block_col, toks.alias("toks")
     ).where(F.size("toks") >= n)
-    idx = F.sequence(F.lit(0), F.size("toks") - n)
-    gram = lambda i: F.concat_ws(  # noqa: E731
-        " ", *[F.element_at(F.col("toks"), i + j + 1) for j in range(n)]
-    )
     # distinctness is per (doc_id, shingle): array_distinct before the
     # explode replaces the corpus-wide .distinct() shuffle — narrow
     shingled = with_toks.select(
         "doc_id",
         block_col,
-        F.explode(F.array_distinct(F.transform(idx, gram))).alias("shingle"),
+        F.explode(_shingle_array(n)).alias("shingle"),
     )
     if max_df is not None:
         hot = (
@@ -597,8 +544,6 @@ def jaccard_prefix_pairs(
     Input: (doc_id, text). Output: (doc_a, doc_b, ints, sa, sb) with
     doc_a < doc_b — one row per qualifying pair.
     """
-    from pyspark.sql import Window
-
     tok = (
         docs.select(
             "doc_id", F.explode(F.split(F.col("text"), " ")).alias("token")

@@ -53,8 +53,8 @@ def spread_for_compute(df: DataFrame) -> DataFrame:
 
 
 def spread_after_shuffle(df: DataFrame) -> DataFrame:
-    """Unconditional round-robin repartition to max(planned partitions,
-    default parallelism) for COMPUTE-DENSE post-shuffle frames.
+    """Round-robin repartition to max(shuffle partitions, default
+    parallelism) for COMPUTE-DENSE post-shuffle frames; never shrinks.
 
     ``spread_for_compute``'s guard reads the PLANNED partition count,
     but AQE coalesces shuffle outputs at RUNTIME by BYTES — it cannot
@@ -67,20 +67,29 @@ def spread_after_shuffle(df: DataFrame) -> DataFrame:
     dwarfs one extra shuffle of the (narrow) rows; same correctness
     argument as spread_for_compute (rows move, values don't).
 
-    The target derives from CONFIGURATION, never from ``df.rdd``
-    (ADVICE r15): touching ``.rdd`` on a post-shuffle frame under AQE
-    forces the final physical plan, which eagerly EXECUTES every
-    upstream shuffle stage at DataFrame-construction time — and the
-    ``repartition`` then re-runs them, so the caller's candidate
-    pipeline executed twice per invocation. max(defaultParallelism,
+    The target derives from CONFIGURATION: max(defaultParallelism,
     shuffle partitions) is ≥ any AQE-coalesced width by construction
     (AQE only ever coalesces DOWN from the configured partition
-    count), so the guard the runtime count provided is preserved
-    without planning or executing anything.
+    count). No-shrink contract: an input whose planned width is
+    already wider than the target passes through unchanged — a
+    repartition down to the target would narrow the verify it is
+    meant to widen. The width is read off the physical plan as
+    planned, never from ``df.rdd`` (ADVICE r15): touching
+    ``.rdd`` on a post-shuffle frame under AQE forces the final plan,
+    which eagerly EXECUTES every upstream shuffle stage at
+    DataFrame-construction time, and the ``repartition`` then re-runs
+    them.
     """
     spark = df.sparkSession
     conf_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     target = max(spark.sparkContext.defaultParallelism, conf_parts)
+    # planning executes nothing; under AQE the exchange-inserted input
+    # plan inside the adaptive wrapper carries the planned partitioning
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.inputPlan()
+    if plan.outputPartitioning().numPartitions() > target:
+        return df
     return df.repartition(target)
 
 

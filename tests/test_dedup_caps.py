@@ -264,3 +264,187 @@ def test_winnowing_guarantee_shared_fingerprint(spark):
         # k-gram space at the smallest k makes a chance 5-gram repeat
         # across two 200-char strings vanishingly unlikely at this seed)
         assert (did, did + 1) not in got, (k, w)
+
+
+def _jobs_submitted(spark, group, fn):
+    """Run ``fn`` under job group ``group``; return (its result, the
+    number of Spark jobs it submitted)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_minhash_pipeline_is_one_plan_with_no_residue(spark):
+    """Every MinHash-LSH intermediate has one consumer, so the pipeline
+    runs as one plan materialized once: a handful of jobs (the earlier
+    cache + candidate-checkpoint shape submitted 21), and the only
+    persisted RDD it leaves is the returned frame's own checkpoint."""
+    from soccer_data_pipeline_spark.operators.cache import persistent_rdd_ids
+
+    docs = load_table(spark, SF_DIR, "documents")
+    before = persistent_rdd_ids(spark)
+    out, jobs = _jobs_submitted(
+        spark,
+        "minhash-one-plan",
+        lambda: minhash_near_dup_pairs(
+            docs, n=3, k=16, bands=4, threshold=0.5, max_bucket_size=50
+        ),
+    )
+    assert jobs <= 8, f"minhash_near_dup_pairs submitted {jobs} jobs"
+    own = int(out._jdf.queryExecution().analyzed().rdd().id())
+    assert persistent_rdd_ids(spark) - before == {own}
+    assert out.count() > 0
+
+
+# docs for the reference test: ids 1-3 share one text (a bucket of exactly
+# the cap in every band), ids 11-14 another (cap + 1), ids 21-26 are
+# near-dups of one base (some bands shared, some not), ids 31-32 have
+# fewer than n tokens, id 41 is unrelated.
+_CAP = 3
+
+
+def _reference_docs():
+    import random
+
+    rng = random.Random(10)
+    vocab = [f"v{i}" for i in range(60)]
+    base = rng.sample(vocab, 40)
+    docs = [(i, "one two three four five six seven eight") for i in (1, 2, 3)]
+    docs += [(i, "red green blue cyan magenta yellow black white") for i in (11, 12, 13, 14)]
+    for i in range(21, 27):
+        t = list(base)
+        for _ in range(rng.randrange(1, 3)):
+            t[rng.randrange(len(t))] = rng.choice(vocab)
+        docs.append((i, " ".join(t)))
+    docs += [(31, "short  text"), (32, "short text")]
+    docs.append((41, " ".join(rng.sample(vocab, 20))))
+    return docs
+
+
+def _python_shingles(text, n=3):
+    toks = [t for t in text.split(" ") if t != ""]
+    return {" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}
+
+
+def _python_buckets(sigs, bands=4, rows_per_band=4):
+    """{(band, band values): sorted member ids} from collected signatures."""
+    buckets: dict = {}
+    for doc, h in sigs.items():
+        for b in range(bands):
+            key = (b, tuple(h[b * rows_per_band : (b + 1) * rows_per_band]))
+            buckets.setdefault(key, []).append(doc)
+    return {k: sorted(v) for k, v in buckets.items()}
+
+
+def _python_pairs(buckets, cap, new=None):
+    out = set()
+    for members in buckets.values():
+        if cap is not None and len(members) > cap:
+            continue
+        for i, a in enumerate(members):
+            for b in members[i + 1 :]:
+                if new is None or a in new or b in new:
+                    out.add((a, b))
+    return out
+
+
+def test_lsh_candidates_and_verify_match_python_reference(spark):
+    """Candidates and the verify against a pure-Python band-bucket and
+    set-Jaccard reference: a bucket of exactly the cap is kept, one of
+    cap + 1 is dropped, a pair sharing several bands yields one row, a
+    doc with fewer than n tokens never pairs, and the verify's counts
+    and Jaccard equal Python's."""
+    from soccer_data_pipeline_spark.operators.dedup import (
+        lsh_incremental_candidates,
+        minhash_incremental_pairs,
+    )
+
+    rows = _reference_docs()
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    sig_df = minhash_signatures(shingles(docs, n=3), k=16)
+    sigs = {r.doc_id: [r[f"h{i}"] for i in range(16)] for r in sig_df.collect()}
+    assert 31 not in sigs and 32 not in sigs  # no shingles, no signature
+    buckets = _python_buckets(sigs)
+    sizes = {len(m) for m in buckets.values()}
+    assert _CAP in sizes and _CAP + 1 in sizes
+    shared = sum(1 for m in buckets.values() if 1 in m and 2 in m)
+    assert shared > 1  # the pair meets in several bands
+    assert any(
+        sum(1 for m in buckets.values() if a in m and b in m) == 1
+        for a in range(21, 27)
+        for b in range(a + 1, 27)
+    )  # and some near-dup pair meets in exactly one
+
+    for cap in (_CAP, None):
+        got = [
+            tuple(r)
+            for r in lsh_candidate_pairs(
+                sig_df, bands=4, rows_per_band=4, max_bucket_size=cap
+            ).collect()
+        ]
+        assert len(got) == len(set(got))
+        assert set(got) == _python_pairs(buckets, cap), cap
+    capped = _python_pairs(buckets, _CAP)
+    assert {(1, 2), (1, 3), (2, 3)} <= capped
+    assert not any(a in (11, 12, 13, 14) for a, _ in capped)
+
+    new = {d for d, _ in rows if d % 2 == 0}
+    new_ids = docs.where(F.col("doc_id") % 2 == 0).select("doc_id")
+    got = [
+        tuple(r)
+        for r in lsh_incremental_candidates(
+            sig_df, new_ids, bands=4, rows_per_band=4, max_bucket_size=_CAP
+        ).collect()
+    ]
+    assert len(got) == len(set(got))
+    assert set(got) == _python_pairs(buckets, _CAP, new)
+
+    text = dict(rows)
+
+    def expected(pairs):
+        out = set()
+        for a, b in pairs:
+            sa, sb = _python_shingles(text[a]), _python_shingles(text[b])
+            common = len(sa & sb)
+            out.add((a, b, common, len(sa), len(sb), common / (len(sa) + len(sb) - common)))
+        return out
+
+    full = minhash_near_dup_pairs(
+        docs, n=3, k=16, bands=4, threshold=0.0, max_bucket_size=_CAP
+    ).collect()
+    assert len(full) == len(capped)
+    assert {tuple(r) for r in full} == expected(capped)
+    inc = minhash_incremental_pairs(
+        docs, F.col("doc_id") % 2 == 0, n=3, k=16, bands=4, threshold=0.0,
+        max_bucket_size=_CAP,
+    ).collect()
+    assert {tuple(r) for r in inc} == expected(_python_pairs(buckets, _CAP, new))
+
+
+def test_spread_after_shuffle_never_shrinks_and_runs_no_job(spark):
+    """An input already wider than max(defaultParallelism, shuffle
+    partitions) passes through unchanged, a narrower post-shuffle frame
+    is spread to that width, and neither decision executes anything."""
+    from soccer_data_pipeline_spark.operators.skew import spread_after_shuffle
+
+    target = max(
+        spark.sparkContext.defaultParallelism,
+        int(spark.conf.get("spark.sql.shuffle.partitions")),
+    )
+    wide = spark.range(1000).repartition(2 * target)
+    out, jobs = _jobs_submitted(spark, "spread-wide", lambda: spread_after_shuffle(wide))
+    assert jobs == 0
+    assert out is wide
+    assert out.rdd.getNumPartitions() == 2 * target
+
+    shuffled = spark.range(1000).groupBy((F.col("id") % 7).alias("g")).count()
+    out, jobs = _jobs_submitted(
+        spark, "spread-narrow", lambda: spread_after_shuffle(shuffled)
+    )
+    assert jobs == 0
+    assert out.rdd.getNumPartitions() == target
+    assert sorted(map(tuple, out.collect())) == sorted(map(tuple, shuffled.collect()))
