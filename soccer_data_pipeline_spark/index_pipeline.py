@@ -43,20 +43,19 @@ of the index files). Every read of ``index/`` carries the schema its
 The quantizers stay kilobytes; batch adds are one narrow pass over
 the batch alone. Concurrency contract: ONE writer — ``config.json``
 carries an index EPOCH that every quantizer-changing rewrite bumps
-BEFORE its destructive step (r14), and the streaming append path
+BEFORE it changes an index file, and the streaming append path
 asserts the persisted epoch still matches the one it loaded before
-each microbatch (r13, VERDICT r12 #2), so a stream running across a
-rebalance fails loudly instead of appending rows encoded under a
-stale quantizer into the new layout.
+each microbatch, so a stream running across a rebalance fails loudly
+instead of appending rows encoded under a stale quantizer.
 
 Full lifecycle (each op bounded to the cells it names):
 ``rebalance_cell`` splits a hot cell (k→k+1, epoch+1);
-``merge_cells`` folds two cold cells back (k→k-1, epoch+1, r14);
+``merge_cells`` folds two cold cells back (k→k-1, epoch+1);
 ``compact_index_cells`` defragments streaming appends (layout-only,
 no epoch); ``delete_ids`` tombstones dropped corpus ids out of every
-read in O(|ids|) and ``purge_deleted`` reclaims the rows (r14,
-VERDICT r13 #1 — the corpus build's drop decisions propagate to the
-served index instead of being returned forever).
+read in O(|ids|) and ``purge_deleted`` reclaims the rows. Every cell
+rewrite (split, merge, compaction, purge) is one move-in-first
+``_swap_cells`` write, so a crash at any step loses no row.
 """
 
 from __future__ import annotations
@@ -109,11 +108,9 @@ def _save_quantizers(out_dir: str, coarse, models, config: dict) -> None:
 
 
 def _bump_epoch_inplace(out_dir: str) -> int:
-    """Advance the persisted epoch BEFORE a destructive index rewrite
-    (ADVICE r13): the bumped stamp lands first, so a stream running
-    across a rebuild/rebalance fails its next microbatch assert DURING
-    the operation — without this, a crash mid-rewrite leaves a new
-    layout under a stale epoch that a running stream still accepts.
+    """Advance the persisted epoch BEFORE an index rewrite changes a
+    file: a stream running across a rebuild/rebalance fails its next
+    microbatch assert DURING the operation, and after a crash in it.
     The final ``_save_quantizers`` re-writes the full config under the
     SAME epoch (no double bump). Returns the new epoch."""
     with open(_config_path(out_dir)) as fh:
@@ -150,14 +147,12 @@ def _read_index(spark: SparkSession, out_dir: str) -> DataFrame:
     )
 
 
-def _move_in(src: str, dest: str, old: list[str]) -> int:
-    """Move ``src``'s parquet files into ``dest``, only then remove the
-    PINNED files ``old``. Returns the number of files moved in."""
+def _move_in(src: str, dest: str) -> int:
+    """Move ``src``'s parquet files into ``dest``; returns their count."""
     new = sorted(glob.glob(os.path.join(src, "*.parquet")))
+    os.makedirs(dest, exist_ok=True)
     for p in new:
         shutil.move(p, dest)
-    for p in old:
-        os.remove(p)
     return len(new)
 
 
@@ -170,7 +165,9 @@ def _swap_files(df: DataFrame, tmp: str, dest: str, old: list[str]) -> int:
     is never touched. Returns the number of files moved in."""
     shutil.rmtree(tmp, ignore_errors=True)
     df.write.mode("overwrite").parquet(tmp)
-    n = _move_in(tmp, dest, old)
+    n = _move_in(tmp, dest)
+    for p in old:
+        os.remove(p)
     shutil.rmtree(tmp, ignore_errors=True)
     return n
 
@@ -183,25 +180,30 @@ def _swap_cells(
     df: DataFrame, tmp: str, data_dir: str, old_by_cell: dict[int, list[str]]
 ) -> dict[int, int]:
     """The ``cell=``-partitioned twin of ``_swap_files``: ONE
-    ``partitionBy("cell")`` write (one file per cell), then per cell
-    ``_move_in``. Every new file exists before anything moves, so the
-    move-in-first argument holds across all cells. A cell left without
-    rows gets one zero-row file (one more write for all such cells): a
-    store with no file left has no schema. Returns {cell: n_moved}."""
-    if not old_by_cell:
-        return {}
+    ``partitionBy("cell")`` write (one file per cell), then EVERY cell the
+    write produced is moved in before the first PINNED file of
+    ``old_by_cell`` is removed, so the move-in-first argument holds
+    across cells, also for a row whose cell changed. Only pinned files
+    are removed: a row for a cell outside ``old_by_cell`` is added to it.
+    A cell of ``old_by_cell`` left without rows gets one zero-row file
+    (one more write for all such cells): a store with no file left has
+    no schema. Returns {cell: n_moved}."""
     shutil.rmtree(tmp, ignore_errors=True)
     df.repartition("cell").write.partitionBy("cell").parquet(tmp)
-    src = {c: os.path.join(tmp, f"cell={c}") for c in sorted(old_by_cell)}
-    empty = [d for d in src.values() if not os.path.isdir(d)]
+    written = {int(d.rsplit("=", 1)[1]) for d in glob.glob(os.path.join(tmp, "cell=*"))}
+    src = {
+        c: os.path.join(tmp, f"cell={c}") for c in sorted(written | set(old_by_cell))
+    }
+    empty = [src[c] for c in sorted(set(old_by_cell) - written)]
     if empty:
         df.drop("cell").limit(0).write.parquet(empty[0])
         for d in empty[1:]:
             shutil.copytree(empty[0], d)
     moved = {
-        c: _move_in(d, os.path.join(data_dir, f"cell={c}"), old_by_cell[c])
-        for c, d in src.items()
+        c: _move_in(d, os.path.join(data_dir, f"cell={c}")) for c, d in src.items()
     }
+    for p in [p for old in old_by_cell.values() for p in old]:
+        os.remove(p)
     shutil.rmtree(tmp, ignore_errors=True)
     return moved
 
@@ -276,8 +278,7 @@ def purge_deleted(
     ``_swap_cells`` write statically pruned to those cells drops the
     tombstoned ids (Spark jobs constant in the cell count); untouched
     cells are never read or written. A crash at any point is safe:
-    duplicates collapse via the loader's dedup (compaction's
-    crash-ordering argument) and the tombstones are still in force.
+    duplicates collapse in the loader's dedup and the tombstones stay.
 
     The tombstone store is PRESERVED by default — compacted to one
     deduped file, not cleared — because ``delete_ids``'s contract is
@@ -293,15 +294,12 @@ def purge_deleted(
     unchanged; a concurrent append stream stays valid), and the same
     reader-race scope — don't race reads against the file removals.
 
-    Concurrency: the tombstone FILE LIST is pinned once, up front, and
-    every read below — the anti-join AND the end-of-purge store
-    compaction — uses exactly those files; only they are removed.
-    A tombstone appended by a concurrent ``run_streaming_index_deletes``
-    between the pin and the removals therefore survives untouched (it
-    stays in force on every read path and is folded by the NEXT purge)
-    instead of being silently deleted with the compacted pile (ADVICE
-    r14). ``clear_tombstones=True`` still removes the whole store and
-    keeps its stricter quiesced-writers contract.
+    Concurrency: the tombstone FILE LIST is pinned once, up front; the
+    anti-join and the end-of-purge store compaction read exactly those
+    files, and only they are removed, so a tombstone a concurrent
+    ``run_streaming_index_deletes`` appends meanwhile stays in force
+    and is folded by the NEXT purge. ``clear_tombstones=True`` removes
+    the whole store and keeps its stricter quiesced-writers contract.
 
     Returns {cell: n_rows_purged}."""
     d = _tombstones_dir(out_dir)
@@ -327,7 +325,8 @@ def purge_deleted(
         .where(F.col("cell").isin(sorted(result)))
         .join(F.broadcast(tomb), "candidate_id", "left_anti")
     )
-    _swap_cells(kept, tmp, index_dir, old_by_cell)
+    if old_by_cell:
+        _swap_cells(kept, tmp, index_dir, old_by_cell)
     if clear_tombstones:
         shutil.rmtree(d, ignore_errors=True)
     elif len(old_t) > 1:
@@ -383,8 +382,26 @@ def load_ann_index(
     return packed.select("candidate_id", *[F.col(f"_row.{c}").alias(c) for c in others])
 
 
+def _cell_counts(spark: SparkSession, out_dir: str) -> DataFrame:
+    """Live vectors per cell, (cell, n_vectors): the manifest every
+    lifecycle op reports."""
+    return load_ann_index(spark, out_dir).groupBy("cell").agg(
+        F.count("*").alias("n_vectors")
+    )
+
+
+def _counts_now(spark: SparkSession, out_dir: str):
+    """The manifest as it stands, from ONE collect: (a local frame of
+    its rows, {cell: n_vectors})."""
+    rows = _cell_counts(spark, out_dir).collect()
+    return (
+        spark.createDataFrame(rows, "cell int, n_vectors bigint"),
+        {int(r["cell"]): int(r["n_vectors"]) for r in rows},
+    )
+
+
 def _recall_audit(
-    audit_queries: DataFrame,
+    audit_queries: DataFrame | None,
     candidates: DataFrame,
     out_dir: str,
     k: int,
@@ -393,10 +410,13 @@ def _recall_audit(
     id_col: str,
     vec_col: str,
     recall_floor: float,
-) -> DataFrame:
+) -> DataFrame | None:
     """Per-query recall of the served-from-disk path vs brute force —
     the gate every lifecycle op (build, rebalance, merge) re-runs
-    against the JUST-PERSISTED artifacts."""
+    against the JUST-PERSISTED artifacts. None when no
+    ``audit_queries`` are given."""
+    if audit_queries is None:
+        return None
     served = ann_index_search(
         audit_queries, candidates, out_dir,
         k=k, shortlist=shortlist, n_probe=n_probe,
@@ -455,15 +475,10 @@ def run_ann_index_build(
     # (ADVICE r11; fit_ivfpq_quantizers validates emptiness itself)
     dim = len(coarse.centers_q[0])
 
-    # index epoch (r13, VERDICT r12 #2): bumped by EVERY quantizer
-    # rewrite — rebalance AND an in-place rebuild over an existing
-    # directory (a rebuild that reset the epoch to 0 would let a
-    # stream started before it pass the 0 == 0 check against CHANGED
-    # quantizers); the streaming append path asserts it per microbatch
-    # so stale-quantizer encodes fail loudly. The bump lands BEFORE
-    # the destructive overwrite (r14, ADVICE r13): a stream running
-    # across this rebuild fails during it, and a crash mid-rewrite
-    # leaves a bumped stamp stale streams already reject.
+    # index epoch: bumped by EVERY quantizer rewrite, an in-place
+    # rebuild included (a reset to 0 would let a stream started before
+    # it pass the 0 == 0 check against CHANGED quantizers), and BEFORE
+    # the overwrite, so a stream running across it fails during it
     epoch = (
         _bump_epoch_inplace(out_dir)
         if os.path.exists(_config_path(out_dir))
@@ -486,21 +501,15 @@ def run_ann_index_build(
         "epoch": epoch,
     }
     _save_quantizers(out_dir, coarse, models, config)
-    # a full rebuild declares fresh truth: the caller's `candidates`
-    # IS the corpus, so pending tombstones (deletes against the OLD
-    # index) are cleared — a legitimately re-added id must not stay
-    # hidden behind a stale tombstone (r14 deletion contract). Cleared
-    # LAST, after the new index and quantizers are fully persisted: a
-    # crash mid-rebuild must leave deleted ids still hidden (the
-    # purge_deleted crash discipline — over-hiding is recoverable by
-    # re-running the rebuild; resurrecting deleted rows is not).
+    # a full rebuild declares fresh truth: pending tombstones (deletes
+    # against the OLD index) are cleared, so a re-added id is served.
+    # LAST, after the new artifacts are persisted: a crash mid-rebuild
+    # leaves deleted ids hidden (over-hiding is recoverable by re-running
+    # the rebuild; resurrecting deleted rows is not).
     shutil.rmtree(_tombstones_dir(out_dir), ignore_errors=True)
 
     spark = candidates.sparkSession
-    stored = load_ann_index(spark, out_dir)
-    manifest = stored.groupBy("cell").agg(
-        F.count("*").alias("n_vectors")
-    ).select(
+    manifest = _cell_counts(spark, out_dir).select(
         "cell",
         "n_vectors",
         F.lit(n_centroids).alias("n_centroids"),
@@ -508,17 +517,14 @@ def run_ann_index_build(
         F.lit(n_codes).alias("n_codes"),
         F.lit(residual).alias("residual"),
     )
-
-    audit = None
-    if audit_queries is not None:
-        audit = _recall_audit(
-            audit_queries, candidates, out_dir,
-            k=k, shortlist=shortlist, n_probe=n_probe,
-            id_col=id_col, vec_col=vec_col, recall_floor=recall_floor,
-        )
-
+    audit = _recall_audit(
+        audit_queries, candidates, out_dir,
+        k=k, shortlist=shortlist, n_probe=n_probe,
+        id_col=id_col, vec_col=vec_col, recall_floor=recall_floor,
+    )
     return AnnIndexBuild(
-        index=stored, manifest=manifest, audit=audit, coarse=coarse, models=models
+        index=load_ann_index(spark, out_dir), manifest=manifest, audit=audit,
+        coarse=coarse, models=models,
     )
 
 
@@ -574,26 +580,24 @@ def _live_members(
     caller: str,
 ) -> DataFrame:
     """The ``candidates`` rows of the live members of ``cells`` — the
-    bounded member read of a destructive cell rewrite.
+    bounded (lazy) member read of a cell rewrite.
 
     - The cell filter hits the partition column, so the scan statically
-      prunes to those cells' directories (dedup within a cell is exact
-      under the append-only contract — replays are byte-identical).
-    - Tombstoned members are NOT members (r14): the rewrite re-encodes
+      prunes to those cells' directories.
+    - Tombstoned members are NOT members: the rewrite re-encodes
       survivors only, so it doubles as a physical purge of the cells,
       and the coverage guard doesn't demand raw vectors for ids the
       corpus already dropped.
-    - Coverage guard (ADVICE r12): the rewrite deletes the cells' ONLY
-      persisted rows, so every member id must be present in
-      ``candidates`` (e.g. the base-build corpus WITHOUT streamed
-      appends would silently shrink the index) — count the uncovered
-      ids and refuse before any destructive step. Bounded work: the
-      anti-join's left side is the named cells' ids."""
+    - Coverage guard: the rewrite replaces the cells' ONLY persisted
+      rows, so every member id must be present in ``candidates`` (e.g.
+      the base-build corpus WITHOUT streamed appends would silently
+      shrink the index) — count the uncovered ids and refuse before
+      any file changes. Bounded work: the anti-join's left side is the
+      named cells' ids."""
     member_ids = (
         _read_index(spark, out_dir)
         .where(F.col("cell").isin(*cells))
         .select("candidate_id")
-        .dropDuplicates(["candidate_id"])
     )
     tomb = load_tombstones(spark, out_dir)
     if tomb is not None:
@@ -604,7 +608,7 @@ def _live_members(
         candidates.select(F.col(id_col).alias("candidate_id")),
         "candidate_id",
         "left_anti",
-    ).count()
+    ).distinct().count()
     if missing:
         raise ValueError(
             f"{caller}: {missing} member id(s) of cell(s) "
@@ -615,6 +619,58 @@ def _live_members(
     return candidates.join(
         member_ids.withColumnRenamed("candidate_id", id_col), id_col, "left_semi"
     )
+
+
+def _rewrite_cells(
+    spark, out_dir, members, cells, coarse, models, config, id_col, vec_col,
+    retire: tuple[int, int] | None = None,
+) -> DataFrame:
+    """The tail of both quantizer-changing cell rewrites: bump the epoch
+    before any file under ``index/`` changes (a stream on the old
+    quantizers then fails its next epoch assert, also after a crash
+    here); ONE ``_swap_cells`` write replaces the files of ``cells`` with
+    ``members`` re-encoded under ``coarse`` (its temp write runs the lazy
+    member read before anything moves; a member routed to another cell
+    is added there); ``retire=(last, drop)`` then relabels ``cell=last``
+    as ``cell=drop``; last, the quantizers are saved. A crash at any
+    step leaves ``config.json`` readable and every live id served once
+    by ``load_ann_index`` (old and new copies collapse in its dedup; a
+    rebuild restores a layout the quantizers describe). Returns the
+    manifest after the rewrite."""
+    index_dir = os.path.join(out_dir, "index")
+    re_encoded = ivfpq_index(
+        members, coarse, models, id_col=id_col, vec_col=vec_col,
+        residual=bool(config["residual"]),
+    )
+    # every pinned file keyed on the first cell, the one that must keep
+    # a file: a merge's dropped slot gets the last cell's files, or goes
+    old_by_cell = {cells[0]: [p for c in cells for p in _cell_files(index_dir, c)]}
+    epoch = _bump_epoch_inplace(out_dir)
+    _swap_cells(
+        re_encoded, os.path.join(out_dir, "_rewrite_tmp"), index_dir, old_by_cell
+    )
+    if retire is not None:
+        _retire_cell(index_dir, *retire)
+    config = dict(config, n_centroids=len(coarse.centers_q), epoch=epoch)
+    _save_quantizers(out_dir, coarse, models, config)
+    return _cell_counts(spark, out_dir)
+
+
+def _retire_cell(index_dir: str, last: int, drop: int) -> None:
+    """Relabel ``cell=last`` as ``cell=drop``, a metadata move (each file
+    keeps its basename and mtime), then remove the emptied directory.
+    With ``drop == last`` the swap removed its rows: checksums are left."""
+    src = os.path.join(index_dir, f"cell={last}")
+    dest = os.path.join(index_dir, f"cell={drop}")
+    if not os.path.isdir(src):  # a cell the build gave no row
+        return
+    os.makedirs(dest, exist_ok=True)
+    for name in os.listdir(src):
+        if drop == last:
+            os.remove(os.path.join(src, name))
+        else:
+            os.rename(os.path.join(src, name), os.path.join(dest, name))
+    os.rmdir(src)
 
 
 def rebalance_cell(
@@ -630,8 +686,8 @@ def rebalance_cell(
     k: int = 5,
     recall_floor: float = 0.8,
 ):
-    """Index lifecycle maintenance (VERDICT r11 #5): split an overgrown
-    cell so streaming appends cannot silently degrade probe routing.
+    """Index lifecycle maintenance: split an overgrown cell so streaming
+    appends cannot silently degrade probe routing.
 
     The overloaded cell (``cell``, default = the manifest argmax) is
     re-fit with a deterministic 2-means on ITS MEMBERS ONLY; the old
@@ -639,12 +695,15 @@ def rebalance_cell(
     as new cell id k — so the coarse quantizer grows by one and ONLY
     the hot cell's members re-encode (one narrow ``ivfpq_index`` pass
     over the members against the new quantizer; every other row's cell
-    and codes are untouched). Bounded-cost contract, IO included (r12,
-    on the cell-partitioned layout): the member read statically prunes
-    to the hot cell's partition directory, and the rewrite deletes that
-    one directory and appends the re-encoded rows — every other cell's
-    files are never read or written. Work tracks the hot cell's size,
-    never the index size.
+    and codes are untouched). Bounded cost, IO included: the member
+    read statically prunes to the hot cell's directory, and one
+    move-in-first ``_swap_cells`` write replaces its files
+    (``_rewrite_cells``, crash-safe at every step); every other cell's
+    files are never read, and written only to add a member the new
+    quantizer routes there. Work tracks the hot cell, never the index.
+
+    ``cell`` must be in [0, k) and hold live members; otherwise a
+    ``ValueError`` is raised before anything is written.
 
     Scope (and why the audit exists): rows OUTSIDE the hot cell keep
     their assignment even if the new sub-centroids would now be
@@ -658,19 +717,17 @@ def rebalance_cell(
     per-cell counts are the measured balance record.
     """
     coarse, models, config = load_ann_quantizers(out_dir)
-    index_dir = os.path.join(out_dir, "index")
-    # manifest pass reads only (candidate_id, cell) — the per-cell
-    # balance record the caller keeps, and the argmax source
-    manifest_before = load_ann_index(spark, out_dir).groupBy("cell").agg(
-        F.count("*").alias("n_vectors")
-    ).localCheckpoint(eager=True)
+    n_cells = len(coarse.centers_q)
+    manifest_before, counts = _counts_now(spark, out_dir)
     if cell is None:
-        top = manifest_before.orderBy(
-            F.desc("n_vectors"), F.asc("cell")
-        ).first()
-        if top is None:
+        if not counts:
             raise ValueError("rebalance_cell: empty index")
-        cell = int(top["cell"])
+        cell = max(counts, key=lambda c: (counts[c], -c))
+    cell = int(cell)
+    if not 0 <= cell < n_cells:
+        raise ValueError(f"rebalance_cell: cell must be in [0, {n_cells}); got {cell}")
+    if not counts.get(cell):
+        raise ValueError(f"rebalance_cell: cell {cell} has no live members")
 
     members = _live_members(
         spark, candidates, out_dir, [cell], id_col, "rebalance_cell"
@@ -680,44 +737,17 @@ def rebalance_cell(
     )
     new_centers = list(coarse.centers_q)
     new_centers[cell] = sub.centers_q[0]
-    new_centers.append(
-        sub.centers_q[1] if len(sub.centers_q) > 1 else sub.centers_q[0]
+    new_centers.append(sub.centers_q[-1])  # B, or A again for a 1-center fit
+    manifest_after = _rewrite_cells(
+        spark, out_dir, members, [cell],
+        DeterministicKMeans(new_centers, q=coarse.q), models, config,
+        id_col, vec_col,
     )
-    new_coarse = DeterministicKMeans(new_centers, q=coarse.q)
-
-    # materialize the re-encode BEFORE touching the hot directory (its
-    # lineage reads that directory); members mostly land in {cell, k}
-    # but full nearest-center assignment may route a few elsewhere —
-    # the append below writes whatever cell directories they need
-    re_encoded = ivfpq_index(
-        members, new_coarse, models, id_col=id_col, vec_col=vec_col,
-        residual=bool(config["residual"]),
-    ).localCheckpoint(eager=True)
-    # epoch bump (r13): any stream that loaded the PRE-rebalance
-    # quantizers now fails its next microbatch's epoch assert instead
-    # of appending stale-encoded rows into the new layout. Bumped
-    # BEFORE the destructive delete (r14, ADVICE r13) so the reject
-    # holds DURING the rewrite and after a mid-rewrite crash.
-    epoch = _bump_epoch_inplace(out_dir)
-    shutil.rmtree(os.path.join(index_dir, f"cell={cell}"))
-    re_encoded.write.mode("append").partitionBy("cell").parquet(index_dir)
-    config = dict(
-        config,
-        n_centroids=len(new_centers),
-        epoch=epoch,
+    audit = _recall_audit(
+        audit_queries, candidates, out_dir,
+        k=k, shortlist=shortlist, n_probe=n_probe,
+        id_col=id_col, vec_col=vec_col, recall_floor=recall_floor,
     )
-    _save_quantizers(out_dir, new_coarse, models, config)
-
-    manifest_after = load_ann_index(spark, out_dir).groupBy("cell").agg(
-        F.count("*").alias("n_vectors")
-    )
-    audit = None
-    if audit_queries is not None:
-        audit = _recall_audit(
-            audit_queries, candidates, out_dir,
-            k=k, shortlist=shortlist, n_probe=n_probe,
-            id_col=id_col, vec_col=vec_col, recall_floor=recall_floor,
-        )
     return manifest_before, manifest_after, audit
 
 
@@ -735,8 +765,8 @@ def merge_cells(
     k: int = 5,
     recall_floor: float = 0.8,
 ):
-    """Index lifecycle maintenance, the INVERSE of ``rebalance_cell``
-    (VERDICT r13 #5): repeated splits only ever grow the coarse
+    """Index lifecycle maintenance, the INVERSE of ``rebalance_cell``:
+    repeated splits only ever grow the coarse
     quantizer, so underfull cells accumulate — each one costs a probe
     slot and a directory open while routing almost no vectors. Merge
     the two coldest cells (defaults: the two manifest-minima, ties to
@@ -749,16 +779,14 @@ def merge_cells(
     - the DROPPED slot ``max(a, b)`` is swap-removed: the LAST
       centroid moves into it and the list shrinks by one — the last
       cell's members keep their codes bit-for-bit (residuals reference
-      the same moved centroid) and only their DIRECTORY is renamed
-      ``cell=k-1`` → ``cell=drop``, a metadata move, no re-encode;
-    - ONLY the two merged cells' members re-encode (one narrow
-      ``ivfpq_index`` pass against the new quantizer — full
-      nearest-center assignment, so a few may route elsewhere, exactly
-      like the split); every other cell's files are never read or
-      written;
-    - the epoch bumps BEFORE the destructive steps (same reject
-      discipline as build/rebalance: streams encoding under the old
-      k-center quantizer would write the dropped cell id).
+      the same moved centroid) and only their files move
+      ``cell=k-1`` → ``cell=drop`` (same basename, same mtime), a
+      metadata move, no re-encode;
+    - ONLY the two merged cells' members re-encode (full nearest-center
+      assignment, so a few may route elsewhere, like the split) and
+      replace the two cells' files through the split's ``_rewrite_cells``
+      (epoch bump first, one move-in-first ``_swap_cells`` write; the
+      last cell's move runs after it); no other cell's file is read.
 
     Same coverage guard as the split (every surviving member of the
     two cells must be present in ``candidates``), same tombstone
@@ -772,13 +800,7 @@ def merge_cells(
     n_cells = len(coarse.centers_q)
     if n_cells < 2:
         raise ValueError("merge_cells: need at least 2 cells to merge")
-    index_dir = os.path.join(out_dir, "index")
-    manifest_before = load_ann_index(spark, out_dir).groupBy("cell").agg(
-        F.count("*").alias("n_vectors")
-    ).localCheckpoint(eager=True)
-    counts = {
-        int(r["cell"]): int(r["n_vectors"]) for r in manifest_before.collect()
-    }
+    manifest_before, counts = _counts_now(spark, out_dir)
     if cell_a is None or cell_b is None:
         cold = sorted(range(n_cells), key=lambda x: (counts.get(x, 0), x))
         cell_a, cell_b = cold[0], cold[1]
@@ -809,39 +831,18 @@ def merge_cells(
     new_centers = list(coarse.centers_q)
     new_centers[keep] = merged
     last = n_cells - 1
-    if drop != last:
-        new_centers[drop] = new_centers[last]
+    new_centers[drop] = new_centers[last]
     new_centers.pop()
-    new_coarse = DeterministicKMeans(new_centers, q=coarse.q)
-
-    # materialize the re-encode BEFORE touching the directories (its
-    # lineage reads them)
-    re_encoded = ivfpq_index(
-        members, new_coarse, models, id_col=id_col, vec_col=vec_col,
-        residual=bool(config["residual"]),
-    ).localCheckpoint(eager=True)
-    epoch = _bump_epoch_inplace(out_dir)
-    shutil.rmtree(os.path.join(index_dir, f"cell={keep}"), ignore_errors=True)
-    shutil.rmtree(os.path.join(index_dir, f"cell={drop}"), ignore_errors=True)
-    if drop != last and os.path.isdir(os.path.join(index_dir, f"cell={last}")):
-        os.rename(
-            os.path.join(index_dir, f"cell={last}"),
-            os.path.join(index_dir, f"cell={drop}"),
-        )
-    re_encoded.write.mode("append").partitionBy("cell").parquet(index_dir)
-    config = dict(config, n_centroids=len(new_centers), epoch=epoch)
-    _save_quantizers(out_dir, new_coarse, models, config)
-
-    manifest_after = load_ann_index(spark, out_dir).groupBy("cell").agg(
-        F.count("*").alias("n_vectors")
+    manifest_after = _rewrite_cells(
+        spark, out_dir, members, [keep, drop],
+        DeterministicKMeans(new_centers, q=coarse.q), models, config,
+        id_col, vec_col, retire=(last, drop),
     )
-    audit = None
-    if audit_queries is not None:
-        audit = _recall_audit(
-            audit_queries, candidates, out_dir,
-            k=k, shortlist=shortlist, n_probe=n_probe,
-            id_col=id_col, vec_col=vec_col, recall_floor=recall_floor,
-        )
+    audit = _recall_audit(
+        audit_queries, candidates, out_dir,
+        k=k, shortlist=shortlist, n_probe=n_probe,
+        id_col=id_col, vec_col=vec_col, recall_floor=recall_floor,
+    )
     return manifest_before, manifest_after, audit
 
 
@@ -988,14 +989,10 @@ def compact_index_cells(
     advance (a concurrent stream keeps appending validly; its new
     files simply become the next compaction's input).
 
-    Crash-safe ordering without a transaction log: the compacted files
-    are written, then MOVED IN (fresh part-UUID names cannot collide),
-    and the old files are deleted after — a crash between the steps
-    leaves duplicate byte-identical rows, which ``load_ann_index``'s
-    deterministic dedup collapses (the same at-least-once-write +
-    idempotent-read pairing the streaming appends rely on).
+    Crash-safe without a transaction log (``_swap_cells``): a crash
+    leaves byte-identical duplicates the loader's dedup collapses.
 
-    Concurrency scope (r14, ADVICE r13): the safety above is
+    Concurrency scope: the safety above is
     WRITER-side. A concurrent READER (``load_ann_index`` /
     ``ann_index_search``) that planned its file list before the
     ``os.remove`` step can fail mid-job with missing-file errors —

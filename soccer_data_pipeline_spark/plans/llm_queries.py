@@ -1615,9 +1615,11 @@ def ann_index_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
       again with epoch 2 — the full grow-and-shrink lifecycle under
       the same stale-stream reject discipline.
 
-    Scale shape: the one-time rebalance reads/writes ONLY the hot
-    cell's partition directory and the merge only the two coldest
-    cells' (plus one directory rename for the swapped-in last slot);
+    Scale shape: the one-time rebalance reads ONLY the hot cell's
+    partition directory and the merge only the two coldest cells'; each
+    replaces those cells' files through one crash-safe move-in-first
+    swap (the merge then moves the last cell's files to the dropped
+    slot);
     per-call work is the k-row manifest pass plus the served search,
     whose index scan statically prunes to the probed cells. The gates
     fold to one broadcast row.

@@ -1336,3 +1336,210 @@ def test_streaming_index_deletes_consume_decision_ledger(spark, tmp_path):
         int(r.candidate_id) for r in load_tombstones(spark, out_dir).collect()
     } == dropped
     assert load_ann_index(spark, out_dir).count() == c.count() - len(dropped)
+
+
+def test_swap_cells_adds_rows_for_a_cell_outside_old_by_cell(spark, tmp_path):
+    """``_swap_cells`` moves in every cell its write produced: a row for
+    a cell outside ``old_by_cell`` lands in that cell (a new directory
+    here) and no file is removed there; the pinned cell is replaced and
+    a cell the frame does not name keeps its files."""
+    import glob
+
+    from soccer_data_pipeline_spark.index_pipeline import (
+        _cell_files,
+        _swap_cells,
+    )
+
+    schema = "candidate_id bigint, v int, cell int"
+    data_dir = str(tmp_path / "store")
+    spark.createDataFrame(
+        [(1, 10, 0), (2, 20, 0), (3, 30, 1)], schema
+    ).write.partitionBy("cell").parquet(data_dir)
+    cell1 = {p: os.stat(p).st_mtime_ns for p in _cell_files(data_dir, 1)}
+
+    moved = _swap_cells(
+        spark.createDataFrame([(1, 11, 0), (4, 40, 5)], schema),
+        str(tmp_path / "tmp"), data_dir, {0: _cell_files(data_dir, 0)},
+    )
+    assert moved == {0: 1, 5: 1}
+    assert {p: os.stat(p).st_mtime_ns for p in _cell_files(data_dir, 1)} == cell1
+    rows = spark.read.schema(schema).parquet(data_dir).collect()
+    assert sorted(map(tuple, rows)) == [(1, 11, 0), (3, 30, 1), (4, 40, 5)]
+    assert not glob.glob(str(tmp_path / "tmp" / "*"))
+
+
+def test_fit_pq_codebooks_residual_equals_literal_centers_reference(spark):
+    """The residual training sample is x − centroid[cell] with the
+    centers held as data, taken after the seeded sample: on a corpus of
+    the ``ann_serve`` shape (10,000 clustered 64-d vectors, 16 cells,
+    m=16 residual, so the sample path runs) the codebooks are
+    bit-identical to a reference fit on residuals computed over the
+    whole corpus with the centers as one SQL double literal."""
+    from perfbench.gen import clustered_vectors
+    from soccer_data_pipeline_spark.operators.similarity import (
+        _vectors,
+        fit_ivfpq_quantizers,
+        fit_pq_codebooks,
+    )
+
+    vecs, _ = clustered_vectors(10_000, 901)
+    corpus = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+        "vec_id bigint, embedding array<float>",
+    )
+    coarse, models = fit_ivfpq_quantizers(
+        corpus, n_centroids=16, m=16, n_codes=16, residual=True
+    )
+    centers = "array({})".format(",".join(
+        "array({})".format(",".join(repr(float(x)) + "D" for x in c))
+        for c in coarse.clusterCenters()
+    ))
+    literal = coarse.with_cell(
+        _vectors(corpus, "vec_id", "embedding", norm=False), vec_col="cv"
+    ).select(
+        "candidate_id",
+        F.expr(
+            f"zip_with(cv, element_at({centers}, cell + 1), (a, b) -> a - b)"
+        ).alias("cv"),
+    )
+    reference = fit_pq_codebooks(literal, None, m=16, n_codes=16, sub=4)
+    assert [mod.centers_q for mod in models] == [
+        mod.centers_q for mod in reference
+    ]
+
+
+def test_rebalance_rejects_bad_cell_before_any_write(spark, tmp_path):
+    """A ``cell`` outside [0, k) or with no live member raises
+    ``ValueError`` before anything is written: every index file keeps
+    its mtime and the epoch does not move."""
+    import pytest
+
+    from soccer_data_pipeline_spark.index_pipeline import (
+        delete_ids,
+        purge_deleted,
+    )
+
+    _, c = _sides(spark)
+    out_dir = str(tmp_path / "ann")
+    run_ann_index_build(c, out_dir, n_centroids=4, m=16, n_codes=8)
+    raw = spark.read.parquet(os.path.join(out_dir, "index"))
+    cell0 = [int(r.candidate_id) for r in raw.where(F.col("cell") == 0).collect()]
+    delete_ids(spark, out_dir, cell0)
+    purge_deleted(spark, out_dir)
+    files = {p: os.stat(p).st_mtime_ns for p in _all_index_files(out_dir)}
+    epoch = load_ann_quantizers(out_dir)[2]["epoch"]
+
+    for cell, match in ((-1, "must be in"), (4, "must be in"),
+                        (0, "no live members")):
+        with pytest.raises(ValueError, match=match):
+            rebalance_cell(spark, c, out_dir, cell=cell)
+        assert {
+            p: os.stat(p).st_mtime_ns for p in _all_index_files(out_dir)
+        } == files
+        assert load_ann_quantizers(out_dir)[2]["epoch"] == epoch
+
+
+def _assert_live_ids_once(spark, out_dir, ids):
+    """After an injected crash: ``config.json`` parses and the loader
+    serves every live id exactly once."""
+    import json
+
+    with open(os.path.join(out_dir, "config.json")) as fh:
+        assert json.load(fh)["epoch"] >= 1
+    served = [
+        int(r.candidate_id)
+        for r in load_ann_index(spark, out_dir).select("candidate_id").collect()
+    ]
+    assert sorted(served) == sorted(ids)
+
+
+def test_rebalance_crash_mid_swap_keeps_every_member(
+    spark, tmp_path, monkeypatch
+):
+    """A split that dies inside its swap (new files moved in, the second
+    old file of the hot cell not yet removed) loses no member."""
+    import pytest
+
+    _, c = _sides(spark)
+    out_dir = str(tmp_path / "ann")
+    run_ann_index_build(c, out_dir, n_centroids=4, m=16, n_codes=8)
+    ids = [int(r.vec_id) for r in c.select("vec_id").collect()]
+    calls = _failing_second_remove(monkeypatch, out_dir)
+    with pytest.raises(OSError, match="injected crash"):
+        rebalance_cell(spark, c, out_dir)
+    monkeypatch.undo()
+    assert len(calls) == 2
+    _assert_live_ids_once(spark, out_dir, ids)
+
+
+def test_merge_crash_mid_swap_keeps_every_member(spark, tmp_path, monkeypatch):
+    """A merge that dies inside its swap loses no member of the merged
+    cells, and the last cell (not yet relabeled) is still served."""
+    import pytest
+
+    from soccer_data_pipeline_spark.index_pipeline import merge_cells
+
+    _, c = _sides(spark)
+    out_dir = str(tmp_path / "ann")
+    run_ann_index_build(c, out_dir, n_centroids=8, m=16, n_codes=8)
+    ids = [int(r.vec_id) for r in c.select("vec_id").collect()]
+    calls = _failing_second_remove(monkeypatch, out_dir)
+    with pytest.raises(OSError, match="injected crash"):
+        merge_cells(spark, c, out_dir, cell_a=0, cell_b=1)
+    monkeypatch.undo()
+    assert len(calls) == 2
+    assert os.path.isdir(os.path.join(out_dir, "index", "cell=7"))
+    _assert_live_ids_once(spark, out_dir, ids)
+
+
+def test_merge_crash_before_last_cell_move_keeps_every_member(
+    spark, tmp_path, monkeypatch
+):
+    """A merge that dies after its swap, before the last cell's first
+    file moves to the dropped slot, loses no member: the merged cells
+    hold their re-encoded rows and ``cell=last`` still holds its own."""
+    import pytest
+
+    from soccer_data_pipeline_spark import index_pipeline
+    from soccer_data_pipeline_spark.index_pipeline import merge_cells
+
+    _, c = _sides(spark)
+    out_dir = str(tmp_path / "ann")
+    run_ann_index_build(c, out_dir, n_centroids=8, m=16, n_codes=8)
+    ids = [int(r.vec_id) for r in c.select("vec_id").collect()]
+    last = os.path.join(out_dir, "index", "cell=7")
+    last_files = sorted(os.listdir(last))
+    real = os.rename
+
+    def rename(src, *a, **kw):
+        if str(src).startswith(last + os.sep):
+            raise OSError("injected crash")
+        return real(src, *a, **kw)
+
+    monkeypatch.setattr(index_pipeline.os, "rename", rename)
+    with pytest.raises(OSError, match="injected crash"):
+        merge_cells(spark, c, out_dir, cell_a=0, cell_b=1)
+    monkeypatch.undo()
+    assert sorted(os.listdir(last)) == last_files
+    _assert_live_ids_once(spark, out_dir, ids)
+
+
+def test_rebalance_and_merge_job_counts(spark, tmp_path):
+    """Jobs the split and the merge submit on this index (8 cells; the
+    merge is the default pick after the split): 16 and 11. A checkpoint
+    of the manifest and of the re-encode, a second read of the
+    checkpointed manifest, a member-id dedup and an append into
+    ``index/`` in their place cost 21 and 14."""
+    from soccer_data_pipeline_spark.index_pipeline import merge_cells
+
+    _, c = _sides(spark)
+    out_dir = str(tmp_path / "ann")
+    run_ann_index_build(c, out_dir, n_centroids=8, m=16, n_codes=8,
+                        residual=True)
+    split = _jobs_submitted(
+        spark, "rebalance", lambda: rebalance_cell(spark, c, out_dir)
+    )
+    merge = _jobs_submitted(
+        spark, "merge", lambda: merge_cells(spark, c, out_dir)
+    )
+    assert (split, merge) == (16, 11)
