@@ -64,8 +64,13 @@ import glob
 import json
 import os
 import shutil
+import uuid
+from collections import Counter
 from dataclasses import dataclass
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -156,38 +161,35 @@ def _move_in(src: str, dest: str) -> int:
     return len(new)
 
 
-def _swap_files(df: DataFrame, tmp: str, dest: str, old: list[str]) -> int:
-    """Replace the PINNED files ``old`` with ``df``'s rows in directory
-    ``dest``, move-in-first: write ``df`` to ``tmp``, move the new files
-    into ``dest``, only then remove ``old``. A crash at any point leaves
-    every row readable (at worst twice, which the loaders' dedup
-    collapses), and a file another writer adds to ``dest`` meanwhile
-    is never touched. Returns the number of files moved in."""
-    shutil.rmtree(tmp, ignore_errors=True)
-    df.write.mode("overwrite").parquet(tmp)
-    n = _move_in(tmp, dest)
-    for p in old:
-        os.remove(p)
-    shutil.rmtree(tmp, ignore_errors=True)
-    return n
-
-
 def _cell_files(data_dir: str, c: int) -> list[str]:
     return sorted(glob.glob(os.path.join(data_dir, f"cell={c}", "*.parquet")))
+
+
+def _remove(paths: list[str]) -> None:
+    """Remove each file of ``paths`` and then its ``.<name>.crc``
+    checksum, when a Spark write left one beside it."""
+    for p in paths:
+        os.remove(p)
+        crc = os.path.join(os.path.dirname(p), f".{os.path.basename(p)}.crc")
+        if os.path.exists(crc):
+            os.remove(crc)
 
 
 def _swap_cells(
     df: DataFrame, tmp: str, data_dir: str, old_by_cell: dict[int, list[str]]
 ) -> dict[int, int]:
-    """The ``cell=``-partitioned twin of ``_swap_files``: ONE
-    ``partitionBy("cell")`` write (one file per cell), then EVERY cell the
-    write produced is moved in before the first PINNED file of
-    ``old_by_cell`` is removed, so the move-in-first argument holds
-    across cells, also for a row whose cell changed. Only pinned files
-    are removed: a row for a cell outside ``old_by_cell`` is added to it.
-    A cell of ``old_by_cell`` left without rows gets one zero-row file
-    (one more write for all such cells): a store with no file left has
-    no schema. Returns {cell: n_moved}."""
+    """Replace the PINNED files ``old_by_cell`` with ``df``'s rows in the
+    ``cell=``-partitioned store ``data_dir``, move-in-first: ONE
+    ``partitionBy("cell")`` write to ``tmp`` (one file per cell), then
+    EVERY cell the write produced is moved in before the first pinned
+    file is removed, so a crash at any point leaves every row readable
+    (at worst twice, which the loaders' dedup collapses), also for a row
+    whose cell changed. Only pinned files, and their ``.crc`` checksums,
+    are removed: a file another writer adds meanwhile is never touched,
+    and a row for a cell outside ``old_by_cell`` is added to it. A cell
+    of ``old_by_cell`` left without rows gets one zero-row file (one
+    more write for all such cells): a store with no file left has no
+    schema. Returns {cell: n_moved}."""
     shutil.rmtree(tmp, ignore_errors=True)
     df.repartition("cell").write.partitionBy("cell").parquet(tmp)
     written = {int(d.rsplit("=", 1)[1]) for d in glob.glob(os.path.join(tmp, "cell=*"))}
@@ -202,8 +204,7 @@ def _swap_cells(
     moved = {
         c: _move_in(d, os.path.join(data_dir, f"cell={c}")) for c, d in src.items()
     }
-    for p in [p for old in old_by_cell.values() for p in old]:
-        os.remove(p)
+    _remove([p for old in old_by_cell.values() for p in old])
     shutil.rmtree(tmp, ignore_errors=True)
     return moved
 
@@ -212,34 +213,61 @@ def _tombstones_dir(out_dir: str) -> str:
     return os.path.join(out_dir, "tombstones")
 
 
+def _tombstone_files(out_dir: str) -> list[str]:
+    return sorted(glob.glob(os.path.join(_tombstones_dir(out_dir), "*.parquet")))
+
+
 _TOMBSTONE_SCHEMA = "candidate_id bigint"
 
 
-def load_tombstones(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    """The deduped tombstoned candidate ids, or None when no deletes
-    are pending. Kilobytes-per-million-ids parquet — the serving path
-    broadcasts it into a left_anti join."""
-    d = _tombstones_dir(out_dir)
-    if not glob.glob(os.path.join(d, "*.parquet")):
-        return None
-    return (
-        spark.read.schema(_TOMBSTONE_SCHEMA)
-        .parquet(d)
-        .dropDuplicates(["candidate_id"])
+def _tombstone_ids(files: list[str]) -> np.ndarray:
+    """The distinct ids of the tombstone ``files``, sorted. A null id
+    is dropped: it never matched an anti-join."""
+    ids = pq.read_table(files, columns=["candidate_id"]).column(0)
+    return np.unique(ids.drop_null().to_numpy())
+
+
+def _write_ids(d: str, ids: np.ndarray) -> None:
+    """Publish ``ids`` as one new parquet file in directory ``d``. It is
+    written under a dot-prefixed temp name, which no ``*.parquet`` glob
+    and no Spark or pyarrow reader lists, then renamed into place, so a
+    reader sees the whole file or none of it."""
+    os.makedirs(d, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(d, f".{name}")
+    pq.write_table(pa.table({"candidate_id": pa.array(ids, pa.int64())}), tmp)
+    os.replace(tmp, os.path.join(d, name))
+
+
+def _ids_frame(spark: SparkSession, ids: np.ndarray) -> DataFrame:
+    return spark.createDataFrame(
+        pa.table({"candidate_id": pa.array(ids, pa.int64())}), _TOMBSTONE_SCHEMA
     )
+
+
+def load_tombstones(spark: SparkSession, out_dir: str) -> DataFrame | None:
+    """The distinct tombstoned candidate ids, or None when no deletes are
+    pending. The store is kilobytes of ids per thousand deletes: it is
+    read on the driver with pyarrow (no Spark job) and handed to Spark as
+    a local relation, which the serving path broadcasts into a left_anti
+    join without a job."""
+    files = _tombstone_files(out_dir)
+    return _ids_frame(spark, _tombstone_ids(files)) if files else None
 
 
 def delete_ids(spark: SparkSession, out_dir: str, ids) -> int:
     """Delete candidate ids from the persisted index (VERDICT r13 #1 —
     the corpus build DROPS documents, but without this the index serves
-    them forever): append their ids to an append-only tombstone store;
-    every read path (``load_ann_index`` → ``ann_index_search``)
-    anti-joins the tombstones below its dedup, so deleted ids stop
-    being served IMMEDIATELY and idempotently (re-deleting an id is a
-    no-op after the read-side dedup).
+    them forever): append their distinct ids to an append-only tombstone
+    store as one new file; every read path (``load_ann_index`` →
+    ``ann_index_search``) anti-joins the tombstones below its dedup, so
+    deleted ids stop being served IMMEDIATELY and idempotently
+    (re-deleting an id is a no-op after the read-side dedup).
 
     ``ids`` is a list of ints or a single-column DataFrame of ids (any
-    column name — e.g. the corpus build's dropped ``vec_id`` s).
+    column name — e.g. the corpus build's dropped ``vec_id`` s). A
+    DataFrame is collected once; a list submits no Spark job. Null ids
+    are skipped.
 
     Contract notes:
     - O(|ids|) writer cost — no index file is touched; the physical
@@ -252,19 +280,13 @@ def delete_ids(spark: SparkSession, out_dir: str, ids) -> int:
       ``run_ann_index_build`` rebuild declares fresh truth (which
       clears the tombstone store).
 
-    Returns the number of ids written by this call."""
+    Returns the number of distinct ids written by this call."""
     if isinstance(ids, DataFrame):
-        df = ids.select(
-            F.col(ids.columns[0]).cast("long").alias("candidate_id")
-        ).dropDuplicates(["candidate_id"])
-        n = df.count()
-    else:  # deduped on the driver: one write job, none for no ids
-        uniq = sorted({int(i) for i in ids})
-        df = spark.createDataFrame([(i,) for i in uniq], "candidate_id bigint")
-        n = len(uniq)
-    if n:
-        df.coalesce(1).write.mode("append").parquet(_tombstones_dir(out_dir))
-    return n
+        ids = [r[0] for r in ids.select(F.col(ids.columns[0]).cast("long")).collect()]
+    uniq = np.unique(np.array([int(i) for i in ids if i is not None], np.int64))
+    if len(uniq):
+        _write_ids(_tombstones_dir(out_dir), uniq)
+    return len(uniq)
 
 
 def purge_deleted(
@@ -274,11 +296,14 @@ def purge_deleted(
 ) -> dict[int, int]:
     """Physically reclaim tombstoned rows (the deletion path's
     compaction twin): rewrite ONLY the cells that hold tombstoned rows
-    — one semi-join scan counts the purged rows per cell, then ONE
-    ``_swap_cells`` write statically pruned to those cells drops the
-    tombstoned ids (Spark jobs constant in the cell count); untouched
-    cells are never read or written. A crash at any point is safe:
-    duplicates collapse in the loader's dedup and the tombstones stay.
+    — ONE collect of the semi-joined rows' ``cell`` column (at most the
+    stored copies of the tombstoned ids) gives the purged rows per cell,
+    then ONE ``_swap_cells`` write statically pruned to those cells
+    drops the tombstoned ids (Spark jobs constant in the cell count).
+    The counting scan reads the id and cell columns of every cell; the
+    rewrite never reads or writes an untouched cell. A crash at any
+    point is safe: duplicates collapse in the loader's dedup and the
+    tombstones stay.
 
     The tombstone store is PRESERVED by default — compacted to one
     deduped file, not cleared — because ``delete_ids``'s contract is
@@ -294,47 +319,44 @@ def purge_deleted(
     unchanged; a concurrent append stream stays valid), and the same
     reader-race scope — don't race reads against the file removals.
 
-    Concurrency: the tombstone FILE LIST is pinned once, up front; the
-    anti-join and the end-of-purge store compaction read exactly those
-    files, and only they are removed, so a tombstone a concurrent
-    ``run_streaming_index_deletes`` appends meanwhile stays in force
-    and is folded by the NEXT purge. ``clear_tombstones=True`` removes
-    the whole store and keeps its stricter quiesced-writers contract.
+    Concurrency: the tombstone FILE LIST is pinned once, up front, and
+    its ids are read once on the driver; the anti-join and the store
+    compaction use exactly those ids, and only the pinned files are
+    removed, so a tombstone a concurrent ``run_streaming_index_deletes``
+    appends meanwhile stays in force and is folded by the NEXT purge.
+    The compaction publishes its one file before it removes the pinned
+    ones (move-in-first, like ``_swap_cells``). ``clear_tombstones=True``
+    removes the whole store and keeps its stricter quiesced-writers
+    contract.
 
     Returns {cell: n_rows_purged}."""
-    d = _tombstones_dir(out_dir)
-    old_t = sorted(glob.glob(os.path.join(d, "*.parquet")))
+    old_t = _tombstone_files(out_dir)
     if not old_t:
         return {}
-    tomb = spark.read.schema(_TOMBSTONE_SCHEMA).parquet(*old_t).dropDuplicates()
+    ids = _tombstone_ids(old_t)
+    tomb = F.broadcast(_ids_frame(spark, ids))
     index_dir = os.path.join(out_dir, "index")
-    result = {
-        int(r["cell"]): int(r["count"])
-        for r in _read_index(spark, out_dir)
-        .join(F.broadcast(tomb), "candidate_id", "left_semi")
-        .groupBy("cell")
-        .count()
-        .collect()
-    }
-    tmp = os.path.join(out_dir, "_purge_tmp")
-    old_by_cell = {c: _cell_files(index_dir, c) for c in result}
-    # raw read (NOT the deduped loader), listed after the pin: the
-    # stored multiset of SURVIVING rows is preserved byte-for-byte
-    kept = (
-        _read_index(spark, out_dir)
-        .where(F.col("cell").isin(sorted(result)))
-        .join(F.broadcast(tomb), "candidate_id", "left_anti")
-    )
-    if old_by_cell:
-        _swap_cells(kept, tmp, index_dir, old_by_cell)
+    hits = _read_index(spark, out_dir).join(tomb, "candidate_id", "left_semi")
+    cells = Counter(int(r[0]) for r in hits.select("cell").collect())
+    result = dict(sorted(cells.items()))
+    if result:
+        old_by_cell = {c: _cell_files(index_dir, c) for c in result}
+        # raw read (NOT the deduped loader), listed after the pin: the
+        # stored multiset of SURVIVING rows is preserved byte-for-byte
+        kept = (
+            _read_index(spark, out_dir)
+            .where(F.col("cell").isin(sorted(result)))
+            .join(tomb, "candidate_id", "left_anti")
+        )
+        _swap_cells(kept, os.path.join(out_dir, "_purge_tmp"), index_dir, old_by_cell)
     if clear_tombstones:
-        shutil.rmtree(d, ignore_errors=True)
+        shutil.rmtree(_tombstones_dir(out_dir), ignore_errors=True)
     elif len(old_t) > 1:
-        # compact the store: one deduped file replaces the PINNED
-        # append pile (old_t from function entry — a concurrently
-        # appended file is neither folded nor removed here)
-        _swap_files(tomb.coalesce(1), tmp, d, old_t)
-    return dict(sorted(result.items()))
+        # compact the store: the pinned pile's ids as one file, published
+        # before the pinned files go (a file appended meanwhile stays)
+        _write_ids(_tombstones_dir(out_dir), ids)
+        _remove(old_t)
+    return result
 
 
 def load_ann_index(
@@ -659,7 +681,7 @@ def _rewrite_cells(
 def _retire_cell(index_dir: str, last: int, drop: int) -> None:
     """Relabel ``cell=last`` as ``cell=drop``, a metadata move (each file
     keeps its basename and mtime), then remove the emptied directory.
-    With ``drop == last`` the swap removed its rows: checksums are left."""
+    With ``drop == last`` the swap removed its rows: what is left goes."""
     src = os.path.join(index_dir, f"cell={last}")
     dest = os.path.join(index_dir, f"cell={drop}")
     if not os.path.isdir(src):  # a cell the build gave no row

@@ -410,10 +410,16 @@ def two_iter_lloyd_centers(
 def _round_half_up(x: float) -> int:
     """Exact replica of Spark's ``F.round(double)`` (BigDecimal
     HALF_UP: halves away from zero) for the |x| ≤ 1e4 grid range —
-    the one step of local Lloyd that is not integer arithmetic."""
+    the one step of local Lloyd that is not integer arithmetic.
+
+    The fraction ``|x| − floor(|x|)`` is exact, so it is compared with
+    0.5 on the double's own value; ``floor(x + 0.5)`` is not exact
+    (0.49999999999999994 + 0.5 rounds to 1.0)."""
     import math
 
-    return math.floor(x + 0.5) if x >= 0 else -math.floor(-x + 0.5)
+    f = math.floor(abs(x))
+    n = f + (abs(x) - f >= 0.5)
+    return n if x >= 0 else -n
 
 
 def _fit_local(ids_xq, k: int, n_iters: int, init: str, q: int) -> DeterministicKMeans:

@@ -753,6 +753,8 @@ def test_purge_deleted_bounded_rewrite_preserves_tombstones(spark, tmp_path):
     PRESERVED by default (compacted) — a checkpoint-lost replay that
     re-appends a purged id must still find it hidden (review r14) —
     and cleared only with the explicit opt-in flag."""
+    import glob
+
     from soccer_data_pipeline_spark.index_pipeline import (
         delete_ids,
         load_tombstones,
@@ -808,6 +810,14 @@ def test_purge_deleted_bounded_rewrite_preserves_tombstones(spark, tmp_path):
     assert served_before == sorted(
         map(tuple, ann_index_search(q, c, out_dir, k=5, n_probe=8).collect())
     )
+    # each removed file's checksum went with it
+    for d in glob.glob(os.path.join(out_dir, "index", "cell=*")):
+        names = set(os.listdir(d))
+        orphans = [
+            n for n in names
+            if n.endswith(".crc") and n[1:-len(".crc")] not in names
+        ]
+        assert not orphans, (d, orphans)
 
     # the replay worst case the standing store exists for: a purged
     # id's row re-appended (index append committed, checkpoint lost)
@@ -890,11 +900,12 @@ def test_served_search_collects_the_batch_once_and_probes_with_no_job(
     """A served search collects its query batch once and ranks the probed
     cells on the driver: ``probe_cell_ids`` on a collected batch submits
     no Spark job, and one ``ann_index_search(...).collect()`` with
-    tombstones pending submits 9 jobs. Before the query side became a
+    tombstones pending submits 8 jobs. Before the query side became a
     local relation it submitted 12: two for the probe's distinct
     collect and one schema-inference job each for the index and
     tombstone reads, where now one collect of the batch serves both the
-    probe and the search."""
+    probe and the search. A tombstone store read with Spark cost one
+    more job (9), where the driver-read ids are a local relation."""
     from soccer_data_pipeline_spark.index_pipeline import delete_ids
     from soccer_data_pipeline_spark.operators.similarity import (
         collect_queries,
@@ -917,7 +928,147 @@ def test_served_search_collects_the_batch_once_and_probes_with_no_job(
         spark, "served-search",
         lambda: ann_index_search(q, c, out_dir, k=5, shortlist=50,
                                  n_probe=4).collect(),
-    ) == 9
+    ) == 8
+
+
+def _tombstone_set(spark, out_dir):
+    from soccer_data_pipeline_spark.index_pipeline import load_tombstones
+
+    tomb = load_tombstones(spark, out_dir)
+    return sorted(int(r.candidate_id) for r in tomb.collect())
+
+
+def _tombstone_files(out_dir):
+    import glob
+
+    return sorted(glob.glob(os.path.join(out_dir, "tombstones", "*.parquet")))
+
+
+def test_delete_and_purge_job_counts(spark, tmp_path):
+    """A delete of a list of ids submits no Spark job, and a purge of a
+    store of two tombstone files submits 5 or fewer (10 when the store
+    was read, deduped, counted per cell and compacted with Spark)."""
+    from soccer_data_pipeline_spark.index_pipeline import (
+        delete_ids,
+        purge_deleted,
+    )
+
+    _, c = _sides(spark)
+    out_dir = str(tmp_path / "ann")
+    run_ann_index_build(c, out_dir, n_centroids=8, m=16, n_codes=8)
+    doomed = _one_id_per_cell(spark, out_dir, 4)
+    assert _jobs_submitted(
+        spark, "delete-list", lambda: delete_ids(spark, out_dir, doomed[:2])
+    ) == 0
+    delete_ids(spark, out_dir, doomed[2:])
+    assert len(_tombstone_files(out_dir)) == 2
+    purged = {}
+    jobs = _jobs_submitted(
+        spark, "purge-two-files",
+        lambda: purged.update(purge_deleted(spark, out_dir)),
+    )
+    assert jobs <= 5, jobs
+    assert sum(purged.values()) == 4
+    assert len(_tombstone_files(out_dir)) == 1
+    assert _tombstone_set(spark, out_dir) == sorted(doomed)
+
+
+def test_delete_ids_dataframe_counts_distinct_non_null_ids(spark, tmp_path):
+    """A DataFrame of ids with duplicates and a null writes, and counts,
+    each distinct non-null id once."""
+    import pyarrow.parquet as pq
+
+    from soccer_data_pipeline_spark.index_pipeline import delete_ids
+
+    _, c = _sides(spark)
+    out_dir = str(tmp_path / "ann")
+    run_ann_index_build(c, out_dir, n_centroids=4, m=16, n_codes=8)
+    ids = spark.createDataFrame(
+        [(12,), (11,), (12,), (None,), (11,), (13,)], "doc bigint"
+    )
+    assert delete_ids(spark, out_dir, ids) == 3
+    (f,) = _tombstone_files(out_dir)
+    stored = pq.read_table(f).column("candidate_id").to_pylist()
+    assert sorted(stored) == [11, 12, 13]
+    assert _tombstone_set(spark, out_dir) == [11, 12, 13]
+    assert load_ann_index(spark, out_dir).where(
+        F.col("candidate_id").isin(11, 12, 13)
+    ).count() == 0
+
+
+def test_delete_ids_crash_before_publish_keeps_the_previous_set(
+    spark, tmp_path, monkeypatch
+):
+    """A delete that dies at the rename publishing its file adds no
+    ``*.parquet`` file: the store loads the set it held before, and the
+    next delete lands."""
+    import pytest
+
+    from soccer_data_pipeline_spark import index_pipeline
+    from soccer_data_pipeline_spark.index_pipeline import delete_ids
+
+    _, c = _sides(spark)
+    out_dir = str(tmp_path / "ann")
+    run_ann_index_build(c, out_dir, n_centroids=4, m=16, n_codes=8)
+    delete_ids(spark, out_dir, [20, 21])
+    files = _tombstone_files(out_dir)
+
+    def replace(*a, **kw):
+        raise OSError("injected crash")
+
+    monkeypatch.setattr(index_pipeline.os, "replace", replace)
+    with pytest.raises(OSError, match="injected crash"):
+        delete_ids(spark, out_dir, [22, 23])
+    monkeypatch.undo()
+    assert _tombstone_files(out_dir) == files
+    assert _tombstone_set(spark, out_dir) == [20, 21]
+    assert load_ann_index(spark, out_dir).where(
+        F.col("candidate_id").isin(22, 23)
+    ).count() == 2
+
+    delete_ids(spark, out_dir, [22])
+    assert _tombstone_set(spark, out_dir) == [20, 21, 22]
+
+
+def test_purge_crash_after_compacted_store_publishes_converges(
+    spark, tmp_path, monkeypatch
+):
+    """A purge that dies after its compacted tombstone file is published,
+    before the pinned files are removed, still loads every tombstoned
+    id; the next purge leaves the store as one file of the same ids."""
+    import pytest
+
+    from soccer_data_pipeline_spark import index_pipeline
+    from soccer_data_pipeline_spark.index_pipeline import (
+        delete_ids,
+        purge_deleted,
+    )
+
+    _, c = _sides(spark)
+    out_dir = str(tmp_path / "ann")
+    run_ann_index_build(c, out_dir, n_centroids=4, m=16, n_codes=8)
+    doomed = _one_id_per_cell(spark, out_dir, 3)
+    delete_ids(spark, out_dir, doomed[:2])
+    delete_ids(spark, out_dir, doomed[1:])
+    tomb_dir = os.path.join(out_dir, "tombstones")
+    real = os.remove
+
+    def remove(path, *a, **kw):
+        if str(path).startswith(tomb_dir):
+            raise OSError("injected crash")
+        return real(path, *a, **kw)
+
+    monkeypatch.setattr(index_pipeline.os, "remove", remove)
+    with pytest.raises(OSError, match="injected crash"):
+        purge_deleted(spark, out_dir)
+    monkeypatch.undo()
+    assert len(_tombstone_files(out_dir)) == 3
+    assert _tombstone_set(spark, out_dir) == sorted(doomed)
+    assert load_ann_index(spark, out_dir).count() == c.count() - 3
+
+    assert purge_deleted(spark, out_dir) == {}
+    assert len(_tombstone_files(out_dir)) == 1
+    assert _tombstone_set(spark, out_dir) == sorted(doomed)
 
 
 def test_empty_query_batch_serves_an_empty_frame(spark, tmp_path):

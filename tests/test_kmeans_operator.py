@@ -306,3 +306,27 @@ def test_pq_encode_matches_pure_python_reference(spark):
         ] == [_pq_reference(v, books, cent, cell)]
         empty = pq_encode(frame.where("vec_id < 0"), books, "v", centers=cent)
         assert empty.schema == out.schema and empty.collect() == []
+
+
+def test_round_half_up_matches_spark_round_at_the_boundaries(spark):
+    """``_round_half_up`` equals Spark's ``F.round`` on the doubles next to
+    every half: the largest double below 0.5 (where ``floor(x + 0.5)``
+    gives 1), the halves themselves, and k + 0.5 one ulp either side."""
+    import math
+
+    from soccer_data_pipeline_spark.operators.kmeans import _round_half_up
+
+    xs = [0.49999999999999994, 0.5, 2.5]
+    for k in (0, 1, 2, 7, 100, 9999):
+        half = k + 0.5
+        xs += [math.nextafter(half, -math.inf), math.nextafter(half, math.inf)]
+    xs += [-x for x in xs]
+    got = [_round_half_up(x) for x in xs]
+    want = [
+        int(r[0])
+        for r in spark.createDataFrame([(x,) for x in xs], "x double")
+        .select(F.round("x"))
+        .collect()
+    ]
+    assert got == want
+    assert got[:3] == [0, 1, 3]
