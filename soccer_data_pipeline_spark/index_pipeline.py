@@ -23,12 +23,11 @@ the in-memory build.
 
 Incremental maintenance (the FAISS ``add``-vs-``train`` contract):
 ``run_streaming_index_updates`` tails a directory of new-embedding
-parquet with an AvailableNow file stream and appends each microbatch's
-encoded rows — cells and codes are per-row functions of the PERSISTED
-constants, so no refit, no rescan, and a replayed batch writes
-byte-identical rows (the loader's candidate_id dropDuplicates makes
-reads idempotent under foreachBatch's at-least-once replay, the same
-argument ``streaming/incremental.py`` documents for its MERGE path).
+parquet and appends each microbatch's encoded rows — cells and codes
+are per-row functions of the PERSISTED constants, so no refit, no
+rescan, and a replayed batch writes byte-identical rows. ``index/`` is
+a ``cell_store``, which owns the epoch, every write (a crash loses no
+row), the deduping loader and the epoch-asserting stream consumer.
 
 At 100 TB: the index is (corpus/8-byte-codes)-sized parquet
 PARTITIONED BY CELL on disk (r12 — every write path partitionBy's);
@@ -41,21 +40,15 @@ only the probed cells' directories (with n_probe=12 of k cells, 12/k
 of the index files). Every read of ``index/`` carries the schema its
 ``config.json`` implies, so none runs a schema-inference job.
 The quantizers stay kilobytes; batch adds are one narrow pass over
-the batch alone. Concurrency contract: ONE writer — ``config.json``
-carries an index EPOCH that every quantizer-changing rewrite bumps
-BEFORE it changes an index file, and the streaming append path
-asserts the persisted epoch still matches the one it loaded before
-each microbatch, so a stream running across a rebalance fails loudly
-instead of appending rows encoded under a stale quantizer.
+the batch alone.
 
 Full lifecycle (each op bounded to the cells it names):
 ``rebalance_cell`` splits a hot cell (k→k+1, epoch+1);
 ``merge_cells`` folds two cold cells back (k→k-1, epoch+1);
 ``compact_index_cells`` defragments streaming appends (layout-only,
 no epoch); ``delete_ids`` tombstones dropped corpus ids out of every
-read in O(|ids|) and ``purge_deleted`` reclaims the rows. Every cell
-rewrite (split, merge, compaction, purge) is one move-in-first
-``_swap_cells`` write, so a crash at any step loses no row.
+read in O(|ids|) and ``purge_deleted`` reclaims the rows. Each, and a
+full rebuild, is one ``_swap_cells`` write.
 """
 
 from __future__ import annotations
@@ -74,6 +67,10 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import cell_store
+from .cell_store import _bump_epoch_inplace  # noqa: F401 (re-exported)
+from .cell_store import compact_cell_partitions
+from .cell_store import _cell_files, _config_path, _remove, _swap_cells
 from .operators.kmeans import (
     DeterministicKMeans,
     fit_deterministic_kmeans,
@@ -98,10 +95,6 @@ class AnnIndexBuild:
     models: list  # m DeterministicKMeans codebooks
 
 
-def _config_path(out_dir: str) -> str:
-    return os.path.join(out_dir, "config.json")
-
-
 def _save_quantizers(out_dir: str, coarse, models, config: dict) -> None:
     os.makedirs(out_dir, exist_ok=True)
     coarse.save(os.path.join(out_dir, "coarse.json"))
@@ -112,101 +105,33 @@ def _save_quantizers(out_dir: str, coarse, models, config: dict) -> None:
     write_json_atomic(_config_path(out_dir), config)
 
 
-def _bump_epoch_inplace(out_dir: str) -> int:
-    """Advance the persisted epoch BEFORE an index rewrite changes a
-    file: a stream running across a rebuild/rebalance fails its next
-    microbatch assert DURING the operation, and after a crash in it.
-    The final ``_save_quantizers`` re-writes the full config under the
-    SAME epoch (no double bump). Returns the new epoch."""
-    with open(_config_path(out_dir)) as fh:
-        config = json.load(fh)
-    config["epoch"] = int(config.get("epoch", 0)) + 1
-    write_json_atomic(_config_path(out_dir), config)
-    return int(config["epoch"])
-
-
 def load_ann_quantizers(out_dir: str):
     """(coarse, models, config) from a persisted index directory."""
     coarse = DeterministicKMeans.load(os.path.join(out_dir, "coarse.json"))
     with open(os.path.join(out_dir, "pq_codebooks.json")) as fh:
         doc = json.load(fh)
     models = [DeterministicKMeans(c, q=doc["q"]) for c in doc["books"]]
-    with open(_config_path(out_dir)) as fh:
-        config = json.load(fh)
-    return coarse, models, config
+    return coarse, models, cell_store.read_config(out_dir)
 
 
 def _index_schema(out_dir: str) -> str:
     """The schema of ``index/`` rows, m taken from the index's own
     ``config.json``: a read given it runs no schema-inference job."""
-    with open(_config_path(out_dir)) as fh:
-        m = int(json.load(fh)["m"])
+    m = int(cell_store.read_config(out_dir)["m"])
     codes = ", ".join(f"code{s} int" for s in range(m))
     return f"candidate_id bigint, {codes}, chat_norm double, cell int"
 
 
-def _read_index(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Every stored row of ``index/`` (no dedup, no tombstone filter)."""
-    return spark.read.schema(_index_schema(out_dir)).parquet(
-        os.path.join(out_dir, "index")
+def _read_index(
+    spark: SparkSession,
+    out_dir: str,
+    cells: list[int] | None = None,
+    exclude: DataFrame | None = None,
+) -> DataFrame:
+    """Every stored row of ``index/`` (no dedup) minus the ``exclude`` ids."""
+    return cell_store.read_cells(
+        spark, os.path.join(out_dir, "index"), _index_schema(out_dir), cells, exclude
     )
-
-
-def _move_in(src: str, dest: str) -> int:
-    """Move ``src``'s parquet files into ``dest``; returns their count."""
-    new = sorted(glob.glob(os.path.join(src, "*.parquet")))
-    os.makedirs(dest, exist_ok=True)
-    for p in new:
-        shutil.move(p, dest)
-    return len(new)
-
-
-def _cell_files(data_dir: str, c: int) -> list[str]:
-    return sorted(glob.glob(os.path.join(data_dir, f"cell={c}", "*.parquet")))
-
-
-def _remove(paths: list[str]) -> None:
-    """Remove each file of ``paths`` and then its ``.<name>.crc``
-    checksum, when a Spark write left one beside it."""
-    for p in paths:
-        os.remove(p)
-        crc = os.path.join(os.path.dirname(p), f".{os.path.basename(p)}.crc")
-        if os.path.exists(crc):
-            os.remove(crc)
-
-
-def _swap_cells(
-    df: DataFrame, tmp: str, data_dir: str, old_by_cell: dict[int, list[str]]
-) -> dict[int, int]:
-    """Replace the PINNED files ``old_by_cell`` with ``df``'s rows in the
-    ``cell=``-partitioned store ``data_dir``, move-in-first: ONE
-    ``partitionBy("cell")`` write to ``tmp`` (one file per cell), then
-    EVERY cell the write produced is moved in before the first pinned
-    file is removed, so a crash at any point leaves every row readable
-    (at worst twice, which the loaders' dedup collapses), also for a row
-    whose cell changed. Only pinned files, and their ``.crc`` checksums,
-    are removed: a file another writer adds meanwhile is never touched,
-    and a row for a cell outside ``old_by_cell`` is added to it. A cell
-    of ``old_by_cell`` left without rows gets one zero-row file (one
-    more write for all such cells): a store with no file left has no
-    schema. Returns {cell: n_moved}."""
-    shutil.rmtree(tmp, ignore_errors=True)
-    df.repartition("cell").write.partitionBy("cell").parquet(tmp)
-    written = {int(d.rsplit("=", 1)[1]) for d in glob.glob(os.path.join(tmp, "cell=*"))}
-    src = {
-        c: os.path.join(tmp, f"cell={c}") for c in sorted(written | set(old_by_cell))
-    }
-    empty = [src[c] for c in sorted(set(old_by_cell) - written)]
-    if empty:
-        df.drop("cell").limit(0).write.parquet(empty[0])
-        for d in empty[1:]:
-            shutil.copytree(empty[0], d)
-    moved = {
-        c: _move_in(d, os.path.join(data_dir, f"cell={c}")) for c, d in src.items()
-    }
-    _remove([p for old in old_by_cell.values() for p in old])
-    shutil.rmtree(tmp, ignore_errors=True)
-    return moved
 
 
 def _tombstones_dir(out_dir: str) -> str:
@@ -334,20 +259,18 @@ def purge_deleted(
     if not old_t:
         return {}
     ids = _tombstone_ids(old_t)
-    tomb = F.broadcast(_ids_frame(spark, ids))
+    tomb = _ids_frame(spark, ids)
     index_dir = os.path.join(out_dir, "index")
-    hits = _read_index(spark, out_dir).join(tomb, "candidate_id", "left_semi")
+    hits = _read_index(spark, out_dir).join(
+        F.broadcast(tomb), "candidate_id", "left_semi"
+    )
     cells = Counter(int(r[0]) for r in hits.select("cell").collect())
     result = dict(sorted(cells.items()))
     if result:
         old_by_cell = {c: _cell_files(index_dir, c) for c in result}
         # raw read (NOT the deduped loader), listed after the pin: the
         # stored multiset of SURVIVING rows is preserved byte-for-byte
-        kept = (
-            _read_index(spark, out_dir)
-            .where(F.col("cell").isin(sorted(result)))
-            .join(tomb, "candidate_id", "left_anti")
-        )
+        kept = _read_index(spark, out_dir, sorted(result), tomb)
         _swap_cells(kept, os.path.join(out_dir, "_purge_tmp"), index_dir, old_by_cell)
     if clear_tombstones:
         shutil.rmtree(_tombstones_dir(out_dir), ignore_errors=True)
@@ -362,46 +285,24 @@ def purge_deleted(
 def load_ann_index(
     spark: SparkSession, out_dir: str, cells: list[int] | None = None
 ) -> DataFrame:
-    """The persisted index rows, idempotent under at-least-once appends.
+    """The persisted index rows, one per candidate_id, idempotent under
+    at-least-once appends: ``cell_store.load_cells``, whose docstring
+    has the dedup's determinism and its per-probe-set scope.
 
-    A replayed microbatch re-encodes byte-identical rows (cells/codes
-    are pure functions of the persisted quantizers), so under the
-    documented append-only-for-NEW-ids contract any dedup is exact.
-    The dedup is nonetheless DETERMINISTIC — keep the max code-struct
-    per candidate_id — so even an out-of-contract re-stream of an id
-    with a CHANGED embedding (an update, which the streaming path does
-    not support; rebuild or rebalance instead) serves one stable row
-    per read rather than an arbitrary-per-scan one (ADVICE r11).
-    Scope of that stability (r14, ADVICE r13): PER PROBE SET — if an
-    out-of-contract re-stream left an id's copies in DIFFERENT cells,
-    a ``cells``-pruned read can see (and serve) only the copy inside
-    the probed cells while an unpruned read dedups across all copies;
-    two reads with differing probe sets may then return different
-    rows for that id. In-contract ids (byte-identical replays share a
-    cell) are unaffected.
-
-    ``cells`` filters the RAW read BEFORE the dedup (r13, ADVICE r12:
-    a filter above the groupBy cannot reach the scan, so serving would
-    read and shuffle the FULL index) — the literal IN predicate hits
-    the partition column and statically prunes the scan to those cell
-    directories. Exact under the append contract: every copy of an id
-    shares a cell (byte-identical replays), so filtering copies before
-    the dedup keeps the same one row per surviving id."""
-    df = _read_index(spark, out_dir)
-    if cells is not None:
-        df = df.where(F.col("cell").isin([int(c) for c in cells]))
+    ``cells`` statically prunes the scan to those cell directories, so
+    serving never reads or shuffles the FULL index. Exact under the
+    append contract: every copy of an id shares a cell (byte-identical
+    replays), so filtering copies before the dedup keeps the same one
+    row per surviving id."""
     # deletion contract (r14): tombstoned ids vanish from every read —
     # a broadcast anti-join below the dedup (the tombstone set is
     # bounded by total deletions; ``purge_deleted`` reclaims the rows
     # and compacts the store, and a full rebuild resets it)
-    tomb = load_tombstones(spark, out_dir)
-    if tomb is not None:
-        df = df.join(F.broadcast(tomb), "candidate_id", "left_anti")
-    others = [c for c in df.columns if c != "candidate_id"]
-    packed = df.groupBy("candidate_id").agg(
-        F.max(F.struct(*others)).alias("_row")
+    return cell_store.load_cells(
+        spark, os.path.join(out_dir, "index"), "candidate_id",
+        schema=_index_schema(out_dir), cells=cells,
+        exclude=load_tombstones(spark, out_dir),
     )
-    return packed.select("candidate_id", *[F.col(f"_row.{c}").alias(c) for c in others])
 
 
 def _cell_counts(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -497,22 +398,14 @@ def run_ann_index_build(
     # (ADVICE r11; fit_ivfpq_quantizers validates emptiness itself)
     dim = len(coarse.centers_q[0])
 
-    # index epoch: bumped by EVERY quantizer rewrite, an in-place
-    # rebuild included (a reset to 0 would let a stream started before
-    # it pass the 0 == 0 check against CHANGED quantizers), and BEFORE
-    # the overwrite, so a stream running across it fails during it
-    epoch = (
-        _bump_epoch_inplace(out_dir)
-        if os.path.exists(_config_path(out_dir))
-        else 0
-    )
     index = ivfpq_index(
         candidates, coarse, models, id_col=id_col, vec_col=vec_col,
         residual=residual,
     )
-    index.write.mode("overwrite").partitionBy("cell").parquet(
-        os.path.join(out_dir, "index")
-    )
+    # an in-place rebuild bumps the epoch too: a reset to 0 would let a
+    # stream started before it pass the 0 == 0 check against CHANGED
+    # quantizers
+    epoch = cell_store.replace_cells(index, out_dir, os.path.join(out_dir, "index"))
     config = {
         "n_centroids": n_centroids,
         "m": m,
@@ -570,10 +463,8 @@ def ann_index_search(
     most. From that batch the probed cells are ranked on the driver
     with no Spark job (``probe_cell_ids`` — a few ints), and
     ``ivfpq_search`` builds its query side from the same batch with no
-    second collect. The index read is statically pruned to those cells
-    (r13): the loader applies the literal IN filter below its dedup, so
-    the scan's PartitionFilters carry the cell predicate and only
-    len(cells)/k of the index files are read."""
+    second collect. The loader's scan is statically pruned to those
+    cells (r13), so only len(cells)/k of the index files are read."""
     spark = queries.sparkSession
     coarse, models, config = load_ann_quantizers(out_dir)
     batch = collect_queries(queries, id_col, vec_col)
@@ -616,16 +507,9 @@ def _live_members(
       shrink the index) — count the uncovered ids and refuse before
       any file changes. Bounded work: the anti-join's left side is the
       named cells' ids."""
-    member_ids = (
-        _read_index(spark, out_dir)
-        .where(F.col("cell").isin(*cells))
-        .select("candidate_id")
-    )
-    tomb = load_tombstones(spark, out_dir)
-    if tomb is not None:
-        member_ids = member_ids.join(
-            F.broadcast(tomb), "candidate_id", "left_anti"
-        )
+    member_ids = _read_index(
+        spark, out_dir, cells, load_tombstones(spark, out_dir)
+    ).select("candidate_id")
     missing = member_ids.join(
         candidates.select(F.col(id_col).alias("candidate_id")),
         "candidate_id",
@@ -647,30 +531,25 @@ def _rewrite_cells(
     spark, out_dir, members, cells, coarse, models, config, id_col, vec_col,
     retire: tuple[int, int] | None = None,
 ) -> DataFrame:
-    """The tail of both quantizer-changing cell rewrites: bump the epoch
-    before any file under ``index/`` changes (a stream on the old
-    quantizers then fails its next epoch assert, also after a crash
-    here); ONE ``_swap_cells`` write replaces the files of ``cells`` with
-    ``members`` re-encoded under ``coarse`` (its temp write runs the lazy
-    member read before anything moves; a member routed to another cell
-    is added there); ``retire=(last, drop)`` then relabels ``cell=last``
-    as ``cell=drop``; last, the quantizers are saved. A crash at any
-    step leaves ``config.json`` readable and every live id served once
-    by ``load_ann_index`` (old and new copies collapse in its dedup; a
-    rebuild restores a layout the quantizers describe). Returns the
-    manifest after the rewrite."""
+    """The tail of both quantizer-changing cell rewrites:
+    ``cell_store.replace_cells`` bumps the epoch before any file under
+    ``index/`` changes (a stream on the old quantizers then fails its
+    next epoch assert, also after a crash here) and replaces the files
+    of ``cells`` with ``members`` re-encoded under ``coarse`` in ONE
+    swap write (its temp write runs the lazy member read before anything
+    moves; a member routed to another cell is added there; a merge's
+    dropped slot keeps no zero-row file); ``retire=(last, drop)`` then
+    relabels ``cell=last`` as ``cell=drop``; last, the quantizers are
+    saved. A crash at any step leaves ``config.json`` readable and every
+    live id served once by ``load_ann_index`` (old and new copies
+    collapse in its dedup; a rebuild restores a layout the quantizers
+    describe). Returns the manifest after the rewrite."""
     index_dir = os.path.join(out_dir, "index")
     re_encoded = ivfpq_index(
         members, coarse, models, id_col=id_col, vec_col=vec_col,
         residual=bool(config["residual"]),
     )
-    # every pinned file keyed on the first cell, the one that must keep
-    # a file: a merge's dropped slot gets the last cell's files, or goes
-    old_by_cell = {cells[0]: [p for c in cells for p in _cell_files(index_dir, c)]}
-    epoch = _bump_epoch_inplace(out_dir)
-    _swap_cells(
-        re_encoded, os.path.join(out_dir, "_rewrite_tmp"), index_dir, old_by_cell
-    )
+    epoch = cell_store.replace_cells(re_encoded, out_dir, index_dir, cells)
     if retire is not None:
         _retire_cell(index_dir, *retire)
     config = dict(config, n_centroids=len(coarse.centers_q), epoch=epoch)
@@ -883,61 +762,25 @@ def run_streaming_index_updates(
     (no refit, no rescan of existing rows — the FAISS ``add``
     contract), appended to the index store. The checkpoint makes file
     progress exactly-once; a crash-replayed batch re-appends
-    byte-identical rows, which ``load_ann_index``'s dropDuplicates
-    collapses (the documented at-least-once-append + idempotent-read
-    pairing). Returns the finished StreamingQuery."""
+    byte-identical rows, which ``load_ann_index``'s max-struct dedup
+    collapses; a batch fails on a moved epoch or a wrong dim
+    (``cell_store.run_stream``). Returns the finished StreamingQuery."""
     coarse, models, config = load_ann_quantizers(out_dir)
-    residual = bool(config["residual"])
-    dim = int(config["dim"])
-    epoch = int(config.get("epoch", 0))
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        head = batch_df.head(1)
-        if not head:
-            return
-        # epoch assert (r13, VERDICT r12 #2): a rebalance between
-        # stream start and this batch rewrote the quantizers — rows
-        # encoded under the STALE coarse/codebooks would route probes
-        # wrong (including into the deleted cell id). Re-read the
-        # kilobyte config stamp and fail the batch loudly on mismatch;
-        # restart the stream to pick up the current quantizers.
-        # (Single-writer stays the contract for a rebalance landing
-        # BETWEEN this check and the append below.)
-        with open(_config_path(out_dir)) as fh:
-            cur = int(json.load(fh).get("epoch", 0))
-        if cur != epoch:
-            raise ValueError(
-                f"run_streaming_index_updates: batch {batch_id} index "
-                f"epoch advanced {epoch} -> {cur} (rebalance/rebuild "
-                "during the stream) — restart the stream against the "
-                "current quantizers"
-            )
-        # fail the batch loudly on a mis-dimensioned source — without
-        # this, zip_with over unequal lengths yields nulls and slices
-        # truncate, silently appending corrupt codes (ADVICE r11)
-        got = len(head[0][vec_col])
-        if got != dim:
-            raise ValueError(
-                f"run_streaming_index_updates: batch {batch_id} vector "
-                f"dim {got} != persisted index dim {dim}"
-            )
-        ivfpq_index(
-            batch_df, coarse, models, id_col=id_col, vec_col=vec_col,
-            residual=residual,
-        ).write.mode("append").partitionBy("cell").parquet(
-            os.path.join(out_dir, "index")
+    def write(batch_df: DataFrame) -> None:
+        cell_store.append_cells(
+            ivfpq_index(
+                batch_df, coarse, models, id_col=id_col, vec_col=vec_col,
+                residual=bool(config["residual"]),
+            ),
+            os.path.join(out_dir, "index"),
         )
 
-    q = (
-        spark.readStream.schema(schema)
-        .parquet(source_dir)
-        .writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return cell_store.run_stream(
+        spark, source_dir, checkpoint_dir, schema, write, out_dir=out_dir,
+        config=config, vec_col=vec_col, who="run_streaming_index_updates",
+        noun="index",
     )
-    q.awaitTermination()
-    return q
 
 
 def run_streaming_index_deletes(
@@ -973,22 +816,13 @@ def run_streaming_index_deletes(
 
     Returns the finished StreamingQuery."""
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
+    def write(batch_df: DataFrame) -> None:
         drops = batch_df.where(
             F.col(action_col).startswith(drop_prefix)
         ).select(F.col(id_col))
         delete_ids(spark, out_dir, drops)
 
-    q = (
-        spark.readStream.schema(schema)
-        .parquet(source_dir)
-        .writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return cell_store.run_stream(spark, source_dir, checkpoint_dir, schema, write)
 
 
 def compact_index_cells(
@@ -997,33 +831,11 @@ def compact_index_cells(
     cells: list[int] | None = None,
     min_files: int = 2,
 ) -> dict[int, tuple[int, int]]:
-    """Index lifecycle: small-file compaction (r13 — the gap streaming
-    appends open: every microbatch lands one-plus parquet files PER
-    CELL, so a long-running stream turns each probed-cell read into
-    hundreds of file opens; at 100 TB the file count, not the byte
-    count, becomes the scan bottleneck).
-
-    Every target cell (default: every cell with more than ``min_files``
-    files) is rewritten to one file, all in ONE write whose read
-    statically prunes to the targeted cells; nothing outside them is
-    read or written. Quantizers, cells, and codes are UNTOUCHED —
-    compaction is a layout-only rewrite, so the epoch does NOT
-    advance (a concurrent stream keeps appending validly; its new
-    files simply become the next compaction's input).
-
-    Crash-safe without a transaction log (``_swap_cells``): a crash
-    leaves byte-identical duplicates the loader's dedup collapses.
-
-    Concurrency scope: the safety above is
-    WRITER-side. A concurrent READER (``load_ann_index`` /
-    ``ann_index_search``) that planned its file list before the
-    ``os.remove`` step can fail mid-job with missing-file errors —
-    don't race reads against compaction; RETRY the failed read (the
-    re-planned scan sees the compacted files and is complete). Do NOT
-    paper over it with ``spark.sql.files.ignoreMissingFiles``: a scan
-    planned pre-compaction lists the old files but not the moved-in
-    replacements, so ignoring the miss silently serves the cell
-    PARTIALLY — a loud retryable failure is strictly safer.
+    """Index lifecycle: small-file compaction of ``index/`` — every
+    target cell (default: every cell with more than ``min_files`` files)
+    folds to one file (``cell_store.compact_cell_partitions``: layout
+    only, no epoch advance, crash-safe; its docstring has the
+    reader-race scope). Quantizers, cells and codes are UNTOUCHED.
 
     Returns {cell: (n_files_before, n_files_after)}.
     """
@@ -1033,36 +845,3 @@ def compact_index_cells(
         schema=_index_schema(out_dir),
     )
 
-
-def compact_cell_partitions(
-    spark: SparkSession,
-    data_dir: str,
-    tmp_dir: str,
-    cells: list[int] | None = None,
-    min_files: int = 2,
-    schema: str | None = None,
-) -> dict[int, tuple[int, int]]:
-    """The shared small-file compaction over any ``cell=``-partitioned
-    parquet store (the ANN index and the semdedup pipeline's base
-    store share the layout AND the at-least-once-write +
-    deterministic-dedup-read contract, so they share the compactor).
-    One raw read of the targeted cells (given ``schema``, with no
-    inference job), one ``_swap_cells`` write — the stored multiset is
-    preserved byte-for-byte, including rows a loader's dedup would
-    collapse."""
-    if cells is None:
-        cells = sorted(
-            int(d.split("=", 1)[1])
-            for d in os.listdir(data_dir)
-            if d.startswith("cell=")
-        )
-    files = {int(c): _cell_files(data_dir, c) for c in cells}
-    old_by_cell = {c: f for c, f in files.items() if len(f) > min_files}
-    if not old_by_cell:
-        return {}
-    reader = spark.read if schema is None else spark.read.schema(schema)
-    rows = reader.parquet(data_dir).where(
-        F.col("cell").isin(sorted(old_by_cell))
-    )
-    moved = _swap_cells(rows, tmp_dir, data_dir, old_by_cell)
-    return {c: (len(old), moved[c]) for c, old in old_by_cell.items()}

@@ -30,24 +30,25 @@ base append and the checkpoint commit), so the decision path
 anti-joins the batch's OWN ids out of its base read — the replay then
 recomputes against exactly the base the original saw, re-appending
 byte-identical action and base rows, which the loaders' deterministic
-dedups collapse (the at-least-once-write + idempotent-read pairing
-``index_pipeline`` documents).
+dedups collapse.
 
-Epoch: a re-fit over a directory with an existing config bumps the
-epoch BEFORE overwriting the base store, and the stream asserts the
-persisted epoch per microbatch — a stream running across a re-fit
-fails loudly instead of deciding new batches against swapped-out
-centroids (VERDICT r12 #2's discipline, applied to this artifact).
+The base store is a ``cell_store``, like the ANN index: a re-fit
+bumps the epoch and swaps the whole store (a crash loses no base row),
+so a stream running across it fails loudly instead of deciding new
+batches against swapped-out centroids.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import cell_store
+from .cell_store import _config_path
 from .operators.kmeans import (
     GRID_Q,
     inrow_assign,
@@ -61,10 +62,6 @@ from .operators.semdedup import (
     decide_incremental,
     semdedup_k,
 )
-
-
-def _config_path(out_dir: str) -> str:
-    return os.path.join(out_dir, "config.json")
 
 
 def _centroids_path(out_dir: str) -> str:
@@ -116,27 +113,10 @@ def fit_semdedup_base(
         dist_col="dist_q2",
     ).select("vec_id", "embedding", "cell", "dist_q2")
 
-    # epoch bump BEFORE the destructive overwrite (the index-pipeline
-    # discipline): a stream running across this re-fit fails during it.
-    # The FULL existing config is preserved under the bumped epoch
-    # (index_pipeline._bump_epoch_inplace's contract) — a mid-fit crash
-    # must leave the loud epoch reject, not a KeyError on tau/dim, and
-    # a concurrent serve during a healthy re-fit must still load a
-    # complete stamp.
-    epoch = 0
-    if os.path.exists(_config_path(out_dir)):
-        with open(_config_path(out_dir)) as fh:
-            stale = json.load(fh)
-        epoch = int(stale.get("epoch", 0)) + 1
-        stale["epoch"] = epoch
-        write_json_atomic(_config_path(out_dir), stale)
-    import shutil
-
-    shutil.rmtree(_actions_dir(out_dir), ignore_errors=True)
-    stored.write.mode("overwrite").partitionBy("cell").parquet(
-        _base_dir(out_dir)
-    )
+    # epoch bump, then one whole-store swap: a stream running across
+    # this re-fit fails during it, and a crash in it loses no base row
     os.makedirs(out_dir, exist_ok=True)
+    epoch = cell_store.replace_cells(stored, out_dir, _base_dir(out_dir))
     write_json_atomic(_centroids_path(out_dir), {"q": GRID_Q, "centers": centers})
     config = {
         "tau": tau,
@@ -145,6 +125,10 @@ def fit_semdedup_base(
         "epoch": epoch,
     }
     write_json_atomic(_config_path(out_dir), config)
+    # a re-fit declares fresh truth: the ledger of decisions against the
+    # OLD base is cleared LAST, after the new base, centroids and config
+    # are published (the index build's rule for its tombstones)
+    shutil.rmtree(_actions_dir(out_dir), ignore_errors=True)
     return config
 
 
@@ -164,9 +148,7 @@ def load_semdedup_artifacts(spark: SparkSession, out_dir: str):
     cent = spark.createDataFrame(
         _load_centers(out_dir), "cid bigint, cq array<bigint>"
     )
-    with open(_config_path(out_dir)) as fh:
-        config = json.load(fh)
-    return cent, config
+    return cent, cell_store.read_config(out_dir)
 
 
 def load_semdedup_base_rows(
@@ -175,21 +157,13 @@ def load_semdedup_base_rows(
     cells: list[int] | None = None,
     exclude_ids: DataFrame | None = None,
 ) -> DataFrame:
-    """The persisted base rows, idempotent under at-least-once appends
-    (deterministic max-struct dedup per vec_id — the index loader's
-    argument). ``cells`` filters the RAW read before the dedup so the
-    literal IN predicate statically prunes the scan to those cell
-    directories; ``exclude_ids`` anti-joins a batch's own ids out (the
-    replay discipline — see module docstring)."""
-    df = spark.read.parquet(_base_dir(out_dir))
-    if cells is not None:
-        df = df.where(F.col("cell").isin([int(c) for c in cells]))
-    if exclude_ids is not None:
-        df = df.join(F.broadcast(exclude_ids), "vec_id", "left_anti")
-    others = [c for c in df.columns if c != "vec_id"]
-    packed = df.groupBy("vec_id").agg(F.max(F.struct(*others)).alias("_row"))
-    return packed.select(
-        "vec_id", *[F.col(f"_row.{c}").alias(c) for c in others]
+    """The persisted base rows, one per vec_id, idempotent under
+    at-least-once appends (``cell_store.load_cells``). ``cells``
+    statically prunes the scan to those cell directories;
+    ``exclude_ids`` anti-joins a batch's own ids out (the replay
+    discipline — see module docstring)."""
+    return cell_store.load_cells(
+        spark, _base_dir(out_dir), "vec_id", cells=cells, exclude=exclude_ids
     )
 
 
@@ -207,8 +181,7 @@ def semdedup_incremental_served(
     (vec_id, action, cell, dist_q2) — the cell/dist columns feed the
     kept-row append."""
     centers = _load_centers(out_dir)
-    with open(_config_path(out_dir)) as fh:
-        config = json.load(fh)
+    config = cell_store.read_config(out_dir)
     en = new.select(
         F.col(id_col).alias("vec_id"),
         quantize_vec(F.col(vec_col), GRID_Q).alias("xq"),
@@ -260,33 +233,12 @@ def run_streaming_semdedup(
     ``out_dir/actions``, and its KEPT rows appended to the
     cell-partitioned base store so later batches dedup against them.
     The checkpoint makes file progress exactly-once; replays re-append
-    byte-identical rows that the loaders' dedups collapse. Returns the
-    finished StreamingQuery."""
+    byte-identical rows that the loaders' dedups collapse; a batch fails
+    on a moved epoch or a wrong dim (``cell_store.run_stream``). Returns
+    the finished StreamingQuery."""
     _, config = load_semdedup_artifacts(spark, out_dir)
-    epoch = int(config.get("epoch", 0))
-    dim = int(config["dim"])
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        head = batch_df.head(1)
-        if not head:
-            return
-        # epoch assert: a re-fit between stream start and this batch
-        # swapped the centroids — decisions against the stale constants
-        # would assign wrong cells; fail loudly, restart the stream
-        with open(_config_path(out_dir)) as fh:
-            cur = int(json.load(fh).get("epoch", 0))
-        if cur != epoch:
-            raise ValueError(
-                f"run_streaming_semdedup: batch {batch_id} artifact epoch "
-                f"advanced {epoch} -> {cur} (re-fit during the stream) — "
-                "restart the stream against the current artifacts"
-            )
-        got = len(head[0][vec_col])
-        if got != dim:
-            raise ValueError(
-                f"run_streaming_semdedup: batch {batch_id} vector dim "
-                f"{got} != persisted artifact dim {dim}"
-            )
+    def write(batch_df: DataFrame) -> None:
         served = semdedup_incremental_served(
             spark, batch_df, out_dir, id_col=id_col, vec_col=vec_col
         ).localCheckpoint(eager=True)  # decide ONCE, before either write
@@ -301,22 +253,14 @@ def run_streaming_semdedup(
             ),
             "vec_id",
         )
-        kept.write.mode("append").partitionBy("cell").parquet(
-            _base_dir(out_dir)
-        )
+        cell_store.append_cells(kept, _base_dir(out_dir))
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    q = (
-        reader.parquet(source_dir)
-        .writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return cell_store.run_stream(
+        spark, source_dir, checkpoint_dir, schema, write,
+        max_files_per_trigger=max_files_per_trigger, out_dir=out_dir,
+        config=config, vec_col=vec_col, who="run_streaming_semdedup",
+        noun="artifact",
     )
-    q.awaitTermination()
-    return q
 
 
 def compact_semdedup_base(
@@ -325,26 +269,15 @@ def compact_semdedup_base(
     cells: list[int] | None = None,
     min_files: int = 2,
 ) -> dict[int, tuple[int, int]]:
-    """Small-file compaction for the base store (r14): every streamed
-    microbatch appends one-plus parquet files per touched cell, so a
-    long-running semdedup stream turns each cell-pruned pair read into
-    many file opens — the same failure mode ``compact_index_cells``
-    closes for the index, solved by the same shared compactor on the
-    same layout. Layout-only: centroids, cells, dists untouched, no
-    epoch advance (a concurrent stream keeps appending validly); the
-    same crash ordering (move in first, delete after — duplicates
-    collapse via the loader's dedup) and the same reader-race scope
-    (retry a read that raced the removals; don't ignoreMissingFiles).
+    """Small-file compaction for the base store (r14), the index's
+    compactor on the same layout (``cell_store.compact_cell_partitions``:
+    layout only, no epoch advance, crash-safe, the same reader-race
+    scope). Centroids, cells and dists are untouched.
 
     Returns {cell: (n_files_before, n_files_after)}."""
-    from .index_pipeline import compact_cell_partitions
-
-    return compact_cell_partitions(
-        spark,
-        _base_dir(out_dir),
-        os.path.join(out_dir, "_compact_tmp"),
-        cells=cells,
-        min_files=min_files,
+    return cell_store.compact_cell_partitions(
+        spark, _base_dir(out_dir), os.path.join(out_dir, "_compact_tmp"),
+        cells=cells, min_files=min_files,
     )
 
 

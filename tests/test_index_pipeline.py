@@ -356,6 +356,34 @@ def test_build_dir_once_reuses_until_a_required_subdir_is_missing(monkeypatch):
     shutil.rmtree(second[0])
 
 
+def test_mutating_ann_queries_fork_the_served_build(spark, monkeypatch):
+    """``ann_index_rebalance`` and ``ann_index_deletes`` mutate a copy of
+    the index ``similarity_index_served`` serves instead of building
+    their own: from an empty run cache, constructing the three queries
+    runs ``run_ann_index_build`` once, and the served dir is left as
+    built (epoch 0, no tombstones)."""
+    from soccer_data_pipeline_spark import index_pipeline
+    from soccer_data_pipeline_spark.plans import llm_queries
+
+    monkeypatch.setattr(llm_queries, "_RUNS", {})
+    real = index_pipeline.run_ann_index_build
+    builds = []
+
+    def counting_build(*args, **kwargs):
+        builds.append(args[1])
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(index_pipeline, "run_ann_index_build", counting_build)
+    for name in (
+        "ann_index_rebalance", "ann_index_deletes", "similarity_index_served"
+    ):
+        getattr(llm_queries, name)(spark, SF)
+    served_dir = llm_queries._RUNS[("ann_index", SF)][0]
+    assert builds == [served_dir]
+    assert load_ann_quantizers(served_dir)[2]["epoch"] == 0
+    assert not os.path.exists(os.path.join(served_dir, "tombstones"))
+
+
 def test_build_dirs_removed_at_process_exit():
     """A build dir the plan layer creates does not outlive its process."""
     import subprocess
@@ -1694,3 +1722,56 @@ def test_rebalance_and_merge_job_counts(spark, tmp_path):
         spark, "merge", lambda: merge_cells(spark, c, out_dir)
     )
     assert (split, merge) == (16, 11)
+
+
+def test_rebuild_crash_mid_swap_keeps_every_row_and_rejects_stale_stream(
+    spark, tmp_path, monkeypatch
+):
+    """An in-place rebuild (8 -> 4 cells) that dies inside its swap (the
+    new files moved in, the second pinned removal not done) loses no
+    row: every pre-rebuild id is still on disk and served once. The
+    epoch has advanced, so a stream started before the rebuild rejects
+    its next batch. A re-run gives the loader rows, and the cell
+    directories, of a clean build into a fresh directory."""
+    from unittest.mock import patch
+
+    import pytest
+
+    from soccer_data_pipeline_spark import index_pipeline
+
+    _, c = _sides(spark)
+    out_dir = str(tmp_path / "ann")
+    run_ann_index_build(c, out_dir, n_centroids=8, m=16, n_codes=8)
+    ids = [int(r.vec_id) for r in c.select("vec_id").collect()]
+    stale = load_ann_quantizers(out_dir)
+
+    calls = _failing_second_remove(monkeypatch, out_dir)
+    with pytest.raises(OSError, match="injected crash"):
+        run_ann_index_build(c, out_dir, n_centroids=4, m=16, n_codes=8)
+    monkeypatch.undo()
+    assert len(calls) == 2
+    on_disk = spark.read.parquet(os.path.join(out_dir, "index"))
+    assert {int(r.candidate_id) for r in on_disk.collect()} == set(ids)
+    _assert_live_ids_once(spark, out_dir, ids)
+
+    src = str(tmp_path / "incoming")
+    c.limit(5).write.parquet(src)
+    with patch.object(index_pipeline, "load_ann_quantizers", return_value=stale):
+        with pytest.raises(Exception, match="epoch advanced 0 -> 1"):
+            run_streaming_index_updates(
+                spark, src, out_dir, str(tmp_path / "ckpt"),
+                schema=spark.read.parquet(src).schema,
+            )
+
+    run_ann_index_build(c, out_dir, n_centroids=4, m=16, n_codes=8)
+    fresh = str(tmp_path / "fresh")
+    run_ann_index_build(c, fresh, n_centroids=4, m=16, n_codes=8)
+
+    def rows(d):
+        return sorted(map(tuple, load_ann_index(spark, d).collect()))
+
+    assert rows(out_dir) == rows(fresh)
+    assert sorted(os.listdir(os.path.join(out_dir, "index"))) == sorted(
+        os.listdir(os.path.join(fresh, "index"))
+    )
+    assert load_ann_quantizers(out_dir)[2]["epoch"] == 2

@@ -348,3 +348,96 @@ def test_compact_semdedup_base_lossless_and_bounded(spark, tmp_path):
     assert served_before == _amap(
         semdedup_incremental_served(spark, probe_batch, out_dir).collect()
     )
+
+
+def _base_rows_on_disk(spark, out_dir):
+    """Every stored base row (no dedup), as hashable tuples."""
+    return {
+        (r.vec_id, tuple(r.embedding), r.cell, r.dist_q2)
+        for r in spark.read.parquet(os.path.join(out_dir, "base")).collect()
+    }
+
+
+def test_refit_crash_mid_swap_keeps_every_base_row(spark, tmp_path, monkeypatch):
+    """A re-fit that dies inside its swap (the new base files moved in,
+    the second pinned removal not done) keeps every pre-re-fit base row
+    on disk and the stale action ledger (it is cleared only after the
+    new artifacts are published). The epoch has advanced, so a stream
+    started before the re-fit rejects its next batch. A re-run gives
+    the loader rows of a clean fit into a fresh directory."""
+    from unittest.mock import patch
+
+    import pytest
+
+    from soccer_data_pipeline_spark import semdedup_pipeline
+    from tests.test_index_pipeline import _failing_second_remove
+
+    base, new = _splits(spark)
+    out_dir = str(tmp_path / "sem")
+    fit_semdedup_base(base, out_dir)
+    stale = load_semdedup_artifacts(spark, out_dir)
+    ledger = os.path.join(out_dir, "actions")
+    spark.createDataFrame(
+        [(1, "keep")], "vec_id bigint, action string"
+    ).write.parquet(ledger)
+    before = _base_rows_on_disk(spark, out_dir)
+
+    calls = _failing_second_remove(monkeypatch, out_dir)
+    with pytest.raises(OSError, match="injected crash"):
+        fit_semdedup_base(base, out_dir)
+    monkeypatch.undo()
+    assert len(calls) == 2
+    assert before <= _base_rows_on_disk(spark, out_dir)
+    assert load_semdedup_base_rows(spark, out_dir).count() == base.count()
+    assert os.path.isdir(ledger)
+    with open(os.path.join(out_dir, "config.json")) as fh:
+        assert json.load(fh) == dict(stale[1], epoch=1)
+
+    src = str(tmp_path / "incoming")
+    new.limit(5).write.parquet(src)
+    with patch.object(
+        semdedup_pipeline, "load_semdedup_artifacts", return_value=stale
+    ):
+        with pytest.raises(Exception, match="epoch advanced 0 -> 1"):
+            run_streaming_semdedup(
+                spark, src, out_dir, str(tmp_path / "ckpt"),
+                schema=spark.read.parquet(src).schema,
+            )
+
+    fit_semdedup_base(base, out_dir)
+    assert not os.path.isdir(ledger)
+    fresh = str(tmp_path / "fresh")
+    fit_semdedup_base(base, fresh)
+
+    def rows(d):
+        return sorted(
+            (r.vec_id, tuple(r.embedding), r.cell, r.dist_q2)
+            for r in load_semdedup_base_rows(spark, d).collect()
+        )
+
+    assert rows(out_dir) == rows(fresh)
+
+
+def test_base_loader_dedup_is_deterministic_on_changed_rows(spark, tmp_path):
+    """The base store's twin of the index loader check: an
+    out-of-contract re-append of an existing vec_id with a CHANGED
+    embedding reads as ONE deterministic row (max struct) on every
+    read."""
+    base, _ = _splits(spark)
+    out_dir = str(tmp_path / "sem")
+    fit_semdedup_base(base, out_dir)
+    base_dir = os.path.join(out_dir, "base")
+    victim = int(base.agg(F.min("vec_id")).first()[0])
+    spark.read.parquet(base_dir).where(F.col("vec_id") == victim).select(
+        "vec_id", F.reverse("embedding").alias("embedding"), "cell", "dist_q2"
+    ).write.mode("append").partitionBy("cell").parquet(base_dir)
+
+    def read():
+        return {
+            r.vec_id: (tuple(r.embedding), r.cell, r.dist_q2)
+            for r in load_semdedup_base_rows(spark, out_dir).collect()
+        }
+
+    rows1, rows2 = read(), read()
+    assert len(rows1) == base.count()
+    assert rows1 == rows2
