@@ -1,32 +1,32 @@
 """Deterministic Lloyd k-means on a fixed integer grid.
 
-The clustering primitive under the IVF coarse quantizer — and the
-exact arithmetic behind the ``kmeans_fixed_assign`` hash-checked
-differential (plans/llm_queries.py), which consumes these helpers so
-the registered query and the production trainer share one code path
-(VERDICT r10 #3: the primitive is load-bearing, not a demo).
+The clustering primitive under the IVF coarse quantizer, the PQ
+codebooks and the SemDeDup family, and the arithmetic the
+``kmeans_fixed_assign`` hash-checked differential (plans/llm_queries.py)
+runs through the same Lloyd step.
 
 Why a bespoke trainer instead of Spark ML's KMeans:
 
 - **Determinism / auditability.** Vectors quantize to a 1e-4 grid
   (``round(x * 10000)`` as int64), so squared distances are EXACT
   long arithmetic (64-dim grid values bound dist² ≤ ~3.4e10, far
-  inside int64) and the argmin + (dist, cid) struct-min tiebreak is
+  inside int64) and the argmin with ties to the smaller cid is
   reproducible bit-for-bit across engines, sessions, partitionings,
   and cluster sizes. Spark ML's kmeans|| init + float distances are
   run-stable only per JVM build, and the fitted model is an opaque
   JVM object. A quantizer whose centers are 1024 small integers can
   be hash-checked, diffed between index builds, and persisted as a
   kilobyte of JSON.
-- **Scale shape is identical.** Assignment is a broadcast of the
-  k-row centroid frame against the corpus (narrow, one pass);
-  recomputation is the canonical (cluster, dim) exact-long-sum
-  shuffle — never a corpus collect. The driver holds k×dim longs
-  (the centers), same as ``model.clusterCenters()`` did — plus, in
-  the bounded-sample index-build case only, the training sample
-  itself (:func:`_fit_local`, bit-equal to the distributed loop by
-  test, collected because ~40 sequential micro-stages on a 4096-row
-  sample is pure scheduler overhead).
+- **One kernel per step.** Assignment is :func:`inrow_assign`, one
+  narrow Arrow projection against driver-held centers (no join, no
+  shuffle). A Lloyd round on Spark is :func:`_lloyd_step`: that
+  assignment fused with the (cluster, dim) exact-long-sum shuffle,
+  collected as ≤ k·dim rows, the means rounded back to the grid on
+  the driver. The driver holds k×dim longs (the centers), plus, when
+  the training sample is bounded, the sample itself:
+  :func:`_fit_local` runs the same arithmetic in numpy (bit-equal by
+  test) because a few dozen sequential jobs on a 4096-row sample are
+  pure scheduler overhead.
 - **Centers round BACK to the grid** after each mean, so the next
   iteration's distances stay exact int64 regardless of cluster size
   (true rational centers would need 128-bit cross-multiplies to
@@ -42,7 +42,7 @@ import json
 import os
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # 1e-4 grid: embeddings land in [-1, 1], so grid values are ≤ 10^4 in
@@ -56,74 +56,6 @@ def quantize_vec(col, q: int = GRID_Q):
     ROUND to the same doubles and the kmeans_fixed_assign differential
     hash-checks that the engines agree on this data."""
     return F.transform(col, lambda x: F.round(x.cast("double") * q).cast("long"))
-
-
-def sqdist_q(a, b):
-    """Exact int64 squared distance between two grid vectors."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"),
-        lambda acc, d: acc + d,
-    )
-
-
-def assign_cells(
-    frame: DataFrame,
-    centers: DataFrame,
-    id_col: str = "vec_id",
-    xq_col: str = "xq",
-    out_col: str = "cell",
-    keep_dist: bool = False,
-) -> DataFrame:
-    """Nearest-center assignment: broadcast the k-row ``centers``
-    frame (``cid``, ``cq``) against ``frame`` and take the exact
-    (dist, cid) struct-min per row — ties break to the smaller cid.
-
-    One narrow pass over the corpus; the only shuffle is the per-id
-    groupBy, which AQE coalesces, and k is index-sized (≤ hundreds),
-    so the crossJoin is k rows broadcast — never corpus × corpus.
-    """
-    d = frame.join(F.broadcast(centers), how="cross").select(
-        id_col,
-        "cid",
-        sqdist_q(F.col(xq_col), F.col("cq")).alias("dist"),
-    )
-    best = d.groupBy(id_col).agg(F.min(F.struct("dist", "cid")).alias("b"))
-    cols = [id_col, F.col("b.cid").alias(out_col)]
-    if keep_dist:
-        cols.append(F.col("b.dist").alias("dist_q2"))
-    return best.select(*cols)
-
-
-def lloyd_recompute(
-    assigned: DataFrame,
-    frame: DataFrame,
-    id_col: str = "vec_id",
-    xq_col: str = "xq",
-    cell_col: str = "cell",
-) -> DataFrame:
-    """One Lloyd center recomputation: the canonical (cluster, dim)
-    exact-long-sum shuffle, means rounded back to the grid. Returns a
-    (cid, cq) frame with one row per non-empty cluster."""
-    member_dims = (
-        assigned.join(frame, id_col)
-        .select(cell_col, F.posexplode(xq_col).alias("i", "x"))
-        .groupBy(cell_col, "i")
-        .agg(F.sum("x").alias("s"), F.count("*").alias("n"))
-    )
-    return (
-        member_dims.select(
-            F.col(cell_col).alias("cid"),
-            "i",
-            F.round(F.col("s").cast("double") / F.col("n")).cast("long").alias("c"),
-        )
-        .groupBy("cid")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("i", "c"))), lambda p: p["c"]
-            ).alias("cq")
-        )
-    )
 
 
 class DeterministicKMeans:
@@ -140,10 +72,6 @@ class DeterministicKMeans:
 
     def clusterCenters(self) -> list[list[float]]:  # noqa: N802 (ML parity)
         return [[x / self.q for x in c] for c in self.centers_q]
-
-    def centers_df(self, spark: SparkSession) -> DataFrame:
-        rows = [(i, c) for i, c in enumerate(self.centers_q)]
-        return spark.createDataFrame(rows, "cid int, cq array<bigint>")
 
     def with_cell(
         self,
@@ -170,20 +98,6 @@ class DeterministicKMeans:
             )
             .withColumn(out_col, F.col(out_col).cast("int"))
             .drop("_xq")
-        )
-
-    def assign(
-        self,
-        frame: DataFrame,
-        id_col: str = "vec_id",
-        vec_col: str = "embedding",
-        out_col: str = "cell",
-    ) -> DataFrame:
-        """(id, cell) nearest-center assignment — the incremental
-        index update: new vectors join the persisted centers without
-        a refit."""
-        return self.with_cell(frame, vec_col=vec_col, out_col=out_col).select(
-            id_col, out_col
         )
 
     def save(self, path: str) -> None:
@@ -308,23 +222,22 @@ def inrow_assign(
     cell_col: str = "cell",
     dist_col: str | None = None,
 ) -> DataFrame:
-    """Nearest-center assignment against DRIVER-HELD centers, in-row.
+    """Nearest-center assignment against DRIVER-HELD centers, in-row:
+    the one assignment kernel of the k-means tier.
 
     ``centers`` is an ascending-cid ``(cid, grid_vector)`` list (cids
     need not be dense — the SemDeDup family seeds cells with vec_ids).
     Appends ``cell_col`` (and optionally the exact int64 squared
     distance) with NO join and NO shuffle: one narrow ArrowEvalPython
     projection (``DeterministicKMeans.with_cell`` is this call with
-    dense cids). Bit-identical to
-    :func:`assign_cells` over a (cid, cq) frame of the same centers:
-    exact int64 arithmetic, ties to the smaller cid (numpy argmin
-    takes the FIRST extremum; centers arrive cid-ascending) —
-    equality-tested in tests/test_kmeans_operator.py.
+    dense cids). Exact int64 arithmetic; ties go to the smaller cid
+    (numpy argmin takes the FIRST extremum and the centers arrive
+    cid-ascending) — tested against a plain-Python argmin in
+    tests/test_kmeans_operator.py.
 
-    The scale contract matches ``DeterministicKMeans.with_cell``: the
-    centers are index artifacts (k ≤ hundreds of rows of ints), never
-    data — every executor holds them as numpy constants, the corpus
-    streams through untouched."""
+    The centers are index artifacts (k ≤ hundreds of rows of ints),
+    never data — every executor holds them as numpy constants, the
+    corpus streams through untouched."""
     import numpy as np
 
     cent = np.array([c for _, c in centers], dtype=np.int64)
@@ -364,47 +277,49 @@ def inrow_assign(
     )
 
 
-def two_iter_lloyd_centers(
-    e: DataFrame, k: int, id_col: str = "vec_id", xq_col: str = "xq"
+def _lloyd_step(
+    e: DataFrame, centers: list[tuple[int, list[int]]], xq_col: str = "xq"
 ) -> list[tuple[int, list[int]]]:
-    """The SemDeDup-family trainer (seeds = the k smallest-id quantized
-    rows, ONE Lloyd recomputation — the unrolled two-iteration form the
-    family's DuckDB oracles mirror), computed with two bounded collects
-    instead of the broadcast-join + exchange chain the r14 form paid:
-
-    - seeds: a k-row ordered take (k ≤ the ladder's 128);
-    - per-(cell, dim) exact int64 sums: ONE fused narrow pass — the
-      first-iteration assignment runs in-row (:func:`inrow_assign`)
-      inside the same stage as the posexplode, so no a1 checkpoint, no
-      broadcast build, no join — collected as ≤ k·dim rows of longs.
-
-    Returns the NON-EMPTY (cid, center) list in ascending-cid order
-    (cids are the seed ids). Arithmetic replicates ``assign_cells`` +
-    ``lloyd_recompute`` bit-for-bit: exact int64 distances, the
-    (dist, cid) struct-min tie-break (= first argmin over ascending
-    cids), and Spark's HALF_UP double→grid mean rounding
-    (:func:`_round_half_up`, the proven replica). Empty input → []."""
-    seed_rows = e.orderBy(id_col).limit(k).collect()
-    if not seed_rows:
-        return []
-    seeds = [(int(r[id_col]), [int(x) for x in r[xq_col]]) for r in seed_rows]
-    seeds.sort(key=lambda t: t[0])
+    """One Lloyd round on Spark against driver-held ``centers``: the
+    :func:`inrow_assign` assignment fused into the same stage as the
+    posexplode, one (cell, dim) exact-int64 sum/count shuffle collected
+    as ≤ k·dim rows, and the grid means rounded on the driver with
+    Spark's HALF_UP (:func:`_round_half_up` on the same double
+    division). Returns the NON-EMPTY (cid, center) list in ascending-cid
+    order; callers decide what an empty cell keeps."""
     sums = (
-        inrow_assign(e, seeds, xq_col=xq_col, cell_col="_c1")
-        .select("_c1", F.posexplode(xq_col).alias("i", "x"))
-        .groupBy("_c1", "i")
+        inrow_assign(e, centers, xq_col=xq_col, cell_col="_c")
+        .select("_c", F.posexplode(xq_col).alias("i", "x"))
+        .groupBy("_c", "i")
         .agg(F.sum("x").alias("s"), F.count("*").alias("n"))
         .collect()
     )
     acc: dict[int, dict[int, int]] = {}
     for r in sums:
-        acc.setdefault(int(r["_c1"]), {})[int(r["i"])] = _round_half_up(
+        acc.setdefault(int(r["_c"]), {})[int(r["i"])] = _round_half_up(
             float(int(r["s"])) / int(r["n"])
         )
     return [
         (cid, [dims[i] for i in range(len(dims))])
         for cid, dims in sorted(acc.items())
     ]
+
+
+def two_iter_lloyd_centers(
+    e: DataFrame, k: int, id_col: str = "vec_id", xq_col: str = "xq"
+) -> list[tuple[int, list[int]]]:
+    """The SemDeDup-family trainer: seeds = the k smallest-id quantized
+    rows (a k-row ordered take), then ONE :func:`_lloyd_step` — the
+    unrolled two-iteration form the family's DuckDB oracles mirror.
+
+    Returns the NON-EMPTY (cid, center) list in ascending-cid order
+    (cids are the seed ids). Empty input → []."""
+    seed_rows = e.orderBy(id_col).limit(k).collect()
+    if not seed_rows:
+        return []
+    seeds = [(int(r[id_col]), [int(x) for x in r[xq_col]]) for r in seed_rows]
+    seeds.sort(key=lambda t: t[0])
+    return _lloyd_step(e, seeds, xq_col)
 
 
 def _round_half_up(x: float) -> int:
@@ -422,37 +337,30 @@ def _round_half_up(x: float) -> int:
     return n if x >= 0 else -n
 
 
-def _fit_local(ids_xq, k: int, n_iters: int, init: str, q: int) -> DeterministicKMeans:
+def _fit_local(ids_xq, k: int, n_iters: int, q: int) -> DeterministicKMeans:
     """Driver-local Lloyd over an already-quantized, BOUNDED training
     sample (≤ local_cap rows — a few MB of int64).
 
     Produces bit-identical centers to the distributed loop: the
     vectors were quantized Spark-side (same HALF_UP rounding), all
     distances and sums are exact int64, argmin/argmax tie-breaks
-    replicate the (dist, cid) struct-min / smallest-id rules (rows
-    sorted by id; numpy argmin/argmax take the FIRST extremum), and
-    the center mean replays Spark's double division + HALF_UP round
+    replicate the smaller-cid / smallest-id rules (rows sorted by id;
+    numpy argmin/argmax take the FIRST extremum), and the center mean
+    replays Spark's double division + HALF_UP round
     (``test_kmeans_operator`` asserts local ≡ distributed). Exists
-    because the distributed loop costs (k-1) seeding + 2·n_iters jobs
-    — ~40 sequential stages that are pure scheduling overhead on a
-    4096-row sample (the PQ path fits m=16 codebooks: ~600 jobs,
-    minutes of wall for milliseconds of arithmetic)."""
+    because the distributed loop costs (k-1) seeding jobs plus a
+    shuffle per round — sequential stages that are pure scheduling
+    overhead on a 4096-row sample (the PQ path fits m=16 codebooks)."""
     import numpy as np
 
     ids_xq.sort(key=lambda r: r[0])
     X = np.array([r[1] for r in ids_xq], dtype=np.int64)
-    n = X.shape[0]
-    if init == "first_k":
-        if n < k:
-            raise ValueError(f"corpus has {n} rows < k={k}")
-        centers = X[:k].copy()
-    else:
-        centers = X[:1].copy()
-        mind = _sqdist(X, centers)[:, 0]
-        while centers.shape[0] < k:
-            nxt = X[int(mind.argmax())]
-            centers = np.vstack([centers, nxt])
-            mind = np.minimum(mind, _sqdist(X, centers[-1:])[:, 0])
+    centers = X[:1].copy()
+    mind = _sqdist(X, centers)[:, 0]
+    while centers.shape[0] < k:
+        nxt = X[int(mind.argmax())]
+        centers = np.vstack([centers, nxt])
+        mind = np.minimum(mind, _sqdist(X, centers[-1:])[:, 0])
     for _ in range(n_iters):
         a = _sqdist(X, centers).argmin(axis=1)
         for cid in range(centers.shape[0]):
@@ -476,28 +384,26 @@ def fit_deterministic_kmeans(
     sample_rows: int | None = None,
     seed: int = 42,
     n_rows: int | None = None,
-    init: str = "farthest",
     local_cap: int = 65536,
 ) -> DeterministicKMeans:
-    """Fit k centers with ``n_iters`` Lloyd rounds (assign + recompute).
+    """Fit k centers: farthest-point seeding, then ``n_iters`` Lloyd
+    rounds (assign + recompute).
 
-    Seeds are the k smallest-``id_col`` rows (TakeOrderedAndProject —
-    a k-row driver read, no global sort materialized), so the fit is a
-    pure function of (corpus, k, n_iters, q, sample config). When
-    ``sample_rows`` is set, training runs on a seeded Bernoulli sample
-    (the FAISS discipline: the quantizer needs cluster geometry, which
-    ~256 points/centroid capture; a full-corpus fit at 100 TB is both
-    unaffordable and unnecessary) — pass ``n_rows`` if the caller
-    already knows the corpus size, else one narrow count runs.
+    The fit is a pure function of (corpus, k, n_iters, q, sample
+    config). When ``sample_rows`` is set, training runs on a seeded
+    Bernoulli sample (the FAISS discipline: the quantizer needs cluster
+    geometry, which ~256 points/centroid capture; a full-corpus fit at
+    100 TB is both unaffordable and unnecessary) — pass ``n_rows`` if
+    the caller already knows the corpus size, else one narrow count
+    runs.
 
-    Each round collects k×dim longs to the driver (the centers — the
-    same footprint ``clusterCenters()`` always had); corpus-sized work
-    stays in the two distributed passes per round — EXCEPT when the
-    training frame is itself bounded (≤ ``local_cap`` rows, the normal
-    FAISS-style sampled index build), where the quantized sample is
-    collected once and the identical arithmetic runs driver-side
-    (:func:`_fit_local` — bit-equal by test, ~40× fewer scheduler
-    round trips). ``local_cap=0`` forces the distributed loop.
+    When the training frame is bounded (≤ ``local_cap`` rows, the
+    normal FAISS-style sampled index build) the quantized sample is
+    collected once and :func:`_fit_local` runs the arithmetic on the
+    driver. Otherwise each seed is one bounded ordered take and each
+    round one :func:`_lloyd_step`, collecting k×dim longs — the same
+    footprint ``clusterCenters()`` always had, never a corpus collect.
+    ``local_cap=0`` forces the Spark loop.
     """
     fit = df.select(id_col, quantize_vec(F.col(vec_col), q).alias("xq"))
     if n_rows is None:
@@ -510,10 +416,7 @@ def fit_deterministic_kmeans(
     else:
         est = n_rows
     if est <= local_cap:
-        return _fit_local(
-            [(r[0], list(r[1])) for r in fit.collect()], k, n_iters, init, q
-        )
-    spark = df.sparkSession
+        return _fit_local([(r[0], list(r[1])) for r in fit.collect()], k, n_iters, q)
 
     # Deterministic farthest-point (Gonzalez k-center) seeding: start
     # from the smallest-id row, then greedily take the row maximizing
@@ -521,49 +424,25 @@ def fit_deterministic_kmeans(
     # Naive smallest-id-k seeding measurably converges to worse local
     # optima (IVF recall dipped 0.8 → 0.6 on one query at sf0.01);
     # farthest-point spreads seeds like kmeans|| does, deterministically.
-    # Each round is one bounded TakeOrdered over the (sampled) fit
-    # frame — k-1 index-build-time jobs, never a corpus collect.
-    # ``init="first_k"`` instead seeds with the k smallest-id rows —
-    # the kmeans_fixed_assign differential's seeding, so the trainer
-    # can be equality-tested against the hash-checked query.
-    if init == "first_k":
-        rows = fit.orderBy(id_col).limit(k).select("xq").collect()
-        if len(rows) < k:
-            raise ValueError(f"corpus has {len(rows)} rows < k={k}")
-        centers = [list(r.xq) for r in rows]
-    elif init != "farthest":
-        raise ValueError(f"unknown init: {init!r}")
-    else:
-        first = fit.orderBy(id_col).limit(1).select("xq").collect()
-        if not first:
-            raise ValueError("empty corpus")
-        centers = [list(first[0].xq)]
+    # A row's min-distance is its in-row assignment distance; with fewer
+    # distinct rows than k the farthest row sits at distance 0 and
+    # repeats a seed.
+    first = fit.orderBy(id_col).limit(1).select("xq").collect()
+    if not first:
+        raise ValueError("empty corpus")
+    centers = [list(first[0].xq)]
     while len(centers) < k:
-        cdf = spark.createDataFrame(
-            [(i, c) for i, c in enumerate(centers)], "cid int, cq array<bigint>"
-        )
         far = (
-            fit.join(F.broadcast(cdf), how="cross")
-            .groupBy(id_col, "xq")
-            .agg(F.min(sqdist_q(F.col("xq"), F.col("cq"))).alias("mind"))
-            .orderBy(F.desc("mind"), F.asc(id_col))
+            inrow_assign(fit, list(enumerate(centers)), cell_col="_c", dist_col="_d")
+            .orderBy(F.desc("_d"), F.asc(id_col))
             .limit(1)
+            .select("xq")
             .collect()
         )
-        if not far:  # fewer distinct rows than k: repeat the last seed
-            centers.append(centers[-1])
-            continue
         centers.append(list(far[0].xq))
 
     for _ in range(n_iters):
-        cdf = spark.createDataFrame(
-            [(i, c) for i, c in enumerate(centers)], "cid int, cq array<bigint>"
-        )
-        a = assign_cells(fit, cdf, id_col=id_col)
-        new = {
-            r.cid: list(r.cq)
-            for r in lloyd_recompute(a, fit, id_col=id_col).collect()
-        }
+        new = dict(_lloyd_step(fit, list(enumerate(centers))))
         # empty clusters keep their previous center (deterministic)
         centers = [new.get(i, centers[i]) for i in range(k)]
 

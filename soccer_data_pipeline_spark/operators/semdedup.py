@@ -13,14 +13,14 @@ the audit→action pattern of the r9 leakage and r10 contamination
 closures). The registered query and the pipeline share this one code
 path, so the driver hash covers both.
 
-Scale shape (unchanged from the query): assignment is a broadcast-
-k-row pass; the pair join is equi on the learned cell, so pair work is
-Σ n_c² — bounded by the corpus-size k ladder holding cluster size
-~constant (the paper's discipline); CC is the three-tier
-``operators/graph.dup_clusters``; the keeper window partitions by dup
-cluster (bounded groups), never globally. At 100 TB: k ~ n/4096
-cells, per-cell blocks of ~4096 rows — embarrassingly parallel, no
-corpus-sized window anywhere.
+Scale shape (unchanged from the query): assignment is one in-row
+projection against the k driver-held centers; the pair join is equi on
+the learned cell, so pair work is Σ n_c² — bounded by the corpus-size
+k ladder holding cluster size ~constant (the paper's discipline); CC
+is the three-tier ``operators/graph.dup_clusters``; the keeper window
+partitions by dup cluster (bounded groups), never globally. At 100 TB:
+k ~ n/4096 cells, per-cell blocks of ~4096 rows — embarrassingly
+parallel, no corpus-sized window anywhere.
 """
 
 from __future__ import annotations
@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.vectors import as_double_array, dot
 from .graph import dup_clusters
 from .kmeans import GRID_Q, inrow_assign, quantize_vec, two_iter_lloyd_centers
 
@@ -93,12 +94,9 @@ def semdedup_assign(
 
 
 def _with_norm(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-    dot = lambda a, b: F.aggregate(  # noqa: E731
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
     v = emb.select(
         F.col(id_col).alias("vec_id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
+        as_double_array(F.col(vec_col)).alias("v"),
     )
     return v.withColumn("n", F.sqrt(dot(F.col("v"), F.col("v"))))
 
@@ -112,9 +110,6 @@ def semdedup_pairs(
 ) -> DataFrame:
     """(doc_a, doc_b) within-cell pairs with 6-dp cosine ≥ tau — the
     cell-equi self-join whose cost the k ladder bounds."""
-    dot = lambda a, b: F.aggregate(  # noqa: E731
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
     # the cell self-join broadcasts its build side, so the per-pair
     # interpreted cosine runs in the STREAM side's stage — off the
     # 1-partition assignment checkpoint it would serialize (guide §2.5;
@@ -240,9 +235,6 @@ def decide_incremental(m: DataFrame, new_ids: DataFrame, tau: float) -> DataFram
     from CC; the keeper rule prefers base members, then the
     farthest-from-centroid / smaller-id order. Emits (vec_id, action)
     for every row of ``new_ids``."""
-    dot = lambda a, b: F.aggregate(  # noqa: E731
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
     # stream-side spread before the broadcast cell self-join: the
     # per-pair interpreted cosine runs in this stage (see semdedup_pairs)
     from .skew import spread_for_compute

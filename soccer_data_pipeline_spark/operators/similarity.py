@@ -34,17 +34,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import DataType, LongType
 
-
-def _as_double(col):
-    return F.transform(col, lambda x: x.cast("double"))
-
-
-def _dot(a, b):
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x)
-
-
-def cosine(a, b):
-    return _dot(a, b) / (F.sqrt(_dot(a, a)) * F.sqrt(_dot(b, b)))
+from ..functions.vectors import as_double_array, dot
 
 
 def _norm(col):
@@ -52,7 +42,7 @@ def _norm(col):
     costs one dot product, not three. Bit-identical to evaluating the
     norm inside the pair expression (same operands, same fold order),
     so oracle-checked cosines are unchanged."""
-    return F.sqrt(_dot(col, col))
+    return F.sqrt(dot(col, col))
 
 
 def _vectors(
@@ -61,12 +51,14 @@ def _vectors(
     """(candidate_id, cv[, cn]), or for ``side="q"`` (query_id, qv[, qn]):
     ``vec_col`` as doubles and its norm."""
     key, v = ("query_id" if side == "q" else "candidate_id"), f"{side}v"
-    out = df.select(F.col(id_col).alias(key), _as_double(F.col(vec_col)).alias(v))
+    out = df.select(
+        F.col(id_col).alias(key), as_double_array(F.col(vec_col)).alias(v)
+    )
     return out.withColumn(f"{side}n", _norm(F.col(v))) if norm else out
 
 
 def _pair_cosine(qv, cv, qn, cn):
-    return F.round(_dot(qv, cv) / (qn * cn), 6)
+    return F.round(dot(qv, cv) / (qn * cn), 6)
 
 
 def _top_k(sims: DataFrame, k: int, score: str = "cosine") -> DataFrame:
@@ -146,7 +138,7 @@ def _lit_d(x: float) -> str:
 
 def _dot_sql(col_name: str, vec: list[float]) -> str:
     """SQL text for v·constant — same aggregate/zip_with op tree (and
-    therefore bit-identical doubles) as the Column-built ``_dot``."""
+    therefore bit-identical doubles) as the Column-built ``dot``."""
     arr = "array(" + ",".join(_lit_d(x) for x in vec) + ")"
     return (
         f"aggregate(zip_with({col_name}, {arr}, (x, y) -> x * y), "
@@ -236,7 +228,7 @@ def ann_lsh_cosine(
 
 def _fold_dot(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     """Σ_t a[..., t]·b[..., t] of broadcastable arrays, folded left to
-    right from 0.0 — ``_dot``'s order, so the doubles equal the SQL
+    right from 0.0 — ``dot``'s order, so the doubles equal the SQL
     fold's bit for bit (a pairwise ``.sum()`` changes the last bit)."""
     acc = np.zeros(np.broadcast_shapes(a.shape[:-1], b.shape[:-1]))
     for t in range(a.shape[-1]):
@@ -276,7 +268,7 @@ def collect_queries(
     A :class:`QueryBatch` passes through."""
     if isinstance(queries, QueryBatch):
         return queries
-    rows = queries.select(id_col, _as_double(F.col(vec_col))).collect()
+    rows = queries.select(id_col, as_double_array(F.col(vec_col))).collect()
     ids = queries.schema[id_col].dataType
     return QueryBatch.of([r[0] for r in rows], [r[1] for r in rows], ids)
 
@@ -373,9 +365,10 @@ def ivf_topk(
        unnecessary. This is the only iterative step, run once per
        corpus build, not per query — pass the returned ``model`` back
        in to skip it. The trainer is the deterministic grid-exact
-       Lloyd operator (operators/kmeans.py, hash-checked by
-       ``kmeans_fixed_assign``): the quantizer is pure data (k×dim
-       grid ints), byte-stable per (corpus, config);
+       Lloyd operator (operators/kmeans.py; on a bounded sample the
+       driver-local ``_fit_local``, bit-equal by test to the Spark
+       Lloyd step ``kmeans_fixed_assign`` hash-checks): the quantizer
+       is pure data (k×dim grid ints), byte-stable per (corpus, config);
     2. assign every candidate to its nearest centroid IN-ROW (zero
        shuffle — ``DeterministicKMeans.with_cell``);
     3. per query of the bounded batch (collected once, ranked on the
@@ -495,7 +488,7 @@ def _band_coded(
     base = df.select(
         F.col(id_col).alias("vid"),
         *([F.col(label_col).alias("lbl")] if label_col else [F.lit(0).alias("lbl")]),
-        _as_double(F.col(vec_col)).alias("v"),
+        as_double_array(F.col(vec_col)).alias("v"),
     ).withColumn("n", _norm(F.col("v")))
 
     # one code per band: band b = bits [b*w, (b+1)*w) of the sign sketch.
@@ -708,7 +701,7 @@ def _adc_dot_expr(m: int):
 def _first_dim(candidates: DataFrame, vec_col: str, caller: str) -> int:
     """The vector length of the first candidate: one driver job, so
     callers holding fitted quantizers read the dimension from those."""
-    probe = candidates.select(_as_double(F.col(vec_col)).alias("v")).first()
+    probe = candidates.select(as_double_array(F.col(vec_col)).alias("v")).first()
     if probe is None:
         raise ValueError(
             f"{caller}: candidate frame is empty — cannot fit PQ codebooks; "
@@ -907,7 +900,6 @@ def fit_pq_codebooks(
                 ],
                 n_codes,
                 4,
-                "farthest",
                 GRID_Q,
             )
             for s in range(m)

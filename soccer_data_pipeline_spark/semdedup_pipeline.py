@@ -123,6 +123,7 @@ def fit_semdedup_base(
         "k": k,
         "dim": len(centers[0][1]),
         "epoch": epoch,
+        "schema": _base_schema(stored, centers),
     }
     write_json_atomic(_config_path(out_dir), config)
     # a re-fit declares fresh truth: the ledger of decisions against the
@@ -130,6 +131,19 @@ def fit_semdedup_base(
     # are published (the index build's rule for its tombstones)
     shutil.rmtree(_actions_dir(out_dir), ignore_errors=True)
     return config
+
+
+def _base_schema(stored: DataFrame, centers: list[tuple[int, list[int]]]) -> str:
+    """The schema a parquet read infers for the base store, as DDL: the
+    data columns as written, then the ``cell`` partition column, typed
+    ``int`` while every cid fits in one (Spark's partition-value
+    inference), else ``bigint``. A read given it runs no
+    schema-inference job."""
+    cols = [
+        f"{f.name} {f.dataType.simpleString()}" for f in stored.schema if f.name != "cell"
+    ]
+    cell = "int" if all(-(2**31) <= cid < 2**31 for cid, _ in centers) else "bigint"
+    return ", ".join([*cols, f"cell {cell}"])
 
 
 def _load_centers(out_dir: str) -> list[tuple[int, list[int]]]:
@@ -143,12 +157,10 @@ def _load_centers(out_dir: str) -> list[tuple[int, list[int]]]:
 
 
 def load_semdedup_artifacts(spark: SparkSession, out_dir: str):
-    """(centroids DataFrame (cid, cq), config dict) from a persisted
-    directory — the kilobyte constants every batch assigns against."""
-    cent = spark.createDataFrame(
-        _load_centers(out_dir), "cid bigint, cq array<bigint>"
-    )
-    return cent, cell_store.read_config(out_dir)
+    """(centroids, config dict) from a persisted directory: the
+    ascending-cid ``(cid, grid_vector)`` list every batch assigns
+    against, and the config stamp."""
+    return _load_centers(out_dir), cell_store.read_config(out_dir)
 
 
 def load_semdedup_base_rows(
@@ -158,12 +170,18 @@ def load_semdedup_base_rows(
     exclude_ids: DataFrame | None = None,
 ) -> DataFrame:
     """The persisted base rows, one per vec_id, idempotent under
-    at-least-once appends (``cell_store.load_cells``). ``cells``
-    statically prunes the scan to those cell directories;
-    ``exclude_ids`` anti-joins a batch's own ids out (the replay
-    discipline — see module docstring)."""
+    at-least-once appends (``cell_store.load_cells``), read with the
+    schema the fit stamped in ``config.json`` (a config without one is
+    read by inference). ``cells`` statically prunes the scan to those
+    cell directories; ``exclude_ids`` anti-joins a batch's own ids out
+    (the replay discipline — see module docstring)."""
     return cell_store.load_cells(
-        spark, _base_dir(out_dir), "vec_id", cells=cells, exclude=exclude_ids
+        spark,
+        _base_dir(out_dir),
+        "vec_id",
+        schema=cell_store.read_config(out_dir).get("schema"),
+        cells=cells,
+        exclude=exclude_ids,
     )
 
 

@@ -215,18 +215,16 @@ def test_fit_pq_codebooks_batched_equals_per_subspace(spark):
     be bit-identical to the per-subspace fit_deterministic_kmeans calls
     it replaced — same sample, same quantization, same _fit_local
     arithmetic, m times."""
+    from soccer_data_pipeline_spark.functions.vectors import as_double_array
     from soccer_data_pipeline_spark.operators.kmeans import (
         fit_deterministic_kmeans,
     )
-    from soccer_data_pipeline_spark.operators.similarity import (
-        _as_double,
-        fit_pq_codebooks,
-    )
+    from soccer_data_pipeline_spark.operators.similarity import fit_pq_codebooks
 
     _, c = _sides(spark)
     cand = c.select(
         F.col("vec_id").alias("candidate_id"),
-        _as_double(F.col("embedding")).alias("cv"),
+        as_double_array(F.col("embedding")).alias("cv"),
     )
     m, n_codes, sub = 4, 4, 16
     batched = fit_pq_codebooks(cand, None, m=m, n_codes=n_codes, sub=sub)

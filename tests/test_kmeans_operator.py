@@ -1,13 +1,12 @@
 """Deterministic k-means operator (operators/kmeans.py) — the trainer
-under the IVF coarse quantizer and the code path hash-checked by the
-``kmeans_fixed_assign`` differential (VERDICT r10 #3: load-bearing).
+under the IVF coarse quantizer and the SemDeDup family, and the Lloyd
+step hash-checked by the ``kmeans_fixed_assign`` differential.
 
-Covers: the two assignment forms agree (in-row Arrow kernel vs
-broadcast-frame struct-min), the trainer reproduces the registered
-differential's final assignment under the differential's seeding,
-byte-stable refits, JSON persistence round-trip, the IVF path's
-behavior under the swapped trainer, and the Arrow PQ encode kernel
-against a pure-Python left-fold reference.
+Covers: the in-row assignment kernel and the Spark Lloyd step against
+the plain-Python reference (tests/kmeans_reference.py), the driver-local
+fit against the Spark loop, the Spark jobs a fit and the differential
+submit, byte-stable refits, JSON persistence round-trip, and the Arrow
+PQ encode kernel against a pure-Python left-fold reference.
 """
 
 from __future__ import annotations
@@ -16,11 +15,15 @@ import pyspark.sql.functions as F
 
 from soccer_data_pipeline_spark.operators.kmeans import (
     DeterministicKMeans,
-    assign_cells,
     fit_deterministic_kmeans,
+    inrow_assign,
     quantize_vec,
+    two_iter_lloyd_centers,
 )
 from soccer_data_pipeline_spark.sources import load_table
+
+from .kmeans_reference import lloyd_step, nearest
+from .test_index_pipeline import _jobs_submitted
 
 SF = "/root/testdata/sf0.001"
 
@@ -29,43 +32,24 @@ def _emb(spark):
     return load_table(spark, SF, "embeddings")
 
 
-def test_inrow_assign_matches_broadcast_form(spark):
-    """with_cell (zero-shuffle Arrow kernel — the corpus-scale form)
-    and assign_cells (broadcast k-row frame + struct-min groupBy — the
-    fit/differential form) are the same exact int64 argmin."""
+def _quantized(spark):
+    """(vec_id, xq) of the corpus, and the same rows as {vec_id: xq}."""
+    e = _emb(spark).select("vec_id", quantize_vec(F.col("embedding")).alias("xq"))
+    return e, {r.vec_id: list(r.xq) for r in e.collect()}
+
+
+def test_with_cell_matches_python_argmin(spark):
+    """with_cell (the zero-shuffle Arrow kernel over dense cids) is the
+    exact integer argmin of the plain-Python reference, ties to the
+    smaller cid."""
     emb = _emb(spark)
     model = fit_deterministic_kmeans(emb, k=8, n_iters=2)
-    inrow = {
-        (r.vec_id, r.cell)
-        for r in model.assign(emb, id_col="vec_id", vec_col="embedding").collect()
+    _, xq = _quantized(spark)
+    cents = dict(enumerate(model.centers_q))
+    got = {
+        r.vec_id: r.cell for r in model.with_cell(emb).select("vec_id", "cell").collect()
     }
-    eq = emb.select("vec_id", quantize_vec(F.col("embedding")).alias("xq"))
-    bcast = {
-        (r.vec_id, r.cell)
-        for r in assign_cells(eq, model.centers_df(spark)).collect()
-    }
-    assert inrow == bcast
-
-
-def test_fit_first_k_reproduces_differential_assignment(spark):
-    """fit(init='first_k', n_iters=1) IS the kmeans_fixed_assign
-    recurrence (seed on vec_id < k, one recompute): the trainer's
-    final assignment must equal the hash-checked query's
-    cluster_final column — the 'shared code path' claim, tested."""
-    from soccer_data_pipeline_spark.plans import QUERIES
-
-    model = fit_deterministic_kmeans(
-        _emb(spark), k=8, n_iters=1, init="first_k"
-    )
-    ours = {
-        (r.vec_id, r.cell)
-        for r in model.assign(_emb(spark), id_col="vec_id").collect()
-    }
-    query = {
-        (r.vec_id, r.cluster_final)
-        for r in QUERIES["kmeans_fixed_assign"].fn(spark, SF).collect()
-    }
-    assert ours == query
+    assert got == {vid: nearest(x, cents)[1] for vid, x in xq.items()}
 
 
 def test_fit_is_deterministic(spark):
@@ -81,21 +65,22 @@ def test_json_roundtrip(spark, tmp_path):
     loaded = DeterministicKMeans.load(path)
     assert loaded.centers_q == model.centers_q
     assert loaded.q == model.q
-    a = {(r.vec_id, r.cell) for r in model.assign(_emb(spark)).collect()}
-    b = {(r.vec_id, r.cell) for r in loaded.assign(_emb(spark)).collect()}
-    assert a == b
+    a = model.with_cell(_emb(spark)).select("vec_id", "cell").collect()
+    b = loaded.with_cell(_emb(spark)).select("vec_id", "cell").collect()
+    assert set(a) == set(b)
 
 
 def test_empty_cluster_keeps_previous_center(spark):
     """A cluster that loses all members keeps its previous center
     (deterministic dead-centroid behavior): with every vector
-    identical, all rows assign to cid 0 (tie → smaller cid), so cells
-    1..k-1 go empty and must retain their seed centers."""
+    identical, farthest-point seeding repeats the first row and all rows
+    assign to cid 0 (tie → smaller cid), so cells 1..k-1 go empty and
+    must retain their seed centers."""
     emb = _emb(spark).limit(8)
     const = emb.select(
         "vec_id", F.transform(F.col("embedding"), lambda _: F.lit(0.5)).alias("embedding")
     )
-    model = fit_deterministic_kmeans(const, k=4, n_iters=2, init="first_k")
+    model = fit_deterministic_kmeans(const, k=4, n_iters=2)
     assert len(model.centers_q) == 4
     seed = [5000] * len(model.centers_q[0])
     assert all(c == seed for c in model.centers_q)
@@ -120,75 +105,69 @@ def test_inrow_assign_plan_has_no_shuffle(spark):
 
 def test_local_fit_equals_distributed_fit(spark):
     """The driver-local fast path (_fit_local, used whenever the
-    training sample is bounded) must be BIT-EQUAL to the distributed
-    loop: same Spark-side quantization, exact int64 distances, same
+    training sample is bounded) must be BIT-EQUAL to the Spark loop:
+    same Spark-side quantization, exact int64 distances, same
     tie-breaks, and a replicated HALF_UP center round. local_cap=0
-    forces the distributed engine for the comparison."""
+    forces the Spark loop for the comparison."""
     emb = _emb(spark)
-    for init in ("farthest", "first_k"):
-        local = fit_deterministic_kmeans(emb, k=8, n_iters=3, init=init)
-        dist = fit_deterministic_kmeans(emb, k=8, n_iters=3, init=init, local_cap=0)
-        assert local.centers_q == dist.centers_q, init
+    local = fit_deterministic_kmeans(emb, k=8, n_iters=3)
+    dist = fit_deterministic_kmeans(emb, k=8, n_iters=3, local_cap=0)
+    assert local.centers_q == dist.centers_q
 
 
-def test_inrow_assign_explicit_cids_matches_assign_cells(spark):
-    """inrow_assign (r15: driver-held centers, explicit non-dense cids,
-    optional distance output — the shape the SemDeDup family now
-    assigns through) must be bit-equal to assign_cells over a (cid,
-    cq) frame of the SAME centers: exact int64 distance, (dist, cid)
-    struct-min tie-break, long cell/dist columns."""
-    from soccer_data_pipeline_spark.operators.kmeans import inrow_assign
-
-    emb = _emb(spark)
-    e = emb.select("vec_id", quantize_vec(F.col("embedding")).alias("xq"))
+def test_inrow_assign_explicit_cids_matches_python_argmin(spark):
+    """inrow_assign over explicit non-dense cids with the distance
+    column (the shape the SemDeDup family assigns through) equals the
+    plain-Python reference: exact int64 distance, ties to the smaller
+    cid, long cell/dist columns."""
+    e, xq = _quantized(spark)
     # non-dense cids (vec_ids of the 8 smallest rows — the SemDeDup
     # seeding), and deliberately-colliding centers to exercise ties
-    seeds = [
-        (int(r.vec_id), [int(x) for x in r.xq])
-        for r in e.orderBy("vec_id").limit(8).collect()
-    ]
+    seeds = [(vid, xq[vid]) for vid in sorted(xq)[:8]]
     seeds[3] = (seeds[3][0], list(seeds[2][1]))  # duplicate center → ties
-    cent_df = spark.createDataFrame(
-        seeds, "cid bigint, cq array<bigint>"
-    )
     ours = {
         (r.vec_id, r.cell, r.dist_q2)
         for r in inrow_assign(e, seeds, dist_col="dist_q2")
         .select("vec_id", "cell", "dist_q2")
         .collect()
     }
-    ref = {
-        (r.vec_id, r.cell, r.dist_q2)
-        for r in assign_cells(e, cent_df, keep_dist=True).collect()
-    }
+    cents = dict(seeds)
+    ref = {(vid, *nearest(x, cents)[::-1]) for vid, x in xq.items()}
     assert ours == ref
+    cells = {c for _, c, _ in ours}
+    assert seeds[2][0] in cells and seeds[3][0] not in cells
 
 
-def test_two_iter_lloyd_centers_matches_distributed_chain(spark):
-    """two_iter_lloyd_centers (r15: two bounded collects + a fused
-    in-row first-iteration pass) must reproduce the r14 distributed
-    seeds→assign_cells→lloyd_recompute chain exactly — non-empty cells
-    only, ascending cid, identical HALF_UP grid means."""
-    from soccer_data_pipeline_spark.operators.kmeans import (
-        lloyd_recompute,
-        two_iter_lloyd_centers,
-    )
+def test_two_iter_lloyd_centers_matches_python_lloyd(spark):
+    """two_iter_lloyd_centers (k smallest-id seeds, one Spark Lloyd
+    step) equals the plain-Python Lloyd round: non-empty cells only,
+    ascending cid, identical grid-rounded means."""
+    e, xq = _quantized(spark)
+    for k in (3, 8):
+        seeds = {vid: xq[vid] for vid in sorted(xq)[:k]}
+        assert two_iter_lloyd_centers(e, k) == sorted(lloyd_step(xq, seeds).items()), k
+
+
+def test_spark_lloyd_job_counts(spark):
+    """Job pins at sf0.001: the Spark fit (local_cap=0, k=8, 3 rounds)
+    is a count, 8 seed takes and one Lloyd step per round (a shuffle
+    and its collect); the kmeans_fixed_assign differential is a seed
+    collect, one Lloyd step and one scan."""
+    from soccer_data_pipeline_spark.plans import QUERIES
 
     emb = _emb(spark)
-    e = emb.select("vec_id", quantize_vec(F.col("embedding")).alias("xq"))
-    for k in (3, 8):
-        ours = two_iter_lloyd_centers(e, k)
-        seeds = (
-            e.orderBy("vec_id")
-            .limit(k)
-            .select(F.col("vec_id").alias("cid"), F.col("xq").alias("cq"))
-        )
-        a1 = assign_cells(e, seeds, out_col="c1")
-        ref = sorted(
-            (int(r.cid), [int(x) for x in r.cq])
-            for r in lloyd_recompute(a1, e, cell_col="c1").collect()
-        )
-        assert ours == ref, k
+    fit_jobs = _jobs_submitted(
+        spark,
+        "kmeans-spark-fit",
+        lambda: fit_deterministic_kmeans(emb, k=8, n_iters=3, local_cap=0),
+    )
+    assert fit_jobs == 16, fit_jobs
+    query_jobs = _jobs_submitted(
+        spark,
+        "kmeans-fixed-assign",
+        lambda: QUERIES["kmeans_fixed_assign"].fn(spark, SF).collect(),
+    )
+    assert query_jobs == 4, query_jobs
 
 
 def test_semdedup_invariants(spark):

@@ -11,10 +11,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from soccer_data_pipeline_spark.operators.similarity import (
-    cosine as cosine_expr,
-    near_dup_pairs_banded,
-)
+from soccer_data_pipeline_spark.functions.vectors import cosine as cosine_expr
+from soccer_data_pipeline_spark.operators.similarity import near_dup_pairs_banded
 from soccer_data_pipeline_spark.sources import load_table
 
 SF_DIR = "/root/testdata/sf0.001"

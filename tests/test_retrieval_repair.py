@@ -19,6 +19,8 @@ from pyspark.sql import functions as F
 from soccer_data_pipeline_spark.plans import QUERIES
 from soccer_data_pipeline_spark.plans.curation_queries import CHUNK
 
+from .kmeans_reference import lloyd_step, nearest, quantize
+
 SF = "/root/testdata/sf0.001"
 
 
@@ -210,44 +212,17 @@ def test_ndcg_metric_bounds_and_consistency(spark):
 
 def test_kmeans_matches_python_reference(spark):
     """Replicate the deterministic quantized 2-step Lloyd exactly in
-    plain Python (grid longs, grid-rounded centroids, (dist, cid)
-    tiebreaks) and assert identical assignments at sf0.001."""
-    import math
-
-    vecs = _load_vecs()
-    Q = 10000
-
-    def rnd(v):
-        # ties-away-from-zero on the binary double, matching both
-        # engines' ROUND (python's round() is banker's and diverges)
-        return int(math.floor(v + 0.5)) if v >= 0 else -int(math.floor(-v + 0.5))
-
-    xq = {i: [rnd(x * Q) for x in v] for i, v in vecs.items()}
+    plain Python (``kmeans_reference``: grid longs, grid-rounded
+    centroids, ties to the smaller cid) and assert identical
+    assignments at sf0.001."""
+    xq = {i: quantize(v) for i, v in _load_vecs().items()}
     seeds = {c: xq[c] for c in range(8)}
-
-    def argmin(x, cents):
-        return min(
-            (sum((a - b) * (a - b) for a, b in zip(x, cq)), c)
-            for c, cq in cents.items()
-        )
-
-    a1 = {i: argmin(x, seeds)[1] for i, x in xq.items()}
-    sums: dict[int, list[int]] = {}
-    counts: dict[int, int] = {}
-    for i, x in xq.items():
-        c = a1[i]
-        counts[c] = counts.get(c, 0) + 1
-        s = sums.setdefault(c, [0] * len(x))
-        for d, v in enumerate(x):
-            s[d] += v
-    cents = {
-        c: [rnd(s[d] / counts[c]) for d in range(len(s))]
-        for c, s in sums.items()
-    }
-    expected = {i: argmin(x, cents) for i, x in xq.items()}
+    a1 = {i: nearest(x, seeds)[1] for i, x in xq.items()}
+    cents = lloyd_step(xq, seeds)
+    expected = {i: nearest(x, cents) for i, x in xq.items()}
 
     rows = QUERIES["kmeans_fixed_assign"].fn(spark, SF).collect()
-    assert len(rows) == len(vecs)
+    assert len(rows) == len(xq)
     for r in rows:
         ed, ec = expected[r["vec_id"]]
         assert r["cluster_first"] == a1[r["vec_id"]]

@@ -24,6 +24,8 @@ from soccer_data_pipeline_spark.semdedup_pipeline import (
 )
 from soccer_data_pipeline_spark.sources import load_table
 
+from .test_index_pipeline import _jobs_submitted
+
 SF = "/root/testdata/sf0.001"
 
 
@@ -57,8 +59,33 @@ def test_fit_persist_served_matches_in_memory_operator(spark, tmp_path):
     rows = load_semdedup_base_rows(spark, out_dir)
     assert rows.count() == base.count()
     cent, _ = load_semdedup_artifacts(spark, out_dir)
-    cids = {int(r.cid) for r in cent.collect()}
+    cids = {cid for cid, _ in cent}
     assert {int(r.cell) for r in rows.select("cell").distinct().collect()} <= cids
+
+
+def test_base_loader_reads_the_stamped_schema_without_a_job(spark, tmp_path):
+    """fit_semdedup_base stamps the base store's schema in config.json.
+    It equals what a schema-inferring read of the store returns, the
+    ``cell`` partition column's type included, so the loader returns
+    the same frame schema and constructing it submits no Spark job."""
+    from soccer_data_pipeline_spark import cell_store
+
+    base, _ = _splits(spark)
+    out_dir = str(tmp_path / "sem")
+    config = fit_semdedup_base(base, out_dir)
+    base_dir = os.path.join(out_dir, "base")
+    inferred = spark.read.parquet(base_dir).schema
+    assert spark.read.schema(config["schema"]).parquet(base_dir).schema == inferred
+    assert str(inferred["cell"].dataType) == "IntegerType()"
+
+    jobs = _jobs_submitted(
+        spark, "semdedup-base-loader", lambda: load_semdedup_base_rows(spark, out_dir)
+    )
+    assert jobs == 0, jobs
+    assert (
+        load_semdedup_base_rows(spark, out_dir).schema
+        == cell_store.load_cells(spark, base_dir, "vec_id").schema
+    )
 
 
 def test_streaming_equals_driver_loop_and_grows_base(spark, tmp_path):
