@@ -3,8 +3,9 @@ similarity-tier analog of ``corpus_pipeline.run_corpus_build``: one
 call from an embeddings frame to a PERSISTED, incrementally-updatable
 IVF×PQ index with a per-cell manifest and an optional recall audit.
 
-    fit (coarse quantizer + m PQ codebooks, deterministic Lloyd on
-         bounded samples — byte-stable per corpus+config)
+    fit (coarse quantizer + m PQ codebooks: one count, then each
+         fit collects its bounded seeded sample and runs deterministic
+         Lloyd on the driver — byte-stable per corpus+config)
       → encode (one narrow pass: cell + 8-byte codes + chat_norm per
                 vector; raw vectors are NOT in the index)
       → persist (index parquet + quantizers as a kilobyte of JSON +
@@ -16,7 +17,7 @@ IVF×PQ index with a per-cell manifest and an optional recall audit.
 
 Every stage is the operator the registered queries hash-check
 (`similarity_ivfpq_recall` / `similarity_ivfpq_residual` run the same
-``fit_pq_codebooks`` → ``ivfpq_index`` → ``ivfpq_search`` path), so
+``fit_ivfpq_quantizers`` → ``ivfpq_index`` → ``ivfpq_search`` path), so
 the pipeline inherits their oracle coverage; the integration tests
 additionally assert persisted-and-reloaded search is row-identical to
 the in-memory build.

@@ -4,15 +4,15 @@ Some operators must cache an intermediate because the plan consumes it
 several times: the DF-capped shingle table under ``dedup.ngram_jaccard``
 and ``dedup.shingle_containment`` (three consumers), and the edge and
 label checkpoints of the connected-components rounds (``graph.py``).
-Others own nothing and only materialize their small result once:
-``dedup.verify_jaccard``, whose MinHash-LSH pipeline reads every
-intermediate exactly once, and the supplier edge set of
-``plans/analytics_queries.py``. A bare ``.cache()`` is *catalog-owned*:
-it stays in the block manager until someone calls
-``unpersist()``/``clearCache()``, so a long-lived session accumulates
-executor memory pressure query after query (the r2 bench measured ~40%
-slowdown on heavy composites by query 40 and worked around it with
-per-query ``clearCache()``).
+Others own nothing and only materialize their small result once: the
+supplier edge set of ``plans/analytics_queries.py``. (The MinHash-LSH
+pipeline reads every intermediate once and returns its result lazily;
+``corpus.clean_decisions``, which reads it twice, checkpoints it.)
+A bare ``.cache()`` is *catalog-owned*: it stays in the block manager
+until someone calls ``unpersist()``/``clearCache()``, so a long-lived
+session accumulates executor memory pressure query after query (the
+r2 bench measured ~40% slowdown on heavy composites by query 40 and
+worked around it with per-query ``clearCache()``).
 
 The contract here gives every operator-internal cache an owner:
 

@@ -77,10 +77,12 @@ def clean_decisions(
     )
 
     def _minhash_tier() -> DataFrame:
+        # eager checkpoint: the pairs are read twice (CC edges and
+        # nd_docs below), and the tier overlaps the winnowing tier
         return minhash_near_dup_pairs(
             docs, n=3, k=k, bands=bands, threshold=threshold,
             max_bucket_size=max_bucket_size,
-        )
+        ).localCheckpoint(eager=True)
 
     if winnow_min_shared is not None:
         from .cache import run_concurrently

@@ -249,7 +249,9 @@ def verify_jaccard(
     text_col: str = "text",
 ) -> DataFrame:
     """Exact Jaccard on candidate pairs only (LSH prunes the rest),
-    materialized once and returned GC-owned (operators/cache.py).
+    returned as a lazy plan: nothing runs until the caller's action. A
+    caller that reads the result twice checkpoints it itself
+    (``corpus.clean_decisions``).
 
     Per-document shape, every input read once: each candidate pair
     explodes to its two ends, ``groupBy(doc_id)`` gathers the distinct
@@ -262,8 +264,6 @@ def verify_jaccard(
     duplicates. A pair whose end has no shingles (fewer than ``n``
     tokens) or no doc is dropped, as an inner join would.
     """
-    from .cache import materialize_owned
-
     per_doc = (
         candidates.select(
             F.explode(F.array("doc_a", "doc_b")).alias("doc_id"),
@@ -281,7 +281,7 @@ def verify_jaccard(
         .select("doc_id", "sh", F.inline("prs"))
     )
     jac = F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
-    out = (
+    return (
         ends.groupBy("doc_a", "doc_b")
         .agg(
             # doc_a < doc_b, so the smaller end's array is doc_a's
@@ -300,7 +300,6 @@ def verify_jaccard(
         .withColumn("jaccard", jac)
         .where(F.col("jaccard") >= threshold)
     )
-    return materialize_owned(out)
 
 
 def minhash_near_dup_pairs(
@@ -312,7 +311,7 @@ def minhash_near_dup_pairs(
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline: shingle → sign → band →
-    candidates → exact verify, as ONE plan materialized once.
+    candidates → exact verify, as ONE lazy plan.
     ``max_bucket_size`` caps LSH bucket fan-out (see ``_bucket_pairs``).
 
     Read-once shape: every intermediate has exactly one consumer, so
@@ -326,9 +325,11 @@ def minhash_near_dup_pairs(
     4-core host at sf0.01 that plan ran 21 Spark jobs and this one runs
     8, and the perfbench ``query_mix`` pass (one such query among seven)
     went from 4.25 to 3.42 s of operation CPU (medians of 6 alternating
-    pairs). The only materialization is the result itself
-    (``materialize_owned``): a GC-owned checkpoint, no block-manager
-    residue besides it.
+    pairs). Constructing it submits no job and leaves no block-manager
+    residue: the result is returned unmaterialized (an eager checkpoint
+    of it took 1.51 of the 2.04 s construction of
+    ``dedup_minhash_lsh_pairs`` at sf0.01 and saved nothing, since
+    every caller but one reads it once).
 
     Shuffle budget (the 100 TB shape): shingling is narrow
     (array_distinct replaces the r1-r3 corpus-wide distinct shuffle of

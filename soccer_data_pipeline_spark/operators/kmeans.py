@@ -296,8 +296,8 @@ def _lloyd_step(
     )
     acc: dict[int, dict[int, int]] = {}
     for r in sums:
-        acc.setdefault(int(r["_c"]), {})[int(r["i"])] = _round_half_up(
-            float(int(r["s"])) / int(r["n"])
+        acc.setdefault(int(r["_c"]), {})[int(r["i"])] = int(
+            _round_half_up(float(int(r["s"])) / int(r["n"]))
         )
     return [
         (cid, [dims[i] for i in range(len(dims))])
@@ -322,19 +322,21 @@ def two_iter_lloyd_centers(
     return _lloyd_step(e, seeds, xq_col)
 
 
-def _round_half_up(x: float) -> int:
+def _round_half_up(x):
     """Exact replica of Spark's ``F.round(double)`` (BigDecimal
-    HALF_UP: halves away from zero) for the |x| ≤ 1e4 grid range —
-    the one step of local Lloyd that is not integer arithmetic.
+    HALF_UP: halves away from zero) for the |x| ≤ 1e4 grid range, on a
+    double or elementwise on an array of them → int64. It is the one
+    step of local Lloyd that is not integer arithmetic, and with a
+    ``* q`` in front it is :func:`quantize_vec` on the driver.
 
     The fraction ``|x| − floor(|x|)`` is exact, so it is compared with
     0.5 on the double's own value; ``floor(x + 0.5)`` is not exact
     (0.49999999999999994 + 0.5 rounds to 1.0)."""
-    import math
+    import numpy as np
 
-    f = math.floor(abs(x))
-    n = f + (abs(x) - f >= 0.5)
-    return n if x >= 0 else -n
+    a = np.abs(x)
+    f = np.floor(a)
+    return np.copysign(f + (a - f >= 0.5), x).astype(np.int64)
 
 
 def _fit_local(ids_xq, k: int, n_iters: int, q: int) -> DeterministicKMeans:
@@ -342,7 +344,8 @@ def _fit_local(ids_xq, k: int, n_iters: int, q: int) -> DeterministicKMeans:
     sample (≤ local_cap rows — a few MB of int64).
 
     Produces bit-identical centers to the distributed loop: the
-    vectors were quantized Spark-side (same HALF_UP rounding), all
+    vectors were quantized with the same HALF_UP rounding (Spark's
+    :func:`quantize_vec`, or :func:`_round_half_up` on the driver), all
     distances and sums are exact int64, argmin/argmax tie-breaks
     replicate the smaller-cid / smallest-id rules (rows sorted by id;
     numpy argmin/argmax take the FIRST extremum), and the center mean
@@ -366,11 +369,8 @@ def _fit_local(ids_xq, k: int, n_iters: int, q: int) -> DeterministicKMeans:
         for cid in range(centers.shape[0]):
             members = X[a == cid]
             if members.shape[0]:
-                sums = members.sum(axis=0)
-                cnt = members.shape[0]
-                centers[cid] = [
-                    _round_half_up(float(s) / cnt) for s in sums
-                ]
+                # int64 sums / count: the same double division per dim
+                centers[cid] = _round_half_up(members.sum(axis=0) / members.shape[0])
     return DeterministicKMeans([list(map(int, c)) for c in centers], q=q)
 
 

@@ -44,9 +44,17 @@ def spread_for_compute(df: DataFrame) -> DataFrame:
     the engine's order-insensitive pipelines (exact-integer/min/count
     aggregations) — the house determinism discipline means no
     oracle-checked result depends on partitioning.
+
+    Deciding submits no job. A scan or filter is not AQE-wrapped, and
+    its split count comes from planning alone. A plan with an exchange
+    is wrapped in an ``AdaptiveSparkPlan``, and ``df.rdd`` on it would
+    run every upstream shuffle or broadcast stage as a job whose output
+    the later action does not reuse. Such a frame goes to
+    :func:`spread_after_shuffle`, which reads the planned width instead.
     """
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
+    if df._jdf.queryExecution().executedPlan().nodeName() == "AdaptiveSparkPlan":
+        return spread_after_shuffle(df)
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)
@@ -83,11 +91,13 @@ def spread_after_shuffle(df: DataFrame) -> DataFrame:
     spark = df.sparkSession
     conf_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     target = max(spark.sparkContext.defaultParallelism, conf_parts)
-    # planning executes nothing; under AQE the exchange-inserted input
-    # plan inside the adaptive wrapper carries the planned partitioning
+    # planning executes nothing. Under AQE the wrapper's own executedPlan
+    # carries the exchanges EnsureRequirements inserted (its inputPlan
+    # does not: a groupBy over a scan reads width 0 there), so an
+    # aggregate's shuffle width counts, not only a repartition's.
     plan = df._jdf.queryExecution().executedPlan()
     if plan.nodeName() == "AdaptiveSparkPlan":
-        plan = plan.inputPlan()
+        plan = plan.executedPlan()
     if plan.outputPartitioning().numPartitions() > target:
         return df
     return df.repartition(target)

@@ -339,6 +339,45 @@ def test_ivfpq_rejects_dim_not_divisible_by_m(spark):
         fit_ivfpq_quantizers(c, m=7)
 
 
+def test_quantizer_fits_reject_bad_input_before_any_job(spark):
+    """``n_codes`` above 256 (a PQ code is one byte, and the driver-held
+    sample is 1.2·256 rows per code) raises ValueError before any job
+    in both fit entry points, as does an empty frame whose count of 0
+    is handed to ``fit_pq_codebooks``; ``fit_ivfpq_quantizers`` on an
+    empty frame raises the same error after its count alone."""
+    from soccer_data_pipeline_spark.operators.similarity import (
+        _vectors,
+        fit_ivfpq_quantizers,
+        fit_pq_codebooks,
+    )
+
+    from .test_index_pipeline import _jobs_submitted
+
+    c = load_table(spark, SF_DIR, "embeddings")
+    cand = _vectors(c, "vec_id", "embedding", norm=False)
+    empty = c.where(F.col("vec_id") < 0)
+
+    def raises(match, fn):
+        with pytest.raises(ValueError, match=match):
+            fn()
+
+    too_many = "n_codes=257: a PQ code is one byte"
+    assert _jobs_submitted(spark, "fit-257", lambda: raises(
+        too_many, lambda: fit_ivfpq_quantizers(c, n_codes=257)
+    )) == 0
+    assert _jobs_submitted(spark, "pq-257", lambda: raises(
+        too_many, lambda: fit_pq_codebooks(cand, None, 16, 257, n_rows=1000)
+    )) == 0
+    assert _jobs_submitted(spark, "pq-empty", lambda: raises(
+        "candidate frame is empty",
+        lambda: fit_pq_codebooks(cand.where("candidate_id < 0"), None, 16, 16, 0),
+    )) == 0
+    count_jobs = _jobs_submitted(spark, "count-empty", empty.count)
+    assert _jobs_submitted(spark, "fit-empty", lambda: raises(
+        "candidate frame is empty", lambda: fit_ivfpq_quantizers(empty)
+    )) == count_jobs
+
+
 def _fold(xs) -> float:
     """Left fold from 0.0: the order of the SQL aggregate(zip_with) fold."""
     acc = 0.0

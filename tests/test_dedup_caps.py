@@ -280,9 +280,10 @@ def _jobs_submitted(spark, group, fn):
 
 def test_minhash_pipeline_is_one_plan_with_no_residue(spark):
     """Every MinHash-LSH intermediate has one consumer, so the pipeline
-    runs as one plan materialized once: a handful of jobs (the earlier
-    cache + candidate-checkpoint shape submitted 21), and the only
-    persisted RDD it leaves is the returned frame's own checkpoint."""
+    is one lazy plan: constructing it submits no job and persists
+    nothing, and running it takes a handful of jobs (the earlier cache
+    + candidate-checkpoint shape submitted 21) and leaves no persisted
+    RDD behind."""
     from soccer_data_pipeline_spark.operators.cache import persistent_rdd_ids
 
     docs = load_table(spark, SF_DIR, "documents")
@@ -294,9 +295,25 @@ def test_minhash_pipeline_is_one_plan_with_no_residue(spark):
             docs, n=3, k=16, bands=4, threshold=0.5, max_bucket_size=50
         ),
     )
-    assert jobs <= 8, f"minhash_near_dup_pairs submitted {jobs} jobs"
-    own = int(out._jdf.queryExecution().analyzed().rdd().id())
-    assert persistent_rdd_ids(spark) - before == {own}
+    assert jobs == 0, f"constructing minhash_near_dup_pairs submitted {jobs} jobs"
+    n, jobs = _jobs_submitted(spark, "minhash-one-plan-run", out.count)
+    assert n > 0
+    assert jobs <= 8, f"minhash_near_dup_pairs ran {jobs} jobs"
+    assert persistent_rdd_ids(spark) - before == set()
+
+
+def test_minhash_registry_query_constructs_with_no_job(spark):
+    """Constructing ``dedup_minhash_lsh_pairs`` submits no Spark job: the
+    verified pairs come back as a plan, not as an eager checkpoint."""
+    from soccer_data_pipeline_spark.plans import QUERIES
+
+    load_table(spark, SF_DIR, "documents")  # caches the table's schema
+    out, jobs = _jobs_submitted(
+        spark,
+        "minhash-registry-construct",
+        lambda: QUERIES["dedup_minhash_lsh_pairs"].fn(spark, SF_DIR),
+    )
+    assert jobs == 0
     assert out.count() > 0
 
 
@@ -423,6 +440,29 @@ def test_lsh_candidates_and_verify_match_python_reference(spark):
         max_bucket_size=_CAP,
     ).collect()
     assert {tuple(r) for r in inc} == expected(_python_pairs(buckets, _CAP, new))
+
+
+def test_spread_for_compute_decides_with_no_job(spark):
+    """On a post-join frame (AQE-wrapped) the decision reads the planned
+    width and submits no job (``df.rdd`` ran the join's broadcast stage
+    as one); on a plain scan it keeps the split-count decision."""
+    from soccer_data_pipeline_spark.operators.skew import spread_for_compute
+
+    target = spark.sparkContext.defaultParallelism
+    docs = load_table(spark, SF_DIR, "documents")
+    ids = docs.select("doc_id").where(F.col("doc_id") % 2 == 0)
+    joined = docs.join(ids, "doc_id", "left_semi")
+    out, jobs = _jobs_submitted(spark, "spread-join", lambda: spread_for_compute(joined))
+    assert jobs == 0
+    assert out.rdd.getNumPartitions() == target
+    assert _rows(out) == _rows(joined)
+
+    assert docs.rdd.getNumPartitions() < target
+    out, jobs = _jobs_submitted(spark, "spread-scan", lambda: spread_for_compute(docs))
+    assert jobs == 0
+    assert out is not docs and out.rdd.getNumPartitions() == target
+    wide = spark.range(1000, numPartitions=2 * target)
+    assert spread_for_compute(wide) is wide
 
 
 def test_spread_after_shuffle_never_shrinks_and_runs_no_job(spark):

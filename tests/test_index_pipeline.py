@@ -227,7 +227,7 @@ def test_fit_pq_codebooks_batched_equals_per_subspace(spark):
         as_double_array(F.col("embedding")).alias("cv"),
     )
     m, n_codes, sub = 4, 4, 16
-    batched = fit_pq_codebooks(cand, None, m=m, n_codes=n_codes, sub=sub)
+    batched = fit_pq_codebooks(cand, None, m=m, n_codes=n_codes, n_rows=cand.count())
     subcols = [
         F.slice(F.col("cv"), s * sub + 1, sub).alias(f"s{s}") for s in range(m)
     ]
@@ -1579,10 +1579,47 @@ def test_fit_pq_codebooks_residual_equals_literal_centers_reference(spark):
             f"zip_with(cv, element_at({centers}, cell + 1), (a, b) -> a - b)"
         ).alias("cv"),
     )
-    reference = fit_pq_codebooks(literal, None, m=16, n_codes=16, sub=4)
+    reference = fit_pq_codebooks(literal, None, m=16, n_codes=16, n_rows=10_000)
     assert [mod.centers_q for mod in models] == [
         mod.centers_q for mod in reference
     ]
+
+
+def test_fit_ivfpq_quantizers_job_count(spark, tmp_path):
+    """One count feeds both fits, and each fit collects its bounded
+    seeded sample once and prepares it on the driver: on a 10,000×64
+    corpus read from parquet like the ``ann_serve`` one (five row
+    groups), a residual fit submits 4 jobs — the count (2 under AQE)
+    and one collect per sample. With a one-row dim probe, a second
+    count and the residual pass in Spark it submitted 8."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from perfbench.gen import clustered_vectors
+    from soccer_data_pipeline_spark.operators.similarity import (
+        fit_ivfpq_quantizers,
+    )
+
+    vecs, _ = clustered_vectors(10_000, 901)
+    path = str(tmp_path / "corpus.parquet")
+    pq.write_table(
+        pa.table({
+            "vec_id": np.arange(10_000, dtype=np.int64),
+            "embedding": pa.array(list(vecs), pa.list_(pa.float32())),
+        }),
+        path,
+        row_group_size=2048,
+    )
+    corpus = spark.read.parquet(path)
+    jobs = _jobs_submitted(
+        spark,
+        "fit-ivfpq-jobs",
+        lambda: fit_ivfpq_quantizers(
+            corpus, n_centroids=16, m=16, n_codes=16, residual=True
+        ),
+    )
+    assert jobs == 4
 
 
 def test_rebalance_rejects_bad_cell_before_any_write(spark, tmp_path):
@@ -1703,10 +1740,12 @@ def test_merge_crash_before_last_cell_move_keeps_every_member(
 
 def test_rebalance_and_merge_job_counts(spark, tmp_path):
     """Jobs the split and the merge submit on this index (8 cells; the
-    merge is the default pick after the split): 16 and 11. A checkpoint
+    merge is the default pick after the split): 15 and 10. A checkpoint
     of the manifest and of the re-encode, a second read of the
     checkpointed manifest, a member-id dedup and an append into
-    ``index/`` in their place cost 21 and 14."""
+    ``index/`` in their place cost 21 and 14; deciding the re-encode's
+    spread with ``df.rdd`` on the joined members cost one more job
+    each (16 and 11)."""
     from soccer_data_pipeline_spark.index_pipeline import merge_cells
 
     _, c = _sides(spark)
@@ -1719,7 +1758,7 @@ def test_rebalance_and_merge_job_counts(spark, tmp_path):
     merge = _jobs_submitted(
         spark, "merge", lambda: merge_cells(spark, c, out_dir)
     )
-    assert (split, merge) == (16, 11)
+    assert (split, merge) == (15, 10)
 
 
 def test_rebuild_crash_mid_swap_keeps_every_row_and_rejects_stale_stream(

@@ -290,8 +290,11 @@ def test_pq_encode_matches_pure_python_reference(spark):
 def test_round_half_up_matches_spark_round_at_the_boundaries(spark):
     """``_round_half_up`` equals Spark's ``F.round`` on the doubles next to
     every half: the largest double below 0.5 (where ``floor(x + 0.5)``
-    gives 1), the halves themselves, and k + 0.5 one ulp either side."""
+    gives 1), the halves themselves, and k + 0.5 one ulp either side —
+    one double at a time and as one array."""
     import math
+
+    import numpy as np
 
     from soccer_data_pipeline_spark.operators.kmeans import _round_half_up
 
@@ -309,3 +312,37 @@ def test_round_half_up_matches_spark_round_at_the_boundaries(spark):
     ]
     assert got == want
     assert got[:3] == [0, 1, 3]
+    arr = _round_half_up(np.array(xs))
+    assert arr.dtype == np.int64 and arr.tolist() == want
+
+
+def test_driver_quantize_matches_quantize_vec_next_to_every_half(spark):
+    """The driver-side sample quantize of the PQ fit,
+    ``_round_half_up(x * GRID_Q)`` on a float64 matrix, equals Spark's
+    ``quantize_vec`` on the same doubles where the product lands next to
+    a half: v = ±(k + 0.5) / GRID_Q and the doubles two ulps either side."""
+    import math
+
+    import numpy as np
+
+    from soccer_data_pipeline_spark.operators.kmeans import GRID_Q, _round_half_up
+
+    vs = []
+    for k in (0, 1, 2, 7, 100, 4999, 9999):
+        v = (k + 0.5) / GRID_Q
+        lo = hi = v
+        for _ in range(2):
+            lo, hi = math.nextafter(lo, -math.inf), math.nextafter(hi, math.inf)
+            vs += [lo, hi]
+        vs.append(v)
+        # the products straddle the half: rounding goes both ways
+        products = [x * GRID_Q for x in vs[-5:]]
+        assert min(products) < k + 0.5 <= max(products)
+    vs += [-v for v in vs]
+    want = (
+        spark.createDataFrame([(vs,)], "v array<double>")
+        .select(quantize_vec(F.col("v")).alias("q"))
+        .first()["q"]
+    )
+    got = _round_half_up(np.array([vs]) * GRID_Q)
+    assert got.dtype == np.int64 and got[0].tolist() == want
