@@ -1,64 +1,31 @@
-"""Cache ownership contract for operators (VERDICT r2 #4 / ADVICE r2).
+"""One owner per materialized intermediate, one way to free it.
 
-Some operators must cache an intermediate because the plan consumes it
-several times: the DF-capped shingle table under ``dedup.ngram_jaccard``
-and ``dedup.shingle_containment`` (three consumers), and the edge and
-label checkpoints of the connected-components rounds (``graph.py``).
-Others own nothing and only materialize their small result once: the
-supplier edge set of ``plans/analytics_queries.py``. (The MinHash-LSH
-pipeline reads every intermediate once and returns its result lazily;
-``corpus.clean_decisions``, which reads it twice, checkpoints it.)
-A bare ``.cache()`` is *catalog-owned*: it stays in the block manager
-until someone calls ``unpersist()``/``clearCache()``, so a long-lived
-session accumulates executor memory pressure query after query (the
-r2 bench measured ~40% slowdown on heavy composites by query 40 and
-worked around it with per-query ``clearCache()``).
+An operator that reads a frame several times materializes it with
+:func:`checkpoint_owned` (an eager ``localCheckpoint``: lineage cut,
+blocks in the block manager) or with ``persist()`` where the plan should
+keep showing the cached subtree (the DF-capped shingle table under
+``dedup.ngram_jaccard`` / ``dedup.shingle_containment``), and frees it
+with :func:`release`. Driver loops (connected components, star
+contraction, k-core peel, BFS, BPE learning) free each round they
+supersede once the next one is materialized, and everything their
+result does not read before they return.
 
-The contract here gives every operator-internal cache an owner:
+Blocks under a RETURNED frame are the caller's: they die with the frame
+(ContextCleaner, after a JVM GC) or at the caller's unit-of-work
+boundary, :func:`release_session_blocks`. That boundary also reclaims
+the one catalog-owned persist that outlives its call, the served ANN
+result of ``plans/llm_queries._served_recall``.
 
-- the cache lives only while the operator computes its (small, by
-  construction) result;
-- the result is materialized via an eager ``localCheckpoint`` and the
-  caches are released before returning;
-- the returned DataFrame is backed by checkpoint blocks that are
-  *GC-owned* — Spark's ContextCleaner drops them once the caller drops
-  the DataFrame — so nothing outlives its user.
-
-Operators whose result is corpus-sized must NOT use this helper (a
-checkpoint would materialize the corpus); none of the current users
-are in that class — their results are pair lists and label tables.
+localCheckpoint blocks cannot be recomputed, so a release frees exactly
+the RDD read off the frame itself — never a before/after diff of the
+session's persisted RDDs, which a concurrent driver thread would race.
 """
 
 from __future__ import annotations
 
+import uuid
+
 from pyspark.sql import DataFrame, SparkSession
-
-
-def materialize_owned(result: DataFrame, *owned: DataFrame) -> DataFrame:
-    """Materialize ``result`` and release the operator-owned caches.
-
-    ``owned`` are DataFrames the operator cached/persisted while
-    building ``result``. The eager local checkpoint executes the plan
-    exactly once (all cache reuse happens during this execution), after
-    which the intermediates are dropped from the block manager. The
-    returned DataFrame reads the checkpointed blocks; their lifetime is
-    tied to the DataFrame object itself (ContextCleaner), not to the
-    session catalog.
-
-    GC-ownership is *eventual*, not immediate: ContextCleaner only drops
-    the checkpoint blocks after the Python wrapper is collected AND the
-    JVM weak-reference queue drains — both asynchronous. A long-lived
-    session running many operators back-to-back accumulates blocks in
-    the interim (the r3 bench measured a 2× suite-wide slowdown from
-    exactly this). Callers with a unit-of-work boundary (per bench
-    query, per service request) should call
-    :func:`release_session_blocks` at that boundary for deterministic
-    release.
-    """
-    out = result.localCheckpoint(eager=True)
-    for df in owned:
-        df.unpersist()
-    return out
 
 
 def persistent_rdd_ids(spark: SparkSession) -> set[int]:
@@ -68,103 +35,97 @@ def persistent_rdd_ids(spark: SparkSession) -> set[int]:
     return {int(k) for k in jmap.keySet().toArray()}
 
 
-def checkpoint_owned(df: DataFrame) -> tuple[DataFrame, set[int]]:
-    """Eager localCheckpoint + the EXACT persisted-RDD ids backing it.
+def checkpoint_owned(df: DataFrame) -> DataFrame:
+    """Eager localCheckpoint of ``df``; the caller owns the returned
+    frame's blocks and frees them with :func:`release`.
 
-    Replaces the pre/post ``persistent_rdd_ids`` diff the loop
-    operators used to attribute checkpoint blocks (dedup candidate
-    tables, the CC label rounds). The diff was a GLOBAL snapshot, so
-    two driver threads checkpointing concurrently would each see the
-    other's new blocks in their diff and later unpersist blocks they
-    do not own — fatal for localCheckpoint blocks, whose lineage is
-    truncated and cannot be recomputed (the thread-safety blocker
-    VERDICT r15 #1 named). The checkpointed Dataset's analyzed plan is
-    the LogicalRDD over exactly the RDD ``localCheckpoint`` persisted,
-    so the id is read off the frame itself: per-thread exact
-    ownership, no lock, no window. If the internal plan shape ever
-    changes, the except arm leaves the block GC-owned (ContextCleaner
-    / the caller's unit-of-work ``release_session_blocks`` boundary
-    still reclaims it) rather than guessing from a racy diff.
+    The checkpoint RDD is registered before its job runs and the job is
+    one count over it — the job an eager ``localCheckpoint`` runs — so
+    a job that fails or is cancelled (a failed :func:`run_concurrently`
+    sibling) frees the partial checkpoint instead of orphaning it.
     """
-    out = df.localCheckpoint(eager=True)
+    out = df.localCheckpoint(eager=False)
     try:
-        ids = {int(out._jdf.queryExecution().analyzed().rdd().id())}
-    except Exception:
-        ids = set()
-    return out, ids
+        out._jdf.queryExecution().analyzed().rdd().count()
+    except BaseException:
+        release(out)
+        raise
+    return out
 
 
-def run_concurrently(*thunks, spark: SparkSession | None = None):
+def release(*frames: DataFrame) -> None:
+    """Free exactly what each frame holds: the checkpoint RDD under a
+    checkpointed frame, the cache entry of a persisted one. A frame
+    holding neither is a no-op, and so is a second release. Submits no
+    job; a released checkpointed frame can no longer be read."""
+    for df in frames:
+        plan = df._jdf.queryExecution().analyzed()
+        if plan.nodeName() == "LogicalRDD":
+            plan.rdd().unpersist(False)
+        else:
+            df.unpersist()
+
+
+def run_concurrently(*thunks, spark: SparkSession) -> list:
     """Run independent job-submitting thunks on driver threads and
     return their results in thunk order (guide §2.6 "overlap
-    independent jobs": actions are only sequential because driver code
-    calls them sequentially; FIFO scheduling back-fills executors freed
-    by one job's tail with the next job's tasks).
+    independent jobs": FIFO scheduling back-fills executors freed by one
+    job's tail with the next job's tasks).
 
-    Use for CONSTRUCTION-side eager work that is independent by data
-    (e.g. the two evidence tiers of clean_decisions, the served/memory
-    twins of the serving gates). Each thunk's exceptions propagate to
-    the caller in order. Correctness prerequisite (now guaranteed by
-    :func:`checkpoint_owned`): nothing a thunk releases may be
-    attributed by a global block-manager diff.
-
-    ``inheritable_thread_target`` carries the parent's JVM thread-local
-    properties (job description/group — and, when ``spark`` is passed,
-    the session's tags) into the pool threads, per the PySpark
-    concurrency docs; identity fallback if the API moves.
+    Use for CONSTRUCTION-side eager work that is independent by data.
+    Each leg inherits the caller's JVM thread-local properties (job
+    group, description, tags) plus one job tag of this call. When a leg
+    raises, the siblings' jobs are cancelled by that tag, every frame a
+    sibling already returned is released, and the first error is
+    re-raised.
     """
-    if len(thunks) == 1:
-        return [thunks[0]()]
-    from concurrent.futures import ThreadPoolExecutor
+    from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
 
+    from pyspark import inheritable_thread_target
+
+    sc = spark.sparkContext
+    tag = f"run_concurrently-{uuid.uuid4().hex}"
+    sc.addJobTag(tag)
     try:
-        from pyspark import inheritable_thread_target as _itt
-
-        wrap = _itt(spark) if spark is not None else _itt
-    except ImportError:  # pragma: no cover - API stable since 3.1
-        wrap = lambda f: f  # noqa: E731
-    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futures = [pool.submit(wrap(t)) for t in thunks]
-        return [f.result() for f in futures]
-
-
-def unpersist_ids(spark: SparkSession, ids: set[int]) -> int:
-    """Unpersist the given RDD ids (non-blocking); returns count."""
-    if not ids:
-        return 0
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    n = 0
-    for k in list(jmap.keySet().toArray()):
-        if int(k) in ids:
-            jmap.get(k).unpersist(False)
-            n += 1
-    return n
+        # one wrap per leg: each copies the properties into its own
+        # thread, so a leg's tag changes stay out of its siblings
+        legs = [inheritable_thread_target(spark)(t) for t in thunks]
+    finally:
+        sc.removeJobTag(tag)
+    with ThreadPoolExecutor(max_workers=len(legs)) as pool:
+        futures = [pool.submit(leg) for leg in legs]
+        done, pending = wait(futures, return_when=FIRST_EXCEPTION)
+        failed = [f for f in futures if f in done and f.exception() is not None]
+        if not failed:
+            return [f.result() for f in futures]
+        # a sibling between jobs starts its next one after a cancel, so
+        # cancel until every leg has stopped
+        while pending:
+            sc.cancelJobsWithTag(tag)
+            _, pending = wait(pending, timeout=0.1)
+        returned = [f.result() for f in futures if f.exception() is None]
+        release(*(r for r in returned if isinstance(r, DataFrame)))
+        raise failed[0].exception()
 
 
 def release_session_blocks(spark: SparkSession, gc: bool = False) -> int:
-    """Deterministically drop EVERY persisted block in the session:
-    catalog caches and all persistent RDDs (including localCheckpoint
-    blocks backing already-dead DataFrames).
+    """Drop EVERY persisted block in the session — catalog caches and
+    all persistent RDDs — and return the number of RDDs unpersisted.
 
-    This is the caller-side lifecycle hook for long-lived sessions: call
-    it at a unit-of-work boundary where no DataFrame from previous work
-    is still live (bench calls it between queries; a query service would
-    call it between requests). Any still-live checkpointed DataFrame
-    becomes unusable after this — by contract there are none at the
-    boundary. Returns the number of RDDs unpersisted.
-
-    ``gc=True`` additionally triggers a JVM GC: BROADCAST blocks (one
-    per broadcast join) are only reclaimed when ContextCleaner sees
-    their weak refs die, which needs a collection — across a long suite
-    hundreds of dead broadcasts otherwise pile up in the block manager.
-    Reserve it for coarse boundaries (bench uses per-query, not
-    per-run); a forced GC per service request would be pathological.
+    The unit-of-work boundary of a long-lived session (bench calls it
+    between queries; a service would call it between requests): any
+    checkpointed frame still live becomes unreadable, and by contract
+    there is none. ``gc=True`` also runs a JVM GC so ContextCleaner
+    reclaims dead BROADCAST blocks (one per broadcast join); keep it to
+    coarse boundaries — a forced GC per request would be pathological.
     """
     spark.catalog.clearCache()
-    n = unpersist_ids(spark, persistent_rdd_ids(spark))
+    rdds = list(spark.sparkContext._jsc.getPersistentRDDs().values())
+    for rdd in rdds:
+        rdd.unpersist(False)
     if gc:
         import gc as _pygc
 
         _pygc.collect()  # drop py4j refs so the JVM side sees dead objects
         spark._jvm.System.gc()
-    return n
+    return len(rdds)

@@ -54,6 +54,7 @@ def clean_decisions(
     ``drop_verbatim_overlap`` (it was pulled into its cluster only by
     verbatim-run evidence). ``winnow_min_shared=None`` disables the
     tier (the pre-r9 behavior)."""
+    from .cache import checkpoint_owned, run_concurrently
     from .dedup import minhash_near_dup_pairs, winnowing_pairs
     from .graph import connected_components
 
@@ -79,32 +80,33 @@ def clean_decisions(
     def _minhash_tier() -> DataFrame:
         # eager checkpoint: the pairs are read twice (CC edges and
         # nd_docs below), and the tier overlaps the winnowing tier
-        return minhash_near_dup_pairs(
-            docs, n=3, k=k, bands=bands, threshold=threshold,
-            max_bucket_size=max_bucket_size,
-        ).localCheckpoint(eager=True)
+        return checkpoint_owned(
+            minhash_near_dup_pairs(
+                docs, n=3, k=k, bands=bands, threshold=threshold,
+                max_bucket_size=max_bucket_size,
+            )
+        )
 
     if winnow_min_shared is not None:
-        from .cache import run_concurrently
-
         def _winnow_tier() -> DataFrame:
             # eager checkpoint: winnowing_pairs is lazy, so without it
             # the tier's work would run inside CC's edge-count job —
             # AFTER the minhash tier — instead of overlapping it. The
-            # result is a bounded pair list; blocks are GC-owned (the
-            # caller's unit-of-work boundary reclaims them).
-            return winnowing_pairs(
-                docs.select("doc_id", "text"),
-                k=winnow_k,
-                w=winnow_w,
-                df_cap=winnow_df_cap,
-                min_shared=winnow_min_shared,
-            ).select("doc_a", "doc_b").localCheckpoint(eager=True)
+            # result is a bounded pair list; its blocks are the
+            # caller's (the unit-of-work boundary reclaims them).
+            return checkpoint_owned(
+                winnowing_pairs(
+                    docs.select("doc_id", "text"),
+                    k=winnow_k,
+                    w=winnow_w,
+                    df_cap=winnow_df_cap,
+                    min_shared=winnow_min_shared,
+                ).select("doc_a", "doc_b")
+            )
 
         # the two evidence tiers are independent by data and both run
         # eager construction jobs — overlap them on driver threads
-        # (guide §2.6; safe since cache.checkpoint_owned made block
-        # ownership exact, r16 / VERDICT r15 #1)
+        # (guide §2.6). Each tier owns only the checkpoint it returns.
         pairs, wpairs = run_concurrently(
             _minhash_tier, _winnow_tier, spark=docs.sparkSession
         )

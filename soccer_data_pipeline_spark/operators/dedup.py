@@ -354,7 +354,7 @@ def _shingle_pair_counts(
     family (Jaccard + containment): per-doc-distinct n-gram shingles,
     DF-capped within each block, self-joined block-locally →
     ((doc_a, doc_b, n_common), per-doc counts, the persisted shingle
-    table the caller must release via materialize_owned)."""
+    table the caller must release once its result is materialized)."""
     from .skew import spread_for_compute
 
     toks = F.filter(F.split(text_col, " "), lambda x: x != "")
@@ -383,10 +383,8 @@ def _shingle_pair_counts(
     # per consumer. MEMORY_AND_DISK spills rather than OOMs; at corpus
     # sizes where even spill is wrong, stage this table to storage and
     # read it back (the standard petabyte-scale pipeline break). The
-    # persist is operator-owned — released via materialize_owned below.
+    # persist is operator-owned — the caller releases it.
     from pyspark import StorageLevel
-
-    from .cache import materialize_owned
 
     shingled = shingled.persist(StorageLevel.MEMORY_AND_DISK)
     counts = shingled.groupBy("doc_id").agg(F.count("*").alias("n_shingles"))
@@ -421,7 +419,7 @@ def ngram_jaccard(
     (numerator and denominator), the standard web-scale formulation.
     The hot-shingle list is tiny by construction → broadcast anti-join.
     """
-    from .cache import materialize_owned
+    from .cache import checkpoint_owned, release
 
     pairs, counts, shingled = _shingle_pair_counts(docs, n, block_col, max_df, text_col)
     ca = counts.select(F.col("doc_id").alias("doc_a"), F.col("n_shingles").alias("n_a"))
@@ -436,7 +434,10 @@ def ngram_jaccard(
         .where(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "n_common", "n_a", "n_b", "jaccard")
     )
-    return materialize_owned(out, shingled)
+    try:
+        return checkpoint_owned(out)
+    finally:
+        release(shingled)
 
 
 def shingle_containment(
@@ -460,7 +461,7 @@ def shingle_containment(
     Shares the DF-capped block-local pair pipeline (and its cache
     ownership) with :func:`ngram_jaccard`.
     """
-    from .cache import materialize_owned
+    from .cache import checkpoint_owned, release
 
     pairs, counts, shingled = _shingle_pair_counts(docs, n, block_col, max_df, text_col)
     ca = counts.select(F.col("doc_id").alias("doc_a"), F.col("n_shingles").alias("n_a"))
@@ -481,7 +482,10 @@ def shingle_containment(
             "containment_a", "containment_b",
         )
     )
-    return materialize_owned(out, shingled)
+    try:
+        return checkpoint_owned(out)
+    finally:
+        release(shingled)
 
 
 def simhash(docs: DataFrame, bits: int = 16) -> DataFrame:

@@ -66,19 +66,16 @@ def _star_contract(
     (changed labels there ⇒ raise, never silent corruption).
 
     Same lineage/block discipline as the min-label loop: per-round
-    eager localCheckpoint, stale round unpersisted immediately.
+    eager localCheckpoint, stale round released immediately.
     """
-    from .cache import checkpoint_owned, unpersist_ids
+    from .cache import checkpoint_owned, release
 
-    spark = edges.sparkSession
     e0 = edges.select(F.col("u").cast("long"), F.col("v").cast("long")).where(
         F.col("u") != F.col("v")
     )
     if num_partitions is not None:
         e0 = e0.repartition(num_partitions, "u")
-    # exact per-checkpoint block ownership (r16, thread-safe — the
-    # global pre/post diff raced concurrent driver threads)
-    e, blocks = checkpoint_owned(e0)
+    e = checkpoint_owned(e0)
     prev_sig = None
     converged = False
     for _ in range(max_rounds):
@@ -108,7 +105,7 @@ def _star_contract(
             .where(F.col("u") != F.col("v"))
             .distinct()
         )
-        new_e, new_blocks = checkpoint_owned(small)
+        new_e = checkpoint_owned(small)
         # bit_xor, not sum: xxhash64 spans the full 64-bit range and an
         # ANSI-mode SUM overflows; XOR is overflow-free and safe here
         # because the edge set is distinct (no pair cancels itself)
@@ -116,8 +113,7 @@ def _star_contract(
             F.count("*").alias("n"), F.bit_xor(F.xxhash64("u", "v")).alias("h")
         ).first()
         sig = (row["n"], row["h"])
-        unpersist_ids(spark, blocks)
-        blocks = new_blocks
+        release(e)
         e = new_e
         if sig == prev_sig:
             converged = True
@@ -146,11 +142,11 @@ def _star_contract(
     )
     # Eager checkpoint BEFORE releasing the round blocks: it severs the
     # result's lineage into both the contracted edge table and the
-    # caller's input (which the fallback path unpersists on return) —
+    # caller's input (which the fallback path releases on return) —
     # without it the returned frame would read truncated-lineage blocks
-    # after the caller's cleanup. The labels blocks are GC-owned.
-    labels = labels.localCheckpoint()
-    unpersist_ids(spark, blocks)
+    # after the caller's cleanup. The labels blocks are the caller's.
+    labels = checkpoint_owned(labels)
+    release(e)
     # explicit fixpoint validation over the INPUT graph (see docstring)
     und_in = e0.union(e0.select(F.col("v").alias("u"), F.col("u").alias("v")))
     nmin = (
@@ -284,15 +280,13 @@ def connected_components(
     # localCheckpoint per round: truncates the logical lineage, which
     # otherwise grows exponentially across self-referencing rounds (the
     # plan tree alone OOMs the driver past ~10 rounds). Each round's
-    # checkpoint supersedes the previous one; the stale blocks are
-    # unpersisted by id as soon as the new checkpoint materializes —
-    # waiting for GC-driven cleanup lets ~max_iters copies of the label
-    # table pile up in the block manager (r3's measured suite slowdown).
-    from .cache import checkpoint_owned, unpersist_ids
+    # checkpoint supersedes the previous one and is released as soon as
+    # the new one materializes — waiting for GC-driven cleanup lets
+    # ~max_iters copies of the label table pile up in the block manager
+    # (r3's measured suite slowdown).
+    from .cache import checkpoint_owned, release
 
-    # exact per-checkpoint block ownership (r16, thread-safe — see
-    # cache.checkpoint_owned; the global pre/post diff raced threads)
-    labels, labels_blocks = checkpoint_owned(
+    labels = checkpoint_owned(
         und.select(F.col("u").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
@@ -304,7 +298,7 @@ def connected_components(
             .groupBy(F.col("v").alias("node"))
             .agg(F.min("label").alias("nlabel"))
         )
-        updated, updated_blocks = checkpoint_owned(
+        updated = checkpoint_owned(
             labels.join(neighbor_min, "node", "left")
             .select(
                 "node",
@@ -314,10 +308,11 @@ def connected_components(
         )
         changed = updated.where(F.col("_changed")).count()
         # the new checkpoint is materialized (eager) and lineage-free, so
-        # the previous round's blocks are garbage — drop them now
-        unpersist_ids(spark, labels_blocks)
-        labels_blocks = updated_blocks
-        labels = updated.drop("_changed")
+        # the previous round's blocks are garbage — drop them now (the
+        # frame keeps its `_changed` column: it is the one that owns the
+        # blocks, and every reader below selects its columns)
+        release(labels)
+        labels = updated
         if changed == 0:
             break
     if changed != 0 and fallback == "star":
@@ -336,14 +331,12 @@ def connected_components(
         out = _star_contract(seed, num_partitions=num_partitions)
         # _star_contract runs eagerly (per-round checkpoints + the
         # validation count), so the min-label leftovers are garbage now
-        unpersist_ids(spark, labels_blocks)
-        und.unpersist()
-        e.unpersist()
+        release(labels, und, e)
         cc = out.select("node", F.col("label").alias("cluster_id"))
         return _attach_sizes(cc) if emit == "clusters" else cc
-    und.unpersist()
-    e.unpersist()
+    release(und, e)
     if changed != 0:
+        release(labels)
         # Labels are still moving at iteration exhaustion: the component
         # diameter exceeds max_iters and the labeling is NOT a fixpoint.
         # Returning it silently would split clusters / emit multiple
@@ -547,6 +540,8 @@ def kcore_peel_profile(
     :func:`triangle_count`: oriented (src < dst) deduplicated edges,
     materialized by the caller.
     """
+    from .cache import checkpoint_owned, release
+
     spark = edges.sparkSession
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     und = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
@@ -554,9 +549,6 @@ def kcore_peel_profile(
     for r in range(1, rounds + 1):
         deg = und.groupBy("u").agg(F.count("*").alias("_d"))
         removed = deg.where(F.col("_d") < k).select("u")
-        und = und.join(removed, "u", "left_anti").join(
-            removed.select(F.col("u").alias("v")), "v", "left_anti"
-        )
         # one checkpoint per round: materialize the survivor edge set
         # once, reuse it for this round's counts AND the next round's
         # peel. Both profile counts then fold in ONE action (r16: the
@@ -564,13 +556,21 @@ def kcore_peel_profile(
         # checkpoint and the remaining count scans the new one — a
         # 1-row crossJoin collect instead of two sequential count jobs,
         # 3 driver actions per round → 2).
-        und = und.localCheckpoint(eager=True)
+        kept = checkpoint_owned(
+            und.join(removed, "u", "left_anti").join(
+                removed.select(F.col("u").alias("v")), "v", "left_anti"
+            )
+        )
         row = (
             removed.agg(F.count("*").alias("nr"))
-            .crossJoin(und.select("u").distinct().agg(F.count("*").alias("nn")))
+            .crossJoin(kept.select("u").distinct().agg(F.count("*").alias("nn")))
             .first()
         )
+        if r > 1:
+            release(und)  # the previous round's checkpoint, read last above
+        und = kept
         profile.append((r, row["nr"], row["nn"]))
+    release(und)
     return spark.createDataFrame(
         profile, "round long, n_removed long, n_remaining long"
     )

@@ -424,8 +424,9 @@ def _supplier_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin of ``_SUPPLIER_EDGE_CTES``. Eagerly materialized
     (operators/cache.py discipline): every consumer self-joins it
     several times, and the edge set is small by the cap's construction
-    while the scan→distinct→cap chain upstream is not."""
-    from ..operators.cache import materialize_owned
+    while the scan→distinct→cap chain upstream is not. The caller owns
+    the checkpoint: a loop whose result stops reading it releases it."""
+    from ..operators.cache import checkpoint_owned
 
     li = load_table(spark, sf_dir, "lineitem")
     ps = li.select("l_partkey", "l_suppkey").distinct()
@@ -436,7 +437,7 @@ def _supplier_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("l_partkey")
     )
     a, b = ps.alias("a"), ps.alias("b")
-    return materialize_owned(
+    return checkpoint_owned(
         a.join(F.broadcast(ok), "l_partkey")
         .join(b, "l_partkey")
         .where(F.col("a.l_suppkey") < F.col("b.l_suppkey"))
@@ -1517,9 +1518,13 @@ def kcore_peel_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     Delegates to operators/graph.kcore_peel_profile over the shared
     capped edge construction.
     """
+    from ..operators.cache import release
     from ..operators.graph import kcore_peel_profile
 
-    return kcore_peel_profile(_supplier_edges(spark, sf_dir), k=3, rounds=3)
+    edges = _supplier_edges(spark, sf_dir)
+    out = kcore_peel_profile(edges, k=3, rounds=3)
+    release(edges)  # the profile is driver-built and reads no block
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -3893,6 +3898,8 @@ def bfs_hops_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     hot-part cap; per round the shuffle is |frontier ⋈ edges|, and the
     3-round bound keeps total work at 3 edge-joins regardless of sf.
     """
+    from ..operators.cache import checkpoint_owned, release
+
     edges = _supplier_edges(spark, sf_dir)
     mirror = edges.union(
         edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
@@ -3900,19 +3907,21 @@ def bfs_hops_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     seed = mirror.agg(F.min("src").alias("node")).select(
         "node", F.lit(0).alias("hop")
     )
-    visited = seed.localCheckpoint(eager=True)
+    visited = checkpoint_owned(seed)
     frontier = visited
     for k in range(1, 4):
-        nxt = (
+        nxt = checkpoint_owned(
             frontier.join(mirror, frontier.node == mirror.src)
             .select(F.col("dst").alias("node"))
             .distinct()
             .join(visited, "node", "left_anti")
             .select("node", F.lit(k).alias("hop"))
-            .localCheckpoint(eager=True)
         )
-        visited = visited.union(nxt).localCheckpoint(eager=True)
-        frontier = nxt
+        grown = checkpoint_owned(visited.union(nxt))
+        # round 1's frontier IS the seed checkpoint; release is idempotent
+        release(visited, frontier)
+        visited, frontier = grown, nxt
+    release(frontier, edges)  # the result reads the last visited set only
     return visited.select("node", F.col("hop").cast("long").alias("hop"))
 
 
@@ -4838,7 +4847,7 @@ FROM m{r}, t{r - 1}, t{r}"""
 def _bpe_working_corpus(docs: DataFrame) -> DataFrame:
     """Token frame → single-space symbol encoding (' a b c ' with
     bounding spaces), checkpointed — the working corpus both BPE
-    learners iterate on.
+    learners iterate on and release.
 
     The spread (guide §2.5 input skew) matters here more than anywhere:
     the checkpoint PINS the partitioning for every downstream learn
@@ -4846,6 +4855,7 @@ def _bpe_working_corpus(docs: DataFrame) -> DataFrame:
     1 partition) would serialize all R apply+pair-count corpus passes
     on one core. At scale the scan already carries ≥ defaultParallelism
     partitions and the spread is a no-op."""
+    from ..operators.cache import checkpoint_owned
     from ..operators.skew import spread_for_compute
 
     tok = (
@@ -4853,11 +4863,13 @@ def _bpe_working_corpus(docs: DataFrame) -> DataFrame:
         .select(F.explode(F.split("text", " ")).alias("token"))
         .where(F.length("token") >= 2)
     )
-    return tok.select(
-        F.concat(
-            F.lit(" "), F.array_join(F.split("token", ""), " "), F.lit(" ")
-        ).alias("w")
-    ).localCheckpoint(eager=True)
+    return checkpoint_owned(
+        tok.select(
+            F.concat(
+                F.lit(" "), F.array_join(F.split("token", ""), " "), F.lit(" ")
+            ).alias("w")
+        )
+    )
 
 
 def _bpe_apply_expr(col, a: str, b: str):
@@ -4916,6 +4928,8 @@ def _bpe_top_pair(frame: DataFrame):
     ),
 )
 def bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators.cache import checkpoint_owned, release
+
     docs = load_table(spark, sf_dir, "documents")
     w = _bpe_working_corpus(docs)
 
@@ -4976,9 +4990,11 @@ def bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
         # LOST, 2.86 → 3.17 s min-of-side: the fused stats job pays the
         # apply+store inline on its critical path and the narrow apply
         # stage loses its independent 32-task run. Eager stays.)
-        w = w.select(
-            _bpe_apply_expr(F.col("w"), merge_a, merge_b).alias("w")
-        ).localCheckpoint(eager=True)
+        applied = checkpoint_owned(
+            w.select(_bpe_apply_expr(F.col("w"), merge_a, merge_b).alias("w"))
+        )
+        release(w)
+        w = applied
         tot_pairs, top_a, top_b, top_n = _round_stats(w)
         # Σ size = Σ pairs + n_rows with n_rows constant, so the
         # symbol-count delta (merges applied) is the PAIR-count delta
@@ -4986,6 +5002,7 @@ def bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
             (r, merge_a, merge_b, int(merge_n), int(prev_pairs - tot_pairs))
         )
         prev_pairs = tot_pairs
+    release(w)
     return spark.createDataFrame(
         merges,
         "round int, pair_a string, pair_b string, "
@@ -5094,6 +5111,8 @@ FROM m{r}, g{r - 1}, g{r}"""
     ),
 )
 def bpe_learn_merges_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators.cache import checkpoint_owned, release
+
     docs = load_table(spark, sf_dir, "documents")
     sliced = docs.orderBy(
         F.md5(F.col("doc_id").cast("string")), F.col("doc_id")
@@ -5114,9 +5133,12 @@ def bpe_learn_merges_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
         top_a, top_b, top_n = top
         merges.append((r, top_a, top_b, int(top_n)))
         if r < _BPE_LEARN_ROUNDS:
-            w = w.select(
-                _bpe_apply_expr(F.col("w"), top_a, top_b).alias("w")
-            ).localCheckpoint(eager=True)
+            applied = checkpoint_owned(
+                w.select(_bpe_apply_expr(F.col("w"), top_a, top_b).alias("w"))
+            )
+            release(w)
+            w = applied
+    release(w)
     if not merges:
         return spark.createDataFrame(
             [],
@@ -5137,6 +5159,7 @@ def bpe_learn_merges_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(*[F.sum(f"t{i}").alias(f"t{i}") for i in range(len(sizes))])
         .collect()[0]
     )
+    release(full)
     rows = [
         (r, a, b, n, int(tot[f"t{i - 1}"] - tot[f"t{i}"]))
         for i, (r, a, b, n) in enumerate(merges, start=1)

@@ -2,15 +2,20 @@
 
 Operators that cache intermediates must release them before returning:
 after an operator call completes, the session's CacheManager holds no
-catalog-owned entries. (The returned DataFrame may be backed by
-localCheckpoint blocks — those are GC-owned via ContextCleaner and die
-with the DataFrame, which is the point of the contract.)
+catalog-owned entries, and a driver loop leaves persisted only the
+checkpoints its result reads (those belong to the caller and die with
+the DataFrame or at the caller's unit-of-work boundary).
 """
 
 from __future__ import annotations
 
+import threading
+import time
+
+import pytest
 from pyspark.sql import functions as F
 
+from soccer_data_pipeline_spark.operators.cache import persistent_rdd_ids
 from soccer_data_pipeline_spark.operators.dedup import (
     minhash_near_dup_pairs,
     ngram_jaccard,
@@ -23,6 +28,20 @@ SF_DIR = "/root/testdata/sf0.001"
 
 def _cache_manager_empty(spark) -> bool:
     return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def _checkpoint_rdd_id(df) -> int:
+    return int(df._jdf.queryExecution().analyzed().rdd().id())
+
+
+def _blocks_read_by(df) -> set[int]:
+    """Ids of the persisted RDDs under ``df``'s analyzed plan."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    return persistent_rdd_ids(df.sparkSession) & {
+        int(leaves.apply(i).rdd().id())
+        for i in range(leaves.size())
+        if leaves.apply(i).nodeName() == "LogicalRDD"
+    }
 
 
 def test_minhash_pipeline_releases_caches(spark):
@@ -62,35 +81,113 @@ def test_result_correct_after_release(spark):
 
 
 def test_concurrent_checkpoints_cannot_double_release(spark):
-    """checkpoint_owned attributes blocks EXACTLY (r16, VERDICT r15 #1):
-    two concurrent driver threads each checkpoint + release their own
-    frame; ownership sets must be disjoint (the old global pre/post
-    diff could capture the sibling's blocks), and releasing one leg's
-    blocks must leave the other leg's checkpointed frame readable —
-    localCheckpoint blocks are unrecomputable, so a cross-release is a
-    hard failure, not a slowdown."""
+    """checkpoint_owned attributes blocks EXACTLY: two concurrent driver
+    threads each checkpoint their own frame; the RDDs under the two
+    frames must differ (a global pre/post diff could capture the
+    sibling's blocks), and releasing one leg must leave the other leg's
+    checkpointed frame readable — localCheckpoint blocks are
+    unrecomputable, so a cross-release is a hard failure, not a
+    slowdown."""
     from soccer_data_pipeline_spark.operators.cache import (
         checkpoint_owned,
+        release,
         run_concurrently,
-        unpersist_ids,
     )
 
     def leg(n: int, m: int):
-        df, ids = checkpoint_owned(
-            spark.range(n).selectExpr("id", f"id % {m} as g")
-        )
-        return df, ids, df.count()
+        df = checkpoint_owned(spark.range(n).selectExpr("id", f"id % {m} as g"))
+        return df, df.count()
 
-    (d1, i1, c1), (d2, i2, c2) = run_concurrently(
+    (d1, c1), (d2, c2) = run_concurrently(
         lambda: leg(50_000, 7), lambda: leg(60_000, 11), spark=spark
     )
-    assert i1 and i2, "exact ownership extraction must find the RDD id"
-    assert not (i1 & i2), f"ownership sets overlap: {i1 & i2}"
+    i1, i2 = _checkpoint_rdd_id(d1), _checkpoint_rdd_id(d2)
+    assert {i1, i2} <= persistent_rdd_ids(spark), "checkpoint RDD not found"
+    assert i1 != i2, "the two legs' checkpoints share an RDD"
     assert (c1, c2) == (50_000, 60_000)
-    unpersist_ids(spark, i1)
+    release(d1)
+    assert i1 not in persistent_rdd_ids(spark)
     # leg 2's checkpoint must survive leg 1's release in full
     assert d2.count() == 60_000
-    unpersist_ids(spark, i2)
+    release(d2)
+    assert i2 not in persistent_rdd_ids(spark)
+
+
+def test_failed_leg_cancels_and_releases_siblings(spark):
+    """One failing leg: run_concurrently re-raises ITS error without
+    waiting for a long sibling job, cancels that job by the call's tag
+    (freeing the checkpoint it was filling) and releases the frame a
+    fast sibling already returned — nothing the call made stays
+    persisted."""
+    from soccer_data_pipeline_spark.operators.cache import (
+        checkpoint_owned,
+        run_concurrently,
+    )
+
+    fast_done = threading.Event()
+
+    def bad():
+        fast_done.wait(60)
+        time.sleep(1.0)  # the slow leg's checkpoint job is running by now
+        raise ValueError("bad leg")
+
+    def slow():
+        # sha2 of 10^9 ids: minutes of CPU alone, a handful of stored rows
+        return checkpoint_owned(
+            spark.range(0, 1_000_000_000, 1, 8).where(
+                "sha2(cast(id as string), 256) like '0000000%'"
+            )
+        )
+
+    def fast():
+        out = checkpoint_owned(spark.range(1000))
+        fast_done.set()
+        return out
+
+    before = persistent_rdd_ids(spark)
+    t0 = time.perf_counter()
+    with pytest.raises(ValueError, match="bad leg"):
+        run_concurrently(bad, slow, fast, spark=spark)
+    assert time.perf_counter() - t0 < 30, "the call waited for the slow leg"
+    assert persistent_rdd_ids(spark) - before == set()
+
+
+@pytest.mark.parametrize(
+    "query,kept",
+    [
+        ("bfs_hops_supplier", 1),
+        ("kcore_peel_suppliers", 0),
+        ("bpe_learn_merges", 0),
+        ("bpe_learn_merges_sampled", 0),
+    ],
+)
+def test_driver_loops_keep_only_what_the_result_reads(spark, query, kept):
+    """Each driver loop frees every round it supersedes and every
+    checkpoint its result does not read: after construct + execute, the
+    new persisted RDDs are exactly the ones under the result, and the
+    result still re-executes to the same rows."""
+    from soccer_data_pipeline_spark.plans import QUERIES
+
+    before = persistent_rdd_ids(spark)
+    out = QUERIES[query].fn(spark, SF_DIR)
+    rows = out.collect()
+    left = persistent_rdd_ids(spark) - before
+    assert len(left) == kept, f"{query} left {sorted(left)}"
+    assert left == _blocks_read_by(out)
+    assert rows and sorted(out.collect()) == sorted(rows)
+
+
+def test_repeated_kcore_profiles_keep_block_count_flat(spark):
+    """50 back-to-back k-core profiles with no unit-of-work release and
+    no GC between them: the persisted-RDD set does not grow."""
+    from soccer_data_pipeline_spark.operators.graph import kcore_peel_profile
+
+    k5 = [(a, b) for a in range(5) for b in range(a + 1, 5)]
+    edges = spark.createDataFrame(k5 + [(0, 10), (10, 11)], "u long, v long")
+    before = persistent_rdd_ids(spark)
+    for _ in range(50):  # two rounds: one superseded, one final
+        kcore_peel_profile(edges, k=3, rounds=2).collect()
+    assert persistent_rdd_ids(spark) - before == set()
 
 
 def test_clean_decisions_concurrent_tiers_release_caches(spark):
